@@ -5,6 +5,22 @@ The reference has no catalog at all — its only "table discovery" is the
 ``metadata.json`` manifest (src/BackupProcessor.php:49-51).  Here, parquet
 footers + directory layout are the catalog; this module is a thin typed
 veneer.
+
+Every engine parquet read goes through :func:`read_parquet` and carries a
+schema.  ``spark.read.parquet(path)`` without one runs a one-task Spark
+job (footer schema inference) on EVERY call — at bench scale a query
+costs ~0.21 s + 0.076 s per job, so a ten-view SQL query paid ten jobs
+that did no work.  The schema Spark inferred once is kept and handed
+back on later reads.
+
+That cache is keyed by file CONTENT — abspath, the inference settings,
+and a (relpath, size, mtime_ns) fingerprint of the data files — not by
+session, like the ``.scratch/`` tables (scratch.py).  A schema is a
+property of the bytes on disk, so it is valid for any session that
+reads the same files under the same settings, and a rewritten file
+forces a fresh inference.  It therefore neither registers with
+``memo`` nor is emptied by ``memo.clear_caches()``: there is no lineage
+or persisted storage to drop.
 """
 
 from __future__ import annotations
@@ -12,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from firebase_realtime_database_backup_spark.scratch import iter_table_files
 
 #: The ten driver-generated tables (TESTDATA.md).  Star schema:
 #: lineitem → orders → customer → nation → region; lineitem → part;
@@ -56,6 +75,51 @@ def ensure_engine_conf(spark: SparkSession) -> None:
             pass  # immutable in this deployment — session factory owns it
 
 
+#: Session settings that change the schema Spark infers from a footer;
+#: part of every schema-cache key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (abspath, inference settings) -> (file fingerprint, inferred schema).
+#: One entry per path and settings; a stale fingerprint is overwritten
+#: by the next read.  Plain dict operations are atomic under the GIL, so concurrent
+#: readers need no lock: a lost race costs one extra inference.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    A given ``schema`` is used as is (the sinks know what they wrote).
+    Otherwise the schema inferred by the first read of these exact
+    files is reused.  Non-local paths (``scheme://``) and paths that
+    list no files (globs) have no cheap file fingerprint and fall back
+    to Spark's inference."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    if "://" in path:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    files = tuple(iter_table_files(path))
+    hit = _SCHEMAS.get(key)
+    if files and hit is not None and hit[0] == files:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (files, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan of one test table.
 
@@ -70,7 +134,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (unix_millis, date filters) are engine-independent on a bare
     # driver-built session.
     ensure_engine_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     from pyspark.sql import functions as F
 
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -105,11 +169,9 @@ def spread(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql() use."""
-    for name in TABLES:
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register the named test tables as temp views for spark.sql() use.
+    Callers name exactly the tables their SQL reads: every view is a
+    table read, and an unused one is wasted work."""
+    for name in names:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -68,9 +68,11 @@ def memo_key(spark: SparkSession, sf_dir: str, *extra: Any) -> tuple:
     process lifetime (ADVICE r8)."""
     app = spark.sparkContext.applicationId
     for d in _REGISTERED:
-        stale = [k for k in d if k[0] != app]
-        for k in stale:
-            _unpersist(d.pop(k))
+        # list(d) + pop(k, None): two threads may see the same stale
+        # key, and only one of them gets to pop it.
+        for k in list(d):
+            if k[0] != app:
+                _unpersist(d.pop(k, None))
     return (app, os.path.abspath(sf_dir)) + extra
 
 
@@ -81,4 +83,4 @@ def clear_caches() -> None:
     this is the reset button for that case)."""
     for d in _REGISTERED:
         for k in list(d):
-            _unpersist(d.pop(k))
+            _unpersist(d.pop(k, None))

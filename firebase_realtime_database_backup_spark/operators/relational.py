@@ -28,7 +28,11 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from firebase_realtime_database_backup_spark.catalog import read_table, spread
+from firebase_realtime_database_backup_spark.catalog import (
+    read_parquet,
+    read_table,
+    spread,
+)
 from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket,
@@ -1139,11 +1143,11 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL entry point + correlated EXISTS: Catalyst decorrelates the
     subquery into a left-semi join (verify: no per-row subquery
-    execution in the plan).  Registered views make the whole test
-    catalog addressable from spark.sql."""
+    execution in the plan).  Registered views make the test tables
+    addressable from spark.sql."""
     from firebase_realtime_database_backup_spark.catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name
@@ -1676,7 +1680,7 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — both decorrelated by Catalyst, no per-row re-execution."""
     from firebase_realtime_database_backup_spark.catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal
@@ -5841,9 +5845,9 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).partitionBy("b").parquet(frag_dir)
 
-        n = spark.read.parquet(frag_dir).count()
+        n = read_parquet(spark, frag_dir).count()
         n_out = max(1, -(-n // COMPACT_TARGET_ROWS))  # ceil
-        spark.read.parquet(frag_dir).drop("b").repartition(n_out).write.mode(
+        read_parquet(spark, frag_dir).drop("b").repartition(n_out).write.mode(
             "overwrite"
         ).parquet(comp_dir)
         dirs = (frag_dir, comp_dir)
@@ -5851,12 +5855,12 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frag_dir, comp_dir = dirs
     before = (
-        spark.read.parquet(frag_dir)
+        read_parquet(spark, frag_dir)
         .select(F.col("_metadata.file_path").alias("fp"))
         .agg(F.count_distinct("fp").alias("n_files_before"))
     )
     after = (
-        spark.read.parquet(comp_dir)
+        read_parquet(spark, comp_dir)
         .select("doc_id", F.col("_metadata.file_path").alias("fp"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -7001,7 +7005,7 @@ def sql_exists_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimizer and why this belongs in the regression surface."""
     from firebase_realtime_database_backup_spark.catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders", "lineitem")
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_name
@@ -8059,7 +8063,7 @@ def layout_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").partitionBy("day").parquet(out)
         _PRUNE_FIXTURES[memo_key] = out
 
-    pruned = spark.read.parquet(out).filter(
+    pruned = read_parquet(spark, out).filter(
         F.col("day") == F.lit(PRUNE_PROBE_DAY)
     )
     return (

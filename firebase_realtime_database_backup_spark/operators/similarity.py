@@ -39,7 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from firebase_realtime_database_backup_spark.catalog import read_table, spread
+from firebase_realtime_database_backup_spark.catalog import (
+    read_parquet,
+    read_table,
+    spread,
+)
 from firebase_realtime_database_backup_spark.registry import Registry
 
 REG = Registry()
@@ -1360,7 +1364,7 @@ def sim_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, _, probe_mask = qstate
     probed = sorted(int(c) for c in np.nonzero(probe_mask.any(axis=0))[0])
     codes = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("cell").isin(probed))  # -> PartitionFilters
         .select(
             "vec_id",

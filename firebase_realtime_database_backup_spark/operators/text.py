@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from firebase_realtime_database_backup_spark.catalog import read_table, spread
+from firebase_realtime_database_backup_spark.catalog import (
+    read_parquet,
+    read_table,
+    spread,
+)
 from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket,
@@ -209,7 +213,7 @@ def doc_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = ensure_shingle_table(spark, sf_dir)
     # no explicit read schema: the table carries the build's own types
     # (doc_id mirrors the corpus column; sid is the vocab's int rank)
-    out = spark.read.parquet(path).cache()
+    out = read_parquet(spark, path).cache()
     _DSHINGLE_CACHE[key] = out
     return out
 

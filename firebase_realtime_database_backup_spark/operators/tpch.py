@@ -301,7 +301,7 @@ def tpch_q11_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, which Spark plans as a one-row broadcast into the
     filter) is identical.  Expressed in SQL so Catalyst reuses one
     definition of the join subtree for both the groups and the total."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "supplier", "nation")
     return spark.sql(
         """
         WITH natl AS (
@@ -380,7 +380,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subquery as a one-row broadcast; the view's shuffle (suppkey
     agg) is computed once per consumer — at scale, materialize the CTE
     if the optimizer doesn't collapse the reuse."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "supplier")
     return spark.sql(
         """
         WITH revenue AS (
@@ -418,7 +418,7 @@ def tpch_q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     a null-aware anti join (s_suppkey is non-null here, so it executes
     as a broadcast anti join); COUNT(DISTINCT) expands to a two-phase
     aggregate — both shuffles are on already-filtered data."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "part", "lineitem", "supplier")
     return spark.sql(
         """
         SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
@@ -449,7 +449,7 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over lineitem instead of a per-row subplan.  Quantities
     are integer-valued doubles, so AVG is exact in both engines and the
     strict `<` threshold is engine-independent without rounding."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(
         """
         SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly,
@@ -543,7 +543,7 @@ def tpch_q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a dimension subquery) is identical.  Both INs become left
     semi joins; quantity sums are integer-exact so the HAVING boundary
     is engine-stable."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "supplier", "lineitem", "part", "nation")
     return spark.sql(
         """
         SELECT s_suppkey, s_name
@@ -597,7 +597,7 @@ def tpch_q21_sole_returned(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushes into its parquet scan, which beats exchange reuse
     at 100 TB — a filtered re-scan moves less data than a reused
     shuffle of the unfiltered side."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "supplier", "lineitem", "orders")
     return spark.sql(
         """
         SELECT s_name, COUNT(*) AS numwait
@@ -646,7 +646,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     this data.  One uncorrelated scalar AVG (broadcast one-row), one
     left anti join against the date-filtered orders scan, then a tiny
     grouped agg — three shuffles, all on filtered data."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         WITH eligible AS (
@@ -701,5 +701,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN-equality match needs no rounding.  No LIMIT: the full match set
     is returned, sidestepping tie-break nondeterminism entirely.
     Reference has no joins at all (SURVEY.md §2.B)."""
-    register_views(spark, sf_dir)
+    register_views(
+        spark, sf_dir, "part", "lineitem", "supplier", "nation", "region"
+    )
     return spark.sql(_Q2_SQL)

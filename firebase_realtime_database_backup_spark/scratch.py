@@ -105,7 +105,7 @@ def scratch_root() -> str:
     return root
 
 
-def _iter_table_files(table_path: str):
+def iter_table_files(table_path: str):
     """Yield (relpath, size, mtime_ns) for a parquet table that is
     either a single file or a directory of part files."""
     if os.path.isfile(table_path):
@@ -142,7 +142,7 @@ def corpus_fingerprint(
     for t in tables:
         tp = os.path.join(sf_dir, f"{t}.parquet")
         h.update(b"\x00" + t.encode())
-        for rel, size, mtime in _iter_table_files(tp):
+        for rel, size, mtime in iter_table_files(tp):
             h.update(f"\x01{rel}\x02{size}\x02{mtime}".encode())
     return h.hexdigest()
 

@@ -31,6 +31,26 @@ def _local_cores() -> int:
         return 8
 
 
+def _env_conf() -> dict[str, str]:
+    """The SPARK_GRAFT_CONF_JSON overrides; a value that is not a JSON
+    object fails with an error naming the variable."""
+    env_json = os.environ.get("SPARK_GRAFT_CONF_JSON")
+    if not env_json:
+        return {}
+    import json
+
+    try:
+        parsed = json.loads(env_json)
+    except ValueError:
+        parsed = None
+    if not isinstance(parsed, dict):
+        raise ValueError(
+            "SPARK_GRAFT_CONF_JSON must be a JSON object of Spark conf "
+            f"settings, got {env_json!r}"
+        )
+    return {str(k): str(v) for k, v in parsed.items()}
+
+
 def get_spark(
     app_name: str = "frdb-spark-engine",
     master: str | None = None,
@@ -90,11 +110,7 @@ def get_spark(
     # round-9 orchestration-tail A/B and by any cluster profile):
     # SPARK_GRAFT_CONF_JSON='{"spark.sql.adaptive...": "..."}' merges
     # after the defaults and before call-site extra_conf.
-    env_json = os.environ.get("SPARK_GRAFT_CONF_JSON")
-    if env_json:
-        import json
-
-        conf.update({str(k): str(v) for k, v in json.loads(env_json).items()})
+    conf.update(_env_conf())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -27,7 +27,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from firebase_realtime_database_backup_spark.catalog import read_parquet
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_snapshot,
     write_snapshot,
@@ -35,6 +37,19 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
 
 #: diff row status values
 ADDED, REMOVED, CHANGED = "added", "removed", "changed"
+
+#: tree_diff's output columns: the schema of every delta written, so a
+#: delta read never pays Spark's schema-inference job.
+DELTA_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("key", StringType()),
+        StructField("status", StringType()),
+        StructField("old_value_json", StringType()),
+        StructField("new_value_json", StringType()),
+        StructField("depth", IntegerType()),
+    ]
+)
 
 
 def tree_diff(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -76,7 +91,7 @@ def write_delta(delta: DataFrame, out_dir: str, mode: str = "overwrite") -> None
 
 
 def read_delta(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "delta"))
+    return read_parquet(spark, os.path.join(out_dir, "delta"), DELTA_SCHEMA)
 
 
 def apply_delta(base: DataFrame, delta: DataFrame) -> DataFrame:

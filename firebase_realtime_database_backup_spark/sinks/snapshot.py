@@ -19,6 +19,14 @@ Partitioning: by `top` (first path segment).  Top-level subtrees are the
 reference's unit of descent and our unit of extract parallelism, so they
 are also the pruning key: restoring or querying one subtree reads one
 partition directory, nothing else.
+
+Reads carry a schema.  The sink wrote these files and knows their
+schema, so no read of a snapshot or manifest pays Spark's inference
+job (a footer read for parquet, a full scan for JSON).  The known
+schema is also what makes an EMPTY snapshot readable: a row-less
+directory has no footer to infer from.  Unlike catalog.read_parquet's
+content-keyed cache, nothing is remembered here — the schema is a
+constant of the format.
 """
 
 from __future__ import annotations
@@ -27,11 +35,35 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from firebase_realtime_database_backup_spark.catalog import read_parquet
 from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "tree"
+
+#: The data files' schema: the tree columns plus the `top` partition
+#: column, which stays a string even when every top key looks numeric.
+SNAPSHOT_SCHEMA = StructType(
+    TREE_SCHEMA.fields + [StructField("top", StringType())]
+)
+
+#: The manifest's JSON schema, in the (alphabetical) column order JSON
+#: inference produces.
+MANIFEST_SCHEMA = StructType(
+    [
+        StructField("n_rows", LongType()),
+        StructField("part_files", ArrayType(StringType())),
+        StructField("path", StringType()),
+    ]
+)
 
 
 def _with_top(tree: DataFrame) -> DataFrame:
@@ -61,7 +93,7 @@ def write_snapshot(
         .parquet(data_path)
     )
     spark = tree.sparkSession
-    written = spark.read.parquet(data_path)
+    written = read_parquet(spark, data_path, SNAPSHOT_SCHEMA)
     manifest = (
         written.withColumn("part_file", F.input_file_name())
         .groupBy("path")
@@ -76,12 +108,14 @@ def write_snapshot(
 def read_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read a snapshot back as the canonical tree relation (partition
     column dropped; schema restored)."""
-    df = spark.read.parquet(os.path.join(out_dir, DATA_DIR))
+    df = read_parquet(spark, os.path.join(out_dir, DATA_DIR), SNAPSHOT_SCHEMA)
     return df.select([f.name for f in TREE_SCHEMA.fields])
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.json(os.path.join(out_dir, MANIFEST_DIR))
+    return spark.read.schema(MANIFEST_SCHEMA).json(
+        os.path.join(out_dir, MANIFEST_DIR)
+    )
 
 
 def archive_snapshot(out_dir: str, archive_path: str | None = None) -> str:

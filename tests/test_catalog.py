@@ -1,0 +1,138 @@
+"""Schema-carrying parquet reads (catalog.read_parquet): a repeat read
+runs no Spark job, a rewritten file is re-inferred, the cached and the
+sinks' known schemas equal Spark's own inference, and concurrent
+readers are safe."""
+
+from __future__ import annotations
+
+import inspect
+import os
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+
+import __spark_entry__ as entry
+from firebase_realtime_database_backup_spark import catalog
+from firebase_realtime_database_backup_spark.sinks.incremental import (
+    incremental_backup,
+    read_delta,
+)
+from firebase_realtime_database_backup_spark.sinks.snapshot import (
+    DATA_DIR,
+    MANIFEST_DIR,
+    read_manifest,
+    read_snapshot,
+    write_snapshot,
+)
+from firebase_realtime_database_backup_spark.sources.tree import (
+    TREE_SCHEMA,
+    tree_from_dict,
+)
+
+SF = catalog.default_sf_dir()
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted from a job group
+    once the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _forget(path: str) -> None:
+    """Drop the cached schema of ``path`` under every setting."""
+    path = os.path.abspath(path)
+    for key in [k for k in catalog._SCHEMAS if k[0] == path]:
+        catalog._SCHEMAS.pop(key, None)
+
+
+def test_repeat_read_table_runs_no_jobs(spark):
+    _forget(os.path.join(SF, "orders.parquet"))
+    first, n_first = _jobs(spark, lambda: catalog.read_table(spark, SF, "orders"))
+    again, n_again = _jobs(spark, lambda: catalog.read_table(spark, SF, "orders"))
+    assert n_first == 1  # the one footer-inference job
+    assert n_again == 0
+    assert again.schema == first.schema
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).selectExpr("id", "'a' AS s").write.parquet(path)
+    assert catalog.read_parquet(spark, path).columns == ["id", "s"]
+    spark.range(3).selectExpr("id", "id * 2.0 AS x", "true AS b").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df, n = _jobs(spark, lambda: catalog.read_parquet(spark, path))
+    assert n == 1
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(r.x for r in df.collect()) == [0.0, 2.0, 4.0]
+
+
+@pytest.mark.parametrize("name", catalog.TABLES)
+def test_cached_schema_equals_inferred(spark, name):
+    path = os.path.join(SF, f"{name}.parquet")
+    catalog.read_parquet(spark, path)
+    cached, n = _jobs(spark, lambda: catalog.read_parquet(spark, path))
+    assert n == 0
+    assert cached.schema == spark.read.parquet(path).schema
+
+
+def test_sink_schemas_equal_inferred(spark, tmp_path):
+    old = tree_from_dict(spark, {"a": {"x": 1, "y": [1, 2]}, "b": "s"})
+    new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    write_snapshot(old, snap)
+    incremental_backup(spark, new, snap, delta)
+
+    tree, n = _jobs(spark, lambda: read_snapshot(spark, snap))
+    inferred = spark.read.parquet(os.path.join(snap, DATA_DIR))
+    assert n == 0
+    assert tree.schema == inferred.select(TREE_SCHEMA.fieldNames()).schema
+
+    manifest, n = _jobs(spark, lambda: read_manifest(spark, snap))
+    assert n == 0
+    assert manifest.schema == spark.read.json(os.path.join(snap, MANIFEST_DIR)).schema
+
+    d, n = _jobs(spark, lambda: read_delta(spark, delta))
+    assert n == 0
+    assert d.schema == spark.read.parquet(os.path.join(delta, "delta")).schema
+
+
+def test_concurrent_reads(spark):
+    for name in catalog.TABLES:
+        _forget(os.path.join(SF, f"{name}.parquet"))
+    names = list(catalog.TABLES) * 3
+    with ThreadPoolExecutor(3) as pool:
+        dfs = list(pool.map(lambda n: catalog.read_table(spark, SF, n), names))
+    for name, df in zip(names, dfs):
+        assert df.schema == catalog.read_table(spark, SF, name).schema
+
+
+#: every registered query that registers temp views for its SQL
+SQL_QUERIES = sorted(
+    name
+    for name, fn in entry.queries().items()
+    if "register_views(" in inspect.getsource(fn)
+)
+
+
+def test_sql_queries_found():
+    assert len(SQL_QUERIES) >= 11, SQL_QUERIES
+
+
+@pytest.mark.parametrize("name", SQL_QUERIES)
+def test_register_views_names_every_table(spark, name):
+    """Each SQL query registers every view it reads: with no views left
+    over from other queries, analysis must still resolve."""
+    for table in catalog.TABLES:
+        spark.catalog.dropTempView(table)
+    df = entry.queries()[name](spark, SF)
+    assert df.columns

@@ -33,6 +33,41 @@ def test_memo_key_evicts_stale_application_entries(spark):
         memo._REGISTERED[:] = [x for x in memo._REGISTERED if x is not d]
 
 
+def test_memo_key_eviction_two_threads(spark):
+    """Two threads evicting the same stale keys at once: each key is
+    popped by exactly one of them, and neither raises."""
+    import sys
+    import threading
+
+    d = memo.register_cache({})
+    errors: list[BaseException] = []
+    start = threading.Barrier(2)
+
+    def evict():
+        start.wait()
+        try:
+            memo.memo_key(spark, "corpus")
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(20):
+            d.update({("app-from-a-previous-life", f"/x{i}"): i for i in range(5000)})
+            threads = [threading.Thread(target=evict) for _ in range(2)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            assert not errors, errors
+            assert not d
+    finally:
+        sys.setswitchinterval(interval)
+        memo._REGISTERED[:] = [x for x in memo._REGISTERED if x is not d]
+
+
 def test_clear_caches_unpersists_dataframes(spark):
     """clear_caches() must unpersist cached relations (DataFrames and
     tuples of them) and empty every registered dict."""

@@ -153,3 +153,34 @@ def test_archive_roundtrip(spark, tmp_path):
     inner = unarchive_snapshot(arch, str(tmp_path / "unpacked"))
     back = read_snapshot(spark, inner)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, tree.collect()))
+
+
+def test_empty_database_backup_restore_incremental(spark, tmp_path):
+    """An empty database backs up to a readable empty snapshot, restores
+    to an empty store, and serves as the base of an incremental backup
+    (the row-less snapshot has no footer to infer a schema from)."""
+    from firebase_realtime_database_backup_spark import api
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        incremental_backup,
+        read_delta,
+    )
+
+    snap = str(tmp_path / "snap")
+    api.do_backup(spark, FakeFirebase({}), snap)
+    assert read_snapshot(spark, snap).count() == 0
+    assert read_manifest(spark, snap).count() == 0
+
+    dst = FakeFirebase({})
+    api.do_restore(spark, snap, lambda: dst, driver_side=True)
+    assert dst.tree == {}
+
+    counts = incremental_backup(
+        spark, extract(spark, FakeFirebase(TREE)), snap, str(tmp_path / "d1")
+    )
+    assert counts["removed"] == counts["changed"] == 0
+    assert counts["added"] == extract(spark, FakeFirebase(TREE)).count() > 0
+    empty = incremental_backup(
+        spark, extract(spark, FakeFirebase({})), snap, str(tmp_path / "d2")
+    )
+    assert empty == {"added": 0, "removed": 0, "changed": 0}
+    assert read_delta(spark, str(tmp_path / "d2")).count() == 0
