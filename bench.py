@@ -379,6 +379,10 @@ def main() -> None:
             prior = json.load(fh).get("queries", {}) or {}
     except (OSError, ValueError):
         pass
+    from firebase_realtime_database_backup_spark import scratch
+
+    # SCRATCH_HITS/BUILDS are process-cumulative; keep this run's slice
+    hits0, builds0 = len(scratch.SCRATCH_HITS), len(scratch.SCRATCH_BUILDS)
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in HEADLINE:
@@ -418,8 +422,6 @@ def main() -> None:
     # content-keyed tables this run found on disk vs had to build, so a
     # dictionary consumer's round-over-round delta is attributable to
     # plan changes vs warm/cold scratch state.  Stdout is unchanged.
-    from firebase_realtime_database_backup_spark import scratch
-
     with open(detail_path, "w") as fh:
         json.dump(
             {
@@ -427,8 +429,8 @@ def main() -> None:
                 "n_queries": len(times),
                 "queries": times,
                 "cold": cold,
-                "scratch_hits": scratch.SCRATCH_HITS,
-                "scratch_builds": scratch.SCRATCH_BUILDS,
+                "scratch_hits": scratch.SCRATCH_HITS[hits0:],
+                "scratch_builds": scratch.SCRATCH_BUILDS[builds0:],
             },
             fh,
             indent=1,

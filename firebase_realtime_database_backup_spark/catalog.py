@@ -18,9 +18,9 @@ and a (relpath, size, mtime_ns) fingerprint of the data files — not by
 session, like the ``.scratch/`` tables (scratch.py).  A schema is a
 property of the bytes on disk, so it is valid for any session that
 reads the same files under the same settings, and a rewritten file
-forces a fresh inference.  It therefore neither registers with
-``memo`` nor is emptied by ``memo.clear_caches()``: there is no lineage
-or persisted storage to drop.
+forces a fresh inference.  It is therefore not a session memo
+(``memo.session_memo``) and ``memo.clear_caches()`` leaves it alone:
+there is no lineage or persisted storage to drop.
 """
 
 from __future__ import annotations

@@ -1,53 +1,59 @@
-"""Session-scoped DataFrame memo discipline, shared by every operator
-module.
+"""Session memos: build a shared relation once per (session, corpus).
 
-The engine's performance idiom (OPTIMIZATION_r08.md): Spark shares no
-subplans, so relations consumed by several queries in one session are
-built once, `.cache()`d, and memoized in a module-level dict.  Round 8
-grew six more of those dicts and ADVICE r8 flagged two hygiene gaps
-this module closes in one place:
+Spark shares no subplans, so a relation several queries consume in one
+session — a shingle dictionary, a band index, an edge list, a written
+fixture — is built once, cached or persisted, and handed to every later
+caller (OPTIMIZATION_r08.md).  ``@session_memo`` is the one way to do it:
 
-1. **Key normalization.** Some caches keyed on the raw ``sf_dir``
-   string while others used ``os.path.abspath`` — the same corpus
-   reached via a relative vs absolute path rebuilt and double-persisted
-   the expensive relations.  :func:`memo_key` is now the only way a
-   memo key is built: ``(applicationId, abspath(sf_dir), *extra)``.
+- ``fn(spark, sf_dir, *extra)`` is keyed on ``(applicationId,
+  abspath(sf_dir), *extra)``: a recycled ``id(spark)`` after a session
+  restart cannot resurrect a dead session's DataFrames, and a relative
+  and an absolute spelling of one corpus share one entry.
+- The first call under a new applicationId unpersists and drops every
+  entry of every memo (they can never be served again);
+  :func:`clear_caches` does the same on demand, for a program iterating
+  corpora or whose files changed mid-session.
+- One lock guards every memo, and each key is built by one caller at a
+  time; a concurrent caller waits and reuses that value.  Builds run
+  outside the lock and call other memos in a fixed order, so no cycle
+  can deadlock.
+- ``None`` is returned but not stored (an empty corpus has nothing to
+  share), and ``valid=`` re-checks a stored value before it is served:
+  the persisted-table memos pass ``scratch.is_published`` so a table
+  the GC sweep removed is rebuilt.
 
-2. **Eviction.** Entries keyed to a dead SparkContext pinned stale
-   DataFrames (and their persisted RDD storage handles) forever in a
-   long process that restarts sessions.  Every cache dict registers
-   itself via :func:`register_cache`; :func:`memo_key` evicts (and
-   best-effort unpersists) entries from OTHER applicationIds on the
-   way in, and :func:`clear_caches` is the explicit between-corpora
-   hook for drivers and tests.
-
-Results never change: these dicts memoize *lineage*, not rows — a miss
+Results never change: a memo stores lineage, not rows, and a miss
 rebuilds the identical plan from the parquet inputs.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Any
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: every module-level memo dict registers itself here so eviction and
-#: clear_caches() see one authoritative list.
+#: one dict per memoized function; clear_caches() and eviction walk
+#: this list, and bench tooling counts entries across it.
 _REGISTERED: list[dict] = []
 
+#: guards every memo dict, _APP and _BUILDING; notified when a build
+#: ends.  Reentrant (Condition's default RLock), so a call that sees a
+#: new applicationId can clear_caches() under it.
+_LOCK = threading.Condition()
 
-def register_cache(d: dict) -> dict:
-    """Register a module-level memo dict for eviction/clearing."""
-    _REGISTERED.append(d)
-    return d
+#: applicationId the stored entries belong to
+_APP: str | None = None
+
+#: (id(memo dict), key) pairs being built right now
+_BUILDING: set[tuple[int, tuple]] = set()
 
 
 def _unpersist(value: Any) -> None:
-    """Best-effort unpersist of a memo value: a DataFrame, a tuple of
-    DataFrames, or a non-DataFrame (path string) — the entry's context
-    may already be dead, in which case dropping the reference is all
-    the cleanup there is."""
+    """Best-effort unpersist of a DataFrame or a tuple holding some; a
+    path or a dead context's DataFrame is just dropped."""
     values = value if isinstance(value, (tuple, list)) else (value,)
     for v in values:
         if isinstance(v, DataFrame):
@@ -57,23 +63,48 @@ def _unpersist(value: Any) -> None:
                 pass
 
 
-def memo_key(spark: SparkSession, sf_dir: str, *extra: Any) -> tuple:
-    """Canonical memo key: ``(applicationId, abspath(sf_dir), *extra)``.
+def session_memo(
+    fn: Callable | None = None, *, valid: Callable[[Any], bool] | None = None
+):
+    """Memoize ``fn(spark, sf_dir, *extra)`` per (session, corpus, extra).
 
-    applicationId, not ``id(spark)``: a recycled object address after a
-    session restart must not resurrect DataFrames bound to the dead
-    session.  As a side effect, entries made under a *different*
-    applicationId are evicted from every registered cache — they can
-    never be served again and would otherwise pin storage for the
-    process lifetime (ADVICE r8)."""
-    app = spark.sparkContext.applicationId
-    for d in _REGISTERED:
-        # list(d) + pop(k, None): two threads may see the same stale
-        # key, and only one of them gets to pop it.
-        for k in list(d):
-            if k[0] != app:
-                _unpersist(d.pop(k, None))
-    return (app, os.path.abspath(sf_dir)) + extra
+    Usable bare (``@session_memo``) or with a stored-value check
+    (``@session_memo(valid=is_published)``).  The memo dict is the
+    wrapper's ``cache`` attribute."""
+    if fn is None:
+        return functools.partial(session_memo, valid=valid)
+    cache: dict[tuple, Any] = {}
+    _REGISTERED.append(cache)
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, sf_dir: str, *extra: Any):
+        global _APP
+        app = spark.sparkContext.applicationId
+        key = (app, os.path.abspath(sf_dir)) + extra
+        slot = (id(cache), key)
+        with _LOCK:
+            if app != _APP:
+                clear_caches()
+                _APP = app
+            while slot in _BUILDING:
+                _LOCK.wait()
+            hit = cache.get(key)
+            if hit is not None and (valid is None or valid(hit)):
+                return hit
+            _BUILDING.add(slot)
+        value = None
+        try:
+            value = fn(spark, sf_dir, *extra)
+        finally:
+            with _LOCK:
+                _BUILDING.discard(slot)
+                if value is not None and app == _APP:
+                    cache[key] = value
+                _LOCK.notify_all()
+        return value
+
+    wrapper.cache = cache
+    return wrapper
 
 
 def clear_caches() -> None:
@@ -81,6 +112,8 @@ def clear_caches() -> None:
     for a driver or test iterating multiple corpora in one session
     (entries also go stale if files under sf_dir change mid-session;
     this is the reset button for that case)."""
-    for d in _REGISTERED:
-        for k in list(d):
-            _unpersist(d.pop(k, None))
+    with _LOCK:
+        for d in _REGISTERED:
+            for v in d.values():
+                _unpersist(v)
+            d.clear()

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from firebase_realtime_database_backup_spark.catalog import read_table, spread
-from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket_sql,
     string_bucket_sql,
@@ -142,33 +142,19 @@ def _band_keys(sig: DataFrame) -> DataFrame:
 
 
 
-#: Session-scoped banded-LSH indexes, keyed (applicationId, sf_dir,
-#: hash family).  The docstrings have always said production persists
-#: the band index bucketed by (band, band_key) and reuses it across
-#: every downstream policy; this cache is the session-local form of
-#: that contract — the signature fold + band explode runs once per
-#: (corpus, family), and minhash-pair emit / containment / keep-best /
-#: cross-corpus all probe the same cached index (the same reuse
-#: pattern as the shingle-relation caches).
-_BAND_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def _band_index(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
-    """The shingle relation is derived HERE from the family (each
-    family's relation is itself a session-cached singleton), so a
-    caller cannot pair the wrong relation with a family key and poison
-    the session-wide cache."""
-    key = memo_key(spark, sf_dir, family)
-    cached = _BAND_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Banded-LSH index, built once per (session, corpus, hash family) —
+    the session-local form of production's persisted (band, band_key)
+    index: minhash-pair emit / containment / keep-best / cross-corpus
+    all probe the same cached index.  The shingle relation is derived
+    HERE from the family (itself a session memo), so a caller cannot
+    pair the wrong relation with a family key and poison the memo."""
     if family == "xxhash":
         sig = _xxhash_signatures(_xxhash_shingle_ids(spark, sf_dir))
     else:
         sig = _minhash_signatures(doc_shingle_ids(spark, sf_dir))
-    out = _band_keys(sig).cache()
-    _BAND_INDEX_CACHE[key] = out
-    return out
+    return _band_keys(sig).cache()
 
 
 def _candidate_pairs(a_bands, b_bands, a_name: str, b_name: str, ordered: bool):
@@ -391,14 +377,28 @@ PREFIX_T_NUM, PREFIX_T_DEN = 3, 5
 assert PREFIX_T_NUM / PREFIX_T_DEN == JACCARD_THRESHOLD
 
 
-#: session-scoped memos for the shared prefix-join machinery: the
-#: (df, sid)-ranked token relation and the per-doc sorted sid arrays
-#: are consumed by BOTH exact prefix joins, and within one plan each
-#: is referenced from two join sides — Spark shares no subplans, so
-#: without the memo the df-rank window ran once per reference and the
-#: collect_list re-aggregated per side.  Keyed like _DSHINGLE_CACHE.
-_RANKED_TOKENS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_SID_ARRAYS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+def _doc_sizes(dsh: DataFrame) -> DataFrame:
+    return dsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+
+
+@session_memo
+def _ranked_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(sid, doc_id, sz, rn): each doc's tokens ranked by the GLOBAL
+    (df, sid) order, built once per (session, corpus) and cached.
+
+    Both exact prefix joins consume it, and within one plan it is
+    referenced from two join sides — Spark shares no subplans, so
+    without the memo the df-rank window ran once per reference."""
+    dsh = doc_shingle_ids(spark, sf_dir)
+    freq = dsh.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
+    rn = F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "sid"))
+    return (
+        dsh.join(freq, "sid")
+        .join(_doc_sizes(dsh), "doc_id")
+        .withColumn("rn", rn)
+        .select("sid", "doc_id", "sz", "rn")
+        .cache()
+    )
 
 
 def _df_ordered_tokens(spark: SparkSession, sf_dir: str):
@@ -406,40 +406,21 @@ def _df_ordered_tokens(spark: SparkSession, sf_dir: str):
     set sizes, and each doc's tokens ranked by the GLOBAL (df, sid)
     order (rarest first) — the order both exact similarity joins
     below take prefixes under.  Returns (dsh, sizes, ranked) where
-    ranked carries (sid, doc_id, sz, rn); ranked is built once per
-    (session, corpus) and cached."""
+    ranked carries (sid, doc_id, sz, rn) (see _ranked_tokens)."""
     dsh = doc_shingle_ids(spark, sf_dir)
-    sizes = dsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    key = memo_key(spark, sf_dir)
-    ranked = _RANKED_TOKENS_CACHE.get(key)
-    if ranked is None:
-        freq = dsh.groupBy("sid").agg(F.count(F.lit(1)).alias("df"))
-        rn = F.row_number().over(
-            Window.partitionBy("doc_id").orderBy("df", "sid")
-        )
-        ranked = (
-            dsh.join(freq, "sid")
-            .join(sizes, "doc_id")
-            .withColumn("rn", rn)
-            .select("sid", "doc_id", "sz", "rn")
-            .cache()
-        )
-        _RANKED_TOKENS_CACHE[key] = ranked
-    return dsh, sizes, ranked
+    return dsh, _doc_sizes(dsh), _ranked_tokens(spark, sf_dir)
 
 
+@session_memo
 def _sid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr, sz): each doc's sorted sid set as ONE array row —
     the in-row verification side of the prefix joins (array_intersect
     inside codegen instead of re-joining candidates against the
     dictionary; see dedup_jaccard_prefix's plan notes).  Built once
     per (session, corpus) and cached — both prefix joins reference it
-    from two join sides each."""
-    key = memo_key(spark, sf_dir)
-    cached = _SID_ARRAYS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+    from two join sides each, and without the memo the collect_list
+    re-aggregated per side."""
+    return (
         doc_shingle_ids(spark, sf_dir)
         .groupBy("doc_id")
         .agg(
@@ -448,8 +429,6 @@ def _sid_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _SID_ARRAYS_CACHE[key] = out
-    return out
 
 
 @REG.query(
@@ -1883,22 +1862,13 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
 
 
-#: session-scoped xxhash shingle-id relations, keyed by (session,
-#: sf_dir) — the dictionary-free twin of text._DSHINGLE_CACHE, shared
-#: by dedup_minhash_xxhash and the production corpus pipeline so the
-#: shingle pass over the corpus runs once per session, not per caller.
-_XXHASH_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
-#: session-scoped SAMPLED shingle relation for the audit's doc-grain
-#: Knuth sample, keyed like _XXHASH_SHINGLE_CACHE — re-invoking
-#: dedup_minhash_audit_sampled in a long-lived session must reuse one
-#: cached relation instead of accumulating a new cached DataFrame per
-#: call (each .cache() on a fresh plan pins fresh partitions forever).
-_SAMPLED_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def _sampled_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SAMPLED shingle relation for the audit's doc-grain Knuth
+    sample, memoized per session — re-invoking
+    dedup_minhash_audit_sampled in a long-lived session must reuse one
+    cached relation instead of accumulating a new cached DataFrame per
+    call (each .cache() on a fresh plan pins fresh partitions forever)."""
     from firebase_realtime_database_backup_spark.functions.hashing import (
         knuth_bucket,
     )
@@ -1906,24 +1876,20 @@ def _sampled_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_shingle_ids,
     )
 
-    key = memo_key(spark, sf_dir)
-    cached = _SAMPLED_SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     sampled = knuth_bucket(F.col("doc_id"), AUDIT_DOC_SAMPLE_MOD) == 0
-    out = doc_shingle_ids(spark, sf_dir).filter(sampled).cache()
-    _SAMPLED_SHINGLE_CACHE[key] = out
-    return out
+    return doc_shingle_ids(spark, sf_dir).filter(sampled).cache()
 
 
+@session_memo
 def _xxhash_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sid) over xxhash shingle ids, memoized per session —
+    the dictionary-free twin of text.doc_shingle_ids, shared by
+    dedup_minhash_xxhash and the production corpus pipeline so the
+    shingle pass over the corpus runs once per session, not per
+    caller."""
     from firebase_realtime_database_backup_spark.operators.text import doc_shingles
 
-    key = memo_key(spark, sf_dir)
-    cached = _XXHASH_SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+    return (
         doc_shingles(spark, sf_dir)
         .select(
             "doc_id",
@@ -1932,8 +1898,6 @@ def _xxhash_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .cache()
     )
-    _XXHASH_SHINGLE_CACHE[key] = out
-    return out
 
 
 def _xxhash_signatures(dshingle: DataFrame) -> DataFrame:
@@ -2798,18 +2762,6 @@ def quality_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped FastSS verified-pair relations, keyed by
-#: (applicationId, sf_dir, variant) — the ensure_item_edges discipline
-#: applied to the entity-resolution cascade's shared candidate tier:
-#: the enumerator output is consumed verbatim by the pair query itself,
-#: the Fellegi-Sunter scorer, the EM fit, and the transitive closure
-#: (each tier previously re-planned the full deletion-variant joins
-#: from cold — the dominant stage of all four queries).  At 100 TB the
-#: verified pair table is exactly what a production cascade would
-#: materialize once per corpus and hand to every downstream tier.
-_FASTSS_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache({})
-
-
 def _fastss_pairs_plan(names: DataFrame) -> DataFrame:
     """The FastSS deletion-neighborhood enumerator over a distinct name
     relation: position-tagged substitution join + asymmetric indel
@@ -2852,16 +2804,22 @@ def _fastss_pairs_plan(names: DataFrame) -> DataFrame:
     )
 
 
+@session_memo
 def _ensure_fastss_pairs(
     spark: SparkSession, sf_dir: str, variant: str
 ) -> DataFrame:
     """Build the verified edit-distance-1 pair relation ONCE per
     (session, corpus, variant) and hand the same cached DataFrame to
-    every cascade tier.  variant: 'full' | 'sampled'."""
-    key = memo_key(spark, sf_dir, variant)
-    cached = _FASTSS_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    every cascade tier.  variant: 'full' | 'sampled'.
+
+    The ensure_item_edges discipline applied to the entity-resolution
+    cascade's shared candidate tier: the enumerator output is consumed
+    verbatim by the pair query itself, the Fellegi-Sunter scorer, the
+    EM fit, and the transitive closure (each tier previously re-planned
+    the full deletion-variant joins from cold — the dominant stage of
+    all four queries).  At 100 TB the verified pair table is exactly
+    what a production cascade would materialize once per corpus and
+    hand to every downstream tier."""
     names = (
         read_table(spark, sf_dir, "customer").select("c_name").distinct()
     )
@@ -2873,9 +2831,7 @@ def _ensure_fastss_pairs(
         names = names.filter(
             string_bucket(F.col("c_name"), EDITDIST_SAMPLE_MOD) == 0
         )
-    out = _fastss_pairs_plan(names).cache()
-    _FASTSS_PAIRS_CACHE[key] = out
-    return out
+    return _fastss_pairs_plan(names).cache()
 
 
 @REG.query(
@@ -3075,20 +3031,14 @@ def _er_u_stats(cust: DataFrame) -> DataFrame:
     )
 
 
-#: session-scoped (c_name, nat, seg) attribute relations: every tier of
-#: the entity-resolution cascade (full/sampled scorer, EM, both closure
-#: forms) joins candidates against this name-grain aggregate from TWO
-#: sides — the memo pays the customer groupBy once per (session, corpus)
-#: instead of once per reference.
-_ER_ATTR_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def _er_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = memo_key(spark, sf_dir)
-    cached = _ER_ATTR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+    """(c_name, nat, seg) attributes, memoized per session: every tier
+    of the entity-resolution cascade (full/sampled scorer, EM, both
+    closure forms) joins candidates against this name-grain aggregate
+    from TWO sides — the memo pays the customer groupBy once per
+    (session, corpus) instead of once per reference."""
+    return (
         read_table(spark, sf_dir, "customer")
         .groupBy("c_name")
         .agg(
@@ -3097,8 +3047,6 @@ def _er_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _ER_ATTR_CACHE[key] = out
-    return out
 
 
 def _er_agreements(

@@ -42,7 +42,7 @@ from pyspark.sql.types import (
 )
 
 from firebase_realtime_database_backup_spark.catalog import read_table, spread
-from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.registry import Registry
 
 REG = Registry()
@@ -88,18 +88,7 @@ PHASH_SQL_CTE = f"""{ASCII_DOCS_CTE},
     )"""
 
 
-#: session-scoped (doc_id, phash_hi, phash_lo) relations, keyed by
-#: (applicationId, sf_dir): the hash pass is a Python-boundary decode
-#: kernel consumed by THREE registered queries (dedup / hamming /
-#: cluster), and within one plan the relation is referenced from
-#: several join sides — Spark shares no subplans, so without the memo
-#: each reference re-paid the whole Arrow decode+hash pass (17
-#: ArrowEvalPython nodes in phash_cluster's round-7 plan).  Guide §4:
-#: cross the JVM↔Python boundary once; the cached relation is 3 ints
-#: per image.
-_PHASH_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, phash_hi, phash_lo): the aHash of every payload —
     vectorized numpy kernel in mapInPandas, one pass, zero shuffle.
@@ -116,11 +105,16 @@ def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     phash_hamming number in BASELINE.md is pair-emission volume — that
     replica corpus genuinely holds ~100-wide near-dup clusters, 61.8M
     pairs — not hashing).  Both paths are bit-identical to the SQL CTE
-    oracle."""
-    key = memo_key(spark, sf_dir)
-    cached = _PHASH_CACHE.get(key)
-    if cached is not None:
-        return cached
+    oracle.
+
+    Memoized per (session, corpus): the hash pass is a Python-boundary
+    decode kernel consumed by THREE registered queries (dedup / hamming
+    / cluster), and within one plan the relation is referenced from
+    several join sides — Spark shares no subplans, so without the memo
+    each reference re-paid the whole Arrow decode+hash pass (17
+    ArrowEvalPython nodes in phash_cluster's round-7 plan).  Guide §4:
+    cross the JVM↔Python boundary once; the cached relation is 3 ints
+    per image."""
     payloads = ascii_payloads(spark, sf_dir)
     schema = "doc_id bigint, phash_hi bigint, phash_lo bigint"
 
@@ -160,9 +154,7 @@ def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": ids, "phash_hi": hi, "phash_lo": lo}
             )
 
-    out = payloads.mapInPandas(phash, schema).cache()
-    _PHASH_CACHE[key] = out
-    return out
+    return payloads.mapInPandas(phash, schema).cache()
 
 
 def ascii_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,7 +34,7 @@ from firebase_realtime_database_backup_spark.catalog import (
     read_table,
     spread,
 )
-from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket,
     knuth_bucket_sql,
@@ -45,6 +46,7 @@ from firebase_realtime_database_backup_spark.operators.text import (
     quality_expr,
 )
 from firebase_realtime_database_backup_spark.registry import Registry
+from firebase_realtime_database_backup_spark.scratch import fixture_dir
 
 REG = Registry()
 
@@ -2524,12 +2526,7 @@ def events_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ensure_item_edges(spark, sf_dir)
 
 
-#: session-scoped item co-occurrence edge lists, keyed by
-#: (applicationId, sf_dir) — same amortization discipline as
-#: ensure_bucketed_facts / ensure_bpe_table / the shared band index.
-_ITEM_EDGES_CACHE: dict = register_cache({})
-
-
+@session_memo
 def ensure_item_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the capped item co-occurrence edge list ONCE per (session,
     corpus), cache it, and hand the same DataFrame to every consumer.
@@ -2539,30 +2536,20 @@ def ensure_item_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_degree_distribution all start from it.  Before this memo each
     consumer re-planned the whole capped per-user self-join from cold —
     42 s at 100× PER CONSUMER, and PageRank (the bench's slowest query)
-    paid it before iterating.  Keyed by applicationId (not id(spark)):
-    a recycled object address after a session restart must not
-    resurrect DataFrames bound to the dead session.
+    paid it before iterating.  Same amortization discipline as
+    ensure_bucketed_facts / ensure_bpe_table / the shared band index.
 
     Columns: (item_a, item_b, n_users) with item_a < item_b and
     n_users >= 2 — the canonical undirected form; direction-needing
     consumers symmetrize map-side (explode of a 2-struct array)."""
-    key = memo_key(spark, sf_dir)
-    cached = _ITEM_EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _item_cooccurrence_plan(spark, sf_dir).cache()
-    _ITEM_EDGES_CACHE[key] = out
-    return out
+    return _item_cooccurrence_plan(spark, sf_dir).cache()
 
 
-#: session-scoped (sym_edges, out_deg, nodes) triple for the directed
-#: view of the co-click graph, derived from ensure_item_edges.
-_SYM_EDGES_CACHE: dict = register_cache({})
-
-
+@session_memo
 def _ensure_sym_edges(spark: SparkSession, sf_dir: str):
-    """Symmetrized (src, dst) edges + out-degrees + node set, cached
-    once per (session, corpus) on top of ensure_item_edges.
+    """Symmetrized (src, dst) edges + out-degrees + node set — the
+    directed view of the co-click graph — cached once per (session,
+    corpus) on top of ensure_item_edges.
 
     Symmetrize by exploding each pair into both directions MAP-SIDE (a
     union of pairs with its own mirror computes the co-occurrence
@@ -2576,10 +2563,6 @@ def _ensure_sym_edges(spark: SparkSession, sf_dir: str):
     each iteration lets AQE pick the strategy for the dst-key gather.
     Memoized so repeated PageRank runs in a session don't pin a fresh
     cached symmetrization each call."""
-    key = memo_key(spark, sf_dir)
-    cached = _SYM_EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = ensure_item_edges(spark, sf_dir).select("item_a", "item_b")
     edges = (
         pairs.select(
@@ -2601,9 +2584,7 @@ def _ensure_sym_edges(spark: SparkSession, sf_dir: str):
     # every node appears as src (edges are symmetric), so the degree
     # table's key set IS the node set — no second distinct pass
     nodes = out_deg.select(F.col("src").alias("item")).cache()
-    triple = (edges, out_deg, nodes)
-    _SYM_EDGES_CACHE[key] = triple
-    return triple
+    return edges, out_deg, nodes
 
 
 def _item_cooccurrence_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5748,10 +5729,6 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, abs sf_dir) -> (fragmented_dir, compacted_dir) for
-#: layout_compact_small_files (ingest-fixture memo discipline).
-_COMPACT_FIXTURES: dict = {}
-
 #: Compaction target, in ROWS per output file.  Real compactors target
 #: bytes (128-1024 MB); rows make the file count oracle-predictable
 #: (ceil(N / target)) while exercising the identical plan.
@@ -5759,6 +5736,35 @@ COMPACT_TARGET_ROWS = 256
 
 #: Fragmentation width of the fixture: one file per doc_id % 64 bucket.
 COMPACT_FRAG_BUCKETS = 64
+
+
+@session_memo
+def _compact_fixture(spark: SparkSession, sf_dir: str):
+    """(fragmented_dir, compacted_dir) for layout_compact_small_files,
+    written once per (session, corpus); None for an empty corpus."""
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
+    )
+    if docs.isEmpty():
+        return None
+    root = fixture_dir("compact", sf_dir, spark.sparkContext.applicationId)
+    frag_dir = os.path.join(root, "fragmented")
+    comp_dir = os.path.join(root, "compacted")
+    frag = docs.withColumn(
+        "b", (F.col("doc_id") % COMPACT_FRAG_BUCKETS).cast("int")
+    )
+    # repartition on b THEN partitionBy(b): each bucket is wholly
+    # inside one task, so exactly one file per bucket value
+    frag.repartition(COMPACT_FRAG_BUCKETS, "b").write.mode(
+        "overwrite"
+    ).partitionBy("b").parquet(frag_dir)
+
+    n = read_parquet(spark, frag_dir).count()
+    n_out = max(1, -(-n // COMPACT_TARGET_ROWS))  # ceil
+    read_parquet(spark, frag_dir).drop("b").repartition(n_out).write.mode(
+        "overwrite"
+    ).parquet(comp_dir)
+    return frag_dir, comp_dir
 
 
 @REG.query(
@@ -5801,58 +5807,19 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty at N >> files).  Rows-per-file targets keep the arithmetic
     engine-portable; production compacts to BYTES via the scan
     statistics the same plan already collects."""
-    import os
-
-    memo_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    dirs = _COMPACT_FIXTURES.get(memo_key)
+    dirs = _compact_fixture(spark, sf_dir)
     if dirs is None:
-        import hashlib
-
-        docs = read_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "n_chars"
+        # Empty corpus: nothing to fragment or compact.  Writing
+        # would still produce max(1, ceil(0/target)) = 1 empty part
+        # file (and a row-less parquet dir whose read-back can fail
+        # schema inference), diverging from the oracle's
+        # CEIL(0/256.0) = 0.  Emit the audit row directly: all
+        # counts 0, docid_sum NULL (SUM over zero rows).
+        return spark.createDataFrame(
+            [(0, 0, 0, None)],
+            "n_files_before bigint, n_rows bigint, "
+            "n_files_after bigint, docid_sum bigint",
         )
-        if docs.isEmpty():
-            # Empty corpus: nothing to fragment or compact.  Writing
-            # would still produce max(1, ceil(0/target)) = 1 empty part
-            # file (and a row-less parquet dir whose read-back can fail
-            # schema inference), diverging from the oracle's
-            # CEIL(0/256.0) = 0.  Emit the audit row directly: all
-            # counts 0, docid_sum NULL (SUM over zero rows).
-            return spark.createDataFrame(
-                [(0, 0, 0, None)],
-                "n_files_before bigint, n_rows bigint, "
-                "n_files_after bigint, docid_sum bigint",
-            )
-        # Session-keyed scratch tag like ensure_bpe_table: hashing only
-        # the corpus path would resolve two concurrent sessions to the
-        # SAME directory, so one session's overwrite could tear the
-        # other's memoized read-back.
-        tag = hashlib.sha1("\x00".join(memo_key).encode()).hexdigest()[:12]
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            os.pardir,
-            ".scratch",
-            f"compact_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
-        )
-        frag_dir = os.path.join(root, "fragmented")
-        comp_dir = os.path.join(root, "compacted")
-        frag = docs.withColumn(
-            "b", (F.col("doc_id") % COMPACT_FRAG_BUCKETS).cast("int")
-        )
-        # repartition on b THEN partitionBy(b): each bucket is wholly
-        # inside one task, so exactly one file per bucket value
-        frag.repartition(COMPACT_FRAG_BUCKETS, "b").write.mode(
-            "overwrite"
-        ).partitionBy("b").parquet(frag_dir)
-
-        n = read_parquet(spark, frag_dir).count()
-        n_out = max(1, -(-n // COMPACT_TARGET_ROWS))  # ceil
-        read_parquet(spark, frag_dir).drop("b").repartition(n_out).write.mode(
-            "overwrite"
-        ).parquet(comp_dir)
-        dirs = (frag_dir, comp_dir)
-        _COMPACT_FIXTURES[memo_key] = dirs
-
     frag_dir, comp_dir = dirs
     before = (
         read_parquet(spark, frag_dir)
@@ -7990,11 +7957,26 @@ def events_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PRUNE_FIXTURES: dict = {}
-
 #: Probe day for the partition-pruned read — present at every SF of the
 #: synthetic events calendar (January 2024).
 PRUNE_PROBE_DAY = "2024-01-15"
+
+
+@session_memo
+def _prune_fixture(spark: SparkSession, sf_dir: str):
+    """Day-partitioned copy of `events` for layout_partitioned_prune,
+    written once per (session, corpus); None for an empty corpus."""
+    ev = read_table(spark, sf_dir, "events")
+    if ev.isEmpty():
+        return None
+    out = fixture_dir("prune", sf_dir, spark.sparkContext.applicationId)
+    day = F.date_format("ts", "yyyy-MM-dd").alias("day")
+    # repartition ON day then partitionBy(day): each day's rows sit
+    # wholly in one task -> exactly one file per day directory
+    ev.select("event_id", "ts", "user_id", "value", day).repartition(
+        F.col("day")
+    ).write.mode("overwrite").partitionBy("day").parquet(out)
+    return out
 
 
 @REG.query(
@@ -8031,38 +8013,13 @@ def layout_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational query carries a day predicate; the cardinality rule
     (partitions of ~file-count 1-10k, never per-user) is what keeps the
     listing itself cheap."""
-    import hashlib
-    import os
-
-    memo_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    out = _PRUNE_FIXTURES.get(memo_key)
+    out = _prune_fixture(spark, sf_dir)
     if out is None:
-        ev = read_table(spark, sf_dir, "events")
-        if ev.isEmpty():
-            return spark.createDataFrame(
-                [(PRUNE_PROBE_DAY, 0, 0, 0, None)],
-                "probe_day string, n_rows bigint, n_users bigint, "
-                "n_files_scanned bigint, total_value double",
-            )
-        # Session-keyed scratch tag like ensure_bpe_table: hashing only
-        # the corpus path would resolve two concurrent sessions to the
-        # SAME directory, so one session's overwrite could tear the
-        # other's memoized read-back.
-        tag = hashlib.sha1("\x00".join(memo_key).encode()).hexdigest()[:12]
-        out = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            os.pardir,
-            ".scratch",
-            f"prune_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
+        return spark.createDataFrame(
+            [(PRUNE_PROBE_DAY, 0, 0, 0, None)],
+            "probe_day string, n_rows bigint, n_users bigint, "
+            "n_files_scanned bigint, total_value double",
         )
-        day = F.date_format("ts", "yyyy-MM-dd").alias("day")
-        # repartition ON day then partitionBy(day): each day's rows sit
-        # wholly in one task -> exactly one file per day directory
-        ev.select("event_id", "ts", "user_id", "value", day).repartition(
-            F.col("day")
-        ).write.mode("overwrite").partitionBy("day").parquet(out)
-        _PRUNE_FIXTURES[memo_key] = out
-
     pruned = read_parquet(spark, out).filter(
         F.col("day") == F.lit(PRUNE_PROBE_DAY)
     )

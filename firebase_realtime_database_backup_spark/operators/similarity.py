@@ -44,7 +44,12 @@ from firebase_realtime_database_backup_spark.catalog import (
     read_table,
     spread,
 )
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.registry import Registry
+from firebase_realtime_database_backup_spark.scratch import (
+    is_published,
+    publish_table,
+)
 
 REG = Registry()
 
@@ -1286,17 +1291,16 @@ def _ivfpq_search(
     )
 
 
-#: (applicationId, abs sf_dir) -> (index path, cents, codebooks, n_corpus).
-#: The probe side must use the EXACT codebooks the index was encoded
-#: with — memoizing them beside the path makes mis-pairing impossible
-#: (the band-index family-key lesson from the dedup module).
-_IVFPQ_INDEXES: dict = {}
-
-
+@session_memo(valid=lambda idx: is_published(idx[0]))
 def ensure_ivfpq_index(spark: SparkSession, sf_dir: str):
     """Idempotently materialize the PQ code table PARTITIONED BY cell
     under the repo scratch dir, once per (session, sf_dir) — the
     persisted form of the index sim_ivfpq_topk computes inline.
+    Returns (index path, cents, codebooks, n_corpus), or None when
+    there is no corpus to index.  The probe side must use the EXACT
+    codebooks the index was encoded with — memoizing them beside the
+    path makes mis-pairing impossible (the band-index family-key
+    lesson from the dedup module).
 
     This is the layout half of the IVF bargain (the same amortization
     as ensure_bucketed_facts): the encode pass is paid ONCE, and every
@@ -1313,14 +1317,6 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str):
     cost without the build (measured 13.6 s probe vs 47.9 s
     build-and-probe at the 2M-vector decade).  Dead copies are GC'd
     by the session factory's sweep."""
-    import os
-
-    from ..scratch import is_published, publish_table
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _IVFPQ_INDEXES.get(key)
-    if hit is not None and is_published(hit[0]):
-        return hit
     state = _ivfpq_state(spark, sf_dir)
     if state is None:
         return None
@@ -1335,8 +1331,7 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str):
         )
 
     path = publish_table("ivfpq_index", sf_dir, ("embeddings",), build)
-    _IVFPQ_INDEXES[key] = (path, cents, codebooks, n_corpus)
-    return _IVFPQ_INDEXES[key]
+    return path, cents, codebooks, n_corpus
 
 
 @REG.query("sim_ivfpq_persisted")  # rows-only: float k-means codebooks aren't SQL-portable

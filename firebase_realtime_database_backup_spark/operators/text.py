@@ -26,7 +26,7 @@ from firebase_realtime_database_backup_spark.catalog import (
     read_table,
     spread,
 )
-from firebase_realtime_database_backup_spark.memo import memo_key, register_cache
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket,
     knuth_bucket_sql,
@@ -34,6 +34,10 @@ from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_hash_sql,
 )
 from firebase_realtime_database_backup_spark.registry import Registry
+from firebase_realtime_database_backup_spark.scratch import (
+    is_published,
+    publish_table,
+)
 
 REG = Registry()
 
@@ -110,21 +114,12 @@ def shingle_vocab(shingles: DataFrame) -> DataFrame:
     )
 
 
-#: session-scoped materialized shingle-id relations, keyed by (session,
-#: sf_dir): MinHash, SimHash, Jaccard, and fingerprints all consume the
-#: same (doc_id, sid) set — build + cache it once per session, the
-#: DataFrame analog of a shared materialized view.
-_DSHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-#: session-scoped persisted (doc_id, sid) parquet tables, keyed like
-#: _DSHINGLE_CACHE; value is the table directory.
-_SHINGLE_TABLES: dict[tuple[str, str], str] = register_cache({})
-
-
+@session_memo(valid=is_published)
 def ensure_shingle_table(spark: SparkSession, sf_dir: str) -> str:
     """Idempotently build the (doc_id, sid) distinct shingle dictionary
     ONCE per (session, corpus) and persist it as parquet under the repo
-    scratch dir; returns the table directory.
+    scratch dir; returns the table directory (memoized per session, and
+    re-checked as published before a memo hit is served).
 
     This is the ensure_bpe_table contract applied to the dictionary
     every shingle consumer (MinHash, SimHash, Jaccard, fingerprints,
@@ -154,12 +149,6 @@ def ensure_shingle_table(spark: SparkSession, sf_dir: str) -> str:
     os.rename; the loser discards its copy and reads the winner's
     (no overwrite tear, the property the old per-session key bought
     at the cost of a 780 s rebuild per session at the 1000x decade)."""
-    from ..scratch import is_published, publish_table
-
-    key = memo_key(spark, sf_dir)
-    hit = _SHINGLE_TABLES.get(key)
-    if hit is not None and is_published(hit):
-        return hit
 
     def build(tmp: str) -> None:
         sh = doc_shingles(spark, sf_dir)
@@ -171,51 +160,36 @@ def ensure_shingle_table(spark: SparkSession, sf_dir: str) -> str:
             .parquet(tmp)
         )
 
-    path = publish_table("shingle_table", sf_dir, ("documents",), build)
-    _SHINGLE_TABLES[key] = path
-    return path
+    return publish_table("shingle_table", sf_dir, ("documents",), build)
 
 
-#: session-scoped (shingle, sid) dictionary relations, keyed like
-#: _DSHINGLE_CACHE: consumers that need the shingle STRING alongside
-#: its id (text_fingerprint's positioned join) cannot ride the
-#: persisted (doc_id, sid) table, so they share this cached
-#: vocabulary-sized relation instead of re-paying the two-shuffle
-#: dictionary rank per call.
-_SHINGLE_VOCAB_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def ensure_shingle_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(shingle, sid) built once per (session, corpus) and cached —
     the string-keyed face of the shingle dictionary (the persisted
-    table only stores doc-grain ids)."""
-    key = memo_key(spark, sf_dir)
-    cached = _SHINGLE_VOCAB_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = shingle_vocab(doc_shingles(spark, sf_dir)).cache()
-    _SHINGLE_VOCAB_CACHE[key] = out
-    return out
+    table only stores doc-grain ids).  Consumers that need the shingle
+    STRING alongside its id (text_fingerprint's positioned join) cannot
+    ride the persisted (doc_id, sid) table, so they share this
+    vocabulary-sized relation instead of re-paying the two-shuffle
+    dictionary rank per call."""
+    return shingle_vocab(doc_shingles(spark, sf_dir)).cache()
 
 
+@session_memo
 def doc_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sid) distinct — the set representation used by MinHash /
     SimHash / Jaccard.  Twin of SHINGLE_SQL_CTE's `dshingle`.
 
-    Served from the PERSISTED dictionary (ensure_shingle_table): the
-    build runs once per (session, corpus); this is a parquet read-back
-    wrapped in a .cache() whose eviction fallback is the columnar
-    re-read, not a rebuild."""
-    key = memo_key(spark, sf_dir)
-    cached = _DSHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    MinHash, SimHash, Jaccard, and fingerprints all consume this same
+    set, so it is memoized per session — the DataFrame analog of a
+    shared materialized view.  Served from the PERSISTED dictionary
+    (ensure_shingle_table): the build runs once per (session, corpus);
+    this is a parquet read-back wrapped in a .cache() whose eviction
+    fallback is the columnar re-read, not a rebuild."""
     path = ensure_shingle_table(spark, sf_dir)
     # no explicit read schema: the table carries the build's own types
     # (doc_id mirrors the corpus column; sid is the vocab's int rank)
-    out = read_parquet(spark, path).cache()
-    _DSHINGLE_CACHE[key] = out
-    return out
+    return read_parquet(spark, path).cache()
 
 
 # --- language-ID marker lists (tiny n-gram/stopword heuristic) -----------
@@ -1448,14 +1422,26 @@ def mix_temperature_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the selection key works (finer buckets shrink the boundary slice).
 BUDGET_QBUCKETS = 64
 
-#: Session-scoped narrow (doc_id, source, n_tokens, quality, qb)
-#: relation for the token-budget selector, keyed (applicationId,
-#: sf_dir) — the same multi-consumer reuse contract as dedup's
-#: _BAND_INDEX_CACHE.  The selector's stats pass, full-bucket keep,
-#: and boundary slice all consume this relation; without the cache
-#: each subtree re-tokenizes the corpus (predicate pushdown splits
-#: any shared Exchange, measured 3x the scan cost at 20x).
-_BUDGET_FEATS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+
+@session_memo
+def _budget_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Narrow (doc_id, source, n_tokens, quality, qb) relation for the
+    token-budget selector, memoized per session — the same
+    multi-consumer reuse contract as dedup's band index.  The
+    selector's stats pass, full-bucket keep, and boundary slice all
+    consume this relation; without the memo each subtree re-tokenizes
+    the corpus (predicate pushdown splits any shared Exchange, measured
+    3x the scan cost at 20x)."""
+    docs = spread(read_table(spark, sf_dir, "documents"))
+    toks = F.split(F.col("text"), " ")
+    quality = quality_expr(toks)
+    return docs.select(
+        "doc_id",
+        "source",
+        F.size(toks).cast("bigint").alias("n_tokens"),
+        quality.alias("quality"),
+        F.floor(quality * BUDGET_QBUCKETS).cast("int").alias("qb"),
+    ).cache()
 
 
 @REG.query(
@@ -1509,20 +1495,7 @@ def mix_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     both branches consume; the corpus is never shuffled at doc grain,
     and every Window in the plan is qb-keyed (asserted in test_plans),
     i.e. either the ≤65-row bucket relation or the boundary slice."""
-    cache_key = memo_key(spark, sf_dir)
-    feats = _BUDGET_FEATS_CACHE.get(cache_key)
-    if feats is None:
-        docs = spread(read_table(spark, sf_dir, "documents"))
-        toks = F.split(F.col("text"), " ")
-        quality = quality_expr(toks)
-        feats = docs.select(
-            "doc_id",
-            "source",
-            F.size(toks).cast("bigint").alias("n_tokens"),
-            quality.alias("quality"),
-            F.floor(quality * BUDGET_QBUCKETS).cast("int").alias("qb"),
-        ).cache()
-        _BUDGET_FEATS_CACHE[cache_key] = feats
+    feats = _budget_feats(spark, sf_dir)
     bsums = feats.groupBy("qb").agg(F.sum("n_tokens").alias("s"))
     prev_w = (
         Window.orderBy(F.col("qb").desc())
@@ -2253,10 +2226,6 @@ def _bpe_loop(spark: SparkSession, sf_dir: str, k_rounds: int):
     return cur, merges
 
 
-#: (applicationId, abs sf_dir) -> persisted BPE table dir (see
-#: ensure_bpe_table; same session-memo discipline as the IVF-PQ index).
-_BPE_TABLES: dict = register_cache({})
-
 #: Schema of the persisted merge sequence (and of text_bpe_merges).
 _BPE_MERGES_SCHEMA = (
     "merge_rank int, lhs string, rhs string, merged string,"
@@ -2264,6 +2233,7 @@ _BPE_MERGES_SCHEMA = (
 )
 
 
+@session_memo(valid=is_published)
 def ensure_bpe_table(spark: SparkSession, sf_dir: str) -> str:
     """Idempotently train the BPE merge table ONCE per (session,
     corpus) and persist it — the merge sequence plus the final
@@ -2286,13 +2256,6 @@ def ensure_bpe_table(spark: SparkSession, sf_dir: str) -> str:
     publish race costs duplicate training CPU, never a torn read."""
     import os
 
-    from ..scratch import is_published, publish_table
-
-    key = memo_key(spark, sf_dir)
-    hit = _BPE_TABLES.get(key)
-    if hit is not None and is_published(hit):
-        return hit
-
     def build(tmp: str) -> None:
         final_vocab, merges = _bpe_loop(spark, sf_dir, BPE_MERGES)
         spark.createDataFrame(merges, _BPE_MERGES_SCHEMA).coalesce(
@@ -2302,9 +2265,7 @@ def ensure_bpe_table(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(tmp, "vocab")
         )
 
-    path = publish_table("bpe_table", sf_dir, ("documents",), build)
-    _BPE_TABLES[key] = path
-    return path
+    return publish_table("bpe_table", sf_dir, ("documents",), build)
 
 
 @REG.query("text_bpe_merges", oracle=_bpe_merges_oracle(BPE_MERGES))

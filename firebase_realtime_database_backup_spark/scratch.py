@@ -65,7 +65,7 @@ MARKER = "_FINGERPRINT"
 #: attributable.  bench.py copies both lists into BENCH_DETAIL.json
 #: (the stdout contract is unchanged).  Entries are "kind:corpus_base"
 #: strings, appended in publish order; a table can appear once per
-#: session thanks to the module-level memos in front of publish_table.
+#: session thanks to the session memos in front of publish_table.
 SCRATCH_HITS: list[str] = []
 SCRATCH_BUILDS: list[str] = []
 
@@ -103,6 +103,19 @@ def scratch_root() -> str:
     )
     os.makedirs(root, exist_ok=True)
     return root
+
+
+def fixture_dir(family: str, sf_dir: str, session: str = "") -> str:
+    """``<family>_<corpus>_<tag>`` for a corpus-derived fixture.  The tag
+    hashes the full corpus path (same-named corpora must not collide)
+    and, if given, the session's applicationId (one session's overwrite
+    must not tear another's memoized read-back)."""
+    full = os.path.abspath(sf_dir)
+    key = f"{session}\x00{full}" if session else full
+    tag = hashlib.sha1(key.encode()).hexdigest()[:12]
+    return os.path.join(
+        scratch_root(), f"{family}_{os.path.basename(full)}_{tag}"
+    )
 
 
 def iter_table_files(table_path: str):

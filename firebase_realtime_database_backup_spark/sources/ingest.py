@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from firebase_realtime_database_backup_spark.catalog import read_table
+from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.registry import Registry
+from firebase_realtime_database_backup_spark.scratch import fixture_dir
 
 REG = Registry()
 
@@ -122,11 +124,31 @@ def read_jsonl_quarantine(
 #: doc_id divisible by 37 becomes a truncated (invalid) JSON line.
 _QUARANTINE_MOD = 37
 
-#: Fixture dirs already generated this session, keyed (applicationId,
-#: sf_dir) — the fixture is a pure function of the corpus, so plan-only
-#: consumers (schema lints, repeated bench runs) must not pay the
-#: documents scan + distributed write again.
-_QUARANTINE_FIXTURES: dict[tuple[str, str], str] = {}
+
+@session_memo
+def _quarantine_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """JSONL fixture for ingest_jsonl_quarantine, written once per
+    (session, corpus) — the fixture is a pure function of the corpus,
+    so plan-only consumers (schema lints, repeated bench runs) must not
+    pay the documents scan + distributed write again."""
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", F.length("text").alias("n_chars")
+    )
+    line = F.when(
+        F.col("doc_id") % _QUARANTINE_MOD == 0,
+        F.concat(F.lit('{"doc_id": '), F.col("doc_id"), F.lit(', "half')),
+    ).otherwise(
+        F.concat(
+            F.lit('{"doc_id": '),
+            F.col("doc_id"),
+            F.lit(', "n_chars": '),
+            F.col("n_chars"),
+            F.lit("}"),
+        )
+    )
+    fixture = fixture_dir("quarantine_jsonl", sf_dir)
+    docs.select(line.alias("value")).write.mode("overwrite").text(fixture)
+    return fixture
 
 
 @REG.query(
@@ -167,44 +189,7 @@ def ingest_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-accumulator aggregate — no shuffle wider than the final 1-row
     reduce.  SUMs are cast to BIGINT on the oracle side (HUGEINT canon
     rule)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    fixture = _QUARANTINE_FIXTURES.get(memo_key)
-    if fixture is None:
-        docs = read_table(spark, sf_dir, "documents").select(
-            "doc_id", F.length("text").alias("n_chars")
-        )
-        line = F.when(
-            F.col("doc_id") % _QUARANTINE_MOD == 0,
-            F.concat(F.lit('{"doc_id": '), F.col("doc_id"), F.lit(', "half')),
-        ).otherwise(
-            F.concat(
-                F.lit('{"doc_id": '),
-                F.col("doc_id"),
-                F.lit(', "n_chars": '),
-                F.col("n_chars"),
-                F.lit("}"),
-            )
-        )
-        # Key the fixture dir on a hash of the FULL sf_dir path, matching
-        # the memo key: two scale dirs sharing a basename under different
-        # parents must not collide on one .scratch path (the lazy
-        # read-back would silently consume whichever corpus wrote last).
-        import hashlib
-
-        path_tag = hashlib.sha1(
-            os.path.abspath(os.path.normpath(sf_dir)).encode()
-        ).hexdigest()[:12]
-        fixture = os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".scratch",
-            f"quarantine_jsonl_{os.path.basename(os.path.normpath(sf_dir))}"
-            f"_{path_tag}",
-        )
-        docs.select(line.alias("value")).write.mode("overwrite").text(fixture)
-        _QUARANTINE_FIXTURES[memo_key] = fixture
-
+    fixture = _quarantine_fixture(spark, sf_dir)
     good, quarantined = read_jsonl_quarantine(
         spark, fixture, "doc_id BIGINT, n_chars BIGINT"
     )
@@ -219,10 +204,25 @@ def ingest_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, abs sf_dir) -> evolution fixture dir (see
-#: ingest_schema_evolution; same memo discipline as the quarantine
-#: fixture so one session writes each fixture once).
-_EVOLUTION_FIXTURES: dict = {}
+@session_memo
+def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Two-generation parquet fixture (v1/, v2/) for
+    ingest_schema_evolution, written once per (session, corpus)."""
+    # Carry the table's own n_chars column (not length(text)): the
+    # oracle predicts the audit row from stored columns, and corpora
+    # where n_chars deliberately disagrees with length(text) (the
+    # edge corpus's unicode rows) must not diverge.
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "n_chars"
+    )
+    fixture = fixture_dir("schema_evolution", sf_dir)
+    docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id", "lang"
+    ).write.mode("overwrite").parquet(os.path.join(fixture, "v1"))
+    docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "lang", "n_chars"
+    ).write.mode("overwrite").parquet(os.path.join(fixture, "v2"))
+    return fixture
 
 
 @REG.query(
@@ -258,34 +258,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly once known, which also makes the scan plan stable);
     evolution is append-only column ADDITION here, the only kind
     parquet merge supports without a rewrite."""
-    memo_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    fixture = _EVOLUTION_FIXTURES.get(memo_key)
-    if fixture is None:
-        import hashlib
-
-        # Carry the table's own n_chars column (not length(text)): the
-        # oracle predicts the audit row from stored columns, and corpora
-        # where n_chars deliberately disagrees with length(text) (the
-        # edge corpus's unicode rows) must not diverge.
-        docs = read_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "n_chars"
-        )
-        path_tag = hashlib.sha1(memo_key[1].encode()).hexdigest()[:12]
-        fixture = os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".scratch",
-            f"schema_evolution_{os.path.basename(os.path.normpath(sf_dir))}"
-            f"_{path_tag}",
-        )
-        docs.filter(F.col("doc_id") % 2 == 0).select(
-            "doc_id", "lang"
-        ).write.mode("overwrite").parquet(os.path.join(fixture, "v1"))
-        docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id", "lang", "n_chars"
-        ).write.mode("overwrite").parquet(os.path.join(fixture, "v2"))
-        _EVOLUTION_FIXTURES[memo_key] = fixture
+    fixture = _evolution_fixture(spark, sf_dir)
 
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(fixture, "v1"), os.path.join(fixture, "v2")
@@ -304,9 +277,6 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Fixture dirs for the raw-text log parse, keyed (applicationId, sf_dir).
-_LOG_FIXTURES: dict = {}
-
 #: every event_id % 43 == 0 line is mangled (delimiter scheme broken).
 _LOG_CORRUPT_MOD = 43
 
@@ -322,6 +292,54 @@ _LOG_UNENCODABLE_SQL = (
     "event_id IS NULL OR user_id IS NULL OR value IS NULL OR "
     "event_type IS NULL OR NOT REGEXP_MATCHES(event_type, '^\\w+$')"
 )
+
+
+@session_memo
+def _log_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Raw-text log fixture for ingest_text_log_parse, written once per
+    (session, corpus) under a session-keyed scratch dir."""
+    ev = read_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+    good = F.format_string(
+        "evt|%d|u%d|%s|%d",
+        F.col("event_id"),
+        F.col("user_id"),
+        F.col("event_type"),
+        F.col("cents"),
+    )
+    unencodable = (
+        F.col("event_id").isNull()
+        | F.col("user_id").isNull()
+        | F.col("cents").isNull()
+        | F.col("event_type").isNull()
+        | ~F.col("event_type").rlike(r"^\w+$")
+    )
+    mangled = F.coalesce(
+        F.format_string(
+            "evt#%d#u%d#%s#%d",
+            F.col("event_id"),
+            F.col("user_id"),
+            # the payload of a corrupt line is irrelevant to the
+            # audit, but it must stay ONE physical line: a raw
+            # event_type carrying \n or \r would be split by the
+            # .text() writer into multiple lines and read-back
+            # n_bad would diverge from the oracle's per-row count
+            F.regexp_replace(F.col("event_type"), r"[\r\n]", " "),
+            F.col("cents"),
+        ),
+        F.lit("evt#malformed"),  # NULL fields: a fixed bad line
+    )
+    line = F.when(
+        unencodable | (F.col("event_id") % _LOG_CORRUPT_MOD == 0),
+        mangled,
+    ).otherwise(good)
+    fixture = fixture_dir("textlog", sf_dir, spark.sparkContext.applicationId)
+    ev.select(line.alias("value")).write.mode("overwrite").text(fixture)
+    return fixture
 
 
 @REG.query(
@@ -368,64 +386,7 @@ def ingest_text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no shuffle wider than the 1-row reduce.  regexp_extract runs
     JVM-side (no UDF); at 100 TB the text scan splits per file/block
     like any lake scan."""
-    import hashlib
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    fixture = _LOG_FIXTURES.get(memo_key)
-    if fixture is None:
-        ev = read_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        good = F.format_string(
-            "evt|%d|u%d|%s|%d",
-            F.col("event_id"),
-            F.col("user_id"),
-            F.col("event_type"),
-            F.col("cents"),
-        )
-        unencodable = (
-            F.col("event_id").isNull()
-            | F.col("user_id").isNull()
-            | F.col("cents").isNull()
-            | F.col("event_type").isNull()
-            | ~F.col("event_type").rlike(r"^\w+$")
-        )
-        mangled = F.coalesce(
-            F.format_string(
-                "evt#%d#u%d#%s#%d",
-                F.col("event_id"),
-                F.col("user_id"),
-                # the payload of a corrupt line is irrelevant to the
-                # audit, but it must stay ONE physical line: a raw
-                # event_type carrying \n or \r would be split by the
-                # .text() writer into multiple lines and read-back
-                # n_bad would diverge from the oracle's per-row count
-                F.regexp_replace(F.col("event_type"), r"[\r\n]", " "),
-                F.col("cents"),
-            ),
-            F.lit("evt#malformed"),  # NULL fields: a fixed bad line
-        )
-        line = F.when(
-            unencodable | (F.col("event_id") % _LOG_CORRUPT_MOD == 0),
-            mangled,
-        ).otherwise(good)
-        path_tag = hashlib.sha1(
-            os.path.abspath(os.path.normpath(sf_dir)).encode()
-        ).hexdigest()[:12]
-        fixture = os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".scratch",
-            f"textlog_{spark.sparkContext.applicationId}_"
-            f"{os.path.basename(os.path.normpath(sf_dir))}_{path_tag}",
-        )
-        ev.select(line.alias("value")).write.mode("overwrite").text(fixture)
-        _LOG_FIXTURES[memo_key] = fixture
-
+    fixture = _log_fixture(spark, sf_dir)
     lines = spark.read.text(fixture)
     parsed = lines.select(
         F.regexp_extract("value", _LOG_RE, 1).alias("event_id_s"),

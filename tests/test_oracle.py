@@ -180,3 +180,101 @@ def test_every_oracle_has_query(spark):
     q, o = entrymod.queries(), entrymod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 45
+
+
+def _memo_smoke_lists():
+    """(oracle-backed, rows-only) consumers of the session memos, each
+    mapped to the memoized helpers it must leave an entry in; together
+    they cover every helper (asserted in the test)."""
+    from firebase_realtime_database_backup_spark.operators import (
+        dedup,
+        multimodal,
+        relational,
+        similarity,
+        text,
+    )
+    from firebase_realtime_database_backup_spark.sources import ingest
+
+    oracle_backed = {
+        "text_vocab_growth": (text.doc_shingle_ids, text.ensure_shingle_table),
+        "dedup_minhash_audit_sampled": (
+            dedup._band_index,
+            dedup._sampled_shingle_ids,
+        ),
+        "dedup_containment_prefix": (dedup._ranked_tokens, dedup._sid_arrays),
+        "dedup_editdist_neighborhood": (dedup._ensure_fastss_pairs,),
+        "dedup_entity_resolution_sampled": (
+            dedup._ensure_fastss_pairs,
+            dedup._er_attr,
+        ),
+        "text_fingerprint": (text.ensure_shingle_vocab,),
+        "mix_token_budget_select": (text._budget_feats,),
+        "multimodal_phash_hamming": (multimodal.phash_hashes,),
+        "events_item_cooccurrence": (relational.ensure_item_edges,),
+        "graph_pagerank": (relational._ensure_sym_edges,),
+        "layout_compact_small_files": (relational._compact_fixture,),
+        "layout_partitioned_prune": (relational._prune_fixture,),
+        "ingest_jsonl_quarantine": (ingest._quarantine_fixture,),
+        "ingest_schema_evolution": (ingest._evolution_fixture,),
+        "ingest_text_log_parse": (ingest._log_fixture,),
+    }
+    # the xxhash shingle relation and the IVF-PQ index have no
+    # oracle-backed consumer, and the BPE oracle alone takes ~18 s (the
+    # slow-tier sweep checks it): their two runs are compared to each
+    # other
+    rows_only = {
+        "dedup_minhash_xxhash": (dedup._xxhash_shingle_ids, dedup._band_index),
+        "sim_ivfpq_persisted": (similarity.ensure_ivfpq_index,),
+        "text_bpe_merges": (text.ensure_bpe_table,),
+    }
+    return oracle_backed, rows_only
+
+
+def test_memo_consumers_match_oracle_twice(spark):
+    """Fast-tier oracle smoke over the session memos: each consumer runs
+    twice in one session from cold memos.  Both runs must be hash-exact
+    (against DuckDB where an oracle exists, else against each other),
+    and the second run must be served from the memo: it builds no entry
+    and replaces none."""
+    import os
+
+    import __spark_entry__ as entrymod
+
+    from firebase_realtime_database_backup_spark import memo
+
+    sf = "/root/testdata/sf0.001"
+    oracle_backed, rows_only = _memo_smoke_lists()
+    helpers = {id(h.cache) for hs in (*oracle_backed.values(), *rows_only.values())
+               for h in hs}
+    assert helpers == {id(d) for d in memo._REGISTERED}, "a memo has no consumer here"
+
+    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    con = verify.duckdb_connection(sf)
+    memo.clear_caches()
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf))
+
+    def rows(name):
+        df = queries[name](spark, sf)
+        if name in rows_only:
+            return sorted(str(r) for r in df.collect())
+        pdf = df.toPandas()
+        cols = sorted(str(c).lower() for c in pdf.columns)
+        return cols, verify._token_rows(verify._canon_pdf(pdf))
+
+    for name, reached in (*oracle_backed.items(), *rows_only.items()):
+        first = rows(name)
+        if name in oracle_backed:
+            o_pdf = con.execute(oracles[name]).fetchdf()
+            expected = (
+                sorted(str(c).lower() for c in o_pdf.columns),
+                verify._token_rows(verify._canon_pdf(o_pdf)),
+            )
+            assert first == expected, f"{name}: first run differs from oracle"
+        for h in reached:
+            assert any(k[:2] == key for k in h.cache), f"{name}: {h.__name__} unused"
+        stored = [dict(d) for d in memo._REGISTERED]
+        assert rows(name) == first, f"{name}: second run differs"
+        for d, before in zip(memo._REGISTERED, stored):
+            assert d.keys() == before.keys() and all(
+                d[k] is v for k, v in before.items()
+            ), f"{name}: second run rebuilt a memo entry"

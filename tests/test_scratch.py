@@ -12,7 +12,7 @@ import time
 
 import pytest
 
-from firebase_realtime_database_backup_spark import scratch
+from firebase_realtime_database_backup_spark import memo, scratch
 from firebase_realtime_database_backup_spark.scratch import (
     MARKER,
     corpus_fingerprint,
@@ -43,8 +43,7 @@ def test_shingle_table_survives_sessions(spark):
     assert is_published(path)
     before = _marker_mtime(path)
 
-    text._SHINGLE_TABLES.clear()
-    text._DSHINGLE_CACHE.clear()
+    memo.clear_caches()
     again = text.ensure_shingle_table(spark, SF)
     assert again == path, "new session rebuilt instead of reusing"
     assert _marker_mtime(path) == before, "table was rewritten"
@@ -65,7 +64,7 @@ def test_bpe_table_survives_sessions(spark):
     path = text.ensure_bpe_table(spark, SF)
     assert is_published(path)
     before = _marker_mtime(path)
-    text._BPE_TABLES.clear()
+    memo.clear_caches()
     assert text.ensure_bpe_table(spark, SF) == path
     assert _marker_mtime(path) == before, "merge table was retrained"
 
@@ -80,7 +79,7 @@ def test_ivfpq_index_survives_sessions(spark):
     idx = similarity.ensure_ivfpq_index(spark, SF)
     assert idx is not None and is_published(idx[0])
     before = _marker_mtime(idx[0])
-    similarity._IVFPQ_INDEXES.clear()
+    memo.clear_caches()
     again = similarity.ensure_ivfpq_index(spark, SF)
     assert again[0] == idx[0], "new session re-encoded instead of reusing"
     assert _marker_mtime(idx[0]) == before, "index was rewritten"
