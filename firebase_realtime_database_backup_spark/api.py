@@ -96,7 +96,8 @@ def do_restore(
     max_batch: int = DEFAULT_MAX_IPP,
     driver_side: bool = False,
 ):
-    """Import: snapshot -> AIMD batched merge-PATCH writeback."""
+    """Import: snapshot -> AIMD batched merge-PATCH writeback (driver
+    threads and memory bound: `sinks.writeback.writeback`)."""
     return writeback(
         read_snapshot(spark, snapshot_dir),
         client_factory,
@@ -134,7 +135,12 @@ def _build_parser() -> argparse.ArgumentParser:
         "snapshot directory is the scalable form)",
     )
 
-    imp = sub.add_parser("import")
+    imp = sub.add_parser(
+        "import",
+        help="restore a snapshot from the driver: depth levels in order, "
+        "each on concurrent connections; the driver holds one depth "
+        "chunk of the snapshot at a time",
+    )
     common(imp)
     imp.add_argument("--backup_dir", required=True)
     imp.add_argument("--yes", action="store_true", help="skip confirmation")  # C5
@@ -269,8 +275,10 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         backup_dir = unarchive_snapshot(backup_dir, tempfile.mkdtemp())
-    do_restore(spark, backup_dir, lambda: client, driver_side=True)
-    print(f"restored {args.backup_dir} into {project_url(args.project_id)}")
+    stats = do_restore(spark, backup_dir, lambda: client, driver_side=True)
+    print(f"restored {args.backup_dir} into {project_url(args.project_id)}: "
+          f"{stats.keys_written} keys in {stats.patches} patches, "
+          f"{stats.halvings} halvings, {stats.splits} splits")
     return 0
 
 

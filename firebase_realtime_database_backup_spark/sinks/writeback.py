@@ -5,10 +5,12 @@ split-on-failure (the reference's restore pipeline, R3-R6).
 Mapping (SURVEY.md §2.A):
 - R3 batched PATCH      slice N keys → update(path, slice)
                         (src/RestoreProcessor.php:70-106)
-      → foreachPartition writer; each task owns a client connection
+      → driver threads (one client each) or a foreachPartition
+        writer (each task owns a client connection)
 - R4 AIMD batch sizing  halve on failure (floor 1), ×1.2 after 5
                         successes cap 1000 (src/RestoreProcessor.php:83,97-104)
-      → identical controller per (task, path)
+      → identical controller per write unit: a path, or one key range
+        of a wide path
 - R5 split-on-failure   single-key update still fails ⇒ descend one
                         level and PATCH per child (src/RestoreProcessor.php:86-94)
 - R6 progress anti-join array_diff_key written keys
@@ -20,18 +22,40 @@ Mapping (SURVEY.md §2.A):
 Ordering hazard (SURVEY.md §7.4): Firebase update() is a merge at the
 TARGET path, but replacing descendants it writes — so a parent-level
 PATCH after a child-level PATCH can clobber the child.  The reference
-dodges this with strictly sequential manifest order; we make it
-structural instead: rows are grouped by parent path (one PATCH never
-spans paths), paths are partitioned by hash so one path lands in exactly
-one task, and within a task paths are written in ascending depth so
-ancestors never overwrite a descendant's finer-grained write.
+dodges this with strictly sequential manifest order.  Here rows are
+grouped by parent path (one PATCH never spans paths), and the guarantee
+depends on where the writes run:
+
+- driver-side (`driver_side=True`): ancestors are written before
+  descendants across the WHOLE tree.  Rows are grouped by depth, and a
+  depth level starts only after every PATCH of the level above has
+  returned, split-on-failure descents (R5) included — a depth barrier.
+  Within a level, RESTORE_CONNECTIONS threads write path units
+  concurrently; a path wider than `max_batch` keys is cut into at most
+  RESTORE_CONNECTIONS contiguous key ranges, each its own unit with its
+  own AIMD state.  Merge-PATCHes on disjoint keys commute, so the final
+  store equals a serial write's.
+- executor-side (`foreachPartition`): ancestors are written first only
+  WITHIN a task.  Paths are partitioned by hash, so one path lands in
+  exactly one task and each task writes its paths in ascending depth,
+  but `hash(path)` can put a parent and a child in different tasks,
+  and tasks are not ordered against each other.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+import math
+import threading
+from collections import defaultdict
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from contextlib import closing
 from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +64,8 @@ MAX_BATCH = 1000          # src/RestoreProcessor.php:17
 GROWTH_FACTOR = 1.2       # src/RestoreProcessor.php:100-103
 GROWTH_AFTER = 5
 MIN_BATCH = 1             # src/RestoreProcessor.php:83 floor
+RESTORE_CONNECTIONS = 8   # driver-side restore threads, one client each
+RESTORE_CHUNK_ROWS = 100_000  # tree rows per driver-side read
 
 
 @dataclass
@@ -97,7 +123,7 @@ def _write_path(
 
 def _drain_rows(client, rows: Iterator, max_batch: int) -> WritebackStats:
     """Write an ordered stream of tree rows: batch contiguous same-path
-    rows, AIMD-write each path's bucket."""
+    rows, AIMD-write each path's bucket (the executor-side writer)."""
     stats = WritebackStats()
     cur_path: str | None = None
     bucket: dict = {}
@@ -116,6 +142,100 @@ def _drain_rows(client, rows: Iterator, max_batch: int) -> WritebackStats:
     return stats
 
 
+def _depth_chunks(tree: DataFrame) -> list[tuple[int, int]]:
+    """Contiguous (first, last) depth ranges to read one at a time,
+    shallowest first: each holds at most RESTORE_CHUNK_ROWS rows, or
+    one wider level on its own."""
+    counts = pc.value_counts(tree.select("depth").toArrow().column("depth"))
+    chunks: list[tuple[int, int]] = []
+    rows = 0
+    for c in sorted(counts.to_pylist(), key=lambda c: c["values"]):
+        if chunks and rows + c["counts"] <= RESTORE_CHUNK_ROWS:
+            chunks[-1] = (chunks[-1][0], c["values"])
+            rows += c["counts"]
+        else:
+            chunks.append((c["values"], c["values"]))
+            rows = c["counts"]
+    return chunks
+
+
+def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
+    """A depth-sorted chunk's rows grouped by depth, then by path
+    ({path: {key: value}}), shallowest level first; a level's values are
+    decoded only when it is reached."""
+    depth = chunk.column("depth").to_numpy()
+    cuts = [0, *(np.flatnonzero(depth[1:] != depth[:-1]) + 1).tolist(), len(depth)]
+    for lo, hi in zip(cuts, cuts[1:]):
+        level: dict[str, dict] = defaultdict(dict)
+        for batch in chunk.slice(lo, hi - lo).to_batches():
+            cols = (batch.column(c).to_pylist() for c in ("path", "key", "value_json"))
+            for path, key, value_json in zip(*cols):
+                level[path][key] = json.loads(value_json)
+        yield level
+
+
+def _tree_levels(tree: DataFrame) -> Iterator[dict[str, dict]]:
+    """The tree's depth levels, shallowest first, loaded onto the driver
+    one depth chunk at a time with `toArrow()`: the driver holds one
+    chunk and one decoded level."""
+    cols = tree.select("path", "key", "value_json", "depth")
+    for first, last in _depth_chunks(cols):
+        chunk = cols.where(F.col("depth").between(first, last))
+        yield from _levels(chunk.toArrow().sort_by("depth"))
+
+
+def _units(level: dict[str, dict], max_batch: int) -> list[tuple[str, dict]]:
+    """One level's write units: a path's whole key set, or — for a path
+    wider than max_batch — one of at most RESTORE_CONNECTIONS contiguous
+    key ranges.  Widest first, so the level's longest writes start
+    early."""
+    units = []
+    for path, data in level.items():
+        keys = sorted(data)
+        n = min(RESTORE_CONNECTIONS, math.ceil(len(keys) / max_batch))
+        for i in range(n):
+            part = keys[i * len(keys) // n : (i + 1) * len(keys) // n]
+            units.append((path, {k: data[k] for k in part}))
+    units.sort(key=lambda u: -len(u[1]))
+    return units
+
+
+def _write_levels(
+    levels: Iterable[dict[str, dict]],
+    client_factory: Callable[[], object],
+    max_batch: int,
+) -> WritebackStats:
+    """Write depth levels in order, each level's units on
+    RESTORE_CONNECTIONS threads; a level starts once every unit of the
+    one before has returned.  Each thread owns one client; the first
+    failure stops the write and is raised."""
+    local = threading.local()
+
+    def write_unit(path: str, data: dict) -> WritebackStats:
+        if not hasattr(local, "client"):
+            local.client = client_factory()
+        stats = WritebackStats()
+        _write_path(local.client, path, data, stats, max_batch)
+        return stats
+
+    total = WritebackStats()
+    with ThreadPoolExecutor(max_workers=RESTORE_CONNECTIONS) as pool:
+        for level in levels:
+            futures = [
+                pool.submit(write_unit, path, data)
+                for path, data in _units(level, max_batch)
+            ]
+            done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+            failed = [f.exception() for f in done if f.exception() is not None]
+            if failed:
+                for f in pending:
+                    f.cancel()
+                raise failed[0]
+            for f in futures:
+                total.merge(f.result())
+    return total
+
+
 def writeback(
     tree: DataFrame,
     client_factory: Callable[[], object],
@@ -124,27 +244,31 @@ def writeback(
     driver_side: bool = False,
 ) -> WritebackStats | None:
     """Replay tree rows (path, key, value_json) through merge-PATCH
-    updates.  Rows are repartitioned by path (one path → one task) and
-    sorted by (depth, path) within tasks for ancestor-before-descendant
-    order; each task batches contiguous same-path rows and runs the
-    AIMD writer.
+    updates (ordering contract: module docstring).
 
-    driver_side=True collects through toLocalIterator and writes from
-    the driver — the reference's sequential restore shape
-    (src/RestoreProcessor.php:62-67), for small trees, tests, and
-    clients whose state must stay in-process.  Returns stats in that
-    mode (executor stats aren't shipped back in distributed mode)."""
-    ordered = tree.repartition(F.col("path")).sortWithinPartitions(
-        "depth", "path", "key"
-    )
+    driver_side=True writes from RESTORE_CONNECTIONS driver threads,
+    depth level by depth level — for small trees, tests, and clients
+    whose state must stay in-process.  Rows reach the driver with
+    `toArrow()`, one chunk of contiguous depth levels at a time (at most
+    RESTORE_CHUNK_ROWS rows, or one wider level); the driver holds one
+    chunk plus one decoded level, so its memory follows the widest
+    level rather than the whole tree.  Returns the merged stats
+    in that mode.
+
+    Otherwise rows are repartitioned by path (one path → one task) and
+    sorted by (depth, path) within tasks; each task batches contiguous
+    same-path rows and runs the AIMD writer.  Executor stats aren't
+    shipped back, so this mode returns None."""
     if driver_side:
-        client = client_factory()
-        return _drain_rows(client, ordered.toLocalIterator(), max_batch)
+        with closing(_tree_levels(tree)) as levels:
+            return _write_levels(levels, client_factory, max_batch)
 
     def write_partition(rows: Iterator) -> None:
         _drain_rows(client_factory(), rows, max_batch)
 
-    ordered.foreachPartition(write_partition)
+    tree.repartition(F.col("path")).sortWithinPartitions(
+        "depth", "path", "key"
+    ).foreachPartition(write_partition)
     return None
 
 
@@ -168,17 +292,3 @@ class JsonlAuditClient:
         )
         with open(fn, "a") as f:
             f.write(json.dumps({"path": path, "data": data}) + "\n")
-
-
-def restore_snapshot(
-    spark,
-    snapshot_dir: str,
-    client_factory: Callable[[], object],
-    *,
-    max_batch: int = MAX_BATCH,
-) -> None:
-    """End-to-end restore: snapshot directory → tree DF → writeback.
-    The Spark twin of `frdbackup import` (src/RestoreProcessor.php:56-68)."""
-    from firebase_realtime_database_backup_spark.sinks.snapshot import read_snapshot
-
-    writeback(read_snapshot(spark, snapshot_dir), client_factory, max_batch=max_batch)

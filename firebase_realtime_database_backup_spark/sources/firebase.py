@@ -33,7 +33,8 @@ Architectural departures from the reference (Spark-first, 100 TB):
 - Pages stream straight into Arrow batches / tree rows — the bounded-
   memory property the reference got from spill-to-disk chunk files
   (src/BackupProcessor.php:130,202-223) falls out of Spark's iterator
-  model.
+  model.  The driver-side `extract` hands its rows to Spark as one
+  Arrow table (`tree_frame`), not as a pickled row list.
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ from firebase_realtime_database_backup_spark.sources.tree import (
     canonical_json,
     child_path,
     path_depth,
+    tree_frame,
 )
 
 MIN_IPP = 2          # src/BackupProcessor.php:10
@@ -238,7 +240,7 @@ class FirebaseExtractor:
     # -- Spark materialization -------------------------------------------
     def to_dataframe(self, spark):
         """Materialize the scan as a tree DataFrame."""
-        return spark.createDataFrame(list(self.iter_rows()), TREE_SCHEMA)
+        return tree_frame(spark, list(self.iter_rows()))
 
 
 def extract(
@@ -272,7 +274,7 @@ def extract(
             rows.extend(chunk)
     # scalar top-level children emit their own (/, key, value) row inside
     # run(); dict children are carried page-grained by their subtree pass.
-    return spark.createDataFrame(rows, TREE_SCHEMA)
+    return tree_frame(spark, rows)
 
 
 def extract_distributed(

@@ -10,13 +10,19 @@ be a scalar leaf or a nested subtree; `flatten_level` peels one level,
 `flatten_full` iterates to fixpoint (driver-side loop, executor-side
 work — Spark schemas are static, unbounded-depth trees are not, so depth
 is unrolled iteratively per SURVEY.md §7.4).
+
+Tree rows cross the driver boundary as Arrow, never as a Python row
+list: `tree_frame` hands the JVM one typed `pyarrow.Table`, and the
+driver-side writeback reads rows back with `toArrow()`.
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Sequence
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -41,9 +47,36 @@ TREE_SCHEMA = StructType(
 )
 
 
+#: TREE_SCHEMA as Arrow: the table `tree_frame` hands to the JVM.
+_ARROW_TREE_SCHEMA = pa.schema(
+    [
+        pa.field("path", pa.string(), nullable=False),
+        pa.field("key", pa.string(), nullable=False),
+        pa.field("value_json", pa.string(), nullable=False),
+        pa.field("depth", pa.int32(), nullable=False),
+    ]
+)
+
+
+def _encodes(s: str) -> bool:
+    try:
+        s.encode("utf-8")
+    except UnicodeEncodeError:
+        return False
+    return True
+
+
 def canonical_json(value: Any) -> str:
-    """Deterministic JSON encoding (sorted keys, no whitespace)."""
-    return json.dumps(value, sort_keys=True, separators=(",", ":"), ensure_ascii=False)
+    """Deterministic JSON encoding (sorted keys, no whitespace).
+
+    A lone UTF-16 surrogate (JSON "\\ud800") has no UTF-8 form, so a
+    value holding one is written with ASCII escapes instead; `json.loads`
+    restores it exactly, where storing it raw would fail or be replaced
+    by U+FFFD."""
+    out = json.dumps(value, sort_keys=True, separators=(",", ":"), ensure_ascii=False)
+    if _encodes(out):
+        return out
+    return json.dumps(value, sort_keys=True, separators=(",", ":"))
 
 
 def child_path(path: str, key: str) -> str:
@@ -70,9 +103,35 @@ def rows_from_dict(d: dict, path: str = "/") -> list[tuple[str, str, str, int]]:
     return out
 
 
+def tree_frame(
+    spark: SparkSession, rows: Sequence[tuple[str, str, str, int]]
+) -> DataFrame:
+    """The tree DataFrame of (path, key, value_json, depth) rows, sent to
+    the JVM as one Arrow table typed like TREE_SCHEMA rather than as a
+    pickled row list (which costs a Python-side schema check per row and
+    a slower first job over the result).
+
+    A path or key holding a lone UTF-16 surrogate cannot be stored as
+    UTF-8 and, unlike a value, cannot be escaped: it raises a
+    ValueError naming the path."""
+    cols = list(zip(*rows)) or [()] * len(_ARROW_TREE_SCHEMA)
+    try:
+        arrays = [pa.array(c, f.type) for c, f in zip(cols, _ARROW_TREE_SCHEMA)]
+    except UnicodeEncodeError:
+        path, key = next(
+            (p, k) for p, k, v, _ in rows if not _encodes(p + k + v)
+        )
+        raise ValueError(
+            f"tree row {key!r} at path {path!r} holds a lone UTF-16 "
+            "surrogate, which UTF-8 cannot store"
+        ) from None
+    table = pa.Table.from_arrays(arrays, schema=_ARROW_TREE_SCHEMA)
+    return spark.createDataFrame(table, TREE_SCHEMA)
+
+
 def tree_from_dict(spark: SparkSession, d: dict) -> DataFrame:
     """Materialize a nested dict as a fully-flattened tree DataFrame."""
-    return spark.createDataFrame(rows_from_dict(d), TREE_SCHEMA)
+    return tree_frame(spark, rows_from_dict(d))
 
 
 def leaves(tree: DataFrame) -> DataFrame:

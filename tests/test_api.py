@@ -58,6 +58,10 @@ def test_cli_import_requires_confirmation(spark, tmp_path, monkeypatch, capsys):
     rc = main(["import", "-p", "demo", "--tree-json", str(src),
                "--backup_dir", out, "--yes"])
     assert rc == 0
+    # the import reports its writeback stats on one line
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert line.startswith("restored ") and " keys in " in line
+    assert " patches, 0 halvings, 0 splits" in line
 
 
 def test_cli_diff_incremental(spark, tmp_path, capsys):

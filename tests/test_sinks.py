@@ -3,6 +3,9 @@
 consistency, AIMD writeback, split-on-failure."""
 
 import json
+import sys
+import threading
+import time
 
 import pytest
 
@@ -11,9 +14,9 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_snapshot,
     write_snapshot,
 )
+from firebase_realtime_database_backup_spark.sinks import writeback as wb
 from firebase_realtime_database_backup_spark.sinks.writeback import (
     JsonlAuditClient,
-    restore_snapshot,
     writeback,
 )
 from firebase_realtime_database_backup_spark.sources.firebase import (
@@ -22,6 +25,7 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     extract,
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
+    path_depth,
     tree_from_dict,
     tree_to_dict,
 )
@@ -111,6 +115,173 @@ def test_writeback_scalar_failure_raises(spark):
             lambda: dst,
             driver_side=True,
         )
+
+
+class Recorder:
+    """Destination for the concurrent driver-side writeback: writes one
+    FakeFirebase after sleeping a few ms per PATCH, logs each PATCH as
+    (path, keys, start, end) and counts the clients asked for."""
+
+    def __init__(self, store: FakeFirebase, delay_s: float = 0.005) -> None:
+        self.store, self.delay_s = store, delay_s
+        self.calls: list[tuple[str, list[str], float, float]] = []
+        self.clients = 0
+        self._lock = threading.Lock()
+
+    def client(self) -> "Recorder":
+        with self._lock:
+            self.clients += 1
+        return self
+
+    def update(self, path: str, data: dict) -> None:
+        start = time.perf_counter()
+        time.sleep(self.delay_s)
+        try:
+            self.store.update(path, data)
+        finally:
+            with self._lock:
+                self.calls.append((path, sorted(data), start, time.perf_counter()))
+
+    def max_in_flight(self, path: str | None = None) -> int:
+        events = sorted(
+            (t, step)
+            for p, _, start, end in self.calls
+            if path is None or p == path
+            for t, step in ((start, 1), (end, -1))
+        )
+        best = cur = 0
+        for _, step in events:
+            cur += step
+            best = max(best, cur)
+        return best
+
+
+def assert_depth_ordered(calls) -> None:
+    for p, _, _, end in calls:
+        for q, _, start, _ in calls:
+            if path_depth(q) > path_depth(p):
+                assert start >= end, f"{q} started before {p} returned"
+
+
+def test_writeback_concurrent_depth_ordered(spark, monkeypatch):
+    """Driver-side restore on 4 threads: the store equals the source,
+    PATCHes overlap but never exceed the thread count, every depth level
+    waits for the one above, and a path wider than max_batch is written
+    as several concurrent key ranges."""
+    monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
+    rec = Recorder(FakeFirebase({}))
+    stats = writeback(
+        tree_from_dict(spark, TREE), rec.client, driver_side=True, max_batch=8
+    )
+    assert rec.store.tree == TREE
+    assert stats.patches == len(rec.calls)
+    assert stats.keys_written == sum(len(keys) for _, keys, _, _ in rec.calls)
+    assert 1 <= rec.clients <= 4
+    assert 1 < rec.max_in_flight() <= 4
+    assert_depth_ordered(rec.calls)
+    # /users has 25 keys: one range would write it one PATCH at a time
+    assert rec.max_in_flight("/users") > 1
+    users = [keys for p, keys, _, _ in rec.calls if p == "/users"]
+    assert sorted(k for keys in users for k in keys) == sorted(TREE["users"])
+
+
+def test_writeback_one_connection_is_serial(spark, monkeypatch):
+    monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 1)
+    rec = Recorder(FakeFirebase({}), delay_s=0.002)
+    writeback(
+        tree_from_dict(spark, TREE), rec.client, driver_side=True, max_batch=8
+    )
+    assert rec.store.tree == TREE
+    assert rec.max_in_flight() == 1
+    assert rec.clients == 1
+
+
+def test_writeback_concurrent_fault_injection(spark, monkeypatch):
+    """On 4 threads, each key range of a refused path halves on its own
+    and still converges; an unwritable scalar still raises."""
+    monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
+    data = {"items": {f"i{j:03d}": j for j in range(40)}}
+    dst = FakeFirebase({}, fail_updates_over=3)
+    stats = writeback(
+        tree_from_dict(spark, data), lambda: dst, driver_side=True, max_batch=16
+    )
+    assert dst.tree == data
+    assert stats.halvings > 0
+    assert max(n for _, n in dst.update_calls) <= 16
+
+    dst = FakeFirebase({}, fail_update_bytes=2)
+    with pytest.raises(FirebaseTransportError):
+        writeback(
+            tree_from_dict(spark, {"k": "a-very-long-scalar-value", "j": 1}),
+            lambda: dst,
+            driver_side=True,
+        )
+
+
+def test_writeback_concurrent_stress(spark, monkeypatch):
+    """More threads than cores with a short switch interval: every key
+    of every range lands exactly once and the stats add up."""
+    monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 16)
+    data = {
+        "wide": {f"w{j:04d}": {"v": j} for j in range(1500)},
+        "side": {f"s{j:02d}": j for j in range(60)},
+    }
+    tree = tree_from_dict(spark, data)
+    rows = tree.count()
+    dst = FakeFirebase({})
+    result: dict = {}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        worker = threading.Thread(
+            target=lambda: result.update(stats=writeback(
+                tree, lambda: dst, driver_side=True, max_batch=40
+            ))
+        )
+        worker.start()
+        worker.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not worker.is_alive()
+    assert dst.tree == data
+    assert result["stats"].keys_written == rows == sum(n for _, n in dst.update_calls)
+
+
+def test_writeback_reads_in_depth_chunks(spark, monkeypatch):
+    """The driver reads the tree in contiguous depth chunks of at most
+    RESTORE_CHUNK_ROWS rows (a wider level alone); a restore read in
+    several chunks still equals the source and keeps the depth order."""
+    monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
+    tree = tree_from_dict(spark, TREE)
+    # depth 1: 3 rows, depth 2: 27 rows, depth 3: 53 rows
+    assert dict(tree.groupBy("depth").count().collect()) == {1: 3, 2: 27, 3: 53}
+    assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
+    rec = Recorder(FakeFirebase({}), delay_s=0.001)
+    writeback(tree, rec.client, driver_side=True, max_batch=8)
+    assert rec.store.tree == TREE
+    assert_depth_ordered(rec.calls)
+
+
+def test_lone_surrogate_value_roundtrips(spark, tmp_path):
+    """A value holding a lone UTF-16 surrogate survives extract ->
+    snapshot -> restore exactly (escaped in value_json, not replaced
+    by U+FFFD)."""
+    tree = {"notes": {"n1": "a\ud800b", "n2": {"deep": "\udfff é"}}, "ok": "é"}
+    out = str(tmp_path / "snap")
+    write_snapshot(extract(spark, FakeFirebase(tree)), out)
+    dst = FakeFirebase({})
+    writeback(read_snapshot(spark, out), lambda: dst, driver_side=True)
+    assert dst.tree == tree
+
+
+@pytest.mark.parametrize(
+    "tree", [{"bad": {"k\ud800": 1}}, {"bad\udc00": {"x": {"y": 1}}}]
+)
+def test_lone_surrogate_key_raises_named_error(spark, tree):
+    """A key or path holding a lone surrogate cannot be escaped: the
+    tree frame refuses it with an error that names the path."""
+    with pytest.raises(ValueError, match=r"at path '/bad.*surrogate"):
+        extract(spark, FakeFirebase(tree))
 
 
 def test_writeback_distributed_foreachpartition(spark, tmp_path):
