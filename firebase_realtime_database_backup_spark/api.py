@@ -23,7 +23,8 @@ destructive-restore confirmation guard (ImportCommand.php:33-44) as
 --yes.  Live databases are reached through the real REST client
 (sources/http_client.py, stub-server-tested); --tree-json swaps in the
 offline FakeFirebase so the full pipeline also runs hermetically in
-tests and sandboxes.
+tests and sandboxes.  Export has no --root_start_ipp: the engine lists
+the root and pages its children, so the root's page size never applied.
 """
 
 from __future__ import annotations
@@ -72,18 +73,11 @@ def do_backup(
     out_dir: str,
     *,
     max_ipp: int = DEFAULT_MAX_IPP,
-    root_start_ipp: int = DEFAULT_MAX_IPP,
     parallelism: int = 8,
 ) -> DataFrame:
     """Export: AIMD paginated extract -> tree DF -> partitioned parquet
     snapshot with manifest.  Returns the tree DF (lazy reuse)."""
-    tree = extract(
-        spark,
-        client,
-        max_ipp=max_ipp,
-        root_start_ipp=root_start_ipp,
-        parallelism=parallelism,
-    )
+    tree = extract(spark, client, max_ipp=max_ipp, parallelism=parallelism)
     write_snapshot(tree, out_dir)
     return tree
 
@@ -126,7 +120,6 @@ def _build_parser() -> argparse.ArgumentParser:
     common(exp)
     exp.add_argument("--output_dir", default=None)
     exp.add_argument("--max_ipp", type=int, default=DEFAULT_MAX_IPP)
-    exp.add_argument("--root_start_ipp", type=int, default=DEFAULT_MAX_IPP)
     exp.add_argument(
         "--archive",
         action="store_true",
@@ -224,13 +217,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "export":
         out = args.output_dir or default_backup_name(args.project_id)
         client = _make_client(args)
-        tree = do_backup(
-            spark,
-            client,
-            out,
-            max_ipp=args.max_ipp,
-            root_start_ipp=args.root_start_ipp,
-        )
+        tree = do_backup(spark, client, out, max_ipp=args.max_ipp)
         print(f"exported {tree.count()} tree rows from "
               f"{project_url(args.project_id)} to {out}")
         if args.archive:

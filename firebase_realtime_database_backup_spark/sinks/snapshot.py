@@ -16,9 +16,8 @@ Mapping (SURVEY.md §2.A):
         directory of independently-written compressed columnar files
 
 Partitioning: by `top` (first path segment).  Top-level subtrees are the
-reference's unit of descent and our unit of extract parallelism, so they
-are also the pruning key: restoring or querying one subtree reads one
-partition directory, nothing else.
+reference's unit of descent, so they are also the pruning key: restoring
+or querying one subtree reads one partition directory, nothing else.
 
 Reads carry a schema.  The sink wrote these files and knows their
 schema, so no read of a snapshot or manifest pays Spark's inference

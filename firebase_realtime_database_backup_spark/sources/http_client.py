@@ -20,8 +20,9 @@ executors via a ``client_factory`` closure.
 
 Error channel: HTTP 413 or a "Payload is too large" error body raises
 ``PayloadTooLarge`` (the extractor's AIMD halving signal); any transport
-or non-2xx failure raises ``FirebaseTransportError`` (retried for
-shallow listings, bounded at SHALLOW_RETRIES).
+or non-2xx failure raises ``FirebaseTransportError``, which the extractor
+retries for every GET, shallow listing or page, up to GET_RETRIES
+attempts.
 """
 
 from __future__ import annotations

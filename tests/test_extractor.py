@@ -1,6 +1,7 @@
 """Extractor tests against the fake Firebase REST server (FIXTURES.md §2):
 page-boundary exactness, AIMD halving/growth, go-deeper descent, deep
-chains, unicode keys, randomized roundtrips.
+chains, unicode keys, randomized roundtrips, and the work queue's
+list-once, skip and key-range split rules and row contract.
 
 Semantics under test come from the reference:
 - boundary dedup        src/BackupProcessor.php:195-197
@@ -10,30 +11,31 @@ Semantics under test come from the reference:
 """
 
 import random
+import sys
+import threading
+import time
 
 import pytest
 
+from firebase_realtime_database_backup_spark.sources import firebase
 from firebase_realtime_database_backup_spark.sources.firebase import (
+    GET_RETRIES,
     FakeFirebase,
     FirebaseExtractor,
     FirebaseTransportError,
+    PayloadTooLarge,
     extract,
+    key_order,
 )
 from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
 
 
-def extract_dict(tree: dict, **kw) -> tuple[dict, FirebaseExtractor]:
-    """Run the extractor over a fake server; reassemble rows to a dict."""
-    fake = FakeFirebase(tree, **{k: v for k, v in kw.items() if k.startswith(("max_payload", "flaky"))})
-    ex = FirebaseExtractor(
-        fake,
-        **{k: v for k, v in kw.items() if k in ("max_ipp", "root_start_ipp")},
-    )
-    rows = list(ex.iter_rows())
-    assert len({(p, k) for p, k, *_ in rows}) == len(rows), "duplicate (path,key) rows"
-    root: dict = {}
+def reassemble(rows) -> dict:
+    """Rebuild the nested dict page-grained tree rows describe."""
     import json
 
+    assert len({(p, k) for p, k, *_ in rows}) == len(rows), "duplicate (path,key) rows"
+    root: dict = {}
     paths = {p for p, *_ in rows}
     for p, k, vj, _ in sorted(rows, key=lambda r: (r[3], r[0], r[1])):
         node = root
@@ -45,7 +47,17 @@ def extract_dict(tree: dict, **kw) -> tuple[dict, FirebaseExtractor]:
             node.setdefault(k, {})
         else:
             node[k] = v
-    return root, ex
+    return root
+
+
+def extract_dict(tree: dict, **kw) -> tuple[dict, FirebaseExtractor]:
+    """Run the extractor over a fake server; reassemble rows to a dict."""
+    fake = FakeFirebase(tree, **{k: v for k, v in kw.items() if k.startswith(("max_payload", "flaky"))})
+    ex = FirebaseExtractor(
+        fake,
+        **{k: v for k, v in kw.items() if k in ("max_ipp", "root_start_ipp")},
+    )
+    return reassemble(list(ex.iter_rows())), ex
 
 
 @pytest.mark.parametrize("n", [1, 4, 5, 6, 50])
@@ -149,12 +161,16 @@ def gen_tree(rng: random.Random, depth: int, fanout: int):
     }
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3, 7])
-def test_randomized_roundtrip(seed):
+def random_tree(seed: int) -> dict:
     rng = random.Random(seed)
-    tree = {
+    return {
         f"t{i:03d}": gen_tree(rng, depth=4, fanout=6) for i in range(rng.randint(2, 8))
     }
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 7])
+def test_randomized_roundtrip(seed):
+    tree = random_tree(seed)
     got, _ = extract_dict(tree, max_payload_bytes=700)
     assert got == tree
 
@@ -190,43 +206,313 @@ def test_extract_distributed_mapinpandas(spark):
     assert got == {"a": tree["a"], "b": tree["b"]}
 
 
-def test_parallel_extraction_beats_sequential():
-    """The engine's per-subtree parallel extraction must beat the
-    reference's strictly sequential shape under simulated REST RTT
-    (measured ~7x at 8 workers; assert a conservative 2x to stay
-    robust under CI scheduling noise)."""
-    import time
-    from concurrent.futures import ThreadPoolExecutor
+class RecordingFake(FakeFirebase):
+    """FakeFirebase that logs every GET as (path, shallow, start_at,
+    limit_to_first, refused)."""
 
-    from firebase_realtime_database_backup_spark.sources.tree import child_path
+    def __init__(self, tree, **kw):
+        super().__init__(tree, **kw)
+        self.log: list[tuple] = []
+        self._lock = threading.Lock()
+
+    def get(self, path, **kw):
+        refused = False
+        try:
+            return super().get(path, **kw)
+        except PayloadTooLarge:
+            refused = True
+            raise
+        finally:
+            with self._lock:
+                self.log.append(
+                    (path, kw.get("shallow", False), kw.get("start_at"),
+                     kw.get("limit_to_first"), refused)
+                )
+
+
+def test_three_key_node_lists_once_and_skips_repeats():
+    """A 3-key node whose 2-key page is over budget costs one refused
+    GET, one listing and one more refused GET, then descends on that
+    listing.  The halvings from 1000 down to 3 send nothing: each of
+    those pages would ask for the same three keys just refused."""
+    tree = {"n": {"a": "x" * 300, "b": "y" * 300, "c": "z" * 300}}
+    fake = RecordingFake(tree, max_payload_bytes=500)
+    ex = FirebaseExtractor(fake)
+    rows = list(ex.iter_rows("/n"))
+    assert reassemble(rows) == tree
+    on_n = [(shallow, limit, refused) for path, shallow, _, limit, refused in fake.log
+            if path == "/n"]
+    assert on_n == [(False, 1000, True), (True, None, False), (False, 2, True)]
+    assert ex.stats.go_deepers == 1
+    assert (ex.stats.halvings, ex.stats.skipped) == (9, 8)
+
+
+def covered_keys(tree: dict, path: str, start_at, limit) -> tuple:
+    """The keys a page request covers on a frozen tree."""
+    node = tree
+    for seg in path.strip("/").split("/"):
+        if seg:
+            node = node[seg]
+    keys = sorted(
+        (k for k in node if start_at is None or key_order(k) >= key_order(start_at)),
+        key=key_order,
+    )
+    return tuple(keys[:limit])
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 7])
+def test_no_refused_get_repeats_the_refusal_before_it(seed):
+    tree = random_tree(seed)
+    fake = RecordingFake(tree, max_payload_bytes=700)
+    ex = FirebaseExtractor(fake)
+    assert reassemble(list(ex.iter_rows())) == tree
+    last: dict = {}
+    for path, shallow, start_at, limit, refused in fake.log:
+        if refused:
+            keys = covered_keys(tree, path, start_at, limit)
+            assert last.get(path) != keys, (path, keys)
+            last[path] = keys
+    assert ex.stats.skipped > 0
+
+
+#: payload budget that forces go-deepers inside split nodes of
+#: `random_tree`'s trees at max_ipp=4
+BUDGET = 200
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 7])
+def test_rows_do_not_depend_on_parallelism(seed, monkeypatch):
+    """Row contract: with pages small enough to split nodes into several
+    key ranges and a budget that forces go-deepers inside them, the
+    rows are identical at parallelism 1, 4 and 8 and reassemble to the
+    source."""
+    monkeypatch.setattr(firebase, "RANGE_PAGES", 1)
+    split_paths: set = set()
+    split = FirebaseExtractor._split
+
+    def recording_split(self, u, stats):
+        split_paths.add(u.path)
+        return split(self, u, stats)
+
+    monkeypatch.setattr(FirebaseExtractor, "_split", recording_split)
+    tree = random_tree(seed)
+    runs = {}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the workers as much as possible
+    try:
+        for parallelism in (1, 4, 8):
+            ex = FirebaseExtractor(FakeFirebase(tree, max_payload_bytes=BUDGET), max_ipp=4)
+            runs[parallelism] = sorted(ex.export_rows(parallelism))
+            assert ex.stats.ranges > 0
+            assert ex.stats.rows == len(runs[parallelism])  # no lost stats merge
+    finally:
+        sys.setswitchinterval(interval)
+    assert runs[1] == runs[4] == runs[8]
+    assert reassemble(runs[1]) == tree
+    # a row under a child of a split path: that child was descended into
+    # from one of the path's key ranges
+    parents = {p.rsplit("/", 1)[0] or "/" for p, *_ in runs[1] if p != "/"}
+    assert parents & split_paths
+
+
+def test_keys_changed_under_a_split_node_appear_once():
+    """Keys deleted and inserted in a wide node after its listing, while
+    its key ranges page it: every key present throughout appears exactly
+    once, and nothing appears twice."""
+    # 205 keys: the last range's final page asks for fewer than ipp keys,
+    # and k0201a pushes a listed key out of that page
+    wide = {f"k{i:04d}": i for i in range(205)}
+    deleted = {"k0010", "k0025", "k0049", "k0050", "k0090", "k0129", "k0130", "k0199"}
+    inserted = {"k0010a", "k0049a", "k0089z", "k0150a", "k0201a", "k0300"}
+
+    class Mutating(FakeFirebase):
+        def __init__(self, tree):
+            super().__init__(tree)
+            self.lock = threading.Lock()
+            self.pages = 0
+
+        def get(self, path, **kw):
+            with self.lock:
+                out = super().get(path, **kw)
+                node = self.tree["wide"]
+                if path == "/wide" and kw.get("shallow"):
+                    for k in deleted:
+                        del node[k]
+                    node.update(dict.fromkeys(inserted, -1))
+                elif path == "/wide" and isinstance(out, dict) and out:
+                    # every third page, delete the key that becomes the
+                    # next page's cursor
+                    self.pages += 1
+                    if self.pages % 3 == 0:
+                        node.pop(max(out, key=key_order), None)
+                return out
+
+    fake = Mutating({"wide": dict(wide), "other": {"x": 1}})
+    ex = FirebaseExtractor(fake, max_ipp=10)
+    rows = ex.export_rows(4)
+    assert ex.stats.ranges >= 4
+    keys = [k for p, k, *_ in rows if p == "/wide"]
+    assert len(keys) == len(set(keys))
+    throughout = set(fake.tree["wide"]) & set(wide)
+    assert throughout <= set(keys)
+    assert set(keys) <= set(wide) | inserted
+
+
+def test_key_order_is_firebase_key_order():
+    """orderBy="$key": keys that parse as 32-bit integers first, in
+    numeric order, then the other keys by UTF-16 code units."""
+    keys = ["b", "10", "a", "-3", "9", "007", "7", "2147483648", "-", "\uffff", "\U0001f600"]
+    assert sorted(keys, key=key_order) == [
+        "-3", "7", "007", "9", "10", "-", "2147483648", "a", "b", "\U0001f600", "\uffff",
+    ]
+
+
+@pytest.mark.parametrize("budget", [None, 2000])
+def test_array_node_keys_appear_once(budget, monkeypatch):
+    """An array-like node, keys "0".."1999": page cursors and key ranges
+    follow Firebase's numeric key order, so every key appears exactly
+    once.  In plain string order the first page's cursor "9" would pass
+    every key from "10" on.  With a budget, every 97th element from
+    "150" on is too big for any page and is descended into from inside
+    a key range."""
+    monkeypatch.setattr(firebase, "RANGE_PAGES", 1)
+    arr = {str(i): {"v": i} for i in range(2000)}
+    if budget:
+        for i in range(150, 2000, 97):
+            arr[str(i)] = {"v": i, "pad": "x" * 1500, "more": "y" * 1500}
+    tree = {"arr": arr, "other": {"x": 1}}
+    ex = FirebaseExtractor(FakeFirebase(tree, max_payload_bytes=budget), max_ipp=100)
+    rows = ex.export_rows(4)
+    keys = [k for p, k, *_ in rows if p == "/arr"]
+    assert len(keys) == len(set(keys))
+    assert reassemble(rows) == tree
+    assert ex.stats.ranges >= 19
+    if budget:
+        assert ex.stats.go_deepers >= 20
+        assert {p for p, *_ in rows} >= {f"/arr/{i}" for i in range(150, 2000, 97)}
+    else:
+        assert sorted(keys, key=int) == [str(i) for i in range(2000)]
+
+
+@pytest.mark.parametrize("fault", [PayloadTooLarge, FirebaseTransportError])
+def test_refused_listing_pages_on_unsplit(fault):
+    """A wide node whose listing is refused, or fails on every attempt,
+    pages on by its cursor without skipping or splitting; the rows equal
+    a fault-free run's.  One node's first page is refused too."""
+    tree = {
+        "wide": {f"k{i:04d}": {"v": i} for i in range(300)},
+        "big": {f"b{i:03d}": "x" * 200 for i in range(100)},
+        "other": {"x": 1},
+    }
+
+    class NoListing(FakeFirebase):
+        def get(self, path, **kw):
+            if kw.get("shallow") and path != "/":
+                raise fault("injected")
+            return super().get(path, **kw)
+
+    clean = FirebaseExtractor(FakeFirebase(tree, max_payload_bytes=3000), max_ipp=20)
+    clean_rows = sorted(clean.export_rows(4))
+    ex = FirebaseExtractor(NoListing(tree, max_payload_bytes=3000), max_ipp=20)
+    rows = sorted(ex.export_rows(4))
+    assert rows == clean_rows
+    assert reassemble(rows) == tree
+    assert clean.stats.ranges > 0 and ex.stats.ranges == 0
+    assert ex.stats.listings_failed == 2  # once per path, never again
+    assert ex.stats.halvings > 0 and ex.stats.skipped == 0
+
+
+def test_faults_in_the_middle_of_a_range():
+    """A transient transport error and a payload refusal, each in the
+    middle of a key range: the GET is retried, the range halves, and the
+    rows equal a fault-free run."""
+    tree = {"wide": {f"k{i:04d}": {"v": i} for i in range(100)}, "other": {"x": 1}}
+
+    class Faulty(FakeFirebase):
+        def __init__(self, tree, faults):
+            super().__init__(tree)
+            self.faults = faults
+
+        def get(self, path, **kw):
+            exc = self.faults.pop(kw.get("start_at"), None) if path == "/wide" else None
+            if exc is not None:
+                raise exc
+            return super().get(path, **kw)
+
+    clean = FirebaseExtractor(FakeFirebase(tree), max_ipp=5)
+    clean_rows = sorted(clean.export_rows(4))
+    # max_ipp=5 cuts ranges of 20 keys from k0005, k0025, k0045, ...;
+    # k0029 and k0049 are the cursors of two ranges' second pages
+    faults = {
+        "k0029": FirebaseTransportError("injected HTTP 503"),
+        "k0049": PayloadTooLarge("injected"),
+    }
+    ex = FirebaseExtractor(Faulty(tree, faults), max_ipp=5)
+    rows = sorted(ex.export_rows(4))
+    assert not faults, "every fault was hit"
+    assert rows == clean_rows
+    assert reassemble(rows) == tree
+    assert ex.stats.page_retries == 1
+    assert ex.stats.halvings == clean.stats.halvings + 1
+
+
+def test_page_get_retries_are_bounded_and_named():
+    class Down(FakeFirebase):
+        def get(self, path, **kw):
+            if kw.get("start_at") is not None:
+                raise FirebaseTransportError("injected HTTP 503")
+            return super().get(path, **kw)
+
+    tree = {f"k{i:02d}": i for i in range(30)}
+    ex = FirebaseExtractor(Down(tree), max_ipp=5)
+    with pytest.raises(
+        FirebaseTransportError,
+        match=rf"startAt='k05'\) failed after {GET_RETRIES} attempts at '/'",
+    ):
+        list(ex.iter_rows())
+
+
+def test_parallel_extraction_beats_sequential():
+    """extract's work queue at parallelism 8 must beat parallelism 1
+    under simulated REST RTT, on a tree whose time is mostly one wide
+    node (3,000 keys, 120 pages) that a thread per top-level subtree
+    could not speed up, and never with more than `parallelism` GETs in
+    flight."""
 
     class LatencyFake(FakeFirebase):
+        def __init__(self, tree):
+            super().__init__(tree)
+            self.lock = threading.Lock()
+            self.in_flight = self.peak = 0
+
         def get(self, *a, **kw):
-            time.sleep(0.002)
-            return super().get(*a, **kw)
+            with self.lock:
+                self.in_flight += 1
+                self.peak = max(self.peak, self.in_flight)
+            try:
+                time.sleep(0.002)
+                return super().get(*a, **kw)
+            finally:
+                with self.lock:
+                    self.in_flight -= 1
 
-    tree = {f"s{i:02d}": {f"k{j:03d}": j for j in range(50)} for i in range(24)}
-    subs = sorted(tree)
+    tree = {f"s{i:02d}": {f"k{j:03d}": j for j in range(50)} for i in range(8)}
+    tree["wide"] = {f"w{j:04d}": j for j in range(3000)}
 
-    def run(fake, sub):
-        return list(FirebaseExtractor(fake, max_ipp=25).iter_rows(child_path("/", sub)))
+    def run(parallelism):
+        fake = LatencyFake(tree)
+        ex = FirebaseExtractor(fake, max_ipp=25)
+        t0 = time.perf_counter()
+        rows = sorted(ex.export_rows(parallelism))
+        elapsed = time.perf_counter() - t0
+        assert fake.peak <= parallelism, (fake.peak, parallelism)
+        return rows, elapsed, ex.stats
 
-    fake = LatencyFake(tree)
-    t0 = time.perf_counter()
-    rows = []
-    for s in subs:
-        rows.extend(run(fake, s))
-    seq = time.perf_counter() - t0
-
-    fake2 = LatencyFake(tree)
-    t0 = time.perf_counter()
-    out = []
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for chunk in pool.map(lambda s: run(fake2, s), subs):
-            out.extend(chunk)
-    par = time.perf_counter() - t0
-
-    assert sorted(out) == sorted(rows)
+    rows, seq, _ = run(1)
+    out, par, stats = run(8)
+    assert out == rows
+    assert reassemble(out) == tree
+    assert stats.ranges > 8  # the wide node runs as many key ranges
     # 1.5x margin, not 2x: on a loaded box (e.g. the oracle loop running
     # concurrently) CPU contention shaved a measured 8-worker speedup to
     # 1.85x and false-failed the old 2x assertion; 1.5x still proves the

@@ -181,6 +181,17 @@ def test_http_transport_error_and_shallow_retry(stub_server):
     assert ex.stats.shallow_retries == 2
 
 
+def test_http_page_get_503_is_retried(stub_server):
+    """One HTTP 503 on a page GET no longer aborts the export: the GET
+    is retried and the rows equal a fault-free run."""
+    client, handler = stub_server(FakeFirebase(TREE))
+    handler.fail_next.append(503)
+    ex = FirebaseExtractor(client, max_ipp=16)
+    rows = sorted(ex.iter_rows())
+    assert rows == sorted(FirebaseExtractor(FakeFirebase(TREE), max_ipp=16).iter_rows())
+    assert ex.stats.page_retries == 1
+
+
 def test_http_auth_token_required(stub_server):
     """The stub enforces auth=<token> on every request, mirroring the
     -k/--project_key database secret."""

@@ -169,7 +169,13 @@ def test_interval_overlap_hot_bin_splits_under_aqe(spark, tmp_path, queries):
     splits a skewed reduce partition along its MAP-side chunks, so a
     single-file scan (one map task) leaves the hot bin unsplittable no
     matter how skewed it is — the same single-input-split failure mode
-    catalog.spread() exists for, now pinned from the skew side."""
+    catalog.spread() exists for, now pinned from the skew side.
+
+    The shuffle partition count is pinned too.  Each burst-day interval
+    spans two 7-day bins, so there are two hot bins; AQE calls a
+    partition skewed only against the MEDIAN partition, and with 4
+    partitions (a 4-core default) the two hot bins fill half of them,
+    the median is hot, and nothing can be skewed."""
     import pyspark.sql.functions as F
 
     d = str(tmp_path / "burst_corpus")
@@ -222,9 +228,11 @@ def test_interval_overlap_hot_bin_splits_under_aqe(spark, tmp_path, queries):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.shuffle.partitions",
     )
     old = {k: spark.conf.get(k, None) for k in keys}
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "32KB",
