@@ -41,7 +41,10 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_snapshot,
     write_snapshot,
 )
-from firebase_realtime_database_backup_spark.sinks.writeback import writeback
+from firebase_realtime_database_backup_spark.sinks.writeback import (
+    WritebackStats,
+    writeback,
+)
 from firebase_realtime_database_backup_spark.sources.firebase import (
     DEFAULT_MAX_IPP,
     FirebaseClient,
@@ -88,15 +91,16 @@ def do_restore(
     client_factory: Callable[[], FirebaseClient],
     *,
     max_batch: int = DEFAULT_MAX_IPP,
-    driver_side: bool = False,
-):
+    driver_side: bool = True,
+) -> WritebackStats:
     """Import: snapshot -> AIMD batched merge-PATCH writeback (driver
-    threads and memory bound: `sinks.writeback.writeback`)."""
+    threads and memory bound: `sinks.writeback.writeback`).
+
+    `driver_side` changes nothing: restore has one path, the driver's.
+    The keyword is still accepted because the benchmark's ETL workload
+    (`perfbench/workloads.py`) passes it."""
     return writeback(
-        read_snapshot(spark, snapshot_dir),
-        client_factory,
-        max_batch=max_batch,
-        driver_side=driver_side,
+        read_snapshot(spark, snapshot_dir), client_factory, max_batch=max_batch
     )
 
 
@@ -253,16 +257,19 @@ def main(argv: list[str] | None = None) -> int:
             print("aborted")
             return 1
     client = _make_client(args)
-    backup_dir = args.backup_dir
-    if backup_dir.endswith((".tar.gz", ".tgz")):  # R1: archived backup
+    if args.backup_dir.endswith((".tar.gz", ".tgz")):  # R1: archived backup
         import tempfile
 
         from firebase_realtime_database_backup_spark.sinks.snapshot import (
             unarchive_snapshot,
         )
 
-        backup_dir = unarchive_snapshot(backup_dir, tempfile.mkdtemp())
-    stats = do_restore(spark, backup_dir, lambda: client, driver_side=True)
+        # the unpacked copy lives only as long as the restore
+        with tempfile.TemporaryDirectory() as tmp:
+            backup_dir = unarchive_snapshot(args.backup_dir, tmp)
+            stats = do_restore(spark, backup_dir, lambda: client)
+    else:
+        stats = do_restore(spark, args.backup_dir, lambda: client)
     print(f"restored {args.backup_dir} into {project_url(args.project_id)}: "
           f"{stats.keys_written} keys in {stats.patches} patches, "
           f"{stats.halvings} halvings, {stats.splits} splits")

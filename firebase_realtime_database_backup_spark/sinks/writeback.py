@@ -5,14 +5,15 @@ split-on-failure (the reference's restore pipeline, R3-R6).
 Mapping (SURVEY.md §2.A):
 - R3 batched PATCH      slice N keys → update(path, slice)
                         (src/RestoreProcessor.php:70-106)
-      → driver threads (one client each) or a foreachPartition
-        writer (each task owns a client connection)
+      → RESTORE_CONNECTIONS driver threads, one client each
 - R4 AIMD batch sizing  halve on failure (floor 1), ×1.2 after 5
                         successes cap 1000 (src/RestoreProcessor.php:83,97-104)
       → identical controller per write unit: a path, or one key range
         of a wide path
 - R5 split-on-failure   single-key update still fails ⇒ descend one
-                        level and PATCH per child (src/RestoreProcessor.php:86-94)
+                        level and PATCH per child (src/RestoreProcessor.php:86-94);
+                        a single scalar key that fails is retried, up to
+                        GET_RETRIES attempts, like every extract GET
 - R6 progress anti-join array_diff_key written keys
                         (src/RestoreProcessor.php:99)
       → structural: batches are disjoint slices, so "remaining keys"
@@ -23,23 +24,15 @@ Ordering hazard (SURVEY.md §7.4): Firebase update() is a merge at the
 TARGET path, but replacing descendants it writes — so a parent-level
 PATCH after a child-level PATCH can clobber the child.  The reference
 dodges this with strictly sequential manifest order.  Here rows are
-grouped by parent path (one PATCH never spans paths), and the guarantee
-depends on where the writes run:
-
-- driver-side (`driver_side=True`): ancestors are written before
-  descendants across the WHOLE tree.  Rows are grouped by depth, and a
-  depth level starts only after every PATCH of the level above has
-  returned, split-on-failure descents (R5) included — a depth barrier.
-  Within a level, RESTORE_CONNECTIONS threads write path units
-  concurrently; a path wider than `max_batch` keys is cut into at most
-  RESTORE_CONNECTIONS contiguous key ranges, each its own unit with its
-  own AIMD state.  Merge-PATCHes on disjoint keys commute, so the final
-  store equals a serial write's.
-- executor-side (`foreachPartition`): ancestors are written first only
-  WITHIN a task.  Paths are partitioned by hash, so one path lands in
-  exactly one task and each task writes its paths in ascending depth,
-  but `hash(path)` can put a parent and a child in different tasks,
-  and tasks are not ordered against each other.
+grouped by parent path (one PATCH never spans paths), and ancestors are
+written before descendants across the WHOLE tree: rows are grouped by
+depth, and a depth level starts only after every PATCH of the level
+above has returned, split-on-failure descents (R5) included — a depth
+barrier.  Within a level, RESTORE_CONNECTIONS threads write path units
+concurrently; a path wider than `max_batch` keys is cut into at most
+RESTORE_CONNECTIONS contiguous key ranges, each its own unit with its
+own AIMD state.  Merge-PATCHes on disjoint keys commute, so the final
+store equals a serial write's.
 """
 
 from __future__ import annotations
@@ -59,6 +52,11 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from firebase_realtime_database_backup_spark.sources.firebase import (
+    GET_RETRIES,
+    FirebaseTransportError,
+)
 
 MAX_BATCH = 1000          # src/RestoreProcessor.php:17
 GROWTH_FACTOR = 1.2       # src/RestoreProcessor.php:100-103
@@ -90,20 +88,14 @@ def _write_path(
     keys = sorted(data)
     ipp = min(max_batch, max(MIN_BATCH, len(keys)))
     successes = 0
+    attempts = 0  # failed PATCHes of the current one-scalar batch
     i = 0
     while i < len(keys):
         batch_keys = keys[i : i + ipp]
         batch = {k: data[k] for k in batch_keys}
         try:
             client.update(path, batch)
-            stats.patches += 1
-            stats.keys_written += len(batch_keys)
-            i += len(batch_keys)  # R6: advancing the slice IS the anti-join
-            successes += 1
-            if successes >= GROWTH_AFTER:  # R4 growth
-                ipp = min(max_batch, int(ipp * GROWTH_FACTOR) or 1)
-                successes = 0
-        except Exception:
+        except Exception as exc:
             successes = 0
             if ipp > MIN_BATCH:  # R4 backoff
                 ipp = max(MIN_BATCH, ipp // 2)
@@ -117,29 +109,23 @@ def _write_path(
                 child = (path.rstrip("/") or "") + "/" + key
                 _write_path(client, child, value, stats, max_batch)
                 i += 1
-            else:
-                raise
-
-
-def _drain_rows(client, rows: Iterator, max_batch: int) -> WritebackStats:
-    """Write an ordered stream of tree rows: batch contiguous same-path
-    rows, AIMD-write each path's bucket (the executor-side writer)."""
-    stats = WritebackStats()
-    cur_path: str | None = None
-    bucket: dict = {}
-
-    def flush() -> None:
-        if cur_path is not None and bucket:
-            _write_path(client, cur_path, dict(bucket), stats, max_batch)
-            bucket.clear()
-
-    for row in rows:
-        if row.path != cur_path:
-            flush()
-            cur_path = row.path
-        bucket[row.key] = json.loads(row.value_json)
-    flush()
-    return stats
+                continue
+            # a scalar cannot be split: retry it, bounded like a GET
+            attempts += 1
+            if attempts >= GET_RETRIES:
+                raise FirebaseTransportError(
+                    f"PATCH of key {key!r} at {path!r} failed after "
+                    f"{attempts} attempts"
+                ) from exc
+            continue
+        attempts = 0
+        stats.patches += 1
+        stats.keys_written += len(batch_keys)
+        i += len(batch_keys)  # R6: advancing the slice IS the anti-join
+        successes += 1
+        if successes >= GROWTH_AFTER:  # R4 growth
+            ipp = min(max_batch, int(ipp * GROWTH_FACTOR) or 1)
+            successes = 0
 
 
 def _depth_chunks(tree: DataFrame) -> list[tuple[int, int]]:
@@ -241,54 +227,15 @@ def writeback(
     client_factory: Callable[[], object],
     *,
     max_batch: int = MAX_BATCH,
-    driver_side: bool = False,
-) -> WritebackStats | None:
+) -> WritebackStats:
     """Replay tree rows (path, key, value_json) through merge-PATCH
-    updates (ordering contract: module docstring).
+    updates from RESTORE_CONNECTIONS driver threads, depth level by
+    depth level (ordering contract: module docstring), and return the
+    merged stats.
 
-    driver_side=True writes from RESTORE_CONNECTIONS driver threads,
-    depth level by depth level — for small trees, tests, and clients
-    whose state must stay in-process.  Rows reach the driver with
-    `toArrow()`, one chunk of contiguous depth levels at a time (at most
-    RESTORE_CHUNK_ROWS rows, or one wider level); the driver holds one
-    chunk plus one decoded level, so its memory follows the widest
-    level rather than the whole tree.  Returns the merged stats
-    in that mode.
-
-    Otherwise rows are repartitioned by path (one path → one task) and
-    sorted by (depth, path) within tasks; each task batches contiguous
-    same-path rows and runs the AIMD writer.  Executor stats aren't
-    shipped back, so this mode returns None."""
-    if driver_side:
-        with closing(_tree_levels(tree)) as levels:
-            return _write_levels(levels, client_factory, max_batch)
-
-    def write_partition(rows: Iterator) -> None:
-        _drain_rows(client_factory(), rows, max_batch)
-
-    tree.repartition(F.col("path")).sortWithinPartitions(
-        "depth", "path", "key"
-    ).foreachPartition(write_partition)
-    return None
-
-
-class JsonlAuditClient:
-    """Op-log client: records every merge-PATCH as a JSON line in a
-    per-process file instead of sending it — for audits, dry-runs, and
-    testing the executor-side writeback path.  Replaying the log against
-    a real client reproduces the writeback (operations on distinct paths
-    commute; same-path operations stay ordered within one file because
-    one path maps to one task)."""
-
-    def __init__(self, log_dir: str) -> None:
-        self.log_dir = log_dir
-
-    def update(self, path: str, data: dict) -> None:
-        import os
-        import uuid
-
-        fn = os.path.join(
-            self.log_dir, f"ops-{os.getpid()}-{uuid.uuid4().hex[:8]}.jsonl"
-        )
-        with open(fn, "a") as f:
-            f.write(json.dumps({"path": path, "data": data}) + "\n")
+    Rows reach the driver with `toArrow()`, one chunk of contiguous
+    depth levels at a time (at most RESTORE_CHUNK_ROWS rows, or one
+    wider level); the driver holds one chunk plus one decoded level, so
+    its memory follows the widest level rather than the whole tree."""
+    with closing(_tree_levels(tree)) as levels:
+        return _write_levels(levels, client_factory, max_batch)

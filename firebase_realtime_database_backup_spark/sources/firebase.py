@@ -30,9 +30,10 @@ Architectural departures from the reference (Spark-first, 100 TB):
   `ExtractStats`.  One loop drives units: on the calling thread's
   behalf for `FirebaseExtractor.iter_rows`, and as one work queue on
   `parallelism` driver threads for `extract` (REST-bound, not
-  CPU-bound).  `extract_distributed` instead fetches whole subtrees on
-  executors when a tree needs a cluster's aggregate NIC bandwidth.  The
-  reference is strictly sequential (SURVEY.md §3).
+  CPU-bound: the endpoint is one database behind REST, so a cluster's
+  cores do not bound it, and the queue can spread one wide node's key
+  ranges over every connection).  The reference is strictly sequential
+  (SURVEY.md §3).
 - Three rules cut the requests on the critical path.  None of them
   changes the AIMD controller:
   - *list once*: the first time a path needs a second request (its
@@ -73,13 +74,12 @@ from __future__ import annotations
 
 import json
 from bisect import bisect_left, bisect_right
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field, fields, replace
 from typing import Any, Protocol
 
 from firebase_realtime_database_backup_spark.sources.tree import (
-    TREE_SCHEMA,
     canonical_json,
     child_path,
     path_depth,
@@ -92,7 +92,8 @@ GROWTH_FACTOR = 1.2      # src/BackupProcessor.php:183-185
 GROWTH_AFTER = 5         # consecutive successes before growth
 #: attempts per GET on transport failure.  The reference retries shallow
 #: listings only (src/BackupProcessor.php:84-86); page GETs are just as
-#: idempotent, so they get the same bound.
+#: idempotent, so they get the same bound, and so does restore's
+#: one-scalar PATCH (`sinks.writeback`), which has no smaller batch.
 GET_RETRIES = 10
 #: Width of a key range, in pages of the path's page size at the split.
 #: It must not depend on the connection count: go-deeper cursors follow
@@ -453,11 +454,6 @@ class FirebaseExtractor:
         top = [self._unit(child_path("/", key)) for key in self._children("/")]
         return list(self._drain(top, parallelism))
 
-    # -- Spark materialization -------------------------------------------
-    def to_dataframe(self, spark):
-        """Materialize the scan as a tree DataFrame."""
-        return tree_frame(spark, list(self.iter_rows()))
-
 
 def extract(
     spark,
@@ -487,45 +483,12 @@ def extract(
     return tree_frame(spark, ex.export_rows(parallelism))
 
 
-def extract_distributed(
-    spark,
-    client_factory: Callable[[], FirebaseClient],
-    subtree_paths: list[str],
-    *,
-    max_ipp: int = DEFAULT_MAX_IPP,
-):
-    """Cluster-scale export: ship subtree roots to executors; each task
-    runs its own AIMD extractor against its own client connection and
-    streams Arrow batches of tree rows.  This is the shape that uses a
-    1000-executor cluster's aggregate network bandwidth; the driver only
-    coordinates the subtree list (a few thousand strings)."""
-    import pandas as pd
-
-    paths_df = spark.createDataFrame(
-        [(p,) for p in subtree_paths], "subtree string"
-    ).repartition(max(1, min(len(subtree_paths), 64)))
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory()
-        for pdf in batches:
-            for sub in pdf["subtree"]:
-                ex = FirebaseExtractor(client, max_ipp=max_ipp, root_start_ipp=max_ipp)
-                rows = list(ex.iter_rows(sub))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["path", "key", "value_json", "depth"]
-                    )
-
-    return paths_df.mapInPandas(fetch, TREE_SCHEMA)
-
-
 class FakeFirebase:
     """In-memory Firebase REST double for tests (FIXTURES.md §2): honors
     shallow / orderBy="$key" (in `key_order`, the server's order) /
     limitToFirst / startAt, enforces a payload byte budget with
     PayloadTooLarge, and supports merge-PATCH update() with injectable
-    write failures.  Picklable (plain dict state) so it works inside
-    mapInPandas."""
+    write failures."""
 
     def __init__(
         self,

@@ -15,8 +15,8 @@ authenticates with ``auth=<database secret>`` appended to every request
 This client implements the same wire surface with stdlib ``urllib`` so
 the extractor (sources/firebase.py) runs against a live database.  It is
 deliberately state-free and picklable — (base_url, token, timeout) are
-plain strings/numbers — so ``extract_distributed`` can ship it to
-executors via a ``client_factory`` closure.
+plain strings/numbers — so a restore's ``client_factory`` can build one
+per writer thread at no cost (``sinks.writeback``).
 
 Error channel: HTTP 413 or a "Payload is too large" error body raises
 ``PayloadTooLarge`` (the extractor's AIMD halving signal); any transport

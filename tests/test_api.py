@@ -31,6 +31,7 @@ def test_backup_restore_identity(spark, tmp_path):
     out = str(tmp_path / "snap")
     do_backup(spark, FakeFirebase(json.loads(json.dumps(TREE))), out)
     target = FakeFirebase({})
+    # the keyword is ignored; the benchmark's ETL workload still passes it
     do_restore(spark, out, lambda: target, driver_side=True)
     assert target.tree == TREE
 
@@ -111,9 +112,12 @@ def test_cli_query_list_run_explain(spark, capsys):
     assert "unknown query" in capsys.readouterr().err
 
 
-def test_cli_export_archive_then_import_from_archive(spark, tmp_path, capsys):
+def test_cli_export_archive_then_import_from_archive(
+    spark, tmp_path, capsys, monkeypatch
+):
     """--archive packs the snapshot as <out>.tar.gz (S11) and import
-    accepts the archive path directly (R1), restoring identity."""
+    accepts the archive path directly (R1), restoring identity; the
+    unpacked copy is removed once the restore returns."""
     src = tmp_path / "tree.json"
     src.write_text(json.dumps(TREE))
     out = str(tmp_path / "cli_snap3")
@@ -126,9 +130,14 @@ def test_cli_export_archive_then_import_from_archive(spark, tmp_path, capsys):
 
     empty = tmp_path / "empty.json"
     empty.write_text("{}")
+    tmp_root = tmp_path / "tmp_root"
+    tmp_root.mkdir()
+    monkeypatch.setattr("tempfile.tempdir", str(tmp_root))
     rc = main(["import", "-p", "demo", "--tree-json", str(empty),
                "--backup_dir", out + ".tar.gz", "--yes"])
     assert rc == 0
+    assert "restored" in capsys.readouterr().out
+    assert os.listdir(tmp_root) == []
 
 
 def test_read_table_normalizes_ntz_timestamps(spark, tmp_path, monkeypatch):

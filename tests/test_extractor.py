@@ -185,27 +185,6 @@ def test_parallel_extract_to_dataframe(spark):
     assert tree_to_dict(df) == tree
 
 
-def test_extract_distributed_mapinpandas(spark):
-    """Executor-side extraction: subtree roots shipped to tasks, each
-    task runs its own AIMD extractor through mapInPandas.  FakeFirebase
-    is picklable, standing in for a per-task HTTP client."""
-    tree = {
-        "a": {f"k{i}": {"v": i} for i in range(30)},
-        "b": {"x": 1, "y": {"deep": {"leaf": "s"}}},
-        "c": "scalar-top",
-    }
-    from firebase_realtime_database_backup_spark.sources.firebase import (
-        FakeFirebase,
-        extract_distributed,
-    )
-    from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
-
-    fake = FakeFirebase(tree)
-    df = extract_distributed(spark, lambda: fake, ["/a", "/b"], max_ipp=8)
-    got = tree_to_dict(df)
-    assert got == {"a": tree["a"], "b": tree["b"]}
-
-
 class RecordingFake(FakeFirebase):
     """FakeFirebase that logs every GET as (path, shallow, start_at,
     limit_to_first, refused)."""

@@ -25,10 +25,12 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     FirebaseExtractor,
     FirebaseTransportError,
     PayloadTooLarge,
+    extract,
 )
 from firebase_realtime_database_backup_spark.sources.http_client import (
     HttpFirebase,
 )
+from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
 
 TREE = {
     "users": {f"u{i:03d}": {"name": f"user {i}", "score": i} for i in range(40)},
@@ -221,33 +223,26 @@ def test_http_scalar_and_missing_paths(stub_server):
     assert set(shallow) == set(TREE["users"]) and all(shallow.values())
 
 
-def test_http_extract_distributed(spark, stub_server):
-    """Cluster-scale export through HTTP: extract_distributed ships
-    subtree roots to executors, each task builds its own HttpFirebase
-    from the picklable factory and pages its subtree over REST."""
-    from firebase_realtime_database_backup_spark.sources.firebase import (
-        extract_distributed,
-    )
-
-    client, _ = stub_server(FakeFirebase(TREE))
-    base_url, token = client.base_url, client.auth_token
-    from firebase_realtime_database_backup_spark.sources.http_client import (
-        HttpFirebase,
-    )
-
-    df = extract_distributed(
-        spark,
-        lambda: HttpFirebase(base_url, auth_token=token),
-        ["/users", "/config"],
-        max_ipp=8,
-    )
-    rows = sorted(tuple(r) for r in df.collect())
-    direct = sorted(
-        list(FirebaseExtractor(FakeFirebase(TREE), max_ipp=8).iter_rows("/users"))
-        + list(FirebaseExtractor(FakeFirebase(TREE), max_ipp=8).iter_rows("/config"))
-    )
-    assert rows == direct
-    assert len(rows) >= 40  # users paged at ipp=8 into leaf-grained rows
+def test_http_concurrent_extract(spark, stub_server):
+    """The driver-side export over HTTP: `extract` runs one work queue on
+    8 threads against the threaded stub, with a payload budget and page
+    size small enough that a wide node splits into key ranges and an
+    oversized one is descended into; its rows equal the same export
+    against the in-process double."""
+    tree = {
+        **TREE,
+        "blobs": {f"b{i}": {"x": "y" * 60, "z": "w" * 60} for i in range(3)},
+    }
+    fake = lambda: FakeFirebase(tree, max_payload_bytes=200)  # noqa: E731
+    client, _ = stub_server(fake())
+    via_http = extract(spark, client, max_ipp=4, parallelism=8)
+    rows = sorted(tuple(r) for r in via_http.collect())
+    direct = extract(spark, fake(), max_ipp=4, parallelism=8)
+    assert rows == sorted(tuple(r) for r in direct.collect())
+    assert tree_to_dict(direct) == tree
+    ex = FirebaseExtractor(client, max_ipp=4)
+    assert sorted(ex.export_rows(8)) == rows
+    assert ex.stats.ranges > 0 and ex.stats.go_deepers > 0
 
 
 def test_http_awkward_keys_roundtrip(stub_server):
@@ -281,14 +276,13 @@ def test_http_error_messages_redact_auth_secret(stub_server):
 def test_http_end_to_end_backup_restore_roundtrip(spark, stub_server, tmp_path):
     """Full-system parity over the wire: export a tree through the HTTP
     client into a parquet snapshot, then restore the snapshot into an
-    EMPTY database through the same client (executor-side PATCH
-    batches) — the restored tree must equal the source tree.  This is
+    EMPTY database from the driver, one HttpFirebase per each of the
+    RESTORE_CONNECTIONS writer threads — the restored tree must equal
+    the source tree and every snapshot row must be written.  This is
     the reference's export→import contract driven end-to-end over REST
     instead of in-process doubles."""
     from firebase_realtime_database_backup_spark.api import do_backup, do_restore
-    from firebase_realtime_database_backup_spark.sources.http_client import (
-        HttpFirebase,
-    )
+    from firebase_realtime_database_backup_spark.sinks.snapshot import read_snapshot
 
     src_client, _ = stub_server(FakeFirebase(TREE))
     snap = str(tmp_path / "http_snapshot")
@@ -297,10 +291,11 @@ def test_http_end_to_end_backup_restore_roundtrip(spark, stub_server, tmp_path):
     dest_fake = FakeFirebase({})
     dest_client, _ = stub_server(dest_fake)
     base_url, token = dest_client.base_url, dest_client.auth_token
-    do_restore(
+    stats = do_restore(
         spark,
         snap,
         lambda: HttpFirebase(base_url, auth_token=token),
         max_batch=8,
     )
     assert dest_fake.tree == TREE
+    assert stats.keys_written == read_snapshot(spark, snap).count()

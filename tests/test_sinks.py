@@ -2,7 +2,6 @@
 (the reference's implicit invariant, SURVEY.md §5.2), manifest
 consistency, AIMD writeback, split-on-failure."""
 
-import json
 import sys
 import threading
 import time
@@ -15,11 +14,9 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
     write_snapshot,
 )
 from firebase_realtime_database_backup_spark.sinks import writeback as wb
-from firebase_realtime_database_backup_spark.sinks.writeback import (
-    JsonlAuditClient,
-    writeback,
-)
+from firebase_realtime_database_backup_spark.sinks.writeback import writeback
 from firebase_realtime_database_backup_spark.sources.firebase import (
+    GET_RETRIES,
     FakeFirebase,
     FirebaseTransportError,
     extract,
@@ -76,8 +73,7 @@ def test_export_import_identity(spark, tmp_path):
     out = str(tmp_path / "snap")
     write_snapshot(extract(spark, FakeFirebase(TREE)), out)
     dst = FakeFirebase({})
-    # driver-side restore so the in-memory destination observes writes
-    stats = writeback(read_snapshot(spark, out), lambda: dst, driver_side=True)
+    stats = writeback(read_snapshot(spark, out), lambda: dst)
     assert dst.tree == TREE
     assert stats.keys_written > 0
 
@@ -88,7 +84,7 @@ def test_writeback_aimd_halving(spark):
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_from_dict(spark, data), lambda: dst, driver_side=True, max_batch=16
+        tree_from_dict(spark, data), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
@@ -101,20 +97,44 @@ def test_writeback_split_on_failure(spark):
     big_child = {"blob": {f"b{j:02d}": "x" * 30 for j in range(20)}}
     dst = FakeFirebase({}, fail_update_bytes=300)
     stats = writeback(
-        tree_from_dict(spark, big_child), lambda: dst, driver_side=True
+        tree_from_dict(spark, big_child), lambda: dst
     )
     assert dst.tree == big_child
     assert stats.splits >= 1
 
 
 def test_writeback_scalar_failure_raises(spark):
+    """A one-key scalar PATCH that keeps failing is retried GET_RETRIES
+    times, then raises an error naming the path, key and attempts."""
     dst = FakeFirebase({}, fail_update_bytes=2)
-    with pytest.raises(Exception):
+    with pytest.raises(
+        FirebaseTransportError,
+        match=f"PATCH of key 'k' at '/' failed after {GET_RETRIES} attempts",
+    ):
         writeback(
             tree_from_dict(spark, {"k": "a-very-long-scalar-value"}),
             lambda: dst,
-            driver_side=True,
         )
+    assert dst.update_calls == [("/", 1)] * GET_RETRIES
+
+
+def test_writeback_scalar_transient_failure_is_retried(spark):
+    """One failed PATCH of a one-key scalar batch (a path that starts at
+    batch size 1) no longer aborts the restore."""
+
+    class FailsOnce(FakeFirebase):
+        failed = False
+
+        def update(self, path: str, data: dict) -> None:
+            if path == "/a" and not self.failed:
+                self.failed = True
+                raise FirebaseTransportError("injected transient failure")
+            super().update(path, data)
+
+    dst = FailsOnce({})
+    stats = writeback(tree_from_dict(spark, {"a": {"x": 1}}), lambda: dst)
+    assert dst.failed and dst.tree == {"a": {"x": 1}}
+    assert stats.patches == 2 and stats.halvings == stats.splits == 0
 
 
 class Recorder:
@@ -171,7 +191,7 @@ def test_writeback_concurrent_depth_ordered(spark, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
     rec = Recorder(FakeFirebase({}))
     stats = writeback(
-        tree_from_dict(spark, TREE), rec.client, driver_side=True, max_batch=8
+        tree_from_dict(spark, TREE), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert stats.patches == len(rec.calls)
@@ -189,7 +209,7 @@ def test_writeback_one_connection_is_serial(spark, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 1)
     rec = Recorder(FakeFirebase({}), delay_s=0.002)
     writeback(
-        tree_from_dict(spark, TREE), rec.client, driver_side=True, max_batch=8
+        tree_from_dict(spark, TREE), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert rec.max_in_flight() == 1
@@ -203,7 +223,7 @@ def test_writeback_concurrent_fault_injection(spark, monkeypatch):
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_from_dict(spark, data), lambda: dst, driver_side=True, max_batch=16
+        tree_from_dict(spark, data), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
@@ -214,7 +234,6 @@ def test_writeback_concurrent_fault_injection(spark, monkeypatch):
         writeback(
             tree_from_dict(spark, {"k": "a-very-long-scalar-value", "j": 1}),
             lambda: dst,
-            driver_side=True,
         )
 
 
@@ -235,7 +254,7 @@ def test_writeback_concurrent_stress(spark, monkeypatch):
     try:
         worker = threading.Thread(
             target=lambda: result.update(stats=writeback(
-                tree, lambda: dst, driver_side=True, max_batch=40
+                tree, lambda: dst, max_batch=40
             ))
         )
         worker.start()
@@ -257,7 +276,7 @@ def test_writeback_reads_in_depth_chunks(spark, monkeypatch):
     assert dict(tree.groupBy("depth").count().collect()) == {1: 3, 2: 27, 3: 53}
     assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
     rec = Recorder(FakeFirebase({}), delay_s=0.001)
-    writeback(tree, rec.client, driver_side=True, max_batch=8)
+    writeback(tree, rec.client, max_batch=8)
     assert rec.store.tree == TREE
     assert_depth_ordered(rec.calls)
 
@@ -270,7 +289,7 @@ def test_lone_surrogate_value_roundtrips(spark, tmp_path):
     out = str(tmp_path / "snap")
     write_snapshot(extract(spark, FakeFirebase(tree)), out)
     dst = FakeFirebase({})
-    writeback(read_snapshot(spark, out), lambda: dst, driver_side=True)
+    writeback(read_snapshot(spark, out), lambda: dst)
     assert dst.tree == tree
 
 
@@ -282,25 +301,6 @@ def test_lone_surrogate_key_raises_named_error(spark, tree):
     tree frame refuses it with an error that names the path."""
     with pytest.raises(ValueError, match=r"at path '/bad.*surrogate"):
         extract(spark, FakeFirebase(tree))
-
-
-def test_writeback_distributed_foreachpartition(spark, tmp_path):
-    """The executor-side path: updates logged from Python workers, then
-    replayed — converged state must equal the source tree."""
-    log_dir = tmp_path / "oplog"
-    log_dir.mkdir()
-    src = extract(spark, FakeFirebase(TREE))
-    log_dir_s = str(log_dir)
-    writeback(src, lambda: JsonlAuditClient(log_dir_s), max_batch=5)
-    replay = FakeFirebase({})
-    ops = []
-    for f in sorted(log_dir.glob("*.jsonl")):
-        for line in f.read_text().splitlines():
-            ops.append(json.loads(line))
-    assert ops, "no update calls logged from executors"
-    for op in ops:
-        replay.update(op["path"], op["data"])
-    assert replay.tree == TREE
 
 
 def test_archive_roundtrip(spark, tmp_path):
@@ -342,7 +342,7 @@ def test_empty_database_backup_restore_incremental(spark, tmp_path):
     assert read_manifest(spark, snap).count() == 0
 
     dst = FakeFirebase({})
-    api.do_restore(spark, snap, lambda: dst, driver_side=True)
+    api.do_restore(spark, snap, lambda: dst)
     assert dst.tree == {}
 
     counts = incremental_backup(

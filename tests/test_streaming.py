@@ -525,15 +525,15 @@ def test_stream_bot_alerts_to_aimd_writeback_e2e(spark, tmp_path):
 
     def alert_sink(batch_df, batch_id):
         # finalized alerts -> canonical tree rows -> AIMD merge-PATCH
-        # writeback (driver_side: foreachBatch runs on the driver and
-        # the HTTP client targets the in-process stub)
+        # writeback (foreachBatch runs on the driver and the HTTP client
+        # targets the in-process stub)
         tree = batch_df.select(
             F.concat(F.lit("/alerts/u"), F.col("user_id")).alias("path"),
             F.col("minute_start_ms").cast("string").alias("key"),
             F.to_json(F.struct("n_events")).alias("value_json"),
             F.lit(2).alias("depth"),
         )
-        writeback(tree, lambda: HttpFirebase(url), driver_side=True)
+        writeback(tree, lambda: HttpFirebase(url))
 
     # batch 1: user 7 bursts (4 events >= threshold 3) at 10:00; a
     # quiet user keeps the group count honest
