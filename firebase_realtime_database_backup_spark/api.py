@@ -38,7 +38,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
-    read_snapshot,
+    snapshot_dataset,
     write_snapshot,
 )
 from firebase_realtime_database_backup_spark.sinks.writeback import (
@@ -96,11 +96,13 @@ def do_restore(
     """Import: snapshot -> AIMD batched merge-PATCH writeback (driver
     threads and memory bound: `sinks.writeback.writeback`).
 
-    `driver_side` changes nothing: restore has one path, the driver's.
-    The keyword is still accepted because the benchmark's ETL workload
-    (`perfbench/workloads.py`) passes it."""
+    The snapshot is scanned on the driver with `pyarrow.dataset`
+    (`sinks.snapshot.snapshot_dataset`), so a restore runs no Spark job
+    and `spark` is unused.  Neither `spark` nor `driver_side` (restore
+    has one path, the driver's) changes anything; both stay because the
+    benchmark's ETL workload (`perfbench/workloads.py`) passes them."""
     return writeback(
-        read_snapshot(spark, snapshot_dir), client_factory, max_batch=max_batch
+        snapshot_dataset(snapshot_dir), client_factory, max_batch=max_batch
     )
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -116,18 +116,16 @@ def incremental_backup(
     out_dir: str,
 ) -> dict:
     """Diff the current tree against the previous snapshot and persist
-    only the delta.  Returns counts per status (one aggregation)."""
-    prev = read_snapshot(spark, prev_snapshot_dir)
-    delta = tree_diff(prev, current_tree)
+    only the delta.  Returns counts per status, observed on the delta
+    write itself (`DataFrame.observe`): no job reads the delta back."""
+    counts = Observation()
+    status = F.col("status")
+    delta = tree_diff(read_snapshot(spark, prev_snapshot_dir), current_tree).observe(
+        counts,
+        *(F.count(F.when(status == s, 1)).alias(s) for s in (ADDED, REMOVED, CHANGED)),
+    )
     write_delta(delta, out_dir)
-    counts = {
-        r["status"]: r["n"]
-        for r in read_delta(spark, out_dir)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    return {s: counts.get(s, 0) for s in (ADDED, REMOVED, CHANGED)}
+    return counts.get
 
 
 def restore_to_version(

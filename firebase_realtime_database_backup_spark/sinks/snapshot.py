@@ -26,14 +26,22 @@ schema is also what makes an EMPTY snapshot readable: a row-less
 directory has no footer to infer from.  Unlike catalog.read_parquet's
 content-keyed cache, nothing is remembered here — the schema is a
 constant of the format.
+
+Restore reads a snapshot on the driver instead: `snapshot_dataset`
+opens the same files as a `pyarrow.dataset` with the same known
+schema, so a restore runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -109,6 +117,27 @@ def read_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     column dropped; schema restored)."""
     df = read_parquet(spark, os.path.join(out_dir, DATA_DIR), SNAPSHOT_SCHEMA)
     return df.select([f.name for f in TREE_SCHEMA.fields])
+
+
+def snapshot_dataset(out_dir: str) -> ds.Dataset:
+    """The snapshot's tree rows as a driver-side `pyarrow.dataset` with
+    the known schema (TREE_SCHEMA as Arrow): reading it runs no Spark
+    job, and an empty snapshot reads as zero rows.
+
+    Raises FileNotFoundError if `out_dir` holds no data directory, and
+    ValueError naming the URI if pyarrow has no filesystem for its
+    scheme (e.g. a Hadoop-only `s3a://`)."""
+    data_path = os.path.join(out_dir, DATA_DIR)
+    if not urlparse(data_path).scheme:
+        data_path = os.path.abspath(data_path)
+    fs, path = pafs.FileSystem.from_uri(data_path)  # ArrowInvalid is a ValueError
+    if fs.get_file_info(path).type != pafs.FileType.Directory:
+        raise FileNotFoundError(
+            f"snapshot {out_dir!r} has no {DATA_DIR}/ data directory"
+        )
+    return ds.dataset(
+        path, schema=to_arrow_schema(TREE_SCHEMA), format="parquet", filesystem=fs
+    )
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Batched writeback sink: replay a tree DataFrame into a Firebase-style
+"""Batched writeback sink: replay a tree dataset into a Firebase-style
 store via merge-PATCH updates with AIMD batch sizing and recursive
 split-on-failure (the reference's restore pipeline, R3-R6).
 
@@ -33,6 +33,13 @@ concurrently; a path wider than `max_batch` keys is cut into at most
 RESTORE_CONNECTIONS contiguous key ranges, each its own unit with its
 own AIMD state.  Merge-PATCHes on disjoint keys commute, so the final
 store equals a serial write's.
+
+Read path: the tree arrives as a `pyarrow.dataset.Dataset` — a
+snapshot's parquet files (`sinks.snapshot.snapshot_dataset`) or an
+in-memory table — and is scanned on the driver, like the reference's
+restore reads its local chunk files (src/RestoreProcessor.php:45-68):
+no Spark job runs.  It is read one chunk of contiguous depth levels at
+a time, so the driver holds one chunk plus one decoded level.
 """
 
 from __future__ import annotations
@@ -49,9 +56,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import pyarrow.dataset as ds
 
 from firebase_realtime_database_backup_spark.sources.firebase import (
     GET_RETRIES,
@@ -63,7 +68,7 @@ GROWTH_FACTOR = 1.2       # src/RestoreProcessor.php:100-103
 GROWTH_AFTER = 5
 MIN_BATCH = 1             # src/RestoreProcessor.php:83 floor
 RESTORE_CONNECTIONS = 8   # driver-side restore threads, one client each
-RESTORE_CHUNK_ROWS = 100_000  # tree rows per driver-side read
+RESTORE_CHUNK_ROWS = 100_000  # tree rows per depth-chunk read
 
 
 @dataclass
@@ -128,11 +133,11 @@ def _write_path(
             successes = 0
 
 
-def _depth_chunks(tree: DataFrame) -> list[tuple[int, int]]:
+def _depth_chunks(tree: ds.Dataset) -> list[tuple[int, int]]:
     """Contiguous (first, last) depth ranges to read one at a time,
     shallowest first: each holds at most RESTORE_CHUNK_ROWS rows, or
     one wider level on its own."""
-    counts = pc.value_counts(tree.select("depth").toArrow().column("depth"))
+    counts = pc.value_counts(tree.to_table(columns=["depth"]).column("depth"))
     chunks: list[tuple[int, int]] = []
     rows = 0
     for c in sorted(counts.to_pylist(), key=lambda c: c["values"]):
@@ -148,26 +153,32 @@ def _depth_chunks(tree: DataFrame) -> list[tuple[int, int]]:
 def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
     """A depth-sorted chunk's rows grouped by depth, then by path
     ({path: {key: value}}), shallowest level first; a level's values are
-    decoded only when it is reached."""
+    decoded only when it is reached, with one `json.loads` over the
+    level's joined value_json strings."""
     depth = chunk.column("depth").to_numpy()
     cuts = [0, *(np.flatnonzero(depth[1:] != depth[:-1]) + 1).tolist(), len(depth)]
     for lo, hi in zip(cuts, cuts[1:]):
+        rows = chunk.slice(lo, hi - lo)
+        values = json.loads("[" + ",".join(rows.column("value_json").to_pylist()) + "]")
         level: dict[str, dict] = defaultdict(dict)
-        for batch in chunk.slice(lo, hi - lo).to_batches():
-            cols = (batch.column(c).to_pylist() for c in ("path", "key", "value_json"))
-            for path, key, value_json in zip(*cols):
-                level[path][key] = json.loads(value_json)
+        for path, key, value in zip(
+            rows.column("path").to_pylist(), rows.column("key").to_pylist(), values
+        ):
+            level[path][key] = value
         yield level
 
 
-def _tree_levels(tree: DataFrame) -> Iterator[dict[str, dict]]:
-    """The tree's depth levels, shallowest first, loaded onto the driver
-    one depth chunk at a time with `toArrow()`: the driver holds one
-    chunk and one decoded level."""
-    cols = tree.select("path", "key", "value_json", "depth")
-    for first, last in _depth_chunks(cols):
-        chunk = cols.where(F.col("depth").between(first, last))
-        yield from _levels(chunk.toArrow().sort_by("depth"))
+def _tree_levels(tree: ds.Dataset) -> Iterator[dict[str, dict]]:
+    """The tree's depth levels, shallowest first, scanned on the driver
+    one depth chunk at a time: the driver holds one chunk and one
+    decoded level."""
+    depth = pc.field("depth")
+    for first, last in _depth_chunks(tree):
+        chunk = tree.to_table(
+            columns=["path", "key", "value_json", "depth"],
+            filter=(depth >= first) & (depth <= last),
+        )
+        yield from _levels(chunk.sort_by("depth"))
 
 
 def _units(level: dict[str, dict], max_batch: int) -> list[tuple[str, dict]]:
@@ -223,19 +234,22 @@ def _write_levels(
 
 
 def writeback(
-    tree: DataFrame,
+    tree: ds.Dataset,
     client_factory: Callable[[], object],
     *,
     max_batch: int = MAX_BATCH,
 ) -> WritebackStats:
-    """Replay tree rows (path, key, value_json) through merge-PATCH
-    updates from RESTORE_CONNECTIONS driver threads, depth level by
-    depth level (ordering contract: module docstring), and return the
-    merged stats.
+    """Replay tree rows (path, key, value_json, depth) through
+    merge-PATCH updates from RESTORE_CONNECTIONS driver threads, depth
+    level by depth level (ordering contract: module docstring), and
+    return the merged stats.
 
-    Rows reach the driver with `toArrow()`, one chunk of contiguous
-    depth levels at a time (at most RESTORE_CHUNK_ROWS rows, or one
-    wider level); the driver holds one chunk plus one decoded level, so
-    its memory follows the widest level rather than the whole tree."""
+    `tree` is a `pyarrow.dataset.Dataset`: a snapshot opened with
+    `sinks.snapshot.snapshot_dataset`, or `ds.dataset(df.toArrow())`
+    for a tree DataFrame.  It is scanned on the driver, no Spark job,
+    one chunk of contiguous depth levels at a time (at most
+    RESTORE_CHUNK_ROWS rows, or one wider level); the driver holds one
+    chunk plus one decoded level, so its memory follows the widest
+    level rather than the whole tree."""
     with closing(_tree_levels(tree)) as levels:
         return _write_levels(levels, client_factory, max_batch)

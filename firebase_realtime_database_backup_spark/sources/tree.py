@@ -13,7 +13,8 @@ is unrolled iteratively per SURVEY.md §7.4).
 
 Tree rows cross the driver boundary as Arrow, never as a Python row
 list: `tree_frame` hands the JVM one typed `pyarrow.Table`, and the
-driver-side writeback reads rows back with `toArrow()`.
+driver-side writeback reads a tree as a `pyarrow.dataset` (a snapshot's
+parquet files, or a frame's `toArrow()`).
 """
 
 from __future__ import annotations

@@ -1,3 +1,4 @@
+import pyarrow.dataset as ds
 import pytest
 
 from firebase_realtime_database_backup_spark.session import get_spark
@@ -9,3 +10,10 @@ def spark():
         app_name="frdb-spark-tests",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+
+
+@pytest.fixture(scope="session")
+def tree_dataset():
+    """Turn a tree DataFrame into the `pyarrow.dataset.Dataset` that
+    `sinks.writeback.writeback` reads."""
+    return lambda df: ds.dataset(df.toArrow())

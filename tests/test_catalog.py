@@ -1,7 +1,8 @@
 """Schema-carrying parquet reads (catalog.read_parquet): a repeat read
 runs no Spark job, a rewritten file is re-inferred, the cached and the
 sinks' known schemas equal Spark's own inference, and concurrent
-readers are safe."""
+readers are safe.  A restore reads its snapshot with no Spark job, and
+an incremental backup runs no job beyond its delta write."""
 
 from __future__ import annotations
 
@@ -13,10 +14,12 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 import __spark_entry__ as entry
-from firebase_realtime_database_backup_spark import catalog
+from firebase_realtime_database_backup_spark import api, catalog
 from firebase_realtime_database_backup_spark.sinks.incremental import (
     incremental_backup,
     read_delta,
+    tree_diff,
+    write_delta,
 )
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     DATA_DIR,
@@ -25,6 +28,7 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_snapshot,
     write_snapshot,
 )
+from firebase_realtime_database_backup_spark.sources.firebase import FakeFirebase
 from firebase_realtime_database_backup_spark.sources.tree import (
     TREE_SCHEMA,
     tree_from_dict,
@@ -104,6 +108,34 @@ def test_sink_schemas_equal_inferred(spark, tmp_path):
     d, n = _jobs(spark, lambda: read_delta(spark, delta))
     assert n == 0
     assert d.schema == spark.read.parquet(os.path.join(delta, "delta")).schema
+
+
+def test_restore_and_diff_job_counts(spark, tmp_path):
+    """do_restore scans its snapshot on the driver: no Spark job.
+    incremental_backup observes its counts on the delta write, so it
+    runs no more jobs than writing the same delta does."""
+    old_tree = {"a": {"x": 1, "y": [1, 2]}, "b": "s"}
+    new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
+    snap = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, old_tree), snap)
+
+    dst = FakeFirebase({})
+    _, n = _jobs(spark, lambda: api.do_restore(spark, snap, lambda: dst))
+    assert n == 0
+    assert dst.tree == old_tree
+
+    _, n_write = _jobs(
+        spark,
+        lambda: write_delta(
+            tree_diff(read_snapshot(spark, snap), new), str(tmp_path / "d1")
+        ),
+    )
+    counts, n_backup = _jobs(
+        spark, lambda: incremental_backup(spark, new, snap, str(tmp_path / "d2"))
+    )
+    assert n_write > 0
+    assert n_backup <= n_write
+    assert counts == {"added": 2, "removed": 2, "changed": 2}
 
 
 def test_concurrent_reads(spark):

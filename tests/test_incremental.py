@@ -2,6 +2,9 @@
 current tree exactly, and deltas must contain ONLY what changed."""
 
 import json
+import threading
+
+import pytest
 
 from firebase_realtime_database_backup_spark.sinks.incremental import (
     apply_delta,
@@ -52,6 +55,36 @@ def test_incremental_chain_roundtrip(spark, tmp_path):
     )
     # delta is strictly smaller than the full tree (that's the point)
     assert read_delta(spark, delta_dir).count() < v1.count() + v2.count()
+
+
+@pytest.mark.parametrize(
+    "prev, cur",
+    [(V1, V2), (V1, V1), (V1, {}), ({}, V2), ({}, {})],
+    ids=["changed", "identical", "empty-current", "empty-previous", "both-empty"],
+)
+def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
+    """The counts observed on the delta write return (no hang, even when
+    the delta or either side is empty) and equal a groupBy("status")
+    over the written delta."""
+    full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
+    write_snapshot(tree_from_dict(spark, prev), full_dir)
+    current = tree_from_dict(spark, cur)
+    result: dict = {}
+    worker = threading.Thread(
+        target=lambda: result.update(
+            counts=incremental_backup(spark, current, full_dir, delta_dir)
+        ),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "incremental_backup did not return"
+    written = dict(read_delta(spark, delta_dir).groupBy("status").count().collect())
+    assert result["counts"] == {
+        s: written.get(s, 0) for s in ("added", "removed", "changed")
+    }
+    if prev == cur:
+        assert result["counts"] == {"added": 0, "removed": 0, "changed": 0}
 
 
 def test_apply_delta_is_identity_on_empty_diff(spark):

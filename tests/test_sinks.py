@@ -11,6 +11,7 @@ import pytest
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     read_manifest,
     read_snapshot,
+    snapshot_dataset,
     write_snapshot,
 )
 from firebase_realtime_database_backup_spark.sinks import writeback as wb
@@ -73,37 +74,37 @@ def test_export_import_identity(spark, tmp_path):
     out = str(tmp_path / "snap")
     write_snapshot(extract(spark, FakeFirebase(TREE)), out)
     dst = FakeFirebase({})
-    stats = writeback(read_snapshot(spark, out), lambda: dst)
+    stats = writeback(snapshot_dataset(out), lambda: dst)
     assert dst.tree == TREE
     assert stats.keys_written > 0
 
 
-def test_writeback_aimd_halving(spark):
+def test_writeback_aimd_halving(spark, tree_dataset):
     """Batches over the server's limit are halved until they fit
     (src/RestoreProcessor.php:83 semantics)."""
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_from_dict(spark, data), lambda: dst, max_batch=16
+        tree_dataset(tree_from_dict(spark, data)), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
     assert max(n for _, n in dst.update_calls if n) <= 16
 
 
-def test_writeback_split_on_failure(spark):
+def test_writeback_split_on_failure(spark, tree_dataset):
     """A single-key update that still fails (oversized subtree) descends
     one level and patches children (src/RestoreProcessor.php:86-94)."""
     big_child = {"blob": {f"b{j:02d}": "x" * 30 for j in range(20)}}
     dst = FakeFirebase({}, fail_update_bytes=300)
     stats = writeback(
-        tree_from_dict(spark, big_child), lambda: dst
+        tree_dataset(tree_from_dict(spark, big_child)), lambda: dst
     )
     assert dst.tree == big_child
     assert stats.splits >= 1
 
 
-def test_writeback_scalar_failure_raises(spark):
+def test_writeback_scalar_failure_raises(spark, tree_dataset):
     """A one-key scalar PATCH that keeps failing is retried GET_RETRIES
     times, then raises an error naming the path, key and attempts."""
     dst = FakeFirebase({}, fail_update_bytes=2)
@@ -112,13 +113,13 @@ def test_writeback_scalar_failure_raises(spark):
         match=f"PATCH of key 'k' at '/' failed after {GET_RETRIES} attempts",
     ):
         writeback(
-            tree_from_dict(spark, {"k": "a-very-long-scalar-value"}),
+            tree_dataset(tree_from_dict(spark, {"k": "a-very-long-scalar-value"})),
             lambda: dst,
         )
     assert dst.update_calls == [("/", 1)] * GET_RETRIES
 
 
-def test_writeback_scalar_transient_failure_is_retried(spark):
+def test_writeback_scalar_transient_failure_is_retried(spark, tree_dataset):
     """One failed PATCH of a one-key scalar batch (a path that starts at
     batch size 1) no longer aborts the restore."""
 
@@ -132,7 +133,7 @@ def test_writeback_scalar_transient_failure_is_retried(spark):
             super().update(path, data)
 
     dst = FailsOnce({})
-    stats = writeback(tree_from_dict(spark, {"a": {"x": 1}}), lambda: dst)
+    stats = writeback(tree_dataset(tree_from_dict(spark, {"a": {"x": 1}})), lambda: dst)
     assert dst.failed and dst.tree == {"a": {"x": 1}}
     assert stats.patches == 2 and stats.halvings == stats.splits == 0
 
@@ -183,7 +184,7 @@ def assert_depth_ordered(calls) -> None:
                 assert start >= end, f"{q} started before {p} returned"
 
 
-def test_writeback_concurrent_depth_ordered(spark, monkeypatch):
+def test_writeback_concurrent_depth_ordered(spark, tree_dataset, monkeypatch):
     """Driver-side restore on 4 threads: the store equals the source,
     PATCHes overlap but never exceed the thread count, every depth level
     waits for the one above, and a path wider than max_batch is written
@@ -191,7 +192,7 @@ def test_writeback_concurrent_depth_ordered(spark, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
     rec = Recorder(FakeFirebase({}))
     stats = writeback(
-        tree_from_dict(spark, TREE), rec.client, max_batch=8
+        tree_dataset(tree_from_dict(spark, TREE)), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert stats.patches == len(rec.calls)
@@ -205,25 +206,25 @@ def test_writeback_concurrent_depth_ordered(spark, monkeypatch):
     assert sorted(k for keys in users for k in keys) == sorted(TREE["users"])
 
 
-def test_writeback_one_connection_is_serial(spark, monkeypatch):
+def test_writeback_one_connection_is_serial(spark, tree_dataset, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 1)
     rec = Recorder(FakeFirebase({}), delay_s=0.002)
     writeback(
-        tree_from_dict(spark, TREE), rec.client, max_batch=8
+        tree_dataset(tree_from_dict(spark, TREE)), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert rec.max_in_flight() == 1
     assert rec.clients == 1
 
 
-def test_writeback_concurrent_fault_injection(spark, monkeypatch):
+def test_writeback_concurrent_fault_injection(spark, tree_dataset, monkeypatch):
     """On 4 threads, each key range of a refused path halves on its own
     and still converges; an unwritable scalar still raises."""
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_from_dict(spark, data), lambda: dst, max_batch=16
+        tree_dataset(tree_from_dict(spark, data)), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
@@ -232,12 +233,14 @@ def test_writeback_concurrent_fault_injection(spark, monkeypatch):
     dst = FakeFirebase({}, fail_update_bytes=2)
     with pytest.raises(FirebaseTransportError):
         writeback(
-            tree_from_dict(spark, {"k": "a-very-long-scalar-value", "j": 1}),
+            tree_dataset(
+                tree_from_dict(spark, {"k": "a-very-long-scalar-value", "j": 1})
+            ),
             lambda: dst,
         )
 
 
-def test_writeback_concurrent_stress(spark, monkeypatch):
+def test_writeback_concurrent_stress(spark, tree_dataset, monkeypatch):
     """More threads than cores with a short switch interval: every key
     of every range lands exactly once and the stats add up."""
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 16)
@@ -245,8 +248,9 @@ def test_writeback_concurrent_stress(spark, monkeypatch):
         "wide": {f"w{j:04d}": {"v": j} for j in range(1500)},
         "side": {f"s{j:02d}": j for j in range(60)},
     }
-    tree = tree_from_dict(spark, data)
-    rows = tree.count()
+    df = tree_from_dict(spark, data)
+    rows = df.count()
+    tree = tree_dataset(df)
     dst = FakeFirebase({})
     result: dict = {}
     interval = sys.getswitchinterval()
@@ -266,19 +270,55 @@ def test_writeback_concurrent_stress(spark, monkeypatch):
     assert result["stats"].keys_written == rows == sum(n for _, n in dst.update_calls)
 
 
-def test_writeback_reads_in_depth_chunks(spark, monkeypatch):
+def test_writeback_reads_in_depth_chunks(spark, tree_dataset, monkeypatch):
     """The driver reads the tree in contiguous depth chunks of at most
     RESTORE_CHUNK_ROWS rows (a wider level alone); a restore read in
     several chunks still equals the source and keeps the depth order."""
     monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
-    tree = tree_from_dict(spark, TREE)
+    df = tree_from_dict(spark, TREE)
     # depth 1: 3 rows, depth 2: 27 rows, depth 3: 53 rows
-    assert dict(tree.groupBy("depth").count().collect()) == {1: 3, 2: 27, 3: 53}
+    assert dict(df.groupBy("depth").count().collect()) == {1: 3, 2: 27, 3: 53}
+    tree = tree_dataset(df)
     assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
     rec = Recorder(FakeFirebase({}), delay_s=0.001)
     writeback(tree, rec.client, max_batch=8)
     assert rec.store.tree == TREE
     assert_depth_ordered(rec.calls)
+
+
+def test_snapshot_restore_reads_in_depth_chunks(spark, tmp_path, monkeypatch):
+    """A snapshot read back in several depth chunks, each a filtered
+    scan of its parquet files, restores equal to the source in depth
+    order."""
+    monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
+    out = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, TREE), out)
+    tree = snapshot_dataset(out)
+    assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
+    rec = Recorder(FakeFirebase({}), delay_s=0.001)
+    writeback(tree, rec.client, max_batch=8)
+    assert rec.store.tree == TREE
+    assert_depth_ordered(rec.calls)
+
+
+def test_restore_missing_tree_dir_is_named(spark, tmp_path):
+    """A snapshot directory without its tree/ data directory raises
+    FileNotFoundError naming the directory."""
+    from firebase_realtime_database_backup_spark import api
+
+    out = tmp_path / "not_a_snapshot"
+    out.mkdir()
+    with pytest.raises(FileNotFoundError, match="not_a_snapshot.*has no tree/"):
+        api.do_restore(spark, str(out), lambda: FakeFirebase({}))
+
+
+def test_restore_unreadable_uri_scheme_is_named(spark):
+    """A URI scheme pyarrow has no filesystem for (here Hadoop's s3a)
+    raises ValueError naming the URI."""
+    from firebase_realtime_database_backup_spark import api
+
+    with pytest.raises(ValueError, match="s3a://bucket/snap"):
+        api.do_restore(spark, "s3a://bucket/snap", lambda: FakeFirebase({}))
 
 
 def test_lone_surrogate_value_roundtrips(spark, tmp_path):
@@ -289,7 +329,7 @@ def test_lone_surrogate_value_roundtrips(spark, tmp_path):
     out = str(tmp_path / "snap")
     write_snapshot(extract(spark, FakeFirebase(tree)), out)
     dst = FakeFirebase({})
-    writeback(read_snapshot(spark, out), lambda: dst)
+    writeback(snapshot_dataset(out), lambda: dst)
     assert dst.tree == tree
 
 

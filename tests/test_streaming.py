@@ -464,7 +464,7 @@ def test_dedup_state_survives_restart(spark, tmp_path):
     )
 
 
-def test_stream_bot_alerts_to_aimd_writeback_e2e(spark, tmp_path):
+def test_stream_bot_alerts_to_aimd_writeback_e2e(spark, tree_dataset, tmp_path):
     """The full streaming->restore composition the reference semantics
     imply but no test had composed: a LIVE Structured Streaming run of
     the burst bot alert (readStream + withWatermark, append mode) whose
@@ -533,7 +533,7 @@ def test_stream_bot_alerts_to_aimd_writeback_e2e(spark, tmp_path):
             F.to_json(F.struct("n_events")).alias("value_json"),
             F.lit(2).alias("depth"),
         )
-        writeback(tree, lambda: HttpFirebase(url))
+        writeback(tree_dataset(tree), lambda: HttpFirebase(url))
 
     # batch 1: user 7 bursts (4 events >= threshold 3) at 10:00; a
     # quiet user keeps the group count honest
