@@ -8,10 +8,12 @@ Reference programmatic surface (SURVEY.md §3 entry point 3):
         ->do_restore()                      src/RestoreProcessor.php:27-68
 
 Engine equivalents:
-    do_backup(spark, client, out_dir, ...)  extract -> partitioned parquet
-                                            snapshot + manifest
+    do_backup(spark, client, out_dir, ...)  extract -> Arrow table ->
+                                            partitioned parquet snapshot
+                                            + manifest (no Spark job)
     do_restore(spark, snapshot_dir, client_factory, ...)
                                             snapshot -> AIMD writeback
+                                            (no Spark job)
 
 CLI (`python -m firebase_realtime_database_backup_spark <cmd> ...`)
 mirrors the reference's commands and options (C1-C5, SURVEY.md §2.A):
@@ -48,7 +50,12 @@ from firebase_realtime_database_backup_spark.sinks.writeback import (
 from firebase_realtime_database_backup_spark.sources.firebase import (
     DEFAULT_MAX_IPP,
     FirebaseClient,
+    FirebaseExtractor,
     extract,
+)
+from firebase_realtime_database_backup_spark.sources.tree import (
+    tree_frame,
+    tree_table,
 )
 
 URL_TEMPLATE = "https://%s.firebaseio.com"  # AbstractCommand.php:11
@@ -78,15 +85,23 @@ def do_backup(
     max_ipp: int = DEFAULT_MAX_IPP,
     parallelism: int = 8,
 ) -> DataFrame:
-    """Export: AIMD paginated extract -> tree DF -> partitioned parquet
-    snapshot with manifest.  Returns the tree DF (lazy reuse)."""
-    tree = extract(spark, client, max_ipp=max_ipp, parallelism=parallelism)
-    write_snapshot(tree, out_dir)
-    return tree
+    """Export: AIMD paginated extract on `parallelism` driver threads
+    (`sources.firebase.extract`) -> one Arrow tree table -> partitioned
+    parquet snapshot with manifest, written from the driver
+    (`sinks.snapshot.write_snapshot`).  Runs no Spark job.
+
+    The driver holds the whole tree once, as the table the extract
+    builds; the snapshot writer adds one partition string per row.
+    Returns the tree as a DataFrame over that same table (no job until
+    it is used)."""
+    rows = FirebaseExtractor(client, max_ipp=max_ipp).export_rows(parallelism)
+    table = tree_table(rows)
+    write_snapshot(table, out_dir)
+    return tree_frame(spark, table)
 
 
 def do_restore(
-    spark: SparkSession,
+    spark: SparkSession | None,
     snapshot_dir: str,
     client_factory: Callable[[], FirebaseClient],
     *,
@@ -209,6 +224,9 @@ def main(argv: list[str] | None = None) -> int:
                   file=sys.stderr)
             return 2
 
+    if args.command == "import":
+        return _import(args)
+
     from firebase_realtime_database_backup_spark.session import get_spark
 
     spark = get_spark(app_name=f"frdbackup-spark-{args.command}")
@@ -223,8 +241,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "export":
         out = args.output_dir or default_backup_name(args.project_id)
         client = _make_client(args)
-        tree = do_backup(spark, client, out, max_ipp=args.max_ipp)
-        print(f"exported {tree.count()} tree rows from "
+        do_backup(spark, client, out, max_ipp=args.max_ipp)
+        n_rows = snapshot_dataset(out).count_rows()  # parquet footers, no job
+        print(f"exported {n_rows} tree rows from "
               f"{project_url(args.project_id)} to {out}")
         if args.archive:
             from firebase_realtime_database_backup_spark.sinks.snapshot import (
@@ -234,22 +253,24 @@ def main(argv: list[str] | None = None) -> int:
             print(f"archived to {archive_snapshot(out)}")
         return 0
 
-    if args.command == "diff":
-        from firebase_realtime_database_backup_spark.sinks.incremental import (
-            incremental_backup,
-        )
-        from firebase_realtime_database_backup_spark.sources.firebase import extract
+    # diff
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        incremental_backup,
+    )
 
-        client = _make_client(args)
-        tree = extract(spark, client)
-        counts = incremental_backup(spark, tree, args.prev_dir, args.output_dir)
-        print(
-            f"delta written to {args.output_dir}: "
-            f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
-        )
-        return 0
+    tree = extract(spark, _make_client(args))
+    counts = incremental_backup(spark, tree, args.prev_dir, args.output_dir)
+    print(
+        f"delta written to {args.output_dir}: "
+        f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
+    )
+    return 0
 
-    # import: destructive — confirmation guard (C5, ImportCommand.php:33-44)
+
+def _import(args) -> int:
+    """The import command: a restore runs no Spark job, so it starts no
+    SparkSession (`do_restore` ignores its `spark`)."""
+    # destructive — confirmation guard (C5, ImportCommand.php:33-44)
     if not args.yes:
         print(
             "WARNING: restoring overwrites target data (and cloud-function "
@@ -269,9 +290,9 @@ def main(argv: list[str] | None = None) -> int:
         # the unpacked copy lives only as long as the restore
         with tempfile.TemporaryDirectory() as tmp:
             backup_dir = unarchive_snapshot(args.backup_dir, tmp)
-            stats = do_restore(spark, backup_dir, lambda: client)
+            stats = do_restore(None, backup_dir, lambda: client)
     else:
-        stats = do_restore(spark, args.backup_dir, lambda: client)
+        stats = do_restore(None, args.backup_dir, lambda: client)
     print(f"restored {args.backup_dir} into {project_url(args.project_id)}: "
           f"{stats.keys_written} keys in {stats.patches} patches, "
           f"{stats.halvings} halvings, {stats.splits} splits")

@@ -150,14 +150,18 @@ def checkpoint_chain(
     out_dir: str,
 ) -> None:
     """Compact a chain back into a new full snapshot (bounded restore
-    cost — the chain never grows past the compaction interval).
+    cost — the chain never grows past the compaction interval).  The
+    replayed tree is collected to the driver once (`toArrow`, one Spark
+    job) and written by the driver-side snapshot writer, so the driver
+    holds the whole compacted tree.
 
     Also records the compacted chain's directories in a provenance
     sidecar so retention (expire_chain) can verify it is deleting the
     chain THIS checkpoint supersedes, not an unrelated one."""
     import json
 
-    write_snapshot(restore_to_version(spark, full_snapshot_dir, delta_dirs), out_dir)
+    tree = restore_to_version(spark, full_snapshot_dir, delta_dirs)
+    write_snapshot(tree.toArrow(), out_dir)
     with open(os.path.join(out_dir, PROVENANCE_FILE), "w") as fh:
         json.dump(
             {

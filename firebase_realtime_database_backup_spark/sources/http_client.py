@@ -12,11 +12,16 @@ API), detects server page-size refusal by the error body
 authenticates with ``auth=<database secret>`` appended to every request
 (the -k/--project_key option, src/cli-commands/AbstractCommand.php:95-114).
 
-This client implements the same wire surface with stdlib ``urllib`` so
-the extractor (sources/firebase.py) runs against a live database.  It is
-deliberately state-free and picklable — (base_url, token, timeout) are
-plain strings/numbers — so a restore's ``client_factory`` can build one
-per writer thread at no cost (``sinks.writeback``).
+This client implements the same wire surface with stdlib ``http.client``
+so the extractor (sources/firebase.py) runs against a live database.
+One client is shared by many threads (the extract's ``parallelism``
+workers, a restore's writer threads), and it keeps its connections open
+between requests: a request takes an idle keep-alive connection, or
+opens one, and hands it back once the response is read.  A client thus
+holds at most as many connections as it has had requests in flight at
+once, and on ``https`` pays one TLS handshake per connection, not per
+request.  A reused connection the server has since closed is reopened
+and the request sent once more (GET and merge-PATCH are idempotent).
 
 Error channel: HTTP 413 or a "Payload is too large" error body raises
 ``PayloadTooLarge`` (the extractor's AIMD halving signal); any transport
@@ -27,10 +32,10 @@ attempts.
 
 from __future__ import annotations
 
+import http.client
 import json
-import urllib.error
 import urllib.parse
-import urllib.request
+from collections import deque
 from typing import Any
 
 from firebase_realtime_database_backup_spark.sources.firebase import (
@@ -42,13 +47,27 @@ _PAYLOAD_ERROR = "Payload is too large"  # src/BackupProcessor.php:173
 
 
 class HttpFirebase:
-    """``FirebaseClient`` over the Firebase REST API (urllib, stdlib)."""
+    """``FirebaseClient`` over the Firebase REST API (http.client, stdlib),
+    safe to share between threads."""
 
     def __init__(self, base_url: str, auth_token: str | None = None,
                  timeout: float = 30.0) -> None:
         self.base_url = base_url.rstrip("/")
         self.auth_token = auth_token or None
         self.timeout = timeout
+        url = urllib.parse.urlsplit(self.base_url)
+        self._connection_class = (
+            http.client.HTTPSConnection if url.scheme == "https"
+            else http.client.HTTPConnection
+        )
+        self._netloc = url.netloc
+        self._idle: deque[http.client.HTTPConnection] = deque()
+
+    def close(self) -> None:
+        """Close the idle connections.  The client stays usable: a later
+        request opens a new connection."""
+        while self._idle:
+            self._idle.pop().close()
 
     # -- wire helpers -----------------------------------------------------
     def _url(self, path: str, params: dict[str, str]) -> str:
@@ -76,26 +95,53 @@ class HttpFirebase:
             f"auth={urllib.parse.quote_plus(self.auth_token)}", "auth=REDACTED"
         )
 
+    def _send(self, method: str, target: str,
+              body: bytes | None) -> tuple[int, bytes]:
+        """(status, body) of one request on an idle connection, or a new
+        one.  An open connection may have been closed by the server since
+        its last response, which shows as ConnectionError or
+        BadStatusLine: it is then reopened and the request sent once
+        more."""
+        headers = {"Content-Type": "application/json"} if body else {}
+        try:
+            conn = self._idle.pop()
+        except IndexError:
+            conn = self._connection_class(self._netloc, timeout=self.timeout)
+        resend = conn.sock is not None
+        while True:
+            try:
+                conn.request(method, target, body=body, headers=headers)
+                resp = conn.getresponse()
+                data = resp.read()
+            except (ConnectionError, http.client.BadStatusLine):
+                conn.close()  # the next request() reconnects
+                if not resend:
+                    raise
+                resend = False
+                continue
+            except BaseException:
+                conn.close()
+                raise
+            self._idle.append(conn)
+            return resp.status, data
+
     def _request(self, url: str, *, method: str = "GET",
                  body: bytes | None = None) -> Any:
-        req = urllib.request.Request(
-            url, data=body, method=method,
-            headers={"Content-Type": "application/json"} if body else {},
-        )
+        split = urllib.parse.urlsplit(url)
+        target = split.path + (f"?{split.query}" if split.query else "")
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                raw = resp.read()
-        except urllib.error.HTTPError as exc:
-            if exc.code == 413:  # explicit entity-too-large status
-                raise PayloadTooLarge(_PAYLOAD_ERROR) from exc
-            detail = exc.read().decode("utf-8", "replace")[:200]
-            raise FirebaseTransportError(
-                f"HTTP {exc.code} for {method} {self._redact(url)}: {detail}"
-            ) from exc
-        except (urllib.error.URLError, OSError, TimeoutError) as exc:
+            status, raw = self._send(method, target, body)
+        except (OSError, http.client.HTTPException) as exc:
             raise FirebaseTransportError(
                 f"transport failure for {method} {self._redact(url)}: {exc}"
             ) from exc
+        if status == 413:  # explicit entity-too-large status
+            raise PayloadTooLarge(_PAYLOAD_ERROR)
+        if not 200 <= status < 300:
+            detail = raw.decode("utf-8", "replace")[:200]
+            raise FirebaseTransportError(
+                f"HTTP {status} for {method} {self._redact(url)}: {detail}"
+            )
         data = json.loads(raw) if raw else None
         # the reference string-matches this error in a 200 body
         # (src/BackupProcessor.php:173)

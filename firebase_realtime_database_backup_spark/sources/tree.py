@@ -12,9 +12,10 @@ work — Spark schemas are static, unbounded-depth trees are not, so depth
 is unrolled iteratively per SURVEY.md §7.4).
 
 Tree rows cross the driver boundary as Arrow, never as a Python row
-list: `tree_frame` hands the JVM one typed `pyarrow.Table`, and the
-driver-side writeback reads a tree as a `pyarrow.dataset` (a snapshot's
-parquet files, or a frame's `toArrow()`).
+list: `tree_table` builds one typed `pyarrow.Table`, which the snapshot
+writer writes and `tree_frame` hands the JVM, and the driver-side
+writeback reads a tree as a `pyarrow.dataset` (a snapshot's parquet
+files, or a frame's `toArrow()`).
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ TREE_SCHEMA = StructType(
 )
 
 
-#: TREE_SCHEMA as Arrow: the table `tree_frame` hands to the JVM.
+#: TREE_SCHEMA as Arrow: the type of a `tree_table`.
 _ARROW_TREE_SCHEMA = pa.schema(
     [
         pa.field("path", pa.string(), nullable=False),
@@ -104,13 +105,10 @@ def rows_from_dict(d: dict, path: str = "/") -> list[tuple[str, str, str, int]]:
     return out
 
 
-def tree_frame(
-    spark: SparkSession, rows: Sequence[tuple[str, str, str, int]]
-) -> DataFrame:
-    """The tree DataFrame of (path, key, value_json, depth) rows, sent to
-    the JVM as one Arrow table typed like TREE_SCHEMA rather than as a
-    pickled row list (which costs a Python-side schema check per row and
-    a slower first job over the result).
+def tree_table(rows: Sequence[tuple[str, str, str, int]]) -> pa.Table:
+    """The (path, key, value_json, depth) rows as one Arrow table typed
+    like TREE_SCHEMA: what a snapshot is written from and what
+    `tree_frame` hands the JVM.
 
     A path or key holding a lone UTF-16 surrogate cannot be stored as
     UTF-8 and, unlike a value, cannot be escaped: it raises a
@@ -126,7 +124,17 @@ def tree_frame(
             f"tree row {key!r} at path {path!r} holds a lone UTF-16 "
             "surrogate, which UTF-8 cannot store"
         ) from None
-    table = pa.Table.from_arrays(arrays, schema=_ARROW_TREE_SCHEMA)
+    return pa.Table.from_arrays(arrays, schema=_ARROW_TREE_SCHEMA)
+
+
+def tree_frame(
+    spark: SparkSession, tree: pa.Table | Sequence[tuple[str, str, str, int]]
+) -> DataFrame:
+    """The tree DataFrame of a `tree_table` (or of the rows to build one
+    from), sent to the JVM as one Arrow table rather than as a pickled
+    row list (which costs a Python-side schema check per row and a
+    slower first job over the result).  Runs no Spark job."""
+    table = tree if isinstance(tree, pa.Table) else tree_table(tree)
     return spark.createDataFrame(table, TREE_SCHEMA)
 
 

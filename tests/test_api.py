@@ -65,6 +65,31 @@ def test_cli_import_requires_confirmation(spark, tmp_path, monkeypatch, capsys):
     assert " patches, 0 halvings, 0 splits" in line
 
 
+def test_cli_import_starts_no_spark(spark, tmp_path, monkeypatch, capsys):
+    """A restore runs no Spark job, so the import command starts no
+    SparkSession: it completes with get_spark failing if called, and
+    the active session unchanged."""
+    from pyspark.sql import SparkSession
+
+    from firebase_realtime_database_backup_spark import session
+
+    out = str(tmp_path / "snap")
+    do_backup(spark, FakeFirebase(json.loads(json.dumps(TREE))), out)
+    empty = tmp_path / "empty.json"
+    empty.write_text("{}")
+
+    def no_spark(*_, **__):
+        raise AssertionError("import started a SparkSession")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    active = SparkSession.getActiveSession()
+    rc = main(["import", "-p", "demo", "--tree-json", str(empty),
+               "--backup_dir", out, "--yes"])
+    assert rc == 0
+    assert "restored" in capsys.readouterr().out
+    assert SparkSession.getActiveSession() is active
+
+
 def test_cli_diff_incremental(spark, tmp_path, capsys):
     v1 = dict(TREE)
     v2 = json.loads(json.dumps(TREE))

@@ -1,8 +1,9 @@
 """Schema-carrying parquet reads (catalog.read_parquet): a repeat read
 runs no Spark job, a rewritten file is re-inferred, the cached and the
 sinks' known schemas equal Spark's own inference, and concurrent
-readers are safe.  A restore reads its snapshot with no Spark job, and
-an incremental backup runs no job beyond its delta write."""
+readers are safe.  A backup writes and a restore reads its snapshot
+with no Spark job, and an incremental backup runs no job beyond its
+delta write."""
 
 from __future__ import annotations
 
@@ -93,7 +94,7 @@ def test_sink_schemas_equal_inferred(spark, tmp_path):
     old = tree_from_dict(spark, {"a": {"x": 1, "y": [1, 2]}, "b": "s"})
     new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
     snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
-    write_snapshot(old, snap)
+    write_snapshot(old.toArrow(), snap)
     incremental_backup(spark, new, snap, delta)
 
     tree, n = _jobs(spark, lambda: read_snapshot(spark, snap))
@@ -111,18 +112,23 @@ def test_sink_schemas_equal_inferred(spark, tmp_path):
 
 
 def test_restore_and_diff_job_counts(spark, tmp_path):
-    """do_restore scans its snapshot on the driver: no Spark job.
+    """do_backup writes its snapshot from the driver's Arrow table and
+    do_restore scans it on the driver: neither runs a Spark job.
     incremental_backup observes its counts on the delta write, so it
     runs no more jobs than writing the same delta does."""
     old_tree = {"a": {"x": 1, "y": [1, 2]}, "b": "s"}
     new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
-    snap = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, old_tree), snap)
+    backup = str(tmp_path / "backup")
+    _, n = _jobs(spark, lambda: api.do_backup(spark, FakeFirebase(old_tree), backup))
+    assert n == 0
 
     dst = FakeFirebase({})
-    _, n = _jobs(spark, lambda: api.do_restore(spark, snap, lambda: dst))
+    _, n = _jobs(spark, lambda: api.do_restore(spark, backup, lambda: dst))
     assert n == 0
     assert dst.tree == old_tree
+
+    snap = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, old_tree).toArrow(), snap)
 
     _, n_write = _jobs(
         spark,

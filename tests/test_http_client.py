@@ -40,12 +40,20 @@ TREE = {
 
 
 class _StubHandler(BaseHTTPRequestHandler):
-    """Translate Firebase REST requests back onto a FakeFirebase."""
+    """Translate Firebase REST requests back onto a FakeFirebase.  One
+    handler serves one keep-alive connection (HTTP/1.1)."""
 
+    protocol_version = "HTTP/1.1"
     fake: FakeFirebase
     required_token: str | None = None
     seen_queries: list[dict]
     fail_next: list[int]  # HTTP codes to emit before serving normally
+    accepted: list  # one entry per accepted connection
+    close_after_reply = False  # drop the connection without saying so
+
+    def setup(self) -> None:
+        super().setup()
+        type(self).accepted.append(self.client_address)
 
     def _reply(self, code: int, payload) -> None:
         body = json.dumps(payload).encode()
@@ -54,6 +62,8 @@ class _StubHandler(BaseHTTPRequestHandler):
         self.send_header("Content-Length", str(len(body)))
         self.end_headers()
         self.wfile.write(body)
+        if self.close_after_reply:
+            self.close_connection = True
 
     def _parse(self):
         parsed = urllib.parse.urlparse(self.path)
@@ -93,11 +103,12 @@ class _StubHandler(BaseHTTPRequestHandler):
             self._reply(200, {"error": "Payload is too large"})
 
     def do_PATCH(self) -> None:  # noqa: N802
+        # read the body first: unread, it would stall the connection
+        n = int(self.headers["Content-Length"])
+        data = json.loads(self.rfile.read(n))
         path, _ = self._parse()
         if path is None:
             return
-        n = int(self.headers["Content-Length"])
-        data = json.loads(self.rfile.read(n))
         try:
             self.fake.update(path, data)
         except FirebaseTransportError as exc:
@@ -115,23 +126,25 @@ def stub_server():
     servers = []
 
     def start(fake: FakeFirebase, token: str | None = None,
-              client_token: str | None = "s3cret"):
+              client_token: str | None = "s3cret", close_after_reply=False):
         handler = type(
             "Handler",
             (_StubHandler,),
             {"fake": fake, "required_token": token,
-             "seen_queries": [], "fail_next": []},
+             "seen_queries": [], "fail_next": [], "accepted": [],
+             "close_after_reply": close_after_reply},
         )
         srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
         threading.Thread(target=srv.serve_forever, daemon=True).start()
-        servers.append(srv)
         client = HttpFirebase(
             f"http://127.0.0.1:{srv.server_address[1]}", auth_token=client_token
         )
+        servers.append((srv, client))
         return client, handler
 
     yield start
-    for srv in servers:
+    for srv, client in servers:
+        client.close()
         srv.shutdown()
         srv.server_close()
 
@@ -299,3 +312,88 @@ def test_http_end_to_end_backup_restore_roundtrip(spark, stub_server, tmp_path):
     )
     assert dest_fake.tree == TREE
     assert stats.keys_written == read_snapshot(spark, snap).count()
+
+
+def _backup_then_restore(spark, stub_server, tmp_path, **stub_kw):
+    """Back TREE up over HTTP at parallelism 4, then restore it into an
+    empty store through ONE shared client; return both stubs' handlers."""
+    from firebase_realtime_database_backup_spark.api import do_backup, do_restore
+
+    src_client, src = stub_server(FakeFirebase(TREE), **stub_kw)
+    snap = str(tmp_path / "snap")
+    do_backup(spark, src_client, snap, max_ipp=4, parallelism=4)
+    dest_fake = FakeFirebase({})
+    dest_client, dest = stub_server(dest_fake, **stub_kw)
+    do_restore(None, snap, lambda: dest_client, max_batch=4)
+    assert dest_fake.tree == TREE
+    return src, dest
+
+
+def test_http_connections_are_reused(spark, stub_server, tmp_path):
+    """A client keeps its keep-alive connections: an extract on 4
+    threads and a restore on RESTORE_CONNECTIONS threads open at most
+    one connection per request in flight, far fewer than requests."""
+    from firebase_realtime_database_backup_spark.sinks.writeback import (
+        RESTORE_CONNECTIONS,
+    )
+
+    src, dest = _backup_then_restore(spark, stub_server, tmp_path)
+    opened = len(src.accepted) + len(dest.accepted)
+    requests = len(src.seen_queries) + len(dest.seen_queries)
+    assert len(src.accepted) <= 4
+    assert opened <= 4 + RESTORE_CONNECTIONS
+    assert requests > 2 * opened
+
+
+def test_http_server_closing_every_connection_round_trips(
+    spark, stub_server, tmp_path
+):
+    """A server that drops each connection after its response (without
+    announcing it) costs a reconnect per request, not a failure: the
+    reused connection's request is sent again on a new one, below any
+    retry of the extractor or the writer."""
+    fake = FakeFirebase({})
+    client, handler = stub_server(fake, close_after_reply=True)
+    client.update("/a", {"x": 1})
+    client.update("/a", {"y": 2})
+    assert [client.get("/a") for _ in range(2)] == [{"x": 1, "y": 2}] * 2
+    assert len(handler.accepted) == 4
+
+    src, dest = _backup_then_restore(
+        spark, stub_server, tmp_path, close_after_reply=True
+    )
+    assert len(src.accepted) == len(src.seen_queries)
+    assert len(dest.accepted) == len(dest.seen_queries)
+
+
+def test_http_shared_client_stress(stub_server):
+    """Many threads share one client, with the interpreter switching
+    threads as often as it can: every response answers its own request
+    (no connection is used by two threads at once), and the client opens
+    no more connections than there are threads."""
+    import sys
+
+    client, handler = stub_server(FakeFirebase(TREE))
+    n_threads, n_gets = 16, 25
+    wrong: list = []
+
+    def work(t: int) -> None:
+        for i in range(n_gets):
+            uid = f"u{(t * n_gets + i) % 40:03d}"
+            if client.get(f"/users/{uid}/name") != TREE["users"][uid]["name"]:
+                wrong.append(uid)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert wrong == []
+    assert len(handler.seen_queries) == n_threads * n_gets
+    assert len(handler.accepted) <= n_threads

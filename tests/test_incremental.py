@@ -45,7 +45,7 @@ def test_incremental_chain_roundtrip(spark, tmp_path):
     delta_dir = str(tmp_path / "delta1")
     v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
 
-    write_snapshot(v1, full_dir)
+    write_snapshot(v1.toArrow(), full_dir)
     counts = incremental_backup(spark, v2, full_dir, delta_dir)
     assert counts["added"] >= 1 and counts["removed"] >= 1 and counts["changed"] >= 1
 
@@ -67,7 +67,7 @@ def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
     the delta or either side is empty) and equal a groupBy("status")
     over the written delta."""
     full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
-    write_snapshot(tree_from_dict(spark, prev), full_dir)
+    write_snapshot(tree_from_dict(spark, prev).toArrow(), full_dir)
     current = tree_from_dict(spark, cur)
     result: dict = {}
     worker = threading.Thread(
@@ -113,7 +113,7 @@ def test_expire_chain_after_checkpoint(spark, tmp_path):
     delta_dir = str(tmp_path / "delta1")
     ckpt_dir = str(tmp_path / "ckpt")
     v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    write_snapshot(v1, full_dir)
+    write_snapshot(v1.toArrow(), full_dir)
     incremental_backup(spark, v2, full_dir, delta_dir)
     checkpoint_chain(spark, full_dir, [delta_dir], ckpt_dir)
 
@@ -152,8 +152,8 @@ def test_expire_chain_refuses_wrong_chain(spark, tmp_path):
     ckpt_a = str(tmp_path / "ckpt_a")
     full_b = str(tmp_path / "full_b")  # unrelated, still-needed chain
     v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    write_snapshot(v1, full_a)
-    write_snapshot(v1, full_b)  # content differs from the checkpoint (v2)
+    write_snapshot(v1.toArrow(), full_a)
+    write_snapshot(v1.toArrow(), full_b)  # content differs from the checkpoint (v2)
     incremental_backup(spark, v2, full_a, delta_a)
     checkpoint_chain(spark, full_a, [delta_a], ckpt_a)
 

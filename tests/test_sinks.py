@@ -38,7 +38,7 @@ TREE = {
 def test_snapshot_roundtrip(spark, tmp_path):
     src = extract(spark, FakeFirebase(TREE))
     out = str(tmp_path / "snap")
-    write_snapshot(src, out)
+    write_snapshot(src.toArrow(), out)
     back = read_snapshot(spark, out)
     assert back.exceptAll(src).count() == 0
     assert src.exceptAll(back).count() == 0
@@ -47,7 +47,7 @@ def test_snapshot_roundtrip(spark, tmp_path):
 def test_snapshot_manifest(spark, tmp_path):
     src = extract(spark, FakeFirebase(TREE))
     out = str(tmp_path / "snap")
-    write_snapshot(src, out)
+    write_snapshot(src.toArrow(), out)
     manifest = read_manifest(spark, out)
     total = sum(r.n_rows for r in manifest.collect())
     assert total == src.count()
@@ -60,7 +60,7 @@ def test_snapshot_partition_pruning(spark, tmp_path):
     the 100 TB restore-one-subtree contract."""
     src = extract(spark, FakeFirebase(TREE))
     out = str(tmp_path / "snap")
-    write_snapshot(src, out)
+    write_snapshot(src.toArrow(), out)
     raw = spark.read.parquet(str(tmp_path / "snap" / "tree"))
     one = raw.filter("top = 'users'")
     plan = one._jdf.queryExecution().executedPlan().toString()
@@ -72,7 +72,7 @@ def test_export_import_identity(spark, tmp_path):
     """Full pipeline: fake server → extract → snapshot → restore into an
     empty fake server → identical tree."""
     out = str(tmp_path / "snap")
-    write_snapshot(extract(spark, FakeFirebase(TREE)), out)
+    write_snapshot(extract(spark, FakeFirebase(TREE)).toArrow(), out)
     dst = FakeFirebase({})
     stats = writeback(snapshot_dataset(out), lambda: dst)
     assert dst.tree == TREE
@@ -292,7 +292,7 @@ def test_snapshot_restore_reads_in_depth_chunks(spark, tmp_path, monkeypatch):
     order."""
     monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
     out = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, TREE), out)
+    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
     tree = snapshot_dataset(out)
     assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
     rec = Recorder(FakeFirebase({}), delay_s=0.001)
@@ -327,7 +327,7 @@ def test_lone_surrogate_value_roundtrips(spark, tmp_path):
     by U+FFFD)."""
     tree = {"notes": {"n1": "a\ud800b", "n2": {"deep": "\udfff é"}}, "ok": "é"}
     out = str(tmp_path / "snap")
-    write_snapshot(extract(spark, FakeFirebase(tree)), out)
+    write_snapshot(extract(spark, FakeFirebase(tree)).toArrow(), out)
     dst = FakeFirebase({})
     writeback(snapshot_dataset(out), lambda: dst)
     assert dst.tree == tree
@@ -358,7 +358,7 @@ def test_archive_roundtrip(spark, tmp_path):
         spark, {"users": {"u1": {"name": "a"}, "u2": 3}, "cfg": {"on": True}}
     )
     snap = str(tmp_path / "snap")
-    write_snapshot(tree, snap)
+    write_snapshot(tree.toArrow(), snap)
     arch = archive_snapshot(snap)
     assert arch.endswith(".tar.gz")
     inner = unarchive_snapshot(arch, str(tmp_path / "unpacked"))
@@ -395,3 +395,187 @@ def test_empty_database_backup_restore_incremental(spark, tmp_path):
     )
     assert empty == {"added": 0, "removed": 0, "changed": 0}
     assert read_delta(spark, str(tmp_path / "d2")).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Snapshot format: the driver-side writer against Spark's own writer
+# ---------------------------------------------------------------------------
+
+#: Top-level keys whose directory names Spark's partition writer escapes
+#: (`%`, `=`, `:`) or keeps raw (space, non-ASCII, a leading `_`, which
+#: hides a file name but not a `top=` value); the last one's name passes
+#: 255 bytes once non-ASCII is percent-encoded.
+AWKWARD = {
+    "a b": {"x": 1, "y": {"z": [1, 2], "w": "v"}},
+    "p%20q": {"n": {"m": {"l": 0}}},
+    "k=v": 3,
+    "c:d": {"deep": {"er": "é"}},
+    "é日本": "s",
+    "_hid": {"h": True},
+    "L" + "日" * 40: {"w": 1, "u": {"t": 2}},
+}
+
+
+def _spark_snapshot(spark, tree, out):
+    """A snapshot as the Spark writer built it: `partitionBy("top")`
+    parquet, and a manifest from `input_file_name()` over the files."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from firebase_realtime_database_backup_spark.sinks.snapshot import (
+        DATA_DIR,
+        MANIFEST_DIR,
+    )
+
+    top = F.when(F.col("path") == "/", F.col("key")).otherwise(
+        F.split(F.col("path"), "/").getItem(1)
+    )
+    data = os.path.join(out, DATA_DIR)
+    tree.withColumn("top", top).repartition("top").write.partitionBy(
+        "top"
+    ).parquet(data)
+    (
+        spark.read.parquet(data)
+        .withColumn("part_file", F.input_file_name())
+        .groupBy("path")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sort_array(F.collect_set("part_file")).alias("part_files"),
+        )
+        .write.json(os.path.join(out, MANIFEST_DIR))
+    )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _local(uri):
+    from urllib.parse import unquote, urlparse
+
+    assert uri.startswith("file:///"), uri
+    return unquote(urlparse(uri).path)
+
+
+def test_snapshot_format_matches_spark_writer(spark, tmp_path):
+    """Directory names, manifest and rows of a driver-written snapshot
+    equal those of Spark's own partitioned writer for the same rows, and
+    each reader sees the same tree in both."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from firebase_realtime_database_backup_spark.sinks.incremental import tree_diff
+
+    src = tree_from_dict(spark, AWKWARD)
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    write_snapshot(src.toArrow(), new)
+    _spark_snapshot(spark, src, old)
+
+    def dirs(out):
+        return sorted(d for d in os.listdir(os.path.join(out, "tree")) if "=" in d)
+
+    assert dirs(new) == dirs(old)
+    assert "top=p%2520q" in dirs(new) and "top=k%3Dv" in dirs(new)
+    assert "top=L" + "日" * 40 in dirs(new)
+
+    for out in (new, old):
+        assert _rows(read_snapshot(spark, out)) == _rows(src)
+        table = snapshot_dataset(out).to_table()
+        assert sorted(zip(*table.to_pydict().values())) == _rows(src)
+        assert tree_diff(src, read_snapshot(spark, out)).count() == 0
+
+    manifests = {
+        out: {r.path: r for r in read_manifest(spark, out).collect()}
+        for out in (new, old)
+    }
+    assert {(p, r.n_rows) for p, r in manifests[new].items()} == {
+        (p, r.n_rows) for p, r in manifests[old].items()
+    }
+    for path, row in manifests[new].items():
+        # the same URI form as input_file_name(): only the file names and
+        # the snapshot directory differ
+        assert [os.path.dirname(u).replace("/new/", "/") for u in row.part_files] == [
+            os.path.dirname(u).replace("/old/", "/")
+            for u in manifests[old][path].part_files
+        ]
+        files = [_local(u) for u in row.part_files]
+        held = sum(
+            pq.read_table(f).column("path").to_pylist().count(path) for f in files
+        )
+        assert held == row.n_rows
+
+
+def test_snapshot_overwrite_leaves_no_stale_file(spark, tmp_path):
+    """Overwriting a snapshot replaces every data and manifest file: no
+    directory or file of the first write remains."""
+    import os
+
+    out = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, AWKWARD).toArrow(), out)
+    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+
+    listed = {
+        _local(u) for r in read_manifest(spark, out).collect() for u in r.part_files
+    }
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(out, "tree"))
+        for f in fs
+    }
+    assert on_disk == listed
+    assert sorted(os.listdir(os.path.join(out, "tree"))) == [
+        f"top={k}" for k in sorted(TREE)
+    ]
+    assert len(os.listdir(os.path.join(out, "_manifest"))) == 1
+    assert tree_to_dict(read_snapshot(spark, out)) == TREE
+
+
+def test_snapshot_empty_tree_is_readable(spark, tmp_path):
+    """An empty tree, also written over a non-empty snapshot, reads back
+    as an empty snapshot through every reader."""
+    from firebase_realtime_database_backup_spark.sources.tree import tree_table
+
+    out = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    write_snapshot(tree_table([]), out)
+    assert read_snapshot(spark, out).count() == 0
+    assert read_manifest(spark, out).count() == 0
+    assert snapshot_dataset(out).count_rows() == 0
+
+
+def test_snapshot_failed_write_leaves_no_manifest(spark, tmp_path, monkeypatch):
+    """A write that raises after its data files are written removes
+    them and writes no manifest."""
+    import os
+
+    from firebase_realtime_database_backup_spark.sinks import snapshot
+
+    def boom(*_):
+        raise OSError("injected")
+
+    out = str(tmp_path / "snap")
+    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    monkeypatch.setattr(snapshot, "_manifest_lines", boom)
+    with pytest.raises(OSError, match="injected"):
+        write_snapshot(tree_from_dict(spark, AWKWARD).toArrow(), out)
+    assert os.listdir(out) == []
+
+
+def test_checkpoint_of_awkward_keys_passes_expire_latch(spark, tmp_path):
+    """A checkpoint written by the driver-side writer passes
+    expire_chain's integrity latch (manifest rows == snapshot rows)."""
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        checkpoint_chain,
+        expire_chain,
+        incremental_backup,
+    )
+
+    full, delta, ckpt = (str(tmp_path / d) for d in ("full", "delta", "ckpt"))
+    write_snapshot(tree_from_dict(spark, TREE).toArrow(), full)
+    current = tree_from_dict(spark, {**TREE, **AWKWARD})
+    incremental_backup(spark, current, full, delta)
+    checkpoint_chain(spark, full, [delta], ckpt)
+    assert expire_chain(spark, ckpt, full, [delta]) == [full, delta]
+    assert _rows(read_snapshot(spark, ckpt)) == _rows(current)
