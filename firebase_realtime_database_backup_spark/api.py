@@ -50,13 +50,10 @@ from firebase_realtime_database_backup_spark.sinks.writeback import (
 from firebase_realtime_database_backup_spark.sources.firebase import (
     DEFAULT_MAX_IPP,
     FirebaseClient,
-    FirebaseExtractor,
     extract,
+    extract_table,
 )
-from firebase_realtime_database_backup_spark.sources.tree import (
-    tree_frame,
-    tree_table,
-)
+from firebase_realtime_database_backup_spark.sources.tree import tree_frame
 
 URL_TEMPLATE = "https://%s.firebaseio.com"  # AbstractCommand.php:11
 
@@ -86,16 +83,17 @@ def do_backup(
     parallelism: int = 8,
 ) -> DataFrame:
     """Export: AIMD paginated extract on `parallelism` driver threads
-    (`sources.firebase.extract`) -> one Arrow tree table -> partitioned
-    parquet snapshot with manifest, written from the driver
+    into one Arrow tree table (`sources.firebase.extract_table`) ->
+    partitioned parquet snapshot with manifest, written from the driver
     (`sinks.snapshot.write_snapshot`).  Runs no Spark job.
 
     The driver holds the whole tree once, as the table the extract
     builds; the snapshot writer adds one partition string per row.
     Returns the tree as a DataFrame over that same table (no job until
-    it is used)."""
-    rows = FirebaseExtractor(client, max_ipp=max_ipp).export_rows(parallelism)
-    table = tree_table(rows)
+    it is used).  `out_dir` is a local path or a URI pyarrow has a
+    filesystem for; a Hadoop-only scheme such as `s3a://` raises
+    ValueError, after the extract (`write_snapshot`)."""
+    table = extract_table(client, max_ipp=max_ipp, parallelism=parallelism)
     write_snapshot(table, out_dir)
     return tree_frame(spark, table)
 
@@ -253,18 +251,20 @@ def main(argv: list[str] | None = None) -> int:
             print(f"archived to {archive_snapshot(out)}")
         return 0
 
-    # diff
-    from firebase_realtime_database_backup_spark.sinks.incremental import (
-        incremental_backup,
-    )
+    if args.command == "diff":
+        from firebase_realtime_database_backup_spark.sinks.incremental import (
+            incremental_backup,
+        )
+        from firebase_realtime_database_backup_spark.sources.firebase import extract
 
-    tree = extract(spark, _make_client(args))
-    counts = incremental_backup(spark, tree, args.prev_dir, args.output_dir)
-    print(
-        f"delta written to {args.output_dir}: "
-        f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
-    )
-    return 0
+        client = _make_client(args)
+        tree = extract(spark, client)
+        counts = incremental_backup(spark, tree, args.prev_dir, args.output_dir)
+        print(
+            f"delta written to {args.output_dir}: "
+            f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
+        )
+        return 0
 
 
 def _import(args) -> int:

@@ -204,7 +204,13 @@ def write_snapshot(tree: pa.Table, out_dir: str) -> None:
     Always overwrites — the reference's reset_backup_dir
     (src/BackupProcessor.php:55-61): the old manifest goes first, the
     new one is written last, and a write that raises removes what it
-    wrote (module docstring)."""
+    wrote (module docstring).
+
+    `out_dir` is a local path or a URI pyarrow has a filesystem for
+    (`file://`, and `s3://`, `gs://`, `hdfs://` where pyarrow was built
+    with them and, for `hdfs://`, libhdfs is present).  A scheme only
+    Hadoop serves, such as `s3a://`, raises ValueError naming the URI,
+    where Spark's writer would have written it."""
     fs, root, scheme = _resolve(out_dir)
     data_dir, manifest_dir = f"{root}/{DATA_DIR}", f"{root}/{MANIFEST_DIR}"
     tree = tree.select(TREE_SCHEMA.fieldNames())

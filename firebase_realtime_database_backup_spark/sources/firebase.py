@@ -66,8 +66,9 @@ Architectural departures from the reference (Spark-first, 100 TB):
 - Pages stream straight into Arrow batches / tree rows — the bounded-
   memory property the reference got from spill-to-disk chunk files
   (src/BackupProcessor.php:130,202-223) falls out of Spark's iterator
-  model.  The driver-side `extract` hands its rows to Spark as one
-  Arrow table (`tree_frame`), not as a pickled row list.
+  model.  The driver-side extract builds its rows into one Arrow table
+  (`extract_table`): the backup writes that table, and `extract` hands
+  it to Spark (`tree_frame`), not as a pickled row list.
 """
 
 from __future__ import annotations
@@ -79,11 +80,14 @@ from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field, fields, replace
 from typing import Any, Protocol
 
+import pyarrow as pa
+
 from firebase_realtime_database_backup_spark.sources.tree import (
     canonical_json,
     child_path,
     path_depth,
     tree_frame,
+    tree_table,
 )
 
 MIN_IPP = 2          # src/BackupProcessor.php:10
@@ -455,6 +459,27 @@ class FirebaseExtractor:
         return list(self._drain(top, parallelism))
 
 
+def extract_table(
+    client: FirebaseClient,
+    *,
+    max_ipp: int = DEFAULT_MAX_IPP,
+    parallelism: int = 8,
+) -> pa.Table:
+    """Parallel export into one Arrow tree table (`tree_table`) on the
+    driver: shallow-list the root, then page every top-level child as a
+    unit of one work queue on `parallelism` driver threads (REST-bound,
+    not CPU-bound; `FirebaseExtractor.export_rows`).  A wide node hands
+    back key ranges and a refused one its children, and they join the
+    same queue.  The reference does all of this sequentially.
+
+    Row contract: the rows depend on the tree, the payload budget and
+    `max_ipp`, never on `parallelism`.  Range widths follow each path's
+    own page size and no sizing state is shared between units, so where
+    a go-deeper falls does not depend on timing."""
+    ex = FirebaseExtractor(client, max_ipp=max_ipp)
+    return tree_table(ex.export_rows(parallelism))
+
+
 def extract(
     spark,
     client: FirebaseClient,
@@ -463,24 +488,14 @@ def extract(
     root_start_ipp: int = DEFAULT_MAX_IPP,
     parallelism: int = 8,
 ):
-    """Parallel export: shallow-list the root, then page every top-level
-    child as a unit of one work queue on `parallelism` driver threads
-    (REST-bound, not CPU-bound; `FirebaseExtractor.export_rows`).  A wide
-    node hands back key ranges and a refused one its children, and they
-    join the same queue.  The rows go to Spark as one tree DataFrame,
-    built on the caller's thread.  The reference does all of this
-    sequentially.
-
-    Row contract: the rows depend on the tree, the payload budget and
-    `max_ipp`, never on `parallelism`.  Range widths follow each path's
-    own page size and no sizing state is shared between units, so where
-    a go-deeper falls does not depend on timing.
+    """`extract_table`'s tree as a DataFrame over that table, built on
+    the caller's thread (no Spark job until it is used).
 
     `root_start_ipp` changes nothing: the root is always listed, never
     paged.  The keyword is still accepted because the benchmark's own
     tests (`perfbench/tests`) pass it."""
-    ex = FirebaseExtractor(client, max_ipp=max_ipp)
-    return tree_frame(spark, ex.export_rows(parallelism))
+    table = extract_table(client, max_ipp=max_ipp, parallelism=parallelism)
+    return tree_frame(spark, table)
 
 
 class FakeFirebase:

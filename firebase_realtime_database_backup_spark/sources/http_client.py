@@ -23,6 +23,15 @@ once, and on ``https`` pays one TLS handshake per connection, not per
 request.  A reused connection the server has since closed is reopened
 and the request sent once more (GET and merge-PATCH are idempotent).
 
+Like ``urllib.request.urlopen``, a client honours the environment's
+proxy settings (``http_proxy``, ``https_proxy``, ``no_proxy``, read when
+the client is made): a plain-http request goes to the proxy with its
+absolute URL, an https one through a CONNECT tunnel, with
+``Proxy-Authorization`` when the proxy URL carries a user.  A GET
+follows redirects (301, 302, 303, 307, 308), at most as many as
+``urllib.request`` follows; a PATCH follows none, and a redirect reply
+to it is an HTTP error.
+
 Error channel: HTTP 413 or a "Payload is too large" error body raises
 ``PayloadTooLarge`` (the extractor's AIMD halving signal); any transport
 or non-2xx failure raises ``FirebaseTransportError``, which the extractor
@@ -32,9 +41,11 @@ attempts.
 
 from __future__ import annotations
 
+import base64
 import http.client
 import json
 import urllib.parse
+import urllib.request
 from collections import deque
 from typing import Any
 
@@ -44,6 +55,46 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
 )
 
 _PAYLOAD_ERROR = "Payload is too large"  # src/BackupProcessor.php:173
+
+
+class _Origin:
+    """How requests reach one `scheme://netloc`: directly, or through
+    the proxy the environment names for it."""
+
+    def __init__(self, scheme: str, netloc: str) -> None:
+        self.scheme, self.netloc = scheme, netloc
+        proxy = urllib.request.getproxies().get(scheme)
+        if proxy and not urllib.request.proxy_bypass(netloc):
+            proxy = urllib.parse.urlsplit(
+                proxy if "://" in proxy else f"http://{proxy}"
+            )
+            self.proxy = proxy.netloc.rpartition("@")[2]
+            user = urllib.parse.unquote(proxy.username or "")
+            password = urllib.parse.unquote(proxy.password or "")
+            cred = base64.b64encode(f"{user}:{password}".encode()).decode()
+            self.proxy_headers = (
+                {"Proxy-Authorization": f"Basic {cred}"} if user else {}
+            )
+        else:
+            self.proxy, self.proxy_headers = None, {}
+
+    def connect(self, timeout: float) -> http.client.HTTPConnection:
+        """A new connection (it connects on its first request)."""
+        cls = (http.client.HTTPSConnection if self.scheme == "https"
+               else http.client.HTTPConnection)
+        if self.proxy is None:
+            return cls(self.netloc, timeout=timeout)
+        conn = cls(self.proxy, timeout=timeout)
+        if self.scheme == "https":
+            conn.set_tunnel(self.netloc, headers=self.proxy_headers)
+        return conn
+
+    def request(self, url: urllib.parse.SplitResult) -> tuple[str, dict]:
+        """(target, headers) of a request line: a plain-http proxy takes
+        the absolute URL and the proxy credentials."""
+        if self.proxy is not None and self.scheme == "http":
+            return urllib.parse.urlunsplit(url), self.proxy_headers
+        return url.path + (f"?{url.query}" if url.query else ""), {}
 
 
 class HttpFirebase:
@@ -56,11 +107,7 @@ class HttpFirebase:
         self.auth_token = auth_token or None
         self.timeout = timeout
         url = urllib.parse.urlsplit(self.base_url)
-        self._connection_class = (
-            http.client.HTTPSConnection if url.scheme == "https"
-            else http.client.HTTPConnection
-        )
-        self._netloc = url.netloc
+        self._origin = _Origin(url.scheme, url.netloc)
         self._idle: deque[http.client.HTTPConnection] = deque()
 
     def close(self) -> None:
@@ -95,18 +142,24 @@ class HttpFirebase:
             f"auth={urllib.parse.quote_plus(self.auth_token)}", "auth=REDACTED"
         )
 
-    def _send(self, method: str, target: str,
-              body: bytes | None) -> tuple[int, bytes]:
-        """(status, body) of one request on an idle connection, or a new
-        one.  An open connection may have been closed by the server since
-        its last response, which shows as ConnectionError or
+    def _send(self, method: str, url: urllib.parse.SplitResult,
+              body: bytes | None) -> tuple[int, bytes, str | None]:
+        """(status, body, Location) of one request.  A request to the
+        client's own origin takes an idle connection, or a new one, and
+        hands it back; one elsewhere (a redirect) uses a connection of
+        its own.  An open connection may have been closed by the server
+        since its last response, which shows as ConnectionError or
         BadStatusLine: it is then reopened and the request sent once
         more."""
-        headers = {"Content-Type": "application/json"} if body else {}
+        own = (url.scheme, url.netloc) == (self._origin.scheme, self._origin.netloc)
+        origin = self._origin if own else _Origin(url.scheme, url.netloc)
+        target, headers = origin.request(url)
+        if body:
+            headers = {**headers, "Content-Type": "application/json"}
         try:
-            conn = self._idle.pop()
+            conn = self._idle.pop() if own else origin.connect(self.timeout)
         except IndexError:
-            conn = self._connection_class(self._netloc, timeout=self.timeout)
+            conn = origin.connect(self.timeout)
         resend = conn.sock is not None
         while True:
             try:
@@ -122,15 +175,26 @@ class HttpFirebase:
             except BaseException:
                 conn.close()
                 raise
-            self._idle.append(conn)
-            return resp.status, data
+            if own:
+                self._idle.append(conn)
+            else:
+                conn.close()
+            return resp.status, data, resp.getheader("Location")
 
     def _request(self, url: str, *, method: str = "GET",
                  body: bytes | None = None) -> Any:
         split = urllib.parse.urlsplit(url)
-        target = split.path + (f"?{split.query}" if split.query else "")
         try:
-            status, raw = self._send(method, target, body)
+            # as many redirects as urllib.request follows
+            for _ in range(urllib.request.HTTPRedirectHandler.max_redirections + 1):
+                status, raw, location = self._send(method, split, body)
+                if (method != "GET" or status not in (301, 302, 303, 307, 308)
+                        or not location):
+                    break
+                url = urllib.parse.urljoin(url, location)
+                split = urllib.parse.urlsplit(url)
+                if split.scheme not in ("http", "https"):
+                    break
         except (OSError, http.client.HTTPException) as exc:
             raise FirebaseTransportError(
                 f"transport failure for {method} {self._redact(url)}: {exc}"

@@ -127,20 +127,17 @@ def tree_table(rows: Sequence[tuple[str, str, str, int]]) -> pa.Table:
     return pa.Table.from_arrays(arrays, schema=_ARROW_TREE_SCHEMA)
 
 
-def tree_frame(
-    spark: SparkSession, tree: pa.Table | Sequence[tuple[str, str, str, int]]
-) -> DataFrame:
-    """The tree DataFrame of a `tree_table` (or of the rows to build one
-    from), sent to the JVM as one Arrow table rather than as a pickled
-    row list (which costs a Python-side schema check per row and a
-    slower first job over the result).  Runs no Spark job."""
-    table = tree if isinstance(tree, pa.Table) else tree_table(tree)
+def tree_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """The tree DataFrame of a `tree_table`, sent to the JVM as one Arrow
+    table rather than as a pickled row list (which costs a Python-side
+    schema check per row and a slower first job over the result).  Runs
+    no Spark job."""
     return spark.createDataFrame(table, TREE_SCHEMA)
 
 
 def tree_from_dict(spark: SparkSession, d: dict) -> DataFrame:
     """Materialize a nested dict as a fully-flattened tree DataFrame."""
-    return tree_frame(spark, rows_from_dict(d))
+    return tree_frame(spark, tree_table(rows_from_dict(d)))
 
 
 def leaves(tree: DataFrame) -> DataFrame:

@@ -314,11 +314,14 @@ def test_restore_missing_tree_dir_is_named(spark, tmp_path):
 
 def test_restore_unreadable_uri_scheme_is_named(spark):
     """A URI scheme pyarrow has no filesystem for (here Hadoop's s3a)
-    raises ValueError naming the URI."""
+    raises ValueError naming the URI, on restore and, since the snapshot
+    writer runs on the driver too, on backup."""
     from firebase_realtime_database_backup_spark import api
 
     with pytest.raises(ValueError, match="s3a://bucket/snap"):
         api.do_restore(spark, "s3a://bucket/snap", lambda: FakeFirebase({}))
+    with pytest.raises(ValueError, match="s3a://bucket/snap"):
+        api.do_backup(spark, FakeFirebase(TREE), "s3a://bucket/snap")
 
 
 def test_lone_surrogate_value_roundtrips(spark, tmp_path):

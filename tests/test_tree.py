@@ -22,6 +22,7 @@ from firebase_realtime_database_backup_spark.sources.tree import (
     subtree,
     tree_frame,
     tree_from_dict,
+    tree_table,
     tree_to_dict,
 )
 
@@ -120,14 +121,14 @@ def test_tree_frame_matches_list_built_frame(spark, tree, budget):
     """The Arrow-built frame has the list-built frame's schema, nullability
     included, and its rows."""
     rows = list(FirebaseExtractor(FakeFirebase(tree, max_payload_bytes=budget)).iter_rows())
-    arrow = tree_frame(spark, rows)
+    arrow = tree_frame(spark, tree_table(rows))
     listed = spark.createDataFrame(rows, TREE_SCHEMA)
     assert arrow.schema == listed.schema == TREE_SCHEMA
     assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, listed.collect()))
 
 
 def test_tree_frame_empty(spark):
-    df = tree_frame(spark, [])
+    df = tree_frame(spark, tree_table([]))
     assert df.schema == TREE_SCHEMA
     assert df.count() == 0
     assert tree_to_dict(df) == {}
