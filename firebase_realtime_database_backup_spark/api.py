@@ -10,7 +10,8 @@ Reference programmatic surface (SURVEY.md §3 entry point 3):
 Engine equivalents:
     do_backup(spark, client, out_dir, ...)  extract -> Arrow table ->
                                             partitioned parquet snapshot
-                                            + manifest (no Spark job)
+                                            + manifest; returns the
+                                            table (no Spark job)
     do_restore(spark, snapshot_dir, client_factory, ...)
                                             snapshot -> AIMD writeback
                                             (no Spark job)
@@ -37,9 +38,11 @@ import re
 import sys
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import SparkSession
 
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
+    _resolve,
     snapshot_dataset,
     write_snapshot,
 )
@@ -50,10 +53,9 @@ from firebase_realtime_database_backup_spark.sinks.writeback import (
 from firebase_realtime_database_backup_spark.sources.firebase import (
     DEFAULT_MAX_IPP,
     FirebaseClient,
-    extract,
+    extract,  # noqa: F401 — an `api` attribute the benchmark's tracer wraps
     extract_table,
 )
-from firebase_realtime_database_backup_spark.sources.tree import tree_frame
 
 URL_TEMPLATE = "https://%s.firebaseio.com"  # AbstractCommand.php:11
 
@@ -75,27 +77,29 @@ def project_url(project_id: str) -> str:
 
 
 def do_backup(
-    spark: SparkSession,
+    spark: SparkSession | None,
     client: FirebaseClient,
     out_dir: str,
     *,
     max_ipp: int = DEFAULT_MAX_IPP,
     parallelism: int = 8,
-) -> DataFrame:
+) -> pa.Table:
     """Export: AIMD paginated extract on `parallelism` driver threads
     into one Arrow tree table (`sources.firebase.extract_table`) ->
     partitioned parquet snapshot with manifest, written from the driver
-    (`sinks.snapshot.write_snapshot`).  Runs no Spark job.
+    (`sinks.snapshot.write_snapshot`).  Runs no Spark job, and `spark`
+    is unused; the benchmark's ETL workload passes it.
 
     The driver holds the whole tree once, as the table the extract
     builds; the snapshot writer adds one partition string per row.
-    Returns the tree as a DataFrame over that same table (no job until
-    it is used).  `out_dir` is a local path or a URI pyarrow has a
-    filesystem for; a Hadoop-only scheme such as `s3a://` raises
-    ValueError, after the extract (`write_snapshot`)."""
+    Returns that table.  `out_dir` is a local path or a URI pyarrow has
+    a filesystem for; it is resolved before the extract, so a
+    Hadoop-only scheme such as `s3a://` raises ValueError before the
+    first request."""
+    _resolve(out_dir)
     table = extract_table(client, max_ipp=max_ipp, parallelism=parallelism)
     write_snapshot(table, out_dir)
-    return tree_frame(spark, table)
+    return table
 
 
 def do_restore(
@@ -224,6 +228,10 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.command == "import":
         return _import(args)
+    if args.command == "export":
+        return _export(args)
+    if args.command == "diff":
+        return _diff(args)
 
     from firebase_realtime_database_backup_spark.session import get_spark
 
@@ -236,35 +244,43 @@ def main(argv: list[str] | None = None) -> int:
         else:
             df.show(args.limit, truncate=False)
         return 0
-    if args.command == "export":
-        out = args.output_dir or default_backup_name(args.project_id)
-        client = _make_client(args)
-        do_backup(spark, client, out, max_ipp=args.max_ipp)
-        n_rows = snapshot_dataset(out).count_rows()  # parquet footers, no job
-        print(f"exported {n_rows} tree rows from "
-              f"{project_url(args.project_id)} to {out}")
-        if args.archive:
-            from firebase_realtime_database_backup_spark.sinks.snapshot import (
-                archive_snapshot,
-            )
 
-            print(f"archived to {archive_snapshot(out)}")
-        return 0
 
-    if args.command == "diff":
-        from firebase_realtime_database_backup_spark.sinks.incremental import (
-            incremental_backup,
+def _export(args) -> int:
+    """The export command: a backup runs no Spark job, so it starts no
+    SparkSession (`do_backup` ignores its `spark`)."""
+    out = args.output_dir or default_backup_name(args.project_id)
+    client = _make_client(args)
+    table = do_backup(None, client, out, max_ipp=args.max_ipp)
+    print(f"exported {table.num_rows} tree rows from "
+          f"{project_url(args.project_id)} to {out}")
+    if args.archive:
+        from firebase_realtime_database_backup_spark.sinks.snapshot import (
+            archive_snapshot,
         )
-        from firebase_realtime_database_backup_spark.sources.firebase import extract
 
-        client = _make_client(args)
-        tree = extract(spark, client)
-        counts = incremental_backup(spark, tree, args.prev_dir, args.output_dir)
-        print(
-            f"delta written to {args.output_dir}: "
-            f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
-        )
-        return 0
+        print(f"archived to {archive_snapshot(out)}")
+    return 0
+
+
+def _diff(args) -> int:
+    """The diff command: the extract's table is diffed on the driver
+    (`incremental_backup`), so it starts no SparkSession.  The previous
+    snapshot is opened and the output resolved before the extract: a
+    missing snapshot fails before the first request."""
+    from firebase_realtime_database_backup_spark.sinks.incremental import (
+        incremental_backup,
+    )
+
+    snapshot_dataset(args.prev_dir)
+    _resolve(args.output_dir)
+    table = extract_table(_make_client(args))
+    counts = incremental_backup(None, table, args.prev_dir, args.output_dir)
+    print(
+        f"delta written to {args.output_dir}: "
+        f"+{counts['added']} -{counts['removed']} ~{counts['changed']}"
+    )
+    return 0
 
 
 def _import(args) -> int:

@@ -8,32 +8,53 @@ one, so the engine adds the incremental layer the reference lacks:
 - `tree_diff(old, new)`  — row-level diff of two tree relations:
   added / removed / changed(with before+after), one full-outer join on
   (path, key).
-- `incremental_backup(...)` — extract, diff against the previous
-  snapshot, write ONLY the delta (partitioned like full snapshots) plus
-  a summary; `apply_delta` folds a delta onto a base tree to
-  reconstruct the current state (base ∖ removed ∖ changed ∪ added ∪
-  changed-after) — so full_snapshot + deltas* is a complete,
-  verifiable backup chain.
+- `incremental_backup(...)` — diff the current tree against the
+  previous snapshot and write ONLY the delta; `apply_delta` folds a
+  delta onto a base tree to reconstruct the current state (base ∖
+  removed ∖ changed ∪ added ∪ changed-after) — so full_snapshot +
+  deltas* is a complete, verifiable backup chain.
 
-Scale shape: the diff is a single full-outer shuffle join on
-(path, key) — both sides hash-partition once; value comparison is a
-string equality on the canonical JSON.  Delta application is the same
-join shape.  Nothing is collected to the driver.
+Scale shape: `incremental_backup` diffs on the driver, with no Spark
+job for a tree given as a `pyarrow.Table`.  Both of its inputs are
+driver-side Arrow already — the extract ends with the current tree on
+the driver, and a snapshot opens as a `pyarrow.dataset` — so it does
+the same full-outer join as `tree_diff`, on (path, key) with a string
+equality on the canonical JSON, as one `pyarrow` hash join, and writes
+the delta with `pyarrow.parquet`.  Shipping both sides to the JVM for a
+shuffle join cost three jobs and moved the whole tree twice.  The
+driver holds the previous snapshot's table and the join output (both
+sides' values for every row, until the unchanged rows are filtered
+out) next to the current tree it already holds: a few times the tree.
+
+`tree_diff` is the same diff as a DataFrame join; `expire_chain`'s
+content check uses it.  Delta application (`apply_delta`,
+`restore_to_version`) is that join shape too and stays in Spark.
+Deltas written by Spark's writer and by the driver read alike: both are
+parquet files in DELTA_SCHEMA under `<out_dir>/delta/`.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from firebase_realtime_database_backup_spark.catalog import read_parquet
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
+    _PART_FILE,
+    _remove,
+    _resolve,
     read_snapshot,
+    snapshot_dataset,
     write_snapshot,
 )
+from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
 
 #: diff row status values
 ADDED, REMOVED, CHANGED = "added", "removed", "changed"
@@ -55,7 +76,7 @@ DELTA_SCHEMA = StructType(
 def tree_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """(path, key, status, old_value_json, new_value_json, depth):
     row-level difference new vs old — one full-outer join, no driver
-    state."""
+    state.  `table_diff` is the same diff on the driver."""
     o = old.select(
         "path", "key",
         F.col("value_json").alias("old_value_json"),
@@ -86,8 +107,60 @@ def tree_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def write_delta(delta: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    delta.write.mode(mode).parquet(os.path.join(out_dir, "delta"))
+def table_diff(old: pa.Table, new: pa.Table) -> pa.Table:
+    """`tree_diff` of two tree tables, as a table in DELTA_SCHEMA: one
+    `pyarrow` full-outer hash join on (path, key), the same status
+    rules, and `coalesce(new_depth, old_depth)`.  Runs on the driver."""
+    tree = to_arrow_schema(TREE_SCHEMA)
+    o, n = (
+        t.select(tree.names).cast(tree).rename_columns(
+            ["path", "key", f"{side}_value_json", f"{side}_depth"]
+        )
+        for t, side in ((old, "old"), (new, "new"))
+    )
+    j = o.join(n, ["path", "key"], join_type="full outer")
+    same = pc.fill_null(pc.equal(j["old_value_json"], j["new_value_json"]), False)
+    j = j.filter(pc.invert(same))
+    status = pc.if_else(
+        pc.is_null(j["old_value_json"]),
+        ADDED,
+        pc.if_else(pc.is_null(j["new_value_json"]), REMOVED, CHANGED),
+    )
+    return pa.Table.from_arrays(
+        [
+            j["path"],
+            j["key"],
+            status,
+            j["old_value_json"],
+            j["new_value_json"],
+            pc.coalesce(j["new_depth"], j["old_depth"]),
+        ],
+        schema=to_arrow_schema(DELTA_SCHEMA),
+    )
+
+
+def write_delta(delta: pa.Table, out_dir: str) -> None:
+    """Write a delta table (DELTA_SCHEMA's columns) as one zstd parquet
+    file under `<out_dir>/delta/`, from the driver: no Spark job.  Like
+    `write_snapshot`, it always overwrites (the old `delta/` goes first),
+    a write that raises removes what it wrote, and `out_dir` is a local
+    path or a URI pyarrow has a filesystem for."""
+    fs, root, _ = _resolve(out_dir)
+    delta_dir = f"{root}/delta"
+    _remove(fs, delta_dir)
+    try:
+        fs.create_dir(delta_dir)
+        pq.write_table(
+            delta,
+            f"{delta_dir}/{_PART_FILE}",
+            filesystem=fs,
+            compression="zstd",
+            # the values are mostly distinct: a dictionary only grows them
+            use_dictionary=["path", "key", "status", "depth"],
+        )
+    except BaseException:
+        _remove(fs, delta_dir)
+        raise
 
 
 def read_delta(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -110,22 +183,35 @@ def apply_delta(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def incremental_backup(
-    spark: SparkSession,
-    current_tree: DataFrame,
+    spark: SparkSession | None,
+    current_tree: pa.Table | DataFrame,
     prev_snapshot_dir: str,
     out_dir: str,
 ) -> dict:
-    """Diff the current tree against the previous snapshot and persist
-    only the delta.  Returns counts per status, observed on the delta
-    write itself (`DataFrame.observe`): no job reads the delta back."""
-    counts = Observation()
-    status = F.col("status")
-    delta = tree_diff(read_snapshot(spark, prev_snapshot_dir), current_tree).observe(
-        counts,
-        *(F.count(F.when(status == s, 1)).alias(s) for s in (ADDED, REMOVED, CHANGED)),
-    )
+    """Diff the current tree against the previous snapshot on the driver
+    (`table_diff`) and persist only the delta (`write_delta`).  Returns
+    the delta's row count per status.
+
+    `current_tree` is a tree table (`sources.firebase.extract_table`),
+    which runs no Spark job, or a tree DataFrame, collected once with
+    `toArrow()` (one job).  `spark` is unused; the benchmark's ETL
+    workload (`perfbench/workloads.py`) passes it.
+
+    Driver memory: the current tree, the previous snapshot's table and
+    the join output (module docstring).  The previous snapshot is opened
+    and `out_dir` resolved before the frame is collected, so a missing
+    snapshot or a URI pyarrow has no filesystem for (such as Hadoop's
+    `s3a://`, a ValueError naming it) fails first."""
+    _resolve(out_dir)
+    old = snapshot_dataset(prev_snapshot_dir).to_table()
+    if isinstance(current_tree, DataFrame):
+        current_tree = current_tree.toArrow()
+    delta = table_diff(old, current_tree)
     write_delta(delta, out_dir)
-    return counts.get
+    counts = dict.fromkeys((ADDED, REMOVED, CHANGED), 0)
+    for vc in pc.value_counts(delta["status"]).to_pylist():
+        counts[vc["values"]] = vc["counts"]
+    return counts
 
 
 def restore_to_version(

@@ -4,6 +4,8 @@ confirmation guard)."""
 
 import json
 
+import pytest
+
 from firebase_realtime_database_backup_spark.api import (
     default_backup_name,
     do_backup,
@@ -65,29 +67,91 @@ def test_cli_import_requires_confirmation(spark, tmp_path, monkeypatch, capsys):
     assert " patches, 0 halvings, 0 splits" in line
 
 
+def _no_spark(monkeypatch, command):
+    """Make get_spark fail if `command` calls it."""
+    from firebase_realtime_database_backup_spark import session
+
+    def no_spark(*_, **__):
+        raise AssertionError(f"{command} started a SparkSession")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+
+
 def test_cli_import_starts_no_spark(spark, tmp_path, monkeypatch, capsys):
     """A restore runs no Spark job, so the import command starts no
     SparkSession: it completes with get_spark failing if called, and
     the active session unchanged."""
     from pyspark.sql import SparkSession
 
-    from firebase_realtime_database_backup_spark import session
-
     out = str(tmp_path / "snap")
     do_backup(spark, FakeFirebase(json.loads(json.dumps(TREE))), out)
     empty = tmp_path / "empty.json"
     empty.write_text("{}")
-
-    def no_spark(*_, **__):
-        raise AssertionError("import started a SparkSession")
-
-    monkeypatch.setattr(session, "get_spark", no_spark)
+    _no_spark(monkeypatch, "import")
     active = SparkSession.getActiveSession()
     rc = main(["import", "-p", "demo", "--tree-json", str(empty),
                "--backup_dir", out, "--yes"])
     assert rc == 0
     assert "restored" in capsys.readouterr().out
     assert SparkSession.getActiveSession() is active
+
+
+def test_cli_export_starts_no_spark(spark, tmp_path, monkeypatch, capsys):
+    """A backup runs no Spark job, so the export command starts no
+    SparkSession, and it reports the rows of the table it wrote."""
+    from pyspark.sql import SparkSession
+
+    from firebase_realtime_database_backup_spark.sinks.snapshot import (
+        snapshot_dataset,
+    )
+
+    src = tmp_path / "tree.json"
+    src.write_text(json.dumps(TREE))
+    out = str(tmp_path / "snap")
+    _no_spark(monkeypatch, "export")
+    active = SparkSession.getActiveSession()
+    assert main(["export", "-p", "demo", "--tree-json", str(src),
+                 "--output_dir", out]) == 0
+    n = snapshot_dataset(out).count_rows()
+    assert f"exported {n} tree rows" in capsys.readouterr().out and n > 0
+    assert SparkSession.getActiveSession() is active
+
+
+def test_cli_diff_starts_no_spark(spark, tmp_path, monkeypatch, capsys):
+    """The diff command diffs the extract's table on the driver, so it
+    starts no SparkSession; a missing previous snapshot fails before
+    the extract sends its first request."""
+    from pyspark.sql import SparkSession
+
+    from firebase_realtime_database_backup_spark import api
+
+    v2 = json.loads(json.dumps(TREE))
+    v2["motd"] = "changed!"
+    src1 = tmp_path / "v1.json"; src1.write_text(json.dumps(TREE))
+    src2 = tmp_path / "v2.json"; src2.write_text(json.dumps(v2))
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    do_backup(spark, FakeFirebase(json.loads(json.dumps(TREE))), snap)
+    _no_spark(monkeypatch, "diff")
+    active = SparkSession.getActiveSession()
+    assert main(["diff", "-p", "demo", "--tree-json", str(src2),
+                 "--prev_dir", snap, "--output_dir", delta]) == 0
+    assert "+0 -0 ~1" in capsys.readouterr().out
+    assert SparkSession.getActiveSession() is active
+
+    requests = []
+    make_client = api._make_client
+
+    def counting_client(args):
+        client = make_client(args)
+        get = client.get
+        client.get = lambda *a, **kw: requests.append(a) or get(*a, **kw)
+        return client
+
+    monkeypatch.setattr(api, "_make_client", counting_client)
+    with pytest.raises(FileNotFoundError, match="missing"):
+        main(["diff", "-p", "demo", "--tree-json", str(src1),
+              "--prev_dir", str(tmp_path / "missing"), "--output_dir", delta])
+    assert requests == []
 
 
 def test_cli_diff_incremental(spark, tmp_path, capsys):

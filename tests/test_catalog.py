@@ -2,8 +2,8 @@
 runs no Spark job, a rewritten file is re-inferred, the cached and the
 sinks' known schemas equal Spark's own inference, and concurrent
 readers are safe.  A backup writes and a restore reads its snapshot
-with no Spark job, and an incremental backup runs no job beyond its
-delta write."""
+with no Spark job, and an incremental backup of a tree table runs
+none either."""
 
 from __future__ import annotations
 
@@ -32,7 +32,9 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
 from firebase_realtime_database_backup_spark.sources.firebase import FakeFirebase
 from firebase_realtime_database_backup_spark.sources.tree import (
     TREE_SCHEMA,
+    rows_from_dict,
     tree_from_dict,
+    tree_table,
 )
 
 SF = catalog.default_sf_dir()
@@ -114,10 +116,12 @@ def test_sink_schemas_equal_inferred(spark, tmp_path):
 def test_restore_and_diff_job_counts(spark, tmp_path):
     """do_backup writes its snapshot from the driver's Arrow table and
     do_restore scans it on the driver: neither runs a Spark job.
-    incremental_backup observes its counts on the delta write, so it
-    runs no more jobs than writing the same delta does."""
+    incremental_backup diffs on the driver too: no job for a tree table,
+    one at most (its `toArrow`) for a tree frame, and the delta it
+    writes is the one write_delta writes for tree_diff's frame."""
     old_tree = {"a": {"x": 1, "y": [1, 2]}, "b": "s"}
-    new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
+    new_tree = {"a": {"x": 2}, "c": {"z": True}}
+    new = tree_from_dict(spark, new_tree)
     backup = str(tmp_path / "backup")
     _, n = _jobs(spark, lambda: api.do_backup(spark, FakeFirebase(old_tree), backup))
     assert n == 0
@@ -130,18 +134,40 @@ def test_restore_and_diff_job_counts(spark, tmp_path):
     snap = str(tmp_path / "snap")
     write_snapshot(tree_from_dict(spark, old_tree).toArrow(), snap)
 
-    _, n_write = _jobs(
-        spark,
-        lambda: write_delta(
-            tree_diff(read_snapshot(spark, snap), new), str(tmp_path / "d1")
-        ),
+    d_table, d_frame, d_spark = (str(tmp_path / d) for d in ("dt", "df", "ds"))
+    table = tree_table(rows_from_dict(new_tree))
+    counts, n = _jobs(spark, lambda: incremental_backup(spark, table, snap, d_table))
+    assert n == 0
+    frame_counts, n = _jobs(
+        spark, lambda: incremental_backup(spark, new, snap, d_frame)
     )
-    counts, n_backup = _jobs(
-        spark, lambda: incremental_backup(spark, new, snap, str(tmp_path / "d2"))
-    )
-    assert n_write > 0
-    assert n_backup <= n_write
-    assert counts == {"added": 2, "removed": 2, "changed": 2}
+    assert n <= 1
+    assert counts == frame_counts == {"added": 2, "removed": 2, "changed": 2}
+
+    write_delta(tree_diff(read_snapshot(spark, snap), new).toArrow(), d_spark)
+    rows = [sorted(map(tuple, read_delta(spark, d).collect()))
+            for d in (d_table, d_frame, d_spark)]
+    assert rows[0] == rows[1] == rows[2]
+    assert len(rows[0]) == 6
+
+
+def test_incremental_backup_fails_before_collecting(spark, tmp_path):
+    """A missing previous snapshot, or an output URI pyarrow has no
+    filesystem for, fails before the current frame is collected: the
+    failed call runs no Spark job."""
+    new = tree_from_dict(spark, {"a": {"x": 2}})
+    snap = str(tmp_path / "snap")
+    write_snapshot(new.toArrow(), snap)
+    for prev, out, error in (
+        (snap, "s3a://bucket/delta", ValueError),
+        (str(tmp_path / "missing"), str(tmp_path / "delta"), FileNotFoundError),
+    ):
+        def call():
+            with pytest.raises(error):
+                incremental_backup(spark, new, prev, out)
+
+        _, n = _jobs(spark, call)
+        assert n == 0
 
 
 def test_concurrent_reads(spark):

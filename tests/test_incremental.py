@@ -2,9 +2,12 @@
 current tree exactly, and deltas must contain ONLY what changed."""
 
 import json
+import os
 import threading
 
+import pyarrow.parquet as pq
 import pytest
+from test_sinks import AWKWARD
 
 from firebase_realtime_database_backup_spark.sinks.incremental import (
     apply_delta,
@@ -13,7 +16,10 @@ from firebase_realtime_database_backup_spark.sinks.incremental import (
     restore_to_version,
     tree_diff,
 )
-from firebase_realtime_database_backup_spark.sinks.snapshot import write_snapshot
+from firebase_realtime_database_backup_spark.sinks.snapshot import (
+    read_snapshot,
+    write_snapshot,
+)
 from firebase_realtime_database_backup_spark.sources.tree import tree_from_dict
 
 V1 = {
@@ -63,9 +69,8 @@ def test_incremental_chain_roundtrip(spark, tmp_path):
     ids=["changed", "identical", "empty-current", "empty-previous", "both-empty"],
 )
 def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
-    """The counts observed on the delta write return (no hang, even when
-    the delta or either side is empty) and equal a groupBy("status")
-    over the written delta."""
+    """The counts return (no hang, even when the delta or either side is
+    empty) and equal a groupBy("status") over the written delta."""
     full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
     write_snapshot(tree_from_dict(spark, prev).toArrow(), full_dir)
     current = tree_from_dict(spark, cur)
@@ -85,6 +90,84 @@ def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
     }
     if prev == cur:
         assert result["counts"] == {"added": 0, "removed": 0, "changed": 0}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+#: Values holding lone UTF-16 surrogates, stored ASCII-escaped.
+SURROGATES_OLD = {"notes": {"n1": "a\ud800b", "n2": "same\udfff"}}
+SURROGATES_NEW = {"notes": {"n1": "a\udfffb", "n2": "same\udfff", "n3": "\ud800"}}
+
+
+@pytest.mark.parametrize(
+    "prev, cur",
+    [
+        (V1, V2),
+        (V1, {**V1, **AWKWARD}),
+        ({**V2, **AWKWARD}, V1),
+        (SURROGATES_OLD, SURROGATES_NEW),
+        ({}, V2),
+        (V1, {}),
+        (V2, V2),
+    ],
+    ids=["changed", "awkward-added", "awkward-removed", "lone-surrogate",
+         "empty-old", "empty-new", "identical"],
+)
+def test_driver_diff_equals_tree_diff(spark, tmp_path, prev, cur):
+    """The delta incremental_backup diffs and writes on the driver holds
+    exactly tree_diff's rows, and its counts are that delta's."""
+    full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
+    old, new = tree_from_dict(spark, prev), tree_from_dict(spark, cur)
+    write_snapshot(old.toArrow(), full_dir)
+    counts = incremental_backup(spark, new.toArrow(), full_dir, delta_dir)
+    expected = _rows(tree_diff(old, new))
+    assert _rows(read_delta(spark, delta_dir)) == expected
+    assert counts == {
+        s: sum(r[2] == s for r in expected) for s in ("added", "removed", "changed")
+    }
+
+
+def test_chain_mixing_spark_and_driver_deltas(spark, tmp_path):
+    """A chain whose first delta Spark's writer wrote (as deltas were
+    written before the diff ran on the driver) and whose second the
+    driver wrote replays to the right tree at each step."""
+    v3 = {**V2, "cfg": {"dark": False}, "new": {"n": 1}}
+    full_dir, mid_dir = str(tmp_path / "full"), str(tmp_path / "mid")
+    d_spark, d_driver = str(tmp_path / "d_spark"), str(tmp_path / "d_driver")
+    v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
+    write_snapshot(v1.toArrow(), full_dir)
+    tree_diff(read_snapshot(spark, full_dir), v2).write.parquet(
+        os.path.join(d_spark, "delta")
+    )
+    write_snapshot(v2.toArrow(), mid_dir)
+    incremental_backup(spark, tree_from_dict(spark, v3), mid_dir, d_driver)
+
+    assert _rows(restore_to_version(spark, full_dir, [d_spark])) == _rows(v2)
+    assert _rows(
+        restore_to_version(spark, full_dir, [d_spark, d_driver])
+    ) == _rows(tree_from_dict(spark, v3))
+
+
+def test_failed_delta_write_leaves_no_delta_dir(spark, tmp_path, monkeypatch):
+    """A delta write that raises removes what it wrote, and the old
+    delta it was overwriting is gone too: no `delta/` is left behind."""
+    full_dir, out = str(tmp_path / "full"), str(tmp_path / "out")
+    write_snapshot(tree_from_dict(spark, V1).toArrow(), full_dir)
+    current = tree_from_dict(spark, V2).toArrow()
+    incremental_backup(spark, current, full_dir, out)
+    assert os.listdir(os.path.join(out, "delta"))
+    write_table = pq.write_table
+
+    def write_then_fail(table, where, **kwargs):
+        write_table(table, where, **kwargs)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", write_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        incremental_backup(spark, current, full_dir, out)
+    assert not os.path.exists(os.path.join(out, "delta"))
 
 
 def test_apply_delta_is_identity_on_empty_diff(spark):
