@@ -31,7 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from firebase_realtime_database_backup_spark.catalog import read_table, spread
+from firebase_realtime_database_backup_spark.catalog import (
+    read_parquet,
+    read_table,
+    spread,
+)
 from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.functions.hashing import (
     knuth_bucket_sql,
@@ -42,6 +46,10 @@ from firebase_realtime_database_backup_spark.operators.text import (
     doc_shingle_ids,
 )
 from firebase_realtime_database_backup_spark.registry import Registry
+from firebase_realtime_database_backup_spark.scratch import (
+    is_published,
+    publish_table,
+)
 
 REG = Registry()
 
@@ -52,6 +60,10 @@ BANDS = 4
 ROWS_PER_BAND = 4
 BAND_WEIGHTS = (1, 31, 961, 29791)  # 31^(i % 4)
 JACCARD_THRESHOLD = 0.6
+#: The xxhash family: shingle ids fold xxhash64 to XXHASH_ID_BITS bits,
+#: and its signatures take them modulo XXHASH_P (2^31 - 1).
+XXHASH_ID_BITS = 57
+XXHASH_P = 2147483647
 
 #: DuckDB CTE fragment turning `dshingle` into per-doc MinHash band
 #: keys — the ks/hashes/bands chain every banded-LSH oracle shares
@@ -142,19 +154,45 @@ def _band_keys(sig: DataFrame) -> DataFrame:
 
 
 
-@session_memo
+@session_memo(valid=is_published)
+def ensure_band_index(spark: SparkSession, sf_dir: str, family: str) -> str:
+    """Publish the banded-LSH (doc_id, band, band_key) index of one hash
+    family ONCE per corpus version (scratch.publish_table, kind
+    ``band_index_<family>``); returns the table directory.  The key
+    covers every constant the build reads, so editing the hash scheme
+    or the band fold moves the index to a new path instead of serving
+    the old one.  The shingle relation is derived HERE from the family,
+    so a caller cannot pair the wrong relation with a family key."""
+
+    def build(tmp: str) -> None:
+        if family == "xxhash":
+            sig = _xxhash_signatures(_xxhash_shingle_ids(spark, sf_dir))
+        else:
+            sig = _minhash_signatures(doc_shingle_ids(spark, sf_dir))
+        _band_keys(sig).write.mode("overwrite").parquet(tmp)
+
+    params = (
+        family,
+        MINHASH_P,
+        MINHASH_K,
+        BANDS,
+        ROWS_PER_BAND,
+        BAND_WEIGHTS,
+        XXHASH_P,
+        XXHASH_ID_BITS,
+    )
+    return publish_table(
+        f"band_index_{family}", sf_dir, ("documents",), build, params
+    )
+
+
 def _band_index(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
-    """Banded-LSH index, built once per (session, corpus, hash family) —
-    the session-local form of production's persisted (band, band_key)
-    index: minhash-pair emit / containment / keep-best / cross-corpus
-    all probe the same cached index.  The shingle relation is derived
-    HERE from the family (itself a session memo), so a caller cannot
-    pair the wrong relation with a family key and poison the memo."""
-    if family == "xxhash":
-        sig = _xxhash_signatures(_xxhash_shingle_ids(spark, sf_dir))
-    else:
-        sig = _minhash_signatures(doc_shingle_ids(spark, sf_dir))
-    return _band_keys(sig).cache()
+    """Banded-LSH index of one hash family — production's persisted
+    (band, band_key) index, read back from its published table
+    (ensure_band_index): minhash-pair emit / containment / audits /
+    cross-corpus all probe it.  A new session computes no signature;
+    the read is columnar and holds no cache."""
+    return read_parquet(spark, ensure_band_index(spark, sf_dir, family))
 
 
 def _candidate_pairs(a_bands, b_bands, a_name: str, b_name: str, ordered: bool):
@@ -256,7 +294,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     space never materializes beyond hash-collision candidates.  At
     100 TB, band keys are the partition keys and skewed bands (giant
     dup clusters) are exactly what AQE skew-join splits."""
-    dshingle = doc_shingle_ids(spark, sf_dir).cache()
+    dshingle = doc_shingle_ids(spark, sf_dir)
     bands = _band_index(spark, sf_dir, "dict")
     cands = _candidate_pairs(bands, bands, "doc_a", "doc_b", ordered=True)
     overlap = _pair_overlap(cands, dshingle, "doc_a", "doc_b")
@@ -1543,13 +1581,14 @@ def dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus runs daily.
 
     The asymmetry is the scale win: band keys for the standing corpus
-    are computed once (in production: persisted and bucketed by
+    are computed once per corpus version and persisted
+    (ensure_band_index; production would also bucket them by
     (band, band_key)), and each new batch only shuffles ITS band keys
     into the corpus index — cost O(batch) per day, not O(corpus).
     Candidate verification is the same broadcast array-intersect as
     dedup_minhash_lsh; the threshold is looser (0.5) because cross-batch
     dups drift more than same-crawl dups."""
-    dshingle = doc_shingle_ids(spark, sf_dir).cache()
+    dshingle = doc_shingle_ids(spark, sf_dir)
     bands = _band_index(spark, sf_dir, "dict")
     cands = _candidate_pairs(
         bands.filter(F.col("doc_id") % 10 == 0),
@@ -1623,7 +1662,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation and verification stages are shared machinery); only the
     final scoring expression differs, so the scale analysis there
     carries over verbatim."""
-    dshingle = doc_shingle_ids(spark, sf_dir).cache()
+    dshingle = doc_shingle_ids(spark, sf_dir)
     bands = _band_index(spark, sf_dir, "dict")
     cands = _candidate_pairs(bands, bands, "doc_a", "doc_b", ordered=True)
     overlap = _pair_overlap(cands, dshingle, "doc_a", "doc_b")
@@ -1893,7 +1932,9 @@ def _xxhash_shingle_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_shingles(spark, sf_dir)
         .select(
             "doc_id",
-            F.pmod(F.xxhash64("shingle"), F.lit(1 << 57)).alias("sid"),
+            F.pmod(F.xxhash64("shingle"), F.lit(1 << XXHASH_ID_BITS)).alias(
+                "sid"
+            ),
         )
         .distinct()
         .cache()
@@ -1905,7 +1946,7 @@ def _xxhash_signatures(dshingle: DataFrame) -> DataFrame:
     dictionary-free twin of _minhash_signatures (same _signatures
     scheme, 2^31-1 modulus).  Affine multipliers are ≤ 33 < 2^6, so
     33·2^57 + 87 fits int64 under ANSI."""
-    return _signatures(dshingle, 2147483647)
+    return _signatures(dshingle, XXHASH_P)
 
 
 @REG.query("dedup_minhash_xxhash")  # rows-only: xxhash64 isn't SQL-portable
@@ -1959,13 +2000,13 @@ def dedup_cross_corpus_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same banded equi-join.
 
     Production deployment note: the standing corpus's band keys are
-    computed ONCE and persisted bucketed by (band, band_key) — each
-    daily batch shuffles only ITS band keys into that index, cost
-    O(batch), never O(corpus).  Here both sides derive from one cached
-    shingle relation, which is the same plan with the persistence seam
-    at the `bands` DataFrame.  Correctness is pinned by pytest against
-    the oracle-checked dictionary twin: identical candidate semantics
-    up to 57-bit hash collisions, verified pairs Jaccard-exact."""
+    computed ONCE and persisted (ensure_band_index; production would
+    also bucket them by (band, band_key)) — each daily batch shuffles
+    only ITS band keys into that index, cost O(batch), never
+    O(corpus).  Here both sides filter the one published index.
+    Correctness is pinned by pytest against the oracle-checked
+    dictionary twin: identical candidate semantics up to 57-bit hash
+    collisions, verified pairs Jaccard-exact."""
     dshingle = _xxhash_shingle_ids(spark, sf_dir)
     bands = _band_index(spark, sf_dir, "xxhash")
     cands = _candidate_pairs(
@@ -2556,7 +2597,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared set-intersect verifier; the error is one |a-b| of two
     identically-derived doubles.
 
-    Plan: reuses the session-cached band index (one equi-join emits
+    Plan: reuses the published band index (one equi-join emits
     candidates — never all pairs), the broadcast sorted-set intersect
     for exact overlap, and one broadcast join of the wide k-column
     signature per side.  Scale cost tracks dedup_minhash_lsh plus one
@@ -2565,7 +2606,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     common shingles (a pure band-key collision — an LSH false
     positive) must stay in the audit with n_common = 0, where the
     verifying dedup ops are free to inner-join it away."""
-    dshingle = doc_shingle_ids(spark, sf_dir).cache()
+    dshingle = doc_shingle_ids(spark, sf_dir)
     bands = _band_index(spark, sf_dir, "dict")
     cands = _candidate_pairs(bands, bands, "doc_a", "doc_b", ordered=True)
     overlap = _pair_overlap(cands, dshingle, "doc_a", "doc_b")

@@ -1330,7 +1330,13 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str):
             .parquet(tmp)
         )
 
-    path = publish_table("ivfpq_index", sf_dir, ("embeddings",), build)
+    path = publish_table(
+        "ivfpq_index",
+        sf_dir,
+        ("embeddings",),
+        build,
+        (DIM, IVFPQ_CELLS, PQ_M, PQ_K, PQ_ITERS, PQ_TRAIN),
+    )
     return path, cents, codebooks, n_corpus
 
 

@@ -1,9 +1,20 @@
 """Content-keyed persisted scratch tables with atomic publish and GC.
 
 The engine persists a few EXPENSIVE corpus-derived artifacts under the
-repo-local ``.scratch/`` directory — the shared shingle dictionary
-(operators/text.py:ensure_shingle_table) and the trained BPE merge
-table (ensure_bpe_table).  Through round 7 those were keyed by
+repo-local ``.scratch/`` directory, one kind per publishing helper:
+
+- ``shingle_vocab`` — the ranked (shingle, sid) vocabulary
+  (operators/text.py:ensure_vocab_table);
+- ``shingle_table`` — the (doc_id, sid) shingle dictionary built from
+  it (ensure_shingle_table);
+- ``bpe_table`` — the trained BPE merge table (ensure_bpe_table);
+- ``band_index_dict`` / ``band_index_xxhash`` — the MinHash
+  (doc_id, band, band_key) index of each hash family
+  (operators/dedup.py:ensure_band_index);
+- ``ivfpq_index`` — the cell-partitioned PQ code table
+  (operators/similarity.py:ensure_ivfpq_index).
+
+Through round 7 the shingle dictionary and the BPE table were keyed by
 ``(applicationId, corpus)``: safe against concurrent-session overwrite
 tears, but every NEW session re-paid the corpus-wide build (780 s at
 the 1000x decade) and orphaned the previous session's table —
@@ -16,27 +27,31 @@ and 100 TB:
 
 - **Content key**: the table directory name embeds a fingerprint of
   the corpus files the artifact derives from (path + per-part-file
-  size + mtime).  Any session that sees the same corpus bytes computes
-  the same path, so the build is paid ONCE per corpus version across
-  all sessions, and a rebuilt corpus (the scale dirs are regenerated
-  between rounds) naturally gets a fresh table instead of a stale hit.
+  size + mtime) and of the build's own parameters (the module
+  constants it reads).  Any session that sees the same corpus bytes
+  computes the same path, so the build is paid ONCE per corpus version
+  across all sessions; a rebuilt corpus (the scale dirs are
+  regenerated between rounds) or an edited constant naturally gets a
+  fresh table instead of a stale hit.
 
 - **Atomic publish**: the builder writes into a private ``*.tmp-*``
   sibling, drops a ``_FINGERPRINT`` marker (JSON: corpus dir, table
-  deps, fingerprint) as the completion record, then ``os.rename``s the
-  directory into place.  POSIX rename is atomic and fails with
-  ENOTEMPTY/EEXIST when another session won the race — the loser
-  deletes its tmp dir and reads the winner's table.  Readers treat
-  "final dir exists with marker" as "complete": the marker is written
-  before the rename, so a crash mid-build leaves only a tmp dir, never
-  a half-published final path.
+  deps, parameters, fingerprint) as the completion record, then
+  ``os.rename``s the directory into place.  POSIX rename is atomic
+  and fails with ENOTEMPTY/EEXIST when another session won the race —
+  the loser deletes its tmp dir and reads the winner's table.  Readers
+  treat "final dir exists with marker" as "complete": the marker is
+  written before the rename, so a crash mid-build leaves only a tmp
+  dir, never a half-published final path.
 
 - **GC** (:func:`sweep_scratch`, invoked from the session factory):
   removes (a) orphaned ``*.tmp-*`` dirs past a grace period, (b)
-  content-keyed dirs whose recorded corpus is gone or whose recorded
-  fingerprint no longer matches it (the corpus was rebuilt), and (c)
-  legacy marker-less session-keyed dirs past a longer grace — the
-  pre-round-8 naming that nothing can read once its session dies.
+  content-keyed dirs whose recorded corpus is gone, whose recorded
+  fingerprint no longer matches it (the corpus was rebuilt), or that a
+  newer table of the same kind over the same corpus superseded (a
+  build parameter changed), and (c) legacy marker-less session-keyed
+  dirs past a longer grace — the pre-round-8 naming that nothing can
+  read once its session dies.
 
 At 100 TB the same protocol holds with the repo-local directory
 swapped for a shared object-store prefix: rename becomes a conditional
@@ -84,8 +99,10 @@ LEGACY_GRACE_SEC = 24 * 60 * 60
 #: under .scratch (a user's file, an unknown tool's dir) is never
 #: touched.
 _FAMILIES = (
+    "shingle_vocab_",
     "shingle_table_",
     "bpe_table_",
+    "band_index_",
     "compact_",
     "prune_",
     "ivfpq_index_",
@@ -140,16 +157,25 @@ def iter_table_files(table_path: str):
 
 
 def corpus_fingerprint(
-    sf_dir: str, tables: Sequence[str] = ("documents",)
+    sf_dir: str,
+    tables: Sequence[str] = ("documents",),
+    params: Sequence | None = None,
 ) -> str:
-    """Fingerprint the corpus files an artifact derives from.
+    """Fingerprint the corpus files an artifact derives from, and the
+    parameters its build reads.
 
     sha1 over the corpus abspath plus, for each dependency table, every
     data file's (relative path, size, mtime_ns).  Size+mtime is the
     build-system staleness contract (make, bazel's fast path): a
     regenerated corpus always changes mtime, so a stale table can never
     be served for fresh data; a byte-identical re-stamp merely costs
-    one redundant rebuild, never a wrong answer."""
+    one redundant rebuild, never a wrong answer.
+
+    ``params`` (JSON-serializable: numbers, strings, nested tuples) is
+    hashed in as its JSON text, so editing a constant the build reads
+    moves the table to a new path instead of serving the old value's
+    table.  ``None`` hashes nothing: tables published without
+    parameters keep their fingerprint."""
     sf_dir = os.path.abspath(os.path.normpath(sf_dir))
     h = hashlib.sha1(sf_dir.encode())
     for t in tables:
@@ -157,6 +183,8 @@ def corpus_fingerprint(
         h.update(b"\x00" + t.encode())
         for rel, size, mtime in iter_table_files(tp):
             h.update(f"\x01{rel}\x02{size}\x02{mtime}".encode())
+    if params is not None:
+        h.update(b"\x03" + json.dumps(params).encode())
     return h.hexdigest()
 
 
@@ -180,18 +208,20 @@ def publish_table(
     sf_dir: str,
     tables: Sequence[str],
     build: Callable[[str], None],
-    fingerprint: str | None = None,
+    params: Sequence | None = None,
 ) -> str:
-    """Ensure the content-keyed table for (kind, corpus) exists; build
-    and atomically publish it if not.  Returns the table directory.
+    """Ensure the content-keyed table for (kind, corpus, params) exists;
+    build and atomically publish it if not.  Returns the table
+    directory.
 
     ``build(tmp_dir)`` must write the complete artifact under
     ``tmp_dir`` (any layout — single parquet dir, or subdirs like the
-    BPE table's merges/ + vocab/).  Concurrent sessions may both build;
-    exactly one rename wins and the loser's work is discarded — wasted
-    CPU on a tie, never a torn read."""
-    if fingerprint is None:
-        fingerprint = corpus_fingerprint(sf_dir, tables)
+    BPE table's merges/ + vocab/).  ``params`` lists every constant the
+    build reads (see corpus_fingerprint); the marker records them so
+    the GC sweep can recompute the fingerprint.  Concurrent sessions
+    may both build; exactly one rename wins and the loser's work is
+    discarded — wasted CPU on a tie, never a torn read."""
+    fingerprint = corpus_fingerprint(sf_dir, tables, params)
     final = table_path(kind, sf_dir, fingerprint)
     label = f"{kind}:{os.path.basename(os.path.normpath(sf_dir))}"
     if is_published(final):
@@ -206,6 +236,7 @@ def publish_table(
                 "kind": kind,
                 "sf_dir": os.path.abspath(os.path.normpath(sf_dir)),
                 "tables": list(tables),
+                "params": params,
                 "fingerprint": fingerprint,
             },
             fh,
@@ -243,14 +274,17 @@ def sweep_scratch(
     if now is None:
         now = time.time()
     removed: list[str] = []
+    # live content-keyed tables as (path, mtime, (kind, corpus))
+    live: list[tuple[str, float, tuple]] = []
     for name in os.listdir(root):
         path = os.path.join(root, name)
         if not os.path.isdir(path):
             continue
         try:
-            age = now - os.stat(path).st_mtime
+            mtime = os.stat(path).st_mtime
         except OSError:
             continue  # raced with another sweeper
+        age = now - mtime
         if ".tmp-" in name:
             # Orphaned build attempt (crash mid-build, or a lost race
             # whose loser died before cleanup).
@@ -266,11 +300,15 @@ def sweep_scratch(
                     meta = json.load(fh)
                 corpus = meta["sf_dir"]
                 stale = not os.path.isdir(corpus) or corpus_fingerprint(
-                    corpus, meta.get("tables", ("documents",))
+                    corpus,
+                    meta.get("tables", ("documents",)),
+                    meta.get("params"),
                 ) != meta.get("fingerprint")
             except (OSError, ValueError, KeyError):
                 stale = True  # unreadable marker: treat as dead
-            if stale and age > STALE_GRACE_SEC and _rmtree_quiet(path):
+            if not stale:
+                live.append((path, mtime, (meta.get("kind"), corpus)))
+            elif age > STALE_GRACE_SEC and _rmtree_quiet(path):
                 removed.append(path)
         else:
             # Legacy session-keyed dir (pre-round-8 naming): nothing
@@ -278,4 +316,17 @@ def sweep_scratch(
             # the long grace.
             if age > LEGACY_GRACE_SEC and _rmtree_quiet(path):
                 removed.append(path)
+    # One corpus version has one live table per kind; an older one that
+    # still matches its corpus was built with parameters the code has
+    # since changed (its fingerprint checks out against its own marker).
+    newest: dict[tuple, float] = {}
+    for _, mtime, key in live:
+        newest[key] = max(mtime, newest.get(key, mtime))
+    for path, mtime, key in live:
+        if (
+            mtime < newest[key]
+            and now - mtime > STALE_GRACE_SEC
+            and _rmtree_quiet(path)
+        ):
+            removed.append(path)
     return removed

@@ -198,7 +198,7 @@ def _memo_smoke_lists():
     oracle_backed = {
         "text_vocab_growth": (text.doc_shingle_ids, text.ensure_shingle_table),
         "dedup_minhash_audit_sampled": (
-            dedup._band_index,
+            dedup.ensure_band_index,
             dedup._sampled_shingle_ids,
         ),
         "dedup_containment_prefix": (dedup._ranked_tokens, dedup._sid_arrays),
@@ -207,7 +207,7 @@ def _memo_smoke_lists():
             dedup._ensure_fastss_pairs,
             dedup._er_attr,
         ),
-        "text_fingerprint": (text.ensure_shingle_vocab,),
+        "text_fingerprint": (text.ensure_vocab_table,),
         "mix_token_budget_select": (text._budget_feats,),
         "multimodal_phash_hamming": (multimodal.phash_hashes,),
         "events_item_cooccurrence": (relational.ensure_item_edges,),
@@ -223,7 +223,10 @@ def _memo_smoke_lists():
     # slow-tier sweep checks it): their two runs are compared to each
     # other
     rows_only = {
-        "dedup_minhash_xxhash": (dedup._xxhash_shingle_ids, dedup._band_index),
+        "dedup_minhash_xxhash": (
+            dedup._xxhash_shingle_ids,
+            dedup.ensure_band_index,
+        ),
         "sim_ivfpq_persisted": (similarity.ensure_ivfpq_index,),
         "text_bpe_merges": (text.ensure_bpe_table,),
     }

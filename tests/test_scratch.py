@@ -1,6 +1,8 @@
 """Content-keyed scratch-table protocol (scratch.py): cross-session
-reuse of the persisted shingle/BPE dictionaries, fingerprint staleness,
-atomic-publish race behavior, and the GC sweep's grace rules.
+reuse of the persisted shingle/BPE dictionaries, the shingle vocabulary
+and the MinHash band index, fingerprint staleness (corpus bytes and
+build parameters), atomic-publish race behavior, and the GC sweep's
+grace rules.
 
 These pin VERDICT r7's top next-round item: the dictionary build must
 be paid once per CORPUS VERSION, not once per session, and dead copies
@@ -8,9 +10,11 @@ must be collected instead of accreting (the 3.8 GB .scratch leak)."""
 
 import json
 import os
+import shutil
 import time
 
 import pytest
+from test_catalog import _jobs
 
 from firebase_realtime_database_backup_spark import memo, scratch
 from firebase_realtime_database_backup_spark.scratch import (
@@ -169,15 +173,26 @@ def test_sweep_grace_and_families(tmp_path, monkeypatch):
         with open(os.path.join(tmp, "part-0"), "w") as fh:
             fh.write("data")
 
-    live = publish_table("shingle_table", str(corpus), ("documents",), build)
+    # One live and one stale table of each kind the engine publishes.
+    kinds = {
+        "shingle_table": None,
+        "shingle_vocab": None,
+        "band_index_dict": ("dict", 10007),
+        "band_index_xxhash": ("xxhash", 2147483647),
+    }
+    live = [
+        publish_table(k, str(corpus), ("documents",), build, params)
+        for k, params in kinds.items()
+    ]
 
     # Stale: published against a corpus that no longer exists.
     gone = tmp_path / "gone_corpus"
     gone.mkdir()
     (gone / "documents.parquet").write_bytes(b"x")
-    stale = publish_table("bpe_table", str(gone), ("documents",), build)
-    import shutil
-
+    stale = [
+        publish_table(k, str(gone), ("documents",), build, params)
+        for k, params in {"bpe_table": None, **kinds}.items()
+    ]
     shutil.rmtree(gone)
 
     legacy = tmp_path / "bpe_table_sf0.01_0123456789ab"
@@ -192,11 +207,53 @@ def test_sweep_grace_and_families(tmp_path, monkeypatch):
     assert sweep_scratch(now=now) == []
     # Past the short grace: orphan tmp + stale table go; legacy stays.
     removed = set(sweep_scratch(now=now + scratch.STALE_GRACE_SEC + 5))
-    assert removed == {str(stale), str(orphan_tmp)}
+    assert removed == {*stale, str(orphan_tmp)}
     # Past the long grace: legacy goes; live + foreign always stay.
     removed = set(sweep_scratch(now=now + scratch.LEGACY_GRACE_SEC + 5))
     assert removed == {str(legacy)}
-    assert os.path.isdir(live) and foreign.is_dir()
+    assert all(os.path.isdir(p) for p in live) and foreign.is_dir()
+
+
+def test_build_params_key_the_table(tmp_path, monkeypatch):
+    """A build's parameters are part of its content key: two parameter
+    tuples give two paths and two builds, the same tuple is a hit, and
+    ``params=None`` keeps the parameterless corpus fingerprint (the
+    key published shingle tables were made under).  A table whose
+    parameters the code has since changed is still consistent with its
+    own marker, so the sweep collects it as superseded by the newer
+    table of its kind, and only past the grace."""
+    monkeypatch.setattr(scratch, "scratch_root", lambda: str(tmp_path))
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "documents.parquet").write_bytes(b"v1")
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        os.makedirs(tmp, exist_ok=True)
+
+    def publish(params):
+        return publish_table(
+            "band_index_dict", str(corpus), ("documents",), build, params
+        )
+
+    p1 = publish(("dict", 10007, (1, 31)))
+    p2 = publish(("dict", 10009, (1, 31)))
+    assert p1 != p2 and len(calls) == 2, "a new parameter hit the old table"
+    assert publish(("dict", 10007, (1, 31))) == p1 and len(calls) == 2
+    p0 = publish(None)
+    assert p0 == table_path(
+        "band_index_dict", str(corpus), corpus_fingerprint(str(corpus))
+    )
+    assert len({p0, p1, p2}) == 3 and len(calls) == 3
+
+    now = time.time()
+    for age, p in ((3, p1), (2, p2), (1, p0)):  # p0 is the newest
+        os.utime(p, (now - age, now - age))
+    assert sweep_scratch(now=now) == []
+    removed = sweep_scratch(now=now + scratch.STALE_GRACE_SEC + 5)
+    assert set(removed) == {p1, p2}
+    assert is_published(p0)
 
 
 def test_marker_is_invisible_to_spark_reads(spark):
@@ -209,3 +266,68 @@ def test_marker_is_invisible_to_spark_reads(spark):
     assert os.path.isfile(os.path.join(path, MARKER))
     n = spark.read.parquet(path).count()
     assert n > 0
+
+
+def test_published_vocab_equals_inline_rank(spark):
+    """The published (shingle, sid) vocabulary is row-identical to an
+    inline run of the bucketed rank, and its read-back is a plain scan
+    of the content-keyed table (no rank, no cache)."""
+    from firebase_realtime_database_backup_spark.operators import text
+
+    path = text.ensure_vocab_table(spark, SF)
+    assert is_published(path)
+    assert os.path.basename(path).startswith("shingle_vocab_")
+    vocab = text.ensure_shingle_vocab(spark, SF)
+    assert not vocab.storageLevel.useMemory
+    assert "shingle_vocab_" in vocab._jdf.queryExecution().toString()
+    inline = text.shingle_vocab(text.doc_shingles(spark, SF))
+    assert vocab.dtypes == inline.dtypes
+    got = sorted((r.shingle, r.sid) for r in vocab.collect())
+    assert got == sorted((r.shingle, r.sid) for r in inline.collect()) and got
+
+
+@pytest.mark.parametrize("family", ["dict", "xxhash"])
+def test_published_band_index_equals_inline(spark, family):
+    """The published (doc_id, band, band_key) index of each hash family
+    is row-identical to the inline signatures folded into band keys."""
+    from firebase_realtime_database_backup_spark.operators import dedup, text
+
+    path = dedup.ensure_band_index(spark, SF, family)
+    assert is_published(path)
+    assert os.path.basename(path).startswith(f"band_index_{family}_")
+    bands = dedup._band_index(spark, SF, family)
+    assert f"band_index_{family}_" in bands._jdf.queryExecution().toString()
+    if family == "xxhash":
+        sig = dedup._xxhash_signatures(dedup._xxhash_shingle_ids(spark, SF))
+    else:
+        sig = dedup._minhash_signatures(text.doc_shingle_ids(spark, SF))
+    inline = dedup._band_keys(sig)
+    assert bands.dtypes == inline.dtypes
+
+    def rows(df):
+        return sorted((r.doc_id, r.band, r.band_key) for r in df.collect())
+
+    got = rows(bands)
+    assert got == rows(inline) and got
+
+
+def test_new_session_does_no_shingle_work(spark):
+    """Once the vocabulary and the band index are published, a fresh
+    session (every memo cleared) builds neither again:
+    text_fingerprint and dedup_containment publish nothing, and
+    text_fingerprint runs at most 4 Spark jobs (it ran 11 while each
+    session re-ranked the vocabulary)."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    for name in ("text_fingerprint", "dedup_containment"):
+        queries[name](spark, SF).collect()  # publish what they use
+
+    memo.clear_caches()
+    builds0 = len(scratch.SCRATCH_BUILDS)
+    rows, n_jobs = _jobs(
+        spark, lambda: queries["text_fingerprint"](spark, SF).collect()
+    )
+    assert rows and n_jobs <= 4, f"text_fingerprint ran {n_jobs} jobs"
+    assert queries["dedup_containment"](spark, SF).collect()
+    assert scratch.SCRATCH_BUILDS[builds0:] == []
