@@ -18,23 +18,11 @@ Layout:
     api.py         do_backup/do_restore facade + export/import CLI
     operators/     relational, dedup, similarity, text, multimodal
     functions/     scalar function surface (string/date/math/array/json)
-    sources/       Firebase AIMD REST extractor, tree ops, JSONL/CSV
-    sinks/         snapshot (parquet+manifest) and AIMD writeback sinks
+    sources/       Firebase AIMD REST extractor and Arrow tree rows (no
+                   pyspark import), JSONL/CSV ingest and its queries
+    sinks/         snapshot (parquet+manifest), delta chain and AIMD
+                   writeback, all on the driver over Arrow
     streaming/     windowed aggregations + applyInPandasWithState
 """
 
-from firebase_realtime_database_backup_spark.memo import clear_caches
-from firebase_realtime_database_backup_spark.session import get_spark
-
-
-def load_registry():
-    """All registered queries + oracles: `load_registry().queries` is a
-    dict name -> (spark, sf_dir) -> DataFrame.  Import is deferred so
-    `import firebase_realtime_database_backup_spark` stays light."""
-    from firebase_realtime_database_backup_spark.registry import build_registry
-
-    return build_registry()
-
-
-__all__ = ["clear_caches", "get_spark", "load_registry"]
 __version__ = "0.1.0"

@@ -37,9 +37,9 @@ import datetime as _dt
 import re
 import sys
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 import pyarrow as pa
-from pyspark.sql import SparkSession
 
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     _resolve,
@@ -56,6 +56,9 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     extract,  # noqa: F401 — an `api` attribute the benchmark's tracer wraps
     extract_table,
 )
+
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 URL_TEMPLATE = "https://%s.firebaseio.com"  # AbstractCommand.php:11
 

@@ -15,7 +15,7 @@ identity, so the safe form is BIT-IDENTICAL to the naive one on every
 test corpus — swapping it in changes nothing the oracles can see, only
 removes the 100 TB cliff.  (This is the same form
 ``ingest_schema_inference_sampled`` has used since round 3 —
-sources/tree.py — now shared instead of re-derived per site.)
+sources/ingest.py — now shared instead of re-derived per site.)
 """
 
 from __future__ import annotations

@@ -300,7 +300,6 @@ QUERY_MODULES = (
     "firebase_realtime_database_backup_spark.operators.similarity",
     "firebase_realtime_database_backup_spark.functions.scalar",
     "firebase_realtime_database_backup_spark.operators.multimodal",
-    "firebase_realtime_database_backup_spark.sources.tree",
     "firebase_realtime_database_backup_spark.sources.ingest",
     "firebase_realtime_database_backup_spark.operators.relational",
     "firebase_realtime_database_backup_spark.streaming.windows",

@@ -1,119 +1,89 @@
-"""Incremental snapshots: tree diff + delta export.
+"""Incremental snapshots: tree diff + delta export + chain replay.
 
 The reference can only export the ENTIRE database every time
 (src/BackupProcessor.php:39-53 — no state carried between runs).  At
 100 TB that's the difference between an hourly job and an impossible
 one, so the engine adds the incremental layer the reference lacks:
 
-- `tree_diff(old, new)`  — row-level diff of two tree relations:
-  added / removed / changed(with before+after), one full-outer join on
+- `table_diff(old, new)` — row-level diff of two tree tables:
+  added / removed / changed (with before+after), one full-outer join on
   (path, key).
 - `incremental_backup(...)` — diff the current tree against the
   previous snapshot and write ONLY the delta; `apply_delta` folds a
   delta onto a base tree to reconstruct the current state (base ∖
   removed ∖ changed ∪ added ∪ changed-after) — so full_snapshot +
-  deltas* is a complete, verifiable backup chain.
+  deltas* is a complete, verifiable backup chain, which
+  `checkpoint_chain` compacts and `expire_chain` retires.
 
-Scale shape: `incremental_backup` diffs on the driver, with no Spark
-job for a tree given as a `pyarrow.Table`.  Both of its inputs are
-driver-side Arrow already — the extract ends with the current tree on
-the driver, and a snapshot opens as a `pyarrow.dataset` — so it does
-the same full-outer join as `tree_diff`, on (path, key) with a string
-equality on the canonical JSON, as one `pyarrow` hash join, and writes
-the delta with `pyarrow.parquet`.  Shipping both sides to the JVM for a
-shuffle join cost three jobs and moved the whole tree twice.  The
+Everything here runs on the driver over Arrow, with no Spark job and no
+pyspark import.  Both diff inputs are driver-side Arrow already — the
+extract ends with the current tree on the driver, and a snapshot opens
+as a `pyarrow.dataset` — so the diff is one `pyarrow` hash join, on
+(path, key) with a string equality on the canonical JSON, and the delta
+is written with `pyarrow.parquet`.  Shipping both sides to the JVM for
+a shuffle join cost three jobs and moved the whole tree twice.  The
 driver holds the previous snapshot's table and the join output (both
 sides' values for every row, until the unchanged rows are filtered
 out) next to the current tree it already holds: a few times the tree.
+Replay (`apply_delta`, `restore_to_version`) is one anti join and one
+concat per delta, and holds the replayed tree on the driver.
 
-`tree_diff` is the same diff as a DataFrame join; `expire_chain`'s
-content check uses it.  Delta application (`apply_delta`,
-`restore_to_version`) is that join shape too and stays in Spark.
-Deltas written by Spark's writer and by the driver read alike: both are
-parquet files in DELTA_SCHEMA under `<out_dir>/delta/`.
+Deltas written by Spark's writer (as they were before the diff ran on
+the driver) and by the driver read alike: both are parquet files in
+DELTA_SCHEMA under `<out_dir>/delta/`, and the dataset reader skips
+Spark's `_SUCCESS` and `.crc` files.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
+from typing import TYPE_CHECKING
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from firebase_realtime_database_backup_spark.catalog import read_parquet
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     _PART_FILE,
+    MANIFEST_DIR,
     _remove,
     _resolve,
-    read_snapshot,
     snapshot_dataset,
     write_snapshot,
 )
 from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
 
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+
 #: diff row status values
 ADDED, REMOVED, CHANGED = "added", "removed", "changed"
 
-#: tree_diff's output columns: the schema of every delta written, so a
-#: delta read never pays Spark's schema-inference job.
-DELTA_SCHEMA = StructType(
+#: table_diff's output columns: the schema of every delta written, and
+#: the known schema every delta is read with.
+DELTA_SCHEMA = pa.schema(
     [
-        StructField("path", StringType()),
-        StructField("key", StringType()),
-        StructField("status", StringType()),
-        StructField("old_value_json", StringType()),
-        StructField("new_value_json", StringType()),
-        StructField("depth", IntegerType()),
+        pa.field("path", pa.string()),
+        pa.field("key", pa.string()),
+        pa.field("status", pa.string()),
+        pa.field("old_value_json", pa.string()),
+        pa.field("new_value_json", pa.string()),
+        pa.field("depth", pa.int32()),
     ]
 )
 
 
-def tree_diff(old: DataFrame, new: DataFrame) -> DataFrame:
-    """(path, key, status, old_value_json, new_value_json, depth):
-    row-level difference new vs old — one full-outer join, no driver
-    state.  `table_diff` is the same diff on the driver."""
-    o = old.select(
-        "path", "key",
-        F.col("value_json").alias("old_value_json"),
-        F.col("depth").alias("old_depth"),
-    )
-    n = new.select(
-        "path", "key",
-        F.col("value_json").alias("new_value_json"),
-        F.col("depth").alias("new_depth"),
-    )
-    j = o.join(n, ["path", "key"], "full_outer")
-    status = (
-        F.when(F.col("old_value_json").isNull(), ADDED)
-        .when(F.col("new_value_json").isNull(), REMOVED)
-        .when(F.col("old_value_json") != F.col("new_value_json"), CHANGED)
-    )
-    return (
-        j.withColumn("status", status)
-        .filter(F.col("status").isNotNull())
-        .select(
-            "path",
-            "key",
-            "status",
-            "old_value_json",
-            "new_value_json",
-            F.coalesce("new_depth", "old_depth").alias("depth"),
-        )
-    )
-
-
 def table_diff(old: pa.Table, new: pa.Table) -> pa.Table:
-    """`tree_diff` of two tree tables, as a table in DELTA_SCHEMA: one
-    `pyarrow` full-outer hash join on (path, key), the same status
-    rules, and `coalesce(new_depth, old_depth)`.  Runs on the driver."""
-    tree = to_arrow_schema(TREE_SCHEMA)
+    """(path, key, status, old_value_json, new_value_json, depth):
+    row-level difference of two tree tables, new vs old, as a table in
+    DELTA_SCHEMA — one `pyarrow` full-outer hash join on (path, key);
+    unchanged rows are dropped and depth is `coalesce(new, old)`."""
     o, n = (
-        t.select(tree.names).cast(tree).rename_columns(
+        t.select(TREE_SCHEMA.names).cast(TREE_SCHEMA).rename_columns(
             ["path", "key", f"{side}_value_json", f"{side}_depth"]
         )
         for t, side in ((old, "old"), (new, "new"))
@@ -135,7 +105,7 @@ def table_diff(old: pa.Table, new: pa.Table) -> pa.Table:
             j["new_value_json"],
             pc.coalesce(j["new_depth"], j["old_depth"]),
         ],
-        schema=to_arrow_schema(DELTA_SCHEMA),
+        schema=DELTA_SCHEMA,
     )
 
 
@@ -163,23 +133,26 @@ def write_delta(delta: pa.Table, out_dir: str) -> None:
         raise
 
 
-def read_delta(spark: SparkSession, out_dir: str) -> DataFrame:
-    return read_parquet(spark, os.path.join(out_dir, "delta"), DELTA_SCHEMA)
+def read_delta(out_dir: str) -> pa.Table:
+    """The delta under `<out_dir>/delta/` as a table in DELTA_SCHEMA,
+    read on the driver with that known schema."""
+    fs, root, _ = _resolve(out_dir)
+    return ds.dataset(
+        f"{root}/delta", schema=DELTA_SCHEMA, format="parquet", filesystem=fs
+    ).to_table()
 
 
-def apply_delta(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """base (tree) + delta -> new tree.  Removed/changed rows leave the
-    base via an anti join; added/changed rows enter with their new
-    values."""
-    touched = delta.select("path", "key")
-    keep = base.join(touched, ["path", "key"], "left_anti")
-    incoming = (
-        delta.filter(F.col("status").isin(ADDED, CHANGED))
-        .select(
-            "path", "key", F.col("new_value_json").alias("value_json"), "depth"
-        )
+def apply_delta(base: pa.Table, delta: pa.Table) -> pa.Table:
+    """base (tree table) + delta -> new tree table.  Removed and changed
+    rows leave the base through a left anti join on (path, key); added
+    and changed rows enter with their new values."""
+    keep = base.select(TREE_SCHEMA.names).join(
+        delta.select(["path", "key"]), ["path", "key"], join_type="left anti"
     )
-    return keep.unionByName(incoming)
+    incoming = delta.filter(pc.is_in(delta["status"], pa.array([ADDED, CHANGED])))
+    incoming = incoming.select(["path", "key", "new_value_json", "depth"])
+    incoming = incoming.rename_columns(TREE_SCHEMA.names)
+    return pa.concat_tables([keep.cast(TREE_SCHEMA), incoming.cast(TREE_SCHEMA)])
 
 
 def incremental_backup(
@@ -204,7 +177,7 @@ def incremental_backup(
     `s3a://`, a ValueError naming it) fails first."""
     _resolve(out_dir)
     old = snapshot_dataset(prev_snapshot_dir).to_table()
-    if isinstance(current_tree, DataFrame):
+    if not isinstance(current_tree, pa.Table):
         current_tree = current_tree.toArrow()
     delta = table_diff(old, current_tree)
     write_delta(delta, out_dir)
@@ -214,13 +187,12 @@ def incremental_backup(
     return counts
 
 
-def restore_to_version(
-    spark: SparkSession, full_snapshot_dir: str, delta_dirs: list[str]
-) -> DataFrame:
-    """Replay a backup chain: full snapshot + ordered deltas -> tree."""
-    tree = read_snapshot(spark, full_snapshot_dir)
+def restore_to_version(full_snapshot_dir: str, delta_dirs: list[str]) -> pa.Table:
+    """Replay a backup chain on the driver: full snapshot + ordered
+    deltas -> tree table."""
+    tree = snapshot_dataset(full_snapshot_dir).to_table()
     for d in delta_dirs:
-        tree = apply_delta(tree, read_delta(spark, d))
+        tree = apply_delta(tree, read_delta(d))
     return tree
 
 
@@ -230,24 +202,18 @@ PROVENANCE_FILE = "chain_provenance.json"
 
 
 def checkpoint_chain(
-    spark: SparkSession,
-    full_snapshot_dir: str,
-    delta_dirs: list[str],
-    out_dir: str,
+    full_snapshot_dir: str, delta_dirs: list[str], out_dir: str
 ) -> None:
     """Compact a chain back into a new full snapshot (bounded restore
     cost — the chain never grows past the compaction interval).  The
-    replayed tree is collected to the driver once (`toArrow`, one Spark
-    job) and written by the driver-side snapshot writer, so the driver
-    holds the whole compacted tree.
+    chain is replayed on the driver (`restore_to_version`) and written
+    by the driver-side snapshot writer, so the driver holds the whole
+    compacted tree; no Spark job runs.
 
     Also records the compacted chain's directories in a provenance
     sidecar so retention (expire_chain) can verify it is deleting the
     chain THIS checkpoint supersedes, not an unrelated one."""
-    import json
-
-    tree = restore_to_version(spark, full_snapshot_dir, delta_dirs)
-    write_snapshot(tree.toArrow(), out_dir)
+    write_snapshot(restore_to_version(full_snapshot_dir, delta_dirs), out_dir)
     with open(os.path.join(out_dir, PROVENANCE_FILE), "w") as fh:
         json.dump(
             {
@@ -259,10 +225,7 @@ def checkpoint_chain(
 
 
 def expire_chain(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    full_snapshot_dir: str,
-    delta_dirs: list[str],
+    checkpoint_dir: str, full_snapshot_dir: str, delta_dirs: list[str]
 ) -> list[str]:
     """Retention: delete a chain's old full snapshot and the deltas a
     checkpoint has already compacted — the step that keeps N daily
@@ -272,6 +235,8 @@ def expire_chain(
     Safety latches (ALL must pass before anything is deleted):
 
     1. Integrity: the checkpoint is readable and its manifest row count
+       (the `n_rows` of every line of every `_manifest/*.json` part
+       file, one file from the driver's writer, several from Spark's)
        is positive and equals the checkpoint's actual row count — a
        truncated or half-written checkpoint must never authorize
        destroying the only chain that can reconstruct it.
@@ -280,33 +245,27 @@ def expire_chain(
        caller passing the WRONG chain (one this checkpoint never
        compacted, still needed by some other checkpoint) is refused.
        For checkpoints predating the sidecar, fall back to a content
-       cross-check: replay the chain and require its diff against the
-       checkpoint to be empty (one full-outer join).
+       cross-check: replay the chain and require its `table_diff`
+       against the checkpoint to be empty.
 
     Returns the directories removed.
 
-    Scale note: with provenance present the validation reads one
-    manifest JSON, one sidecar JSON, and one count() over the
-    checkpoint — O(checkpoint), no chain replay; the deletions are
-    filesystem metadata ops.  The no-sidecar fallback replays the
-    chain once (retention is rare; correctness beats speed here)."""
-    import json
-    import shutil
-
-    from firebase_realtime_database_backup_spark.sinks.snapshot import (
-        read_manifest,
-        read_snapshot,
-    )
-
-    manifest_rows = read_manifest(spark, checkpoint_dir).agg(
-        F.sum("n_rows")
-    ).collect()[0][0]
-    if not manifest_rows or manifest_rows <= 0:
+    Scale note: with provenance present the validation reads the
+    manifest's JSON lines, one sidecar JSON and the checkpoint's parquet
+    footers (`count_rows`) on the driver — no Spark job, no chain
+    replay; the deletions are filesystem metadata ops.  The no-sidecar
+    fallback replays the chain once on the driver (retention is rare;
+    correctness beats speed here)."""
+    manifest_rows = 0
+    for part in glob.glob(os.path.join(checkpoint_dir, MANIFEST_DIR, "*.json")):
+        with open(part, encoding="utf-8") as fh:
+            manifest_rows += sum(json.loads(ln)["n_rows"] for ln in fh if ln.strip())
+    if manifest_rows <= 0:
         raise ValueError(
             f"checkpoint {checkpoint_dir!r} has an empty/unreadable "
             "manifest; refusing to expire the chain it depends on"
         )
-    actual = read_snapshot(spark, checkpoint_dir).count()
+    actual = snapshot_dataset(checkpoint_dir).count_rows()
     if actual != manifest_rows:
         raise ValueError(
             f"checkpoint {checkpoint_dir!r} row count {actual} != "
@@ -335,8 +294,9 @@ def expire_chain(
     else:
         # Pre-provenance checkpoint: prove BY CONTENT that the passed
         # chain reconstructs exactly this checkpoint before deleting it.
-        replayed = restore_to_version(spark, full_snapshot_dir, delta_dirs)
-        n_diff = tree_diff(replayed, read_snapshot(spark, checkpoint_dir)).count()
+        replayed = restore_to_version(full_snapshot_dir, delta_dirs)
+        checkpoint = snapshot_dataset(checkpoint_dir).to_table()
+        n_diff = table_diff(replayed, checkpoint).num_rows
         if n_diff:
             raise ValueError(
                 f"chain replay differs from checkpoint {checkpoint_dir!r} "

@@ -59,6 +59,7 @@ from __future__ import annotations
 import json
 import os
 import string
+from typing import TYPE_CHECKING
 from urllib.parse import quote, urlparse
 
 import numpy as np
@@ -67,35 +68,26 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from firebase_realtime_database_backup_spark.catalog import read_parquet
 from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "tree"
 
 #: The data files' schema: the tree columns plus the `top` partition
 #: column, which stays a string even when every top key looks numeric.
-SNAPSHOT_SCHEMA = StructType(
-    TREE_SCHEMA.fields + [StructField("top", StringType())]
-)
+SNAPSHOT_SCHEMA = TREE_SCHEMA.append(pa.field("top", pa.string()))
 
 #: The manifest's JSON schema, in the (alphabetical) column order JSON
 #: inference produces.
-MANIFEST_SCHEMA = StructType(
+MANIFEST_SCHEMA = pa.schema(
     [
-        StructField("n_rows", LongType()),
-        StructField("part_files", ArrayType(StringType())),
-        StructField("path", StringType()),
+        pa.field("n_rows", pa.int64()),
+        pa.field("part_files", pa.list_(pa.string())),
+        pa.field("path", pa.string()),
     ]
 )
 
@@ -213,7 +205,7 @@ def write_snapshot(tree: pa.Table, out_dir: str) -> None:
     where Spark's writer would have written it."""
     fs, root, scheme = _resolve(out_dir)
     data_dir, manifest_dir = f"{root}/{DATA_DIR}", f"{root}/{MANIFEST_DIR}"
-    tree = tree.select(TREE_SCHEMA.fieldNames())
+    tree = tree.select(TREE_SCHEMA.names)
     top = _top_dirs(tree)
     rows_by_top = (
         pa.table({"top": top, "row": np.arange(tree.num_rows)})
@@ -250,13 +242,18 @@ def write_snapshot(tree: pa.Table, out_dir: str) -> None:
 def read_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read a snapshot back as the canonical tree relation (partition
     column dropped; schema restored)."""
-    df = read_parquet(spark, os.path.join(out_dir, DATA_DIR), SNAPSHOT_SCHEMA)
-    return df.select([f.name for f in TREE_SCHEMA.fields])
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from firebase_realtime_database_backup_spark.catalog import read_parquet
+
+    path = os.path.join(out_dir, DATA_DIR)
+    df = read_parquet(spark, path, from_arrow_schema(SNAPSHOT_SCHEMA))
+    return df.select(TREE_SCHEMA.names)
 
 
 def snapshot_dataset(out_dir: str) -> ds.Dataset:
     """The snapshot's tree rows as a driver-side `pyarrow.dataset` with
-    the known schema (TREE_SCHEMA as Arrow): reading it runs no Spark
+    the known schema (TREE_SCHEMA): reading it runs no Spark
     job, and an empty snapshot reads as zero rows.
 
     Raises FileNotFoundError if `out_dir` holds no data directory, and
@@ -269,12 +266,14 @@ def snapshot_dataset(out_dir: str) -> ds.Dataset:
             f"snapshot {out_dir!r} has no {DATA_DIR}/ data directory"
         )
     return ds.dataset(
-        path, schema=to_arrow_schema(TREE_SCHEMA), format="parquet", filesystem=fs
+        path, schema=TREE_SCHEMA, format="parquet", filesystem=fs
     )
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.schema(MANIFEST_SCHEMA).json(
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA)).json(
         os.path.join(out_dir, MANIFEST_DIR)
     )
 

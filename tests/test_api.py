@@ -3,6 +3,9 @@ naming/option semantics match the reference (sanitizer, URL template,
 confirmation guard)."""
 
 import json
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -172,12 +175,64 @@ def test_cli_diff_incremental(spark, tmp_path, capsys):
     from firebase_realtime_database_backup_spark.sinks.incremental import (
         restore_to_version,
     )
-    from firebase_realtime_database_backup_spark.sources.tree import (
-        tree_from_dict,
-        tree_to_dict,
-    )
-    restored = restore_to_version(spark, snap, [delta])
+    from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
+
+    restored = restore_to_version(snap, [delta])
     assert tree_to_dict(restored) == v2
+
+
+#: The ETL commands and the delta chain in a process where every pyspark
+#: import raises: argv is v1.json, v2.json, empty.json and three output
+#: directories.
+_NO_PYSPARK = """
+import json, sys
+sys.modules["pyspark"] = None
+from firebase_realtime_database_backup_spark.api import main
+from firebase_realtime_database_backup_spark.sinks.incremental import (
+    checkpoint_chain, expire_chain, restore_to_version)
+from firebase_realtime_database_backup_spark.sinks.snapshot import snapshot_dataset
+from firebase_realtime_database_backup_spark.sources.tree import tree_to_dict
+v1, v2, empty, snap, delta, ckpt = sys.argv[1:]
+for argv in (
+    ["export", "-p", "demo", "--tree-json", v1, "--output_dir", snap],
+    ["diff", "-p", "demo", "--tree-json", v2, "--prev_dir", snap,
+     "--output_dir", delta],
+    ["import", "-p", "demo", "--tree-json", empty, "--backup_dir", snap, "--yes"],
+):
+    assert main(argv) == 0, argv
+with open(v2) as fh:
+    want = json.load(fh)
+assert tree_to_dict(restore_to_version(snap, [delta])) == want
+checkpoint_chain(snap, [delta], ckpt)
+assert expire_chain(ckpt, snap, [delta]) == [snap, delta]
+assert tree_to_dict(snapshot_dataset(ckpt).to_table()) == want
+assert not [m for m in sys.modules if m.startswith("pyspark.")]
+"""
+
+
+def test_etl_commands_import_no_pyspark(tmp_path):
+    """export, diff and import --yes, then the chain's replay,
+    checkpoint and retention, all run in a process that cannot import
+    pyspark: the ETL loads no Spark, so it runs no Spark job."""
+    v2 = json.loads(json.dumps(TREE))
+    v2["motd"] = "changed!"
+    v2["users"]["u3"] = {"name": "kim"}
+    del v2["users"]["u2"]
+    args = []
+    for name, tree in (("v1", TREE), ("v2", v2), ("empty", {})):
+        path = tmp_path / f"{name}.json"
+        path.write_text(json.dumps(tree))
+        args.append(str(path))
+    args += [str(tmp_path / d) for d in ("snap", "delta", "ckpt")]
+    run = subprocess.run(
+        [sys.executable, "-c", _NO_PYSPARK, *args],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "delta written" in run.stdout and "restored " in run.stdout
 
 
 def test_cli_query_list_run_explain(spark, capsys):

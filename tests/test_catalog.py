@@ -13,14 +13,15 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql.pandas.types import from_arrow_schema
+from test_sinks import tree_df
 
 import __spark_entry__ as entry
 from firebase_realtime_database_backup_spark import api, catalog
 from firebase_realtime_database_backup_spark.sinks.incremental import (
+    DELTA_SCHEMA,
     incremental_backup,
     read_delta,
-    tree_diff,
-    write_delta,
 )
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     DATA_DIR,
@@ -33,7 +34,6 @@ from firebase_realtime_database_backup_spark.sources.firebase import FakeFirebas
 from firebase_realtime_database_backup_spark.sources.tree import (
     TREE_SCHEMA,
     rows_from_dict,
-    tree_from_dict,
     tree_table,
 )
 
@@ -93,8 +93,8 @@ def test_cached_schema_equals_inferred(spark, name):
 
 
 def test_sink_schemas_equal_inferred(spark, tmp_path):
-    old = tree_from_dict(spark, {"a": {"x": 1, "y": [1, 2]}, "b": "s"})
-    new = tree_from_dict(spark, {"a": {"x": 2}, "c": {"z": True}})
+    old = tree_df(spark, {"a": {"x": 1, "y": [1, 2]}, "b": "s"})
+    new = tree_df(spark, {"a": {"x": 2}, "c": {"z": True}})
     snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
     write_snapshot(old.toArrow(), snap)
     incremental_backup(spark, new, snap, delta)
@@ -102,26 +102,26 @@ def test_sink_schemas_equal_inferred(spark, tmp_path):
     tree, n = _jobs(spark, lambda: read_snapshot(spark, snap))
     inferred = spark.read.parquet(os.path.join(snap, DATA_DIR))
     assert n == 0
-    assert tree.schema == inferred.select(TREE_SCHEMA.fieldNames()).schema
+    assert tree.schema == inferred.select(TREE_SCHEMA.names).schema
 
     manifest, n = _jobs(spark, lambda: read_manifest(spark, snap))
     assert n == 0
     assert manifest.schema == spark.read.json(os.path.join(snap, MANIFEST_DIR)).schema
 
-    d, n = _jobs(spark, lambda: read_delta(spark, delta))
-    assert n == 0
-    assert d.schema == spark.read.parquet(os.path.join(delta, "delta")).schema
+    inferred = spark.read.parquet(os.path.join(delta, "delta")).schema
+    assert from_arrow_schema(read_delta(delta).schema) == inferred
+    assert read_delta(delta).schema == DELTA_SCHEMA
 
 
 def test_restore_and_diff_job_counts(spark, tmp_path):
     """do_backup writes its snapshot from the driver's Arrow table and
     do_restore scans it on the driver: neither runs a Spark job.
     incremental_backup diffs on the driver too: no job for a tree table,
-    one at most (its `toArrow`) for a tree frame, and the delta it
-    writes is the one write_delta writes for tree_diff's frame."""
+    one at most (its `toArrow`) for a tree frame, and both write the
+    same delta."""
     old_tree = {"a": {"x": 1, "y": [1, 2]}, "b": "s"}
     new_tree = {"a": {"x": 2}, "c": {"z": True}}
-    new = tree_from_dict(spark, new_tree)
+    new = tree_df(spark, new_tree)
     backup = str(tmp_path / "backup")
     _, n = _jobs(spark, lambda: api.do_backup(spark, FakeFirebase(old_tree), backup))
     assert n == 0
@@ -132,9 +132,9 @@ def test_restore_and_diff_job_counts(spark, tmp_path):
     assert dst.tree == old_tree
 
     snap = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, old_tree).toArrow(), snap)
+    write_snapshot(tree_df(spark, old_tree).toArrow(), snap)
 
-    d_table, d_frame, d_spark = (str(tmp_path / d) for d in ("dt", "df", "ds"))
+    d_table, d_frame = str(tmp_path / "dt"), str(tmp_path / "df")
     table = tree_table(rows_from_dict(new_tree))
     counts, n = _jobs(spark, lambda: incremental_backup(spark, table, snap, d_table))
     assert n == 0
@@ -144,10 +144,10 @@ def test_restore_and_diff_job_counts(spark, tmp_path):
     assert n <= 1
     assert counts == frame_counts == {"added": 2, "removed": 2, "changed": 2}
 
-    write_delta(tree_diff(read_snapshot(spark, snap), new).toArrow(), d_spark)
-    rows = [sorted(map(tuple, read_delta(spark, d).collect()))
-            for d in (d_table, d_frame, d_spark)]
-    assert rows[0] == rows[1] == rows[2]
+    rows = [
+        sorted(zip(*read_delta(d).to_pydict().values())) for d in (d_table, d_frame)
+    ]
+    assert rows[0] == rows[1]
     assert len(rows[0]) == 6
 
 
@@ -155,7 +155,7 @@ def test_incremental_backup_fails_before_collecting(spark, tmp_path):
     """A missing previous snapshot, or an output URI pyarrow has no
     filesystem for, fails before the current frame is collected: the
     failed call runs no Spark job."""
-    new = tree_from_dict(spark, {"a": {"x": 2}})
+    new = tree_df(spark, {"a": {"x": 2}})
     snap = str(tmp_path / "snap")
     write_snapshot(new.toArrow(), snap)
     for prev, out, error in (

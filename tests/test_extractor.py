@@ -182,7 +182,7 @@ def test_parallel_extract_to_dataframe(spark):
         "counter": 17,
     }
     df = extract(spark, FakeFirebase(tree), parallelism=4)
-    assert tree_to_dict(df) == tree
+    assert tree_to_dict(df.toArrow()) == tree
 
 
 class RecordingFake(FakeFirebase):

@@ -280,7 +280,7 @@ def test_http_concurrent_extract(spark, stub_server):
     rows = sorted(tuple(r) for r in via_http.collect())
     direct = extract(spark, fake(), max_ipp=4, parallelism=8)
     assert rows == sorted(tuple(r) for r in direct.collect())
-    assert tree_to_dict(direct) == tree
+    assert tree_to_dict(direct.toArrow()) == tree
     ex = FirebaseExtractor(client, max_ipp=4)
     assert sorted(ex.export_rows(8)) == rows
     assert ex.stats.ranges > 0 and ex.stats.go_deepers > 0

@@ -1,26 +1,35 @@
 """Incremental snapshot chain: full + deltas must reconstruct the
-current tree exactly, and deltas must contain ONLY what changed."""
+current tree exactly, and deltas must contain ONLY what changed.  The
+chain runs on the driver over Arrow; Spark appears only where a test
+feeds it a frame or a delta written by Spark's own writer."""
 
-import json
 import os
 import threading
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
 from test_sinks import AWKWARD
 
 from firebase_realtime_database_backup_spark.sinks.incremental import (
+    PROVENANCE_FILE,
     apply_delta,
+    checkpoint_chain,
+    expire_chain,
     incremental_backup,
     read_delta,
     restore_to_version,
-    tree_diff,
+    table_diff,
 )
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
-    read_snapshot,
+    snapshot_dataset,
     write_snapshot,
 )
-from firebase_realtime_database_backup_spark.sources.tree import tree_from_dict
+from firebase_realtime_database_backup_spark.sources.tree import (
+    rows_from_dict,
+    tree_frame,
+    tree_table,
+)
 
 V1 = {
     "users": {"u1": {"name": "ada", "age": 36}, "u2": {"name": "lin"}},
@@ -34,33 +43,41 @@ V2 = {
 }
 
 
-def test_tree_diff_statuses(spark):
-    old, new = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    d = {(r.path, r.key): r.status for r in tree_diff(old, new).collect()}
+def _table(d):
+    return tree_table(rows_from_dict(d))
+
+
+def _rows(table):
+    return sorted(zip(*table.to_pydict().values()))
+
+
+def test_tree_diff_statuses():
+    diff = table_diff(_table(V1), _table(V2))
+    d = dict(zip(zip(diff["path"].to_pylist(), diff["key"].to_pylist()),
+                 diff["status"].to_pylist()))
     assert d[("/users", "u1")] == "changed"
     assert d[("/users", "u2")] == "removed"
     assert d[("/users", "u3")] == "added"
     assert d[("/", "motd")] == "changed"
-    assert ("/cfg", "dark") not in d and ("/", "cfg") not in d or True
     # unchanged rows never appear
-    assert all(s in ("added", "removed", "changed") for s in d.values())
+    assert ("/cfg", "dark") not in d and ("/", "cfg") not in d
+    assert ("/users/u1", "name") not in d
+    assert len(d) == diff.num_rows == 8
 
 
-def test_incremental_chain_roundtrip(spark, tmp_path):
+def test_incremental_chain_roundtrip(tmp_path):
     full_dir = str(tmp_path / "full")
     delta_dir = str(tmp_path / "delta1")
-    v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
+    v1, v2 = _table(V1), _table(V2)
 
-    write_snapshot(v1.toArrow(), full_dir)
-    counts = incremental_backup(spark, v2, full_dir, delta_dir)
+    write_snapshot(v1, full_dir)
+    counts = incremental_backup(None, v2, full_dir, delta_dir)
     assert counts["added"] >= 1 and counts["removed"] >= 1 and counts["changed"] >= 1
 
-    restored = restore_to_version(spark, full_dir, [delta_dir])
-    assert sorted(map(tuple, restored.collect())) == sorted(
-        map(tuple, v2.collect())
-    )
+    restored = restore_to_version(full_dir, [delta_dir])
+    assert _rows(restored) == _rows(v2)
     # delta is strictly smaller than the full tree (that's the point)
-    assert read_delta(spark, delta_dir).count() < v1.count() + v2.count()
+    assert read_delta(delta_dir).num_rows < v1.num_rows + v2.num_rows
 
 
 @pytest.mark.parametrize(
@@ -68,23 +85,23 @@ def test_incremental_chain_roundtrip(spark, tmp_path):
     [(V1, V2), (V1, V1), (V1, {}), ({}, V2), ({}, {})],
     ids=["changed", "identical", "empty-current", "empty-previous", "both-empty"],
 )
-def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
+def test_observed_counts_equal_delta(tmp_path, prev, cur):
     """The counts return (no hang, even when the delta or either side is
-    empty) and equal a groupBy("status") over the written delta."""
+    empty) and equal a count per status over the written delta."""
     full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
-    write_snapshot(tree_from_dict(spark, prev).toArrow(), full_dir)
-    current = tree_from_dict(spark, cur)
+    write_snapshot(_table(prev), full_dir)
+    current = _table(cur)
     result: dict = {}
     worker = threading.Thread(
         target=lambda: result.update(
-            counts=incremental_backup(spark, current, full_dir, delta_dir)
+            counts=incremental_backup(None, current, full_dir, delta_dir)
         ),
         daemon=True,
     )
     worker.start()
     worker.join(timeout=120)
     assert not worker.is_alive(), "incremental_backup did not return"
-    written = dict(read_delta(spark, delta_dir).groupBy("status").count().collect())
+    written = Counter(read_delta(delta_dir)["status"].to_pylist())
     assert result["counts"] == {
         s: written.get(s, 0) for s in ("added", "removed", "changed")
     }
@@ -92,8 +109,20 @@ def test_observed_counts_equal_delta(spark, tmp_path, prev, cur):
         assert result["counts"] == {"added": 0, "removed": 0, "changed": 0}
 
 
-def _rows(df):
-    return sorted(map(tuple, df.collect()))
+def _expected_delta(prev: dict, cur: dict) -> list[tuple]:
+    """The delta rows of prev -> cur, from the two trees' row sets."""
+    old = {(p, k): (v, d) for p, k, v, d in rows_from_dict(prev)}
+    new = {(p, k): (v, d) for p, k, v, d in rows_from_dict(cur)}
+    rows = []
+    for path, key in old.keys() | new.keys():
+        (ov, od), (nv, nd) = old.get((path, key), (None, None)), new.get(
+            (path, key), (None, None)
+        )
+        if ov == nv:
+            continue
+        status = "added" if ov is None else "removed" if nv is None else "changed"
+        rows.append((path, key, status, ov, nv, od if nd is None else nd))
+    return sorted(rows)
 
 
 #: Values holding lone UTF-16 surrogates, stored ASCII-escaped.
@@ -115,48 +144,50 @@ SURROGATES_NEW = {"notes": {"n1": "a\udfffb", "n2": "same\udfff", "n3": "\ud800"
     ids=["changed", "awkward-added", "awkward-removed", "lone-surrogate",
          "empty-old", "empty-new", "identical"],
 )
-def test_driver_diff_equals_tree_diff(spark, tmp_path, prev, cur):
+def test_driver_diff_equals_tree_diff(tmp_path, prev, cur):
     """The delta incremental_backup diffs and writes on the driver holds
-    exactly tree_diff's rows, and its counts are that delta's."""
+    exactly the rows that differ between the two trees' row sets, and
+    its counts are that delta's."""
     full_dir, delta_dir = str(tmp_path / "full"), str(tmp_path / "delta")
-    old, new = tree_from_dict(spark, prev), tree_from_dict(spark, cur)
-    write_snapshot(old.toArrow(), full_dir)
-    counts = incremental_backup(spark, new.toArrow(), full_dir, delta_dir)
-    expected = _rows(tree_diff(old, new))
-    assert _rows(read_delta(spark, delta_dir)) == expected
+    write_snapshot(_table(prev), full_dir)
+    counts = incremental_backup(None, _table(cur), full_dir, delta_dir)
+    expected = _expected_delta(prev, cur)
+    assert _rows(read_delta(delta_dir)) == expected
     assert counts == {
         s: sum(r[2] == s for r in expected) for s in ("added", "removed", "changed")
     }
 
 
 def test_chain_mixing_spark_and_driver_deltas(spark, tmp_path):
-    """A chain whose first delta Spark's writer wrote (as deltas were
-    written before the diff ran on the driver) and whose second the
-    driver wrote replays to the right tree at each step."""
+    """A chain whose first delta Spark's parquet writer wrote (as deltas
+    were written before the diff ran on the driver, `_SUCCESS` and
+    `.crc` files included) and whose second the driver wrote replays on
+    the driver to the right tree at each step."""
     v3 = {**V2, "cfg": {"dark": False}, "new": {"n": 1}}
     full_dir, mid_dir = str(tmp_path / "full"), str(tmp_path / "mid")
     d_spark, d_driver = str(tmp_path / "d_spark"), str(tmp_path / "d_driver")
-    v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    write_snapshot(v1.toArrow(), full_dir)
-    tree_diff(read_snapshot(spark, full_dir), v2).write.parquet(
+    write_snapshot(_table(V1), full_dir)
+    spark.createDataFrame(table_diff(_table(V1), _table(V2))).write.parquet(
         os.path.join(d_spark, "delta")
     )
-    write_snapshot(v2.toArrow(), mid_dir)
-    incremental_backup(spark, tree_from_dict(spark, v3), mid_dir, d_driver)
+    written = os.listdir(os.path.join(d_spark, "delta"))
+    assert "_SUCCESS" in written and any(f.endswith(".crc") for f in written)
+    write_snapshot(_table(V2), mid_dir)
+    incremental_backup(spark, tree_frame(spark, _table(v3)), mid_dir, d_driver)
 
-    assert _rows(restore_to_version(spark, full_dir, [d_spark])) == _rows(v2)
-    assert _rows(
-        restore_to_version(spark, full_dir, [d_spark, d_driver])
-    ) == _rows(tree_from_dict(spark, v3))
+    assert _rows(restore_to_version(full_dir, [d_spark])) == _rows(_table(V2))
+    assert _rows(restore_to_version(full_dir, [d_spark, d_driver])) == _rows(
+        _table(v3)
+    )
 
 
-def test_failed_delta_write_leaves_no_delta_dir(spark, tmp_path, monkeypatch):
+def test_failed_delta_write_leaves_no_delta_dir(tmp_path, monkeypatch):
     """A delta write that raises removes what it wrote, and the old
     delta it was overwriting is gone too: no `delta/` is left behind."""
     full_dir, out = str(tmp_path / "full"), str(tmp_path / "out")
-    write_snapshot(tree_from_dict(spark, V1).toArrow(), full_dir)
-    current = tree_from_dict(spark, V2).toArrow()
-    incremental_backup(spark, current, full_dir, out)
+    write_snapshot(_table(V1), full_dir)
+    current = _table(V2)
+    incremental_backup(None, current, full_dir, out)
     assert os.listdir(os.path.join(out, "delta"))
     write_table = pq.write_table
 
@@ -166,96 +197,71 @@ def test_failed_delta_write_leaves_no_delta_dir(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "write_table", write_then_fail)
     with pytest.raises(OSError, match="disk full"):
-        incremental_backup(spark, current, full_dir, out)
+        incremental_backup(None, current, full_dir, out)
     assert not os.path.exists(os.path.join(out, "delta"))
 
 
-def test_apply_delta_is_identity_on_empty_diff(spark):
-    v1 = tree_from_dict(spark, V1)
-    empty = tree_diff(v1, v1)
-    assert empty.isEmpty()
-    out = apply_delta(v1, empty)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, v1.collect()))
+def test_apply_delta_is_identity_on_empty_diff():
+    v1 = _table(V1)
+    empty = table_diff(v1, v1)
+    assert empty.num_rows == 0
+    assert _rows(apply_delta(v1, empty)) == _rows(v1)
 
 
-def test_expire_chain_after_checkpoint(spark, tmp_path):
+def test_expire_chain_after_checkpoint(tmp_path):
     """write -> delta -> checkpoint -> expire: the old full snapshot and
     compacted delta are deleted ONLY after the checkpoint validates,
     and the checkpoint alone still reconstructs the current tree."""
-    import pytest
-
-    from firebase_realtime_database_backup_spark.sinks.incremental import (
-        checkpoint_chain,
-        expire_chain,
-    )
-    from firebase_realtime_database_backup_spark.sinks.snapshot import (
-        read_snapshot,
-    )
-
     full_dir = str(tmp_path / "full")
     delta_dir = str(tmp_path / "delta1")
     ckpt_dir = str(tmp_path / "ckpt")
-    v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    write_snapshot(v1.toArrow(), full_dir)
-    incremental_backup(spark, v2, full_dir, delta_dir)
-    checkpoint_chain(spark, full_dir, [delta_dir], ckpt_dir)
+    v1, v2 = _table(V1), _table(V2)
+    write_snapshot(v1, full_dir)
+    incremental_backup(None, v2, full_dir, delta_dir)
+    checkpoint_chain(full_dir, [delta_dir], ckpt_dir)
 
-    removed = expire_chain(spark, ckpt_dir, full_dir, [delta_dir])
+    removed = expire_chain(ckpt_dir, full_dir, [delta_dir])
     assert sorted(removed) == sorted([full_dir, delta_dir])
-    import os
-
     assert not os.path.isdir(full_dir) and not os.path.isdir(delta_dir)
     # the checkpoint alone IS the current state
-    assert sorted(map(tuple, read_snapshot(spark, ckpt_dir).collect())) == sorted(
-        map(tuple, v2.collect())
-    )
+    assert _rows(snapshot_dataset(ckpt_dir).to_table()) == _rows(v2)
 
     # safety latch: a missing/invalid checkpoint refuses to delete
     with pytest.raises(Exception):
-        expire_chain(spark, str(tmp_path / "nope"), ckpt_dir, [])
+        expire_chain(str(tmp_path / "nope"), ckpt_dir, [])
     assert os.path.isdir(ckpt_dir)
 
 
-def test_expire_chain_refuses_wrong_chain(spark, tmp_path):
+def test_expire_chain_refuses_wrong_chain(tmp_path):
     """Provenance latch: a valid checkpoint must not authorize deleting
     a chain it never compacted (the unrelated-chain footgun), and a
     pre-provenance checkpoint falls back to the content cross-check."""
-    import os
-
-    import pytest
-
-    from firebase_realtime_database_backup_spark.sinks.incremental import (
-        PROVENANCE_FILE,
-        checkpoint_chain,
-        expire_chain,
-    )
-
     full_a = str(tmp_path / "full_a")
     delta_a = str(tmp_path / "delta_a")
     ckpt_a = str(tmp_path / "ckpt_a")
     full_b = str(tmp_path / "full_b")  # unrelated, still-needed chain
-    v1, v2 = tree_from_dict(spark, V1), tree_from_dict(spark, V2)
-    write_snapshot(v1.toArrow(), full_a)
-    write_snapshot(v1.toArrow(), full_b)  # content differs from the checkpoint (v2)
-    incremental_backup(spark, v2, full_a, delta_a)
-    checkpoint_chain(spark, full_a, [delta_a], ckpt_a)
+    v1, v2 = _table(V1), _table(V2)
+    write_snapshot(v1, full_a)
+    write_snapshot(v1, full_b)  # content differs from the checkpoint (v2)
+    incremental_backup(None, v2, full_a, delta_a)
+    checkpoint_chain(full_a, [delta_a], ckpt_a)
 
     # wrong full snapshot: refused, nothing deleted
     with pytest.raises(ValueError, match="does not supersede"):
-        expire_chain(spark, ckpt_a, full_b, [delta_a])
+        expire_chain(ckpt_a, full_b, [delta_a])
     assert os.path.isdir(full_b) and os.path.isdir(full_a)
 
     # wrong delta list: refused
     with pytest.raises(ValueError, match="never compacted"):
-        expire_chain(spark, ckpt_a, full_a, [delta_a, full_b])
+        expire_chain(ckpt_a, full_a, [delta_a, full_b])
     assert os.path.isdir(full_b)
 
     # pre-provenance checkpoint (sidecar removed): the content
     # cross-check replays the chain — wrong chain still refused...
     os.remove(os.path.join(ckpt_a, PROVENANCE_FILE))
     with pytest.raises(ValueError, match="differs from checkpoint"):
-        expire_chain(spark, ckpt_a, full_b, [])
+        expire_chain(ckpt_a, full_b, [])
     assert os.path.isdir(full_b)
     # ...and the true chain passes
-    removed = expire_chain(spark, ckpt_a, full_a, [delta_a])
+    removed = expire_chain(ckpt_a, full_a, [delta_a])
     assert sorted(removed) == sorted([full_a, delta_a])

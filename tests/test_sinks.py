@@ -24,7 +24,9 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
     path_depth,
-    tree_from_dict,
+    rows_from_dict,
+    tree_frame,
+    tree_table,
     tree_to_dict,
 )
 
@@ -33,6 +35,11 @@ TREE = {
     "rooms": {"lobby": {"cap": 10}, "vip": {"cap": 2, "locked": True}},
     "motd": "welcome",
 }
+
+
+def tree_df(spark, d):
+    """The tree DataFrame of a nested dict."""
+    return tree_frame(spark, tree_table(rows_from_dict(d)))
 
 
 def test_snapshot_roundtrip(spark, tmp_path):
@@ -85,7 +92,7 @@ def test_writeback_aimd_halving(spark, tree_dataset):
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_dataset(tree_from_dict(spark, data)), lambda: dst, max_batch=16
+        tree_dataset(tree_df(spark, data)), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
@@ -98,7 +105,7 @@ def test_writeback_split_on_failure(spark, tree_dataset):
     big_child = {"blob": {f"b{j:02d}": "x" * 30 for j in range(20)}}
     dst = FakeFirebase({}, fail_update_bytes=300)
     stats = writeback(
-        tree_dataset(tree_from_dict(spark, big_child)), lambda: dst
+        tree_dataset(tree_df(spark, big_child)), lambda: dst
     )
     assert dst.tree == big_child
     assert stats.splits >= 1
@@ -113,7 +120,7 @@ def test_writeback_scalar_failure_raises(spark, tree_dataset):
         match=f"PATCH of key 'k' at '/' failed after {GET_RETRIES} attempts",
     ):
         writeback(
-            tree_dataset(tree_from_dict(spark, {"k": "a-very-long-scalar-value"})),
+            tree_dataset(tree_df(spark, {"k": "a-very-long-scalar-value"})),
             lambda: dst,
         )
     assert dst.update_calls == [("/", 1)] * GET_RETRIES
@@ -133,7 +140,7 @@ def test_writeback_scalar_transient_failure_is_retried(spark, tree_dataset):
             super().update(path, data)
 
     dst = FailsOnce({})
-    stats = writeback(tree_dataset(tree_from_dict(spark, {"a": {"x": 1}})), lambda: dst)
+    stats = writeback(tree_dataset(tree_df(spark, {"a": {"x": 1}})), lambda: dst)
     assert dst.failed and dst.tree == {"a": {"x": 1}}
     assert stats.patches == 2 and stats.halvings == stats.splits == 0
 
@@ -192,7 +199,7 @@ def test_writeback_concurrent_depth_ordered(spark, tree_dataset, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 4)
     rec = Recorder(FakeFirebase({}))
     stats = writeback(
-        tree_dataset(tree_from_dict(spark, TREE)), rec.client, max_batch=8
+        tree_dataset(tree_df(spark, TREE)), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert stats.patches == len(rec.calls)
@@ -210,7 +217,7 @@ def test_writeback_one_connection_is_serial(spark, tree_dataset, monkeypatch):
     monkeypatch.setattr(wb, "RESTORE_CONNECTIONS", 1)
     rec = Recorder(FakeFirebase({}), delay_s=0.002)
     writeback(
-        tree_dataset(tree_from_dict(spark, TREE)), rec.client, max_batch=8
+        tree_dataset(tree_df(spark, TREE)), rec.client, max_batch=8
     )
     assert rec.store.tree == TREE
     assert rec.max_in_flight() == 1
@@ -224,7 +231,7 @@ def test_writeback_concurrent_fault_injection(spark, tree_dataset, monkeypatch):
     data = {"items": {f"i{j:03d}": j for j in range(40)}}
     dst = FakeFirebase({}, fail_updates_over=3)
     stats = writeback(
-        tree_dataset(tree_from_dict(spark, data)), lambda: dst, max_batch=16
+        tree_dataset(tree_df(spark, data)), lambda: dst, max_batch=16
     )
     assert dst.tree == data
     assert stats.halvings > 0
@@ -234,7 +241,7 @@ def test_writeback_concurrent_fault_injection(spark, tree_dataset, monkeypatch):
     with pytest.raises(FirebaseTransportError):
         writeback(
             tree_dataset(
-                tree_from_dict(spark, {"k": "a-very-long-scalar-value", "j": 1})
+                tree_df(spark, {"k": "a-very-long-scalar-value", "j": 1})
             ),
             lambda: dst,
         )
@@ -248,7 +255,7 @@ def test_writeback_concurrent_stress(spark, tree_dataset, monkeypatch):
         "wide": {f"w{j:04d}": {"v": j} for j in range(1500)},
         "side": {f"s{j:02d}": j for j in range(60)},
     }
-    df = tree_from_dict(spark, data)
+    df = tree_df(spark, data)
     rows = df.count()
     tree = tree_dataset(df)
     dst = FakeFirebase({})
@@ -275,7 +282,7 @@ def test_writeback_reads_in_depth_chunks(spark, tree_dataset, monkeypatch):
     RESTORE_CHUNK_ROWS rows (a wider level alone); a restore read in
     several chunks still equals the source and keeps the depth order."""
     monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
-    df = tree_from_dict(spark, TREE)
+    df = tree_df(spark, TREE)
     # depth 1: 3 rows, depth 2: 27 rows, depth 3: 53 rows
     assert dict(df.groupBy("depth").count().collect()) == {1: 3, 2: 27, 3: 53}
     tree = tree_dataset(df)
@@ -292,7 +299,7 @@ def test_snapshot_restore_reads_in_depth_chunks(spark, tmp_path, monkeypatch):
     order."""
     monkeypatch.setattr(wb, "RESTORE_CHUNK_ROWS", 30)
     out = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    write_snapshot(tree_df(spark, TREE).toArrow(), out)
     tree = snapshot_dataset(out)
     assert wb._depth_chunks(tree) == [(1, 2), (3, 3)]
     rec = Recorder(FakeFirebase({}), delay_s=0.001)
@@ -360,9 +367,8 @@ def test_archive_roundtrip(spark, tmp_path):
         unarchive_snapshot,
         write_snapshot,
     )
-    from firebase_realtime_database_backup_spark.sources.tree import tree_from_dict
 
-    tree = tree_from_dict(
+    tree = tree_df(
         spark, {"users": {"u1": {"name": "a"}, "u2": 3}, "cfg": {"on": True}}
     )
     snap = str(tmp_path / "snap")
@@ -402,7 +408,7 @@ def test_empty_database_backup_restore_incremental(spark, tmp_path):
         spark, extract(spark, FakeFirebase({})), snap, str(tmp_path / "d2")
     )
     assert empty == {"added": 0, "removed": 0, "changed": 0}
-    assert read_delta(spark, str(tmp_path / "d2")).count() == 0
+    assert read_delta(str(tmp_path / "d2")).num_rows == 0
 
 
 # ---------------------------------------------------------------------------
@@ -424,9 +430,10 @@ AWKWARD = {
 }
 
 
-def _spark_snapshot(spark, tree, out):
+def _spark_snapshot(spark, tree, out, manifest_parts=None):
     """A snapshot as the Spark writer built it: `partitionBy("top")`
-    parquet, and a manifest from `input_file_name()` over the files."""
+    parquet, and a manifest from `input_file_name()` over the files,
+    in `manifest_parts` JSON files if given (else as AQE coalesces)."""
     import os
 
     from pyspark.sql import functions as F
@@ -443,7 +450,7 @@ def _spark_snapshot(spark, tree, out):
     tree.withColumn("top", top).repartition("top").write.partitionBy(
         "top"
     ).parquet(data)
-    (
+    manifest = (
         spark.read.parquet(data)
         .withColumn("part_file", F.input_file_name())
         .groupBy("path")
@@ -451,8 +458,10 @@ def _spark_snapshot(spark, tree, out):
             F.count(F.lit(1)).alias("n_rows"),
             F.sort_array(F.collect_set("part_file")).alias("part_files"),
         )
-        .write.json(os.path.join(out, MANIFEST_DIR))
     )
+    if manifest_parts:
+        manifest = manifest.repartition(manifest_parts)
+    manifest.write.json(os.path.join(out, MANIFEST_DIR))
 
 
 def _rows(df):
@@ -474,9 +483,9 @@ def test_snapshot_format_matches_spark_writer(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from firebase_realtime_database_backup_spark.sinks.incremental import tree_diff
+    from firebase_realtime_database_backup_spark.sinks.incremental import table_diff
 
-    src = tree_from_dict(spark, AWKWARD)
+    src = tree_df(spark, AWKWARD)
     new, old = str(tmp_path / "new"), str(tmp_path / "old")
     write_snapshot(src.toArrow(), new)
     _spark_snapshot(spark, src, old)
@@ -492,7 +501,8 @@ def test_snapshot_format_matches_spark_writer(spark, tmp_path):
         assert _rows(read_snapshot(spark, out)) == _rows(src)
         table = snapshot_dataset(out).to_table()
         assert sorted(zip(*table.to_pydict().values())) == _rows(src)
-        assert tree_diff(src, read_snapshot(spark, out)).count() == 0
+        back = read_snapshot(spark, out).toArrow()
+        assert table_diff(src.toArrow(), back).num_rows == 0
 
     manifests = {
         out: {r.path: r for r in read_manifest(spark, out).collect()}
@@ -521,8 +531,8 @@ def test_snapshot_overwrite_leaves_no_stale_file(spark, tmp_path):
     import os
 
     out = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, AWKWARD).toArrow(), out)
-    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    write_snapshot(tree_df(spark, AWKWARD).toArrow(), out)
+    write_snapshot(tree_df(spark, TREE).toArrow(), out)
 
     listed = {
         _local(u) for r in read_manifest(spark, out).collect() for u in r.part_files
@@ -537,7 +547,7 @@ def test_snapshot_overwrite_leaves_no_stale_file(spark, tmp_path):
         f"top={k}" for k in sorted(TREE)
     ]
     assert len(os.listdir(os.path.join(out, "_manifest"))) == 1
-    assert tree_to_dict(read_snapshot(spark, out)) == TREE
+    assert tree_to_dict(read_snapshot(spark, out).toArrow()) == TREE
 
 
 def test_snapshot_empty_tree_is_readable(spark, tmp_path):
@@ -546,7 +556,7 @@ def test_snapshot_empty_tree_is_readable(spark, tmp_path):
     from firebase_realtime_database_backup_spark.sources.tree import tree_table
 
     out = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    write_snapshot(tree_df(spark, TREE).toArrow(), out)
     write_snapshot(tree_table([]), out)
     assert read_snapshot(spark, out).count() == 0
     assert read_manifest(spark, out).count() == 0
@@ -564,16 +574,22 @@ def test_snapshot_failed_write_leaves_no_manifest(spark, tmp_path, monkeypatch):
         raise OSError("injected")
 
     out = str(tmp_path / "snap")
-    write_snapshot(tree_from_dict(spark, TREE).toArrow(), out)
+    write_snapshot(tree_df(spark, TREE).toArrow(), out)
     monkeypatch.setattr(snapshot, "_manifest_lines", boom)
     with pytest.raises(OSError, match="injected"):
-        write_snapshot(tree_from_dict(spark, AWKWARD).toArrow(), out)
+        write_snapshot(tree_df(spark, AWKWARD).toArrow(), out)
     assert os.listdir(out) == []
 
 
 def test_checkpoint_of_awkward_keys_passes_expire_latch(spark, tmp_path):
-    """A checkpoint written by the driver-side writer passes
-    expire_chain's integrity latch (manifest rows == snapshot rows)."""
+    """A checkpoint written by the driver-side writer, and one whose
+    snapshot and multi-part manifest Spark's writer wrote, pass
+    expire_chain's integrity latch (manifest rows == snapshot rows); the
+    Spark-written one with a manifest part file missing is refused."""
+    import glob
+    import os
+    import shutil
+
     from firebase_realtime_database_backup_spark.sinks.incremental import (
         checkpoint_chain,
         expire_chain,
@@ -581,9 +597,26 @@ def test_checkpoint_of_awkward_keys_passes_expire_latch(spark, tmp_path):
     )
 
     full, delta, ckpt = (str(tmp_path / d) for d in ("full", "delta", "ckpt"))
-    write_snapshot(tree_from_dict(spark, TREE).toArrow(), full)
-    current = tree_from_dict(spark, {**TREE, **AWKWARD})
+    write_snapshot(tree_df(spark, TREE).toArrow(), full)
+    current = tree_df(spark, {**TREE, **AWKWARD})
     incremental_backup(spark, current, full, delta)
-    checkpoint_chain(spark, full, [delta], ckpt)
-    assert expire_chain(spark, ckpt, full, [delta]) == [full, delta]
+    chain_copy = [str(tmp_path / "full2"), str(tmp_path / "delta2")]
+    for src, dst in zip((full, delta), chain_copy):
+        shutil.copytree(src, dst)
+
+    # Spark-written checkpoint: no provenance sidecar, so the latch also
+    # replays the (copied) chain and compares contents
+    spark_ckpt, cut = str(tmp_path / "spark_ckpt"), str(tmp_path / "cut")
+    _spark_snapshot(spark, current, spark_ckpt, manifest_parts=3)
+    shutil.copytree(spark_ckpt, cut)
+    parts = sorted(glob.glob(os.path.join(cut, "_manifest", "*.json")))
+    assert len(parts) == 3
+    os.remove(parts[0])
+    with pytest.raises(ValueError, match="manifest"):
+        expire_chain(cut, *chain_copy[:1], chain_copy[1:])
+    assert all(os.path.isdir(d) for d in chain_copy)
+    assert expire_chain(spark_ckpt, chain_copy[0], chain_copy[1:]) == chain_copy
+
+    checkpoint_chain(full, [delta], ckpt)
+    assert expire_chain(ckpt, full, [delta]) == [full, delta]
     assert _rows(read_snapshot(spark, ckpt)) == _rows(current)

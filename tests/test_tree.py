@@ -1,12 +1,12 @@
-"""Tree-relation tests: flatten, subtree, leaves, dict roundtrip."""
+"""Tree-relation tests: rows, the Arrow table, its Spark frame, dict
+roundtrip."""
 
 import ast
-import json
 import random
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 import firebase_realtime_database_backup_spark
 from firebase_realtime_database_backup_spark.sources.firebase import (
@@ -14,16 +14,21 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     FirebaseExtractor,
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
-    TREE_SCHEMA,
-    flatten_full,
-    flatten_level,
-    leaves,
     rows_from_dict,
-    subtree,
     tree_frame,
-    tree_from_dict,
     tree_table,
     tree_to_dict,
+)
+
+#: The tree frame's Spark schema, spelled out: `tree_frame` derives it
+#: from the Arrow TREE_SCHEMA.
+SPARK_TREE_SCHEMA = StructType(
+    [
+        StructField("path", StringType(), False),
+        StructField("key", StringType(), False),
+        StructField("value_json", StringType(), False),
+        StructField("depth", IntegerType(), False),
+    ]
 )
 
 NESTED = {
@@ -33,9 +38,8 @@ NESTED = {
 }
 
 
-def test_tree_from_dict_roundtrip(spark):
-    df = tree_from_dict(spark, NESTED)
-    assert tree_to_dict(df) == NESTED
+def test_tree_from_dict_roundtrip():
+    assert tree_to_dict(tree_table(rows_from_dict(NESTED))) == NESTED
 
 
 def test_rows_one_per_node(spark):
@@ -43,47 +47,6 @@ def test_rows_one_per_node(spark):
     # nodes: a, a/x, a/y, a/y/deep, b, c, c/only, c/only/chain, c/only/chain/end
     assert len(rows) == 9
     assert all(r[3] == r[0].rstrip("/").count("/") + 1 or r[0] == "/" for r in rows)
-
-
-def test_flatten_level_peels_one_level(spark):
-    # page-grained single row holding the whole subtree
-    row = [("/", "a", json.dumps({"x": "1", "y": "2"}), 1)]
-    df = spark.createDataFrame(row, "path string, key string, value_json string, depth int")
-    out = flatten_level(df).collect()
-    got = {(r.path, r.key, r.value_json, r.depth) for r in out}
-    assert got == {("/a", "x", "1", 2), ("/a", "y", "2", 2)}
-
-
-def test_flatten_full_reaches_fixpoint(spark):
-    deep = {"a": {"b": {"c": {"d": "leaf"}}}}
-    df = spark.createDataFrame(
-        [("/", "a", json.dumps(deep["a"]), 1)],
-        "path string, key string, value_json string, depth int",
-    )
-    out = flatten_full(df)
-    rows = {(r.path, r.key, r.value_json) for r in out.collect()}
-    assert ("/a/b/c", "d", '"leaf"') in rows or ("/a/b/c", "d", "leaf") in rows
-    # no map-valued rows remain
-    assert (
-        out.filter(
-            F.col("value_json").startswith("{") & (F.col("value_json") != "{}")
-        ).count()
-        == 0
-    )
-
-
-def test_subtree_filter(spark):
-    df = tree_from_dict(spark, NESTED)
-    sub = subtree(df, "/a")
-    assert {r.path for r in sub.collect()} == {"/a", "/a/y"}
-
-
-def test_leaves_only_scalars(spark):
-    df = tree_from_dict(spark, NESTED)
-    lv = leaves(df)
-    vals = {r.value_json for r in lv.collect()}
-    assert '"leaf"' in vals and "1" in vals
-    assert not any(v.startswith("{") and v != "{}" for v in vals)
 
 
 def _random_tree(rng: random.Random, depth: int):
@@ -122,16 +85,16 @@ def test_tree_frame_matches_list_built_frame(spark, tree, budget):
     included, and its rows."""
     rows = list(FirebaseExtractor(FakeFirebase(tree, max_payload_bytes=budget)).iter_rows())
     arrow = tree_frame(spark, tree_table(rows))
-    listed = spark.createDataFrame(rows, TREE_SCHEMA)
-    assert arrow.schema == listed.schema == TREE_SCHEMA
+    listed = spark.createDataFrame(rows, SPARK_TREE_SCHEMA)
+    assert arrow.schema == listed.schema == SPARK_TREE_SCHEMA
     assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, listed.collect()))
 
 
 def test_tree_frame_empty(spark):
     df = tree_frame(spark, tree_table([]))
-    assert df.schema == TREE_SCHEMA
+    assert df.schema == SPARK_TREE_SCHEMA
     assert df.count() == 0
-    assert tree_to_dict(df) == {}
+    assert tree_to_dict(df.toArrow()) == {}
 
 
 def test_tree_frames_built_only_by_tree_frame():
