@@ -41,6 +41,7 @@ import json
 import os
 import shutil
 from typing import TYPE_CHECKING
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -212,16 +213,22 @@ def checkpoint_chain(
 
     Also records the compacted chain's directories in a provenance
     sidecar so retention (expire_chain) can verify it is deleting the
-    chain THIS checkpoint supersedes, not an unrelated one."""
+    chain THIS checkpoint supersedes, not an unrelated one.  Like the
+    snapshot, the sidecar is written through `out_dir`'s filesystem, so
+    `out_dir` may be a URI; a local chain directory is recorded as an
+    absolute path, a URI as given."""
     write_snapshot(restore_to_version(full_snapshot_dir, delta_dirs), out_dir)
-    with open(os.path.join(out_dir, PROVENANCE_FILE), "w") as fh:
-        json.dump(
-            {
-                "full_snapshot_dir": os.path.abspath(full_snapshot_dir),
-                "delta_dirs": [os.path.abspath(d) for d in delta_dirs],
-            },
-            fh,
-        )
+    fs, root, _ = _resolve(out_dir)
+    provenance = {
+        "full_snapshot_dir": _chain_dir(full_snapshot_dir),
+        "delta_dirs": [_chain_dir(d) for d in delta_dirs],
+    }
+    with fs.open_output_stream(f"{root}/{PROVENANCE_FILE}") as fh:
+        fh.write(json.dumps(provenance).encode())
+
+
+def _chain_dir(d: str) -> str:
+    return d if urlparse(d).scheme else os.path.abspath(d)
 
 
 def expire_chain(
@@ -255,7 +262,13 @@ def expire_chain(
     footers (`count_rows`) on the driver — no Spark job, no chain
     replay; the deletions are filesystem metadata ops.  The no-sidecar
     fallback replays the chain once on the driver (retention is rare;
-    correctness beats speed here)."""
+    correctness beats speed here).
+
+    Every directory must be a local path: a URI raises a ValueError
+    naming it before any latch runs or anything is deleted."""
+    for d in (checkpoint_dir, full_snapshot_dir, *delta_dirs):
+        if urlparse(d).scheme:
+            raise ValueError(f"expire_chain works on local paths only, not {d!r}")
     manifest_rows = 0
     for part in glob.glob(os.path.join(checkpoint_dir, MANIFEST_DIR, "*.json")):
         with open(part, encoding="utf-8") as fh:

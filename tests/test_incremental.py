@@ -3,7 +3,9 @@ current tree exactly, and deltas must contain ONLY what changed.  The
 chain runs on the driver over Arrow; Spark appears only where a test
 feeds it a frame or a delta written by Spark's own writer."""
 
+import json
 import os
+import re
 import threading
 from collections import Counter
 
@@ -230,6 +232,31 @@ def test_expire_chain_after_checkpoint(tmp_path):
     with pytest.raises(Exception):
         expire_chain(str(tmp_path / "nope"), ckpt_dir, [])
     assert os.path.isdir(ckpt_dir)
+
+
+def test_chain_lifecycle_with_uris(tmp_path):
+    """A `file://` checkpoint gets its provenance sidecar next to the
+    snapshot; `expire_chain` works on local paths only and refuses any
+    URI up front, before it validates or deletes anything."""
+    full_dir = str(tmp_path / "full")
+    delta_dir = str(tmp_path / "delta1")
+    ckpt_dir = str(tmp_path / "ckpt")
+    write_snapshot(_table(V1), full_dir)
+    incremental_backup(None, _table(V2), full_dir, delta_dir)
+    checkpoint_chain(full_dir, [delta_dir], "file://" + ckpt_dir)
+    with open(os.path.join(ckpt_dir, PROVENANCE_FILE)) as fh:
+        assert json.load(fh) == {"full_snapshot_dir": full_dir,
+                                 "delta_dirs": [delta_dir]}
+    assert _rows(snapshot_dataset(ckpt_dir).to_table()) == _rows(_table(V2))
+
+    ckpt_uri, full_uri, delta_uri = ("file://" + d for d in (ckpt_dir, full_dir, delta_dir))
+    for uri, args in ((ckpt_uri, (ckpt_uri, full_dir, [delta_dir])),
+                      (full_uri, (ckpt_dir, full_uri, [delta_dir])),
+                      (delta_uri, (ckpt_dir, full_dir, [delta_uri]))):
+        # the later latches name the directory too: match the refusal
+        with pytest.raises(ValueError, match="local paths only, not " + re.escape(repr(uri))):
+            expire_chain(*args)
+        assert all(map(os.path.isdir, (full_dir, delta_dir, ckpt_dir)))
 
 
 def test_expire_chain_refuses_wrong_chain(tmp_path):

@@ -1,6 +1,8 @@
 """Full registry ↔ DuckDB oracle gate at sf0.001 (fast local replica of
 the driver's CORRECTNESS check; the driver runs sf0.01)."""
 
+import json
+
 import pytest
 
 from firebase_realtime_database_backup_spark import verify
@@ -8,10 +10,12 @@ from firebase_realtime_database_backup_spark import verify
 
 @pytest.mark.slow
 def test_all_queries_match_oracle(spark):
+    import __spark_entry__ as entrymod
+
     results = verify.run_all(spark, "/root/testdata/sf0.001")
     failures = [r for r in results if not r.ok]
     assert not failures, [f"{r.name}: {r.details}" for r in failures]
-    assert len(results) >= 45
+    assert len(results) == len(entrymod.queries())
 
 
 def test_entry_smoke(spark):
@@ -49,116 +53,88 @@ def test_spark_outputs_canon_safe(spark):
     assert not problems, problems
 
 
-def test_driver_passed_names_exist(spark):
-    """Rotation-contract lint: every name in DRIVER_PASSED must be a
-    registered query.  A typo'd or since-renamed name would silently
-    send the real query back to the never-attested tier (or match
-    nothing), wasting the driver's capped attestation window on
-    re-proving already-passed queries."""
-    import __spark_entry__ as entrymod
+def test_every_query_module_imports():
+    """A query module that fails to import is only warned about, and the
+    registry carries on without its queries: none may fail here."""
+    from firebase_realtime_database_backup_spark.registry import build_registry
 
-    from firebase_realtime_database_backup_spark.registry import DRIVER_PASSED
-
-    unknown = DRIVER_PASSED - set(entrymod.queries())
-    assert not unknown, f"DRIVER_PASSED names not in registry: {sorted(unknown)}"
+    messages = []
+    build_registry(warn=messages.append)
+    assert messages == []
 
 
-def test_attest_backlog_not_stale(spark):
-    """Rotation-staleness lint (the round-3 AND round-4 process bug).
-
-    ATTEST_BACKLOG pins never-attested names to the front of the
-    driver's capped window.  Twice now a round ended with the backlog
-    fully attested but the constants not rotated, so the next round's
-    window re-proved the same names and attested nothing new.  Fail
-    loudly the moment every backlog member is already in DRIVER_PASSED:
-    the fix is to append the round's CORRECTNESS passes to
-    DRIVER_PASSED and repoint ATTEST_BACKLOG at whatever remains
-    unattested (or empty the backlog if nothing remains)."""
-    import __spark_entry__ as entrymod
-
-    from firebase_realtime_database_backup_spark.registry import (
-        ATTEST_BACKLOG,
-        DRIVER_PASSED,
-    )
-
-    stale = ATTEST_BACKLOG & DRIVER_PASSED
-    assert not stale, (
-        f"ATTEST_BACKLOG names already driver-attested (rotate the "
-        f"constants): {sorted(stale)}"
-    )
-    unknown = ATTEST_BACKLOG - set(entrymod.queries())
-    assert not unknown, f"ATTEST_BACKLOG names not in registry: {sorted(unknown)}"
+def _write_records(directory, records):
+    """Write ``{round: {name: row}}`` as CORRECTNESS_r{NN}.json files."""
+    for n, rows in records.items():
+        (directory / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
 
 
-def test_attest_backlog_leads_window(spark):
-    """The first len(backlog) oracle-backed names the driver sees must
-    be exactly the backlog — otherwise the ~50-slot window wastes
-    capacity re-proving attested queries (simulates the driver walk)."""
-    import __spark_entry__ as entrymod
-
-    from firebase_realtime_database_backup_spark.registry import ATTEST_BACKLOG
-
-    oracle_backed = [n for n in entrymod.queries() if n in entrymod.oracle_sql()]
-    head = set(oracle_backed[: len(ATTEST_BACKLOG)])
-    assert head == set(ATTEST_BACKLOG), (
-        f"window head != backlog; missing={sorted(ATTEST_BACKLOG - head)}, "
-        f"unexpected={sorted(head - ATTEST_BACKLOG)}"
-    )
+def _passed(hash_match=True, err=None):
+    return {"rows_match": True, "schema_match": True, "hash_match": hash_match,
+            "spark_rows": 1, "oracle_rows": 1, "err": err}
 
 
-def test_window_is_rolling_regression_gate(spark):
-    """Post-coverage window ordering (round 6+): with every
-    oracle-backed query attested, the ~50-slot driver window must be a
-    ROLLING REGRESSION GATE — never-attested names first, then queries
-    whose implementation changed after their last attestation
-    (ROUND_TOUCHED), then the least-recently-attested corpus in
-    ascending attested-round order.  Simulates the driver's walk and
-    asserts the order key is monotone."""
+def test_window_rotates_over_committed_records():
+    """The driver walks ``queries()`` and attests about 50 oracle-backed
+    names per round: oracle-backed names never attested come first, then
+    the oldest passes, so no name the newest record passed is in the
+    next window while an older one is waiting."""
     import __spark_entry__ as entrymod
 
     from firebase_realtime_database_backup_spark.registry import (
-        ATTEST_BACKLOG,
-        DRIVER_ATTESTED_ROUND,
-        DRIVER_PASSED,
-        ROUND_TOUCHED,
+        RECORDS_DIR,
+        attested_rounds,
     )
 
-    oracle_backed = [n for n in entrymod.queries() if n in entrymod.oracle_sql()]
+    oracles = entrymod.oracle_sql()
+    walk = [n for n in entrymod.queries() if n in oracles]
+    assert set(walk) == set(oracles)
+    rounds = attested_rounds(RECORDS_DIR, oracles)
+    keys = [(n in rounds, rounds.get(n, 0)) for n in walk]
+    assert keys == sorted(keys)
+    newest = max(rounds.values())
+    assert not [n for n in walk[:50] if rounds.get(n) == newest]
 
-    def key(name):
-        if name not in DRIVER_PASSED:
-            return (0,) if name in ATTEST_BACKLOG else (1,)
-        touched = ROUND_TOUCHED.get(name, 0)
-        attested = DRIVER_ATTESTED_ROUND[name]
-        if touched > attested:
-            return (2, 0, -touched)
-        return (2, 1, attested)
 
-    keys = [key(n) for n in oracle_backed]
-    assert keys == sorted(keys), (
-        "driver window is not ordered as the rolling regression gate; "
-        f"first out-of-order name: "
-        f"{oracle_backed[[i for i in range(1, len(keys)) if keys[i] < keys[i - 1]][0]]}"
+def test_window_order_from_synthetic_records(tmp_path, monkeypatch):
+    from firebase_realtime_database_backup_spark import registry
+    from firebase_realtime_database_backup_spark.registry import (
+        attested_rounds,
+        build_registry,
     )
-    # Every touched-after-attestation name must appear before every
-    # untouched attested name.
-    touched = [n for n in oracle_backed
-               if n in DRIVER_PASSED
-               and ROUND_TOUCHED.get(n, 0) > DRIVER_ATTESTED_ROUND[n]]
-    if touched:
-        attested_positions = [oracle_backed.index(n) for n in oracle_backed
-                              if n in DRIVER_PASSED and n not in touched]
-        assert max(oracle_backed.index(n) for n in touched) < min(attested_positions)
+
+    # with no records every oracle-backed name is unattested: module order
+    monkeypatch.setattr(registry, "RECORDS_DIR", str(tmp_path))
+    reg = build_registry()
+    a, b, c, d, *rest, new = list(reg.oracles)
+    _write_records(tmp_path, {
+        1: {a: _passed(), b: _passed(), c: _passed(), d: _passed(),
+            **{n: _passed() for n in rest}},
+        2: {a: _passed(False), b: _passed(None), c: _passed(err="boom"),
+            d: _passed(), "not_a_registered_query": _passed()},
+        3: {n: _passed() for n in rest[:10]},
+    })
+    rounds = attested_rounds(str(tmp_path), reg.queries)
+    # a failed, unhashed or erroring row is no pass; a later pass wins
+    assert (rounds[a], rounds[b], rounds[c], rounds[d]) == (1, 1, 1, 2)
+    assert rounds[rest[0]] == 3 and rounds[rest[10]] == 1
+    assert "not_a_registered_query" not in rounds and new not in rounds
+
+    walk = [n for n in build_registry().queries if n in reg.oracles]
+    # the query with no row leads, then oldest pass first, ties in
+    # module order
+    assert walk[0] == new
+    assert walk[1:] == [a, b, c, *rest[10:], d, *rest[:10]]
 
 
-def test_round_touched_names_exist(spark):
-    """ROUND_TOUCHED is only useful if its names are real queries."""
-    import __spark_entry__ as entrymod
+@pytest.mark.parametrize("content", ["[1, 2]", '{"q": 3}', "{"])
+def test_malformed_record_names_the_file(tmp_path, content):
+    from firebase_realtime_database_backup_spark.registry import attested_rounds
 
-    from firebase_realtime_database_backup_spark.registry import ROUND_TOUCHED
-
-    unknown = set(ROUND_TOUCHED) - set(entrymod.queries())
-    assert not unknown, f"ROUND_TOUCHED names not in registry: {sorted(unknown)}"
+    path = tmp_path / "CORRECTNESS_r07.json"
+    path.write_text(content)
+    with pytest.raises(ValueError, match="CORRECTNESS_r07.json"):
+        attested_rounds(str(tmp_path), ["q"])
 
 
 def test_prod_twins_are_registered_queries(spark):
