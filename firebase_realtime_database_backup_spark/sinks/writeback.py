@@ -62,6 +62,7 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     GET_RETRIES,
     FirebaseTransportError,
 )
+from firebase_realtime_database_backup_spark.sources.tree import column_list
 
 MAX_BATCH = 1000          # src/RestoreProcessor.php:17
 GROWTH_FACTOR = 1.2       # src/RestoreProcessor.php:100-103
@@ -159,13 +160,34 @@ def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
     cuts = [0, *(np.flatnonzero(depth[1:] != depth[:-1]) + 1).tolist(), len(depth)]
     for lo, hi in zip(cuts, cuts[1:]):
         rows = chunk.slice(lo, hi - lo)
-        values = json.loads("[" + ",".join(rows.column("value_json").to_pylist()) + "]")
+        paths, keys, values_json = (
+            column_list(rows.column(c)) for c in ("path", "key", "value_json")
+        )
         level: dict[str, dict] = defaultdict(dict)
-        for path, key, value in zip(
-            rows.column("path").to_pylist(), rows.column("key").to_pylist(), values
-        ):
+        for path, key, value in zip(paths, keys, _decode(paths, keys, values_json)):
             level[path][key] = value
         yield level
+
+
+def _decode(paths: list[str], keys: list[str], values_json: list[str]) -> list:
+    """One level's values, decoded by one `json.loads` over the joined
+    strings.  If that fails, or yields a different number of values (a
+    row holding `1,2` would shift every value after it), the first row
+    whose value is not JSON is named in a ValueError."""
+    try:
+        values = json.loads("[" + ",".join(values_json) + "]")
+        if len(values) == len(values_json):
+            return values
+    except json.JSONDecodeError:
+        pass
+    for path, key, value_json in zip(paths, keys, values_json):
+        try:
+            json.loads(value_json)
+        except json.JSONDecodeError as exc:
+            raise ValueError(
+                f"tree row {key!r} at path {path!r}: value_json is not JSON ({exc})"
+            ) from None
+    raise AssertionError("a level of valid JSON values decodes")
 
 
 def _tree_levels(tree: ds.Dataset) -> Iterator[dict[str, dict]]:

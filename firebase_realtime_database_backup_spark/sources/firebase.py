@@ -29,11 +29,17 @@ Architectural departures from the reference (Spark-first, 100 TB):
   goes deeper, and hands back its rows, the units it spawned and its
   `ExtractStats`.  One loop drives units: on the calling thread's
   behalf for `FirebaseExtractor.iter_rows`, and as one work queue on
-  `parallelism` driver threads for `extract` (REST-bound, not
-  CPU-bound: the endpoint is one database behind REST, so a cluster's
-  cores do not bound it, and the queue can spread one wide node's key
-  ranges over every connection).  The reference is strictly sequential
-  (SURVEY.md §3).
+  `parallelism` driver threads for `extract`.  The endpoint is one
+  database behind REST, so a cluster's cores would not help; the
+  threads overlap their round trips, and the queue can spread one wide
+  node's key ranges over every connection.  They do not overlap their
+  per-row Python work (sorting a page's keys, `canonical_json` of every
+  row): it holds the GIL, so the extract is bound by CPU as much as by
+  RTT.  Against the benchmark's Firebase double (`tools/etl_cpu.py`,
+  4 vCPUs, 4 threads), a backup's process CPU time, the in-process
+  double's included, is ~0.28 s of its ~0.40 s wall at 10 ms RTT, and
+  at 0 ms RTT its wall is its CPU time (~0.28 s).  The reference is
+  strictly sequential (SURVEY.md §3).
 - Three rules cut the requests on the critical path.  None of them
   changes the AIMD controller:
   - *list once*: the first time a path needs a second request (its
@@ -467,10 +473,13 @@ def extract_table(
 ) -> pa.Table:
     """Parallel export into one Arrow tree table (`tree_table`) on the
     driver: shallow-list the root, then page every top-level child as a
-    unit of one work queue on `parallelism` driver threads (REST-bound,
-    not CPU-bound; `FirebaseExtractor.export_rows`).  A wide node hands
-    back key ranges and a refused one its children, and they join the
-    same queue.  The reference does all of this sequentially.
+    unit of one work queue on `parallelism` driver threads
+    (`FirebaseExtractor.export_rows`).  The threads overlap their round
+    trips but not their per-row Python work, which holds the GIL, so
+    CPU bounds the extract as much as RTT does (module docstring).  A
+    wide node hands back key ranges and a refused one its children, and
+    they join the same queue.  The reference does all of this
+    sequentially.
 
     Row contract: the rows depend on the tree, the payload budget and
     `max_ipp`, never on `parallelism`.  Range widths follow each path's

@@ -2,10 +2,15 @@
 (the reference's implicit invariant, SURVEY.md §5.2), manifest
 consistency, AIMD writeback, split-on-failure."""
 
+import json
 import sys
 import threading
 import time
+from collections import defaultdict
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pytest
 
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
@@ -356,6 +361,56 @@ def test_lone_surrogate_key_raises_named_error(spark, tree):
     tree frame refuses it with an error that names the path."""
     with pytest.raises(ValueError, match=r"at path '/bad.*surrogate"):
         extract(spark, FakeFirebase(tree))
+
+
+def _levels_pylist(chunk):
+    """`writeback._levels` as it read its columns with `to_pylist()`:
+    the oracle of the numpy-backed column reads."""
+    depth = chunk.column("depth").to_numpy()
+    cuts = [0, *(np.flatnonzero(depth[1:] != depth[:-1]) + 1).tolist(), len(depth)]
+    for lo, hi in zip(cuts, cuts[1:]):
+        rows = chunk.slice(lo, hi - lo)
+        values = json.loads("[" + ",".join(rows.column("value_json").to_pylist()) + "]")
+        level = defaultdict(dict)
+        for path, key, value in zip(
+            rows.column("path").to_pylist(), rows.column("key").to_pylist(), values
+        ):
+            level[path][key] = value
+        yield level
+
+
+def test_levels_match_pylist_form():
+    """`_levels` yields the levels the `to_pylist()` form yields, over a
+    multi-chunk, sliced table with non-BMP keys, an empty-string key and
+    an escaped-surrogate value, and over an empty table."""
+    tree = {
+        "𝄞": {"": "empty key", "😀": {"a": "x\ud800"}, "k": "v\udfff"},
+        "": {"x": [1, 2.5, None]},
+        "plain": {f"p{i}": {"n": i, "s": "é" * (i % 3)} for i in range(12)},
+    }
+    rows = sorted(rows_from_dict(tree), key=lambda r: r[3])
+    assert any('\\ud' in v for _, _, v, _ in rows)  # an escaped surrogate
+    parts = [tree_table(rows[i : i + 7]) for i in range(0, len(rows), 7)]
+    table = pa.concat_tables(parts).slice(3, len(rows) - 5)
+    assert table.column("path").num_chunks > 1
+    assert list(wb._levels(table)) == list(_levels_pylist(table))
+    empty = tree_table([])
+    assert list(wb._levels(empty)) == list(_levels_pylist(empty))
+
+
+@pytest.mark.parametrize(
+    "bad", ["{x", "1,2", ""], ids=["not-json", "two-values", "empty"]
+)
+def test_restore_names_row_that_does_not_decode(bad):
+    """A snapshot row whose value_json is not one JSON value fails the
+    restore with a ValueError naming its path and key, before any PATCH
+    of its level; a row that decodes to two values cannot shift the
+    values of the rows after it."""
+    rows = [("/", "a", "1", 1), ("/a", "b", bad, 2), ("/a", "c", '"v"', 2)]
+    dst = FakeFirebase({})
+    with pytest.raises(ValueError, match=r"tree row 'b' at path '/a'"):
+        writeback(ds.dataset(tree_table(rows)), lambda: dst)
+    assert dst.tree == {"a": 1}
 
 
 def test_archive_roundtrip(spark, tmp_path):

@@ -2,10 +2,15 @@
 roundtrip."""
 
 import ast
+import json
 import random
+import sys
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from threading import Barrier
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 import firebase_realtime_database_backup_spark
@@ -14,6 +19,7 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     FirebaseExtractor,
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
+    canonical_json,
     rows_from_dict,
     tree_frame,
     tree_table,
@@ -127,3 +133,71 @@ def test_tree_frames_built_only_by_tree_frame():
                 offenders.append(f"{py.relative_to(pkg)}:{node.lineno}")
     assert allowed, "tree_frame not found"
     assert not offenders, offenders
+
+
+def _dumps(value) -> str:
+    """`canonical_json`'s contract, spelled with a fresh `json.dumps`
+    per call: the UTF-8 form, or the ASCII-escaped one when the UTF-8
+    form holds a lone surrogate."""
+    out = json.dumps(value, sort_keys=True, separators=(",", ":"), ensure_ascii=False)
+    try:
+        out.encode("utf-8")
+    except UnicodeEncodeError:
+        return json.dumps(value, sort_keys=True, separators=(",", ":"), ensure_ascii=True)
+    return out
+
+
+#: Any character, plus lone surrogates, non-BMP text and characters JSON
+#: escapes, drawn often.
+_CHARS = st.one_of(
+    st.characters(codec=None, categories=None),
+    st.sampled_from(["\ud800", "\udfff", "\udbff", "𝄞", "😀", "é", "中", '"', "\\", "\n"]),
+)
+_TEXT = st.text(alphabet=_CHARS, max_size=8)
+_JSON = st.recursive(
+    st.one_of(
+        st.integers(min_value=-(2**70), max_value=2**70),
+        st.floats(),
+        st.booleans(),
+        st.none(),
+        _TEXT,
+    ),
+    lambda children: st.one_of(
+        st.lists(children, max_size=4), st.dictionaries(_TEXT, children, max_size=4)
+    ),
+    max_leaves=20,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(value=_JSON)
+def test_canonical_json_matches_dumps(value):
+    """The shared encoders write what a per-call `json.dumps` writes,
+    byte for byte: big ints, floats, non-BMP text and the ASCII-escaped
+    fallback for a lone surrogate included."""
+    assert canonical_json(value) == _dumps(value)
+
+
+def test_canonical_json_shared_across_threads():
+    """Eight threads encoding through the shared encoders at once get
+    the serial results."""
+    rng = random.Random(7)
+    values = [
+        {"t": _random_tree(rng, 3), "s": rng.choice(["a\ud800", "𝄞", "é", "x"]), "n": i}
+        for i in range(4000)
+    ]
+    serial = [_dumps(v) for v in values]
+    start = Barrier(8)
+
+    def encode(part: int) -> list[str]:
+        start.wait(timeout=30)
+        return [canonical_json(v) for v in values[part::8]]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads mid-encode as often as possible
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            parts = list(pool.map(encode, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [parts[i % 8][i // 8] for i in range(len(values))] == serial
