@@ -171,9 +171,12 @@ def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
 
 def _decode(paths: list[str], keys: list[str], values_json: list[str]) -> list:
     """One level's values, decoded by one `json.loads` over the joined
-    strings.  If that fails, or yields a different number of values (a
-    row holding `1,2` would shift every value after it), the first row
-    whose value is not JSON is named in a ValueError."""
+    strings.  If that fails, or yields a different number of values than
+    the level has rows (a row holding `1,2`), the first row whose value
+    is not JSON is named in a ValueError.  Bad rows that join into the
+    right number of values (`1,2`, `[3` and `4]`) still decode silently
+    into shifted values: only a per-row parse of every level, which this
+    path exists to avoid, would catch them."""
     try:
         values = json.loads("[" + ",".join(values_json) + "]")
         if len(values) == len(values_json):

@@ -404,8 +404,8 @@ def test_levels_match_pylist_form():
 def test_restore_names_row_that_does_not_decode(bad):
     """A snapshot row whose value_json is not one JSON value fails the
     restore with a ValueError naming its path and key, before any PATCH
-    of its level; a row that decodes to two values cannot shift the
-    values of the rows after it."""
+    of its level, when the level's joined values fail to decode or
+    decode to a count other than its row count (the `1,2` row)."""
     rows = [("/", "a", "1", 1), ("/a", "b", bad, 2), ("/a", "c", '"v"', 2)]
     dst = FakeFirebase({})
     with pytest.raises(ValueError, match=r"tree row 'b' at path '/a'"):

@@ -1,11 +1,11 @@
 """Wall time and process CPU time of each ETL stage, with no Spark.
 
-Usage: python tools/etl_cpu.py [--rtt-ms 0,10] [--reps 5] [--seed 1]
-                               [--scale 0.4] [--parallelism N]
+Usage: python tools/etl_cpu.py [--rtt-ms 0,10] [--reps 5] [--scale 0.4]
 
 Runs the benchmark's ETL round trip against its Firebase double
 (`perfbench.firebase_double.IndexedFirebase`, the tree of
-`perfbench.datagen.make_tree` at the benchmark's budgets) stage by stage:
+`perfbench.datagen.make_tree` for seed 1, at the benchmark's budgets) stage
+by stage, with one extract thread per CPU the process may run on:
 
 - backup: `api.do_backup` into a snapshot;
 - incremental_backup: `extract_table` of the mutated tree, then
@@ -54,8 +54,9 @@ def _cpu_s() -> float:
     return r.ru_utime + r.ru_stime
 
 
-def _trip(tree, mutated, expected, work, rtt_s, parallelism):
+def _trip(tree, mutated, expected, work, rtt_s):
     """One round trip; returns {stage: (wall_s, cpu_s)}."""
+    parallelism = len(os.sched_getaffinity(0))
 
     def server(t):
         return IndexedFirebase(
@@ -98,19 +99,17 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--rtt-ms", default="0,10", help="comma-separated round-trip times")
     p.add_argument("--reps", type=int, default=5)
-    p.add_argument("--seed", type=int, default=1)
     p.add_argument("--scale", type=float, default=workloads.ETL_SCALE)
-    p.add_argument("--parallelism", type=int, default=len(os.sched_getaffinity(0)))
     args = p.parse_args(argv)
 
-    tree = datagen.make_tree(args.seed, args.scale)
-    mutated, expected = datagen.mutate_tree(tree, args.seed)
+    tree = datagen.make_tree(1, args.scale)
+    mutated, expected = datagen.mutate_tree(tree, 1)
     work = tempfile.mkdtemp(prefix="etl_cpu_")
     try:
         print(f"{'rtt_ms':>6} {'stage':<20} {'wall_s':>7} {'cpu_s':>7} {'cpu/wall':>8}")
         for rtt_ms in (float(x) for x in args.rtt_ms.split(",")):
             trips = [
-                _trip(tree, mutated, expected, work, rtt_ms / 1000, args.parallelism)
+                _trip(tree, mutated, expected, work, rtt_ms / 1000)
                 for _ in range(args.reps + 1)
             ][1:]  # the first trip warms imports and caches
             for stage in workloads.STAGES:
