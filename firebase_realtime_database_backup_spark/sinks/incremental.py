@@ -56,7 +56,10 @@ from firebase_realtime_database_backup_spark.sinks.snapshot import (
     snapshot_dataset,
     write_snapshot,
 )
-from firebase_realtime_database_backup_spark.sources.tree import TREE_SCHEMA
+from firebase_realtime_database_backup_spark.sources.tree import (
+    TREE_SCHEMA,
+    frame_table,
+)
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -166,20 +169,23 @@ def incremental_backup(
     (`table_diff`) and persist only the delta (`write_delta`).  Returns
     the delta's row count per status.
 
-    `current_tree` is a tree table (`sources.firebase.extract_table`),
-    which runs no Spark job, or a tree DataFrame, collected once with
-    `toArrow()` (one job).  `spark` is unused; the benchmark's ETL
-    workload (`perfbench/workloads.py`) passes it.
+    `current_tree` is a tree table (`sources.firebase.extract_table`)
+    or a tree DataFrame.  A frame that `tree_frame` built (such as
+    `sources.firebase.extract`'s) is diffed through the table it keeps,
+    so neither runs a Spark job; any other frame (read from a snapshot,
+    or derived by a transformation) is collected once with `toArrow()`
+    (one job; `sources.tree.frame_table`).  `spark` is unused; the
+    benchmark's ETL workload (`perfbench/workloads.py`) passes it.
 
     Driver memory: the current tree, the previous snapshot's table and
     the join output (module docstring).  The previous snapshot is opened
-    and `out_dir` resolved before the frame is collected, so a missing
+    and `out_dir` resolved before a frame is collected, so a missing
     snapshot or a URI pyarrow has no filesystem for (such as Hadoop's
     `s3a://`, a ValueError naming it) fails first."""
     _resolve(out_dir)
     old = snapshot_dataset(prev_snapshot_dir).to_table()
     if not isinstance(current_tree, pa.Table):
-        current_tree = current_tree.toArrow()
+        current_tree = frame_table(current_tree)
     delta = table_diff(old, current_tree)
     write_delta(delta, out_dir)
     counts = dict.fromkeys((ADDED, REMOVED, CHANGED), 0)

@@ -154,8 +154,7 @@ def _depth_chunks(tree: ds.Dataset) -> list[tuple[int, int]]:
 def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
     """A depth-sorted chunk's rows grouped by depth, then by path
     ({path: {key: value}}), shallowest level first; a level's values are
-    decoded only when it is reached, with one `json.loads` over the
-    level's joined value_json strings."""
+    decoded only when it is reached, row by row (`_decode`)."""
     depth = chunk.column("depth").to_numpy()
     cuts = [0, *(np.flatnonzero(depth[1:] != depth[:-1]) + 1).tolist(), len(depth)]
     for lo, hi in zip(cuts, cuts[1:]):
@@ -170,27 +169,30 @@ def _levels(chunk: pa.Table) -> Iterator[dict[str, dict]]:
 
 
 def _decode(paths: list[str], keys: list[str], values_json: list[str]) -> list:
-    """One level's values, decoded by one `json.loads` over the joined
-    strings.  If that fails, or yields a different number of values than
-    the level has rows (a row holding `1,2`), the first row whose value
-    is not JSON is named in a ValueError.  Bad rows that join into the
-    right number of values (`1,2`, `[3` and `4]`) still decode silently
-    into shifted values: only a per-row parse of every level, which this
-    path exists to avoid, would catch them."""
-    try:
-        values = json.loads("[" + ",".join(values_json) + "]")
-        if len(values) == len(values_json):
-            return values
-    except json.JSONDecodeError:
-        pass
+    """One level's values, each row's decoded on its own, so that a bad
+    row can never shift its neighbours' values (rows `1,2`, `[3` and
+    `4]` joined into one array would decode into three wrong values).
+    A row is read with `JSONDecoder.raw_decode`, which must end at the
+    end of the string; a row that does not is read again with
+    `json.loads`, so exactly what `json.loads` accepts (surrounding
+    whitespace too) is accepted.  The first row that `json.loads`
+    refuses is named in a ValueError."""
+    raw_decode = json.JSONDecoder().raw_decode
+    values = []
     for path, key, value_json in zip(paths, keys, values_json):
         try:
-            json.loads(value_json)
-        except json.JSONDecodeError as exc:
-            raise ValueError(
-                f"tree row {key!r} at path {path!r}: value_json is not JSON ({exc})"
-            ) from None
-    raise AssertionError("a level of valid JSON values decodes")
+            value, end = raw_decode(value_json)
+        except json.JSONDecodeError:
+            end = None
+        if end != len(value_json):
+            try:
+                value = json.loads(value_json)
+            except json.JSONDecodeError as exc:
+                raise ValueError(
+                    f"tree row {key!r} at path {path!r}: value_json is not JSON ({exc})"
+                ) from None
+        values.append(value)
+    return values
 
 
 def _tree_levels(tree: ds.Dataset) -> Iterator[dict[str, dict]]:

@@ -74,7 +74,9 @@ Architectural departures from the reference (Spark-first, 100 TB):
   (src/BackupProcessor.php:130,202-223) falls out of Spark's iterator
   model.  The driver-side extract builds its rows into one Arrow table
   (`extract_table`): the backup writes that table, and `extract` hands
-  it to Spark (`tree_frame`), not as a pickled row list.
+  it to Spark (`tree_frame`), not as a pickled row list.  The frame
+  keeps the table, so the incremental diff reads it back with no Spark
+  job.
 """
 
 from __future__ import annotations
@@ -498,7 +500,9 @@ def extract(
     parallelism: int = 8,
 ):
     """`extract_table`'s tree as a DataFrame over that table, built on
-    the caller's thread (no Spark job until it is used).
+    the caller's thread by `tree_frame` (no Spark job).  The frame keeps
+    the table: `sinks.incremental.incremental_backup` diffs it with no
+    job, and only a query over the frame runs one.
 
     `root_start_ipp` changes nothing: the root is always listed, never
     paged.  The keyword is still accepted because the benchmark's own

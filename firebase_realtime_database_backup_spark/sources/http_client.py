@@ -236,6 +236,9 @@ class HttpFirebase:
 
     def update(self, path: str, data: dict) -> None:
         """Merge-PATCH, Firebase update() semantics
-        (src/RestoreProcessor.php:80)."""
-        body = json.dumps(data).encode("utf-8")
-        self._request(self._url(path, {}), method="PATCH", body=body)
+        (src/RestoreProcessor.php:80).  The body is compact JSON, and
+        `print=silent` asks the server not to echo the written data
+        back (Firebase answers 204 with no body); a server that echoes
+        anyway is answered alike, its echo read and dropped."""
+        body = json.dumps(data, separators=(",", ":")).encode("utf-8")
+        self._request(self._url(path, {"print": "silent"}), method="PATCH", body=body)

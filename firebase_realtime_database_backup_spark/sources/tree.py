@@ -11,9 +11,12 @@ be a scalar leaf or a nested subtree.
 Tree rows live on the driver as Arrow, never as a Python row list:
 `tree_table` builds one typed `pyarrow.Table` (TREE_SCHEMA), which the
 snapshot writer writes, the diff joins and the writeback scans, and
-`tree_frame` hands the JVM when a caller wants a DataFrame.  Nothing
-here imports pyspark at module level, so the export, diff and import
-paths load no Spark.
+`tree_frame` hands the JVM when a caller wants a DataFrame.  The frame
+keeps that table, so `frame_table` gives its rows back to the driver
+with no Spark job; only a frame that `tree_frame` did not build (read
+from a snapshot, or derived by a transformation) is collected with
+`toArrow()`.  Nothing here imports pyspark at module level, so the
+export, diff and import paths load no Spark.
 """
 
 from __future__ import annotations
@@ -126,10 +129,27 @@ def tree_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
     """The tree DataFrame of a `tree_table`, sent to the JVM as one Arrow
     table rather than as a pickled row list (which costs a Python-side
     schema check per row and a slower first job over the result).  Runs
-    no Spark job."""
+    no Spark job.
+
+    The frame keeps `table`, which `frame_table` hands back.  That is
+    exact: the frame and the table are both immutable, every
+    transformation returns a new frame, which does not carry the table,
+    and `cache()` and `persist()` return this frame with its rows."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    return spark.createDataFrame(table, from_arrow_schema(TREE_SCHEMA))
+    frame = spark.createDataFrame(table, from_arrow_schema(TREE_SCHEMA))
+    frame._tree_table = table
+    return frame
+
+
+def frame_table(frame: DataFrame) -> pa.Table:
+    """A tree frame's rows as an Arrow table on the driver: the table
+    `tree_frame` built it from (no Spark job), or for any other frame its
+    `toArrow()` (one job).  The table is looked up in the frame's own
+    attributes: on a miss, `getattr` would fall through to pyspark's
+    `DataFrame.__getattr__`, which asks the JVM for the column list."""
+    table = vars(frame).get("_tree_table")
+    return frame.toArrow() if table is None else table
 
 
 def tree_to_dict(tree: pa.Table) -> dict:

@@ -58,6 +58,9 @@ class _StubHandler(BaseHTTPRequestHandler):
     close_after_reply = False  # drop the connection without saying so
     redirects: dict  # request path -> Location of a 307 reply
     request_lines: list  # (target, Host, Proxy-Authorization) per request
+    patch_bodies: list  # the raw body of every PATCH
+    patch_codes: list  # the status of every PATCH reply
+    echo_always = False  # ignore print=silent and echo, as an older server
 
     def setup(self) -> None:
         super().setup()
@@ -130,17 +133,28 @@ class _StubHandler(BaseHTTPRequestHandler):
     def do_PATCH(self) -> None:  # noqa: N802
         # read the body first: unread, it would stall the connection
         n = int(self.headers["Content-Length"])
-        data = json.loads(self.rfile.read(n))
+        raw = self.rfile.read(n)
+        data = json.loads(raw)
         if self._redirected():
             return
-        path, _ = self._parse()
+        path, q = self._parse()
         if path is None:
             return
+        type(self).patch_bodies.append(raw)
         try:
             self.fake.update(path, data)
         except FirebaseTransportError as exc:
             self._reply(500, {"error": str(exc)})
             return
+        if q.get("print") == "silent" and not self.echo_always:
+            # Firebase's silent write: 204, no body (and no length)
+            type(self).patch_codes.append(204)
+            self.send_response(204)
+            self.end_headers()
+            if self.close_after_reply:
+                self.close_connection = True
+            return
+        type(self).patch_codes.append(200)
         self._reply(200, data)
 
     def log_message(self, *args) -> None:  # keep pytest output clean
@@ -153,14 +167,16 @@ def stub_server():
     servers = []
 
     def start(fake: FakeFirebase, token: str | None = None,
-              client_token: str | None = "s3cret", close_after_reply=False):
+              client_token: str | None = "s3cret", close_after_reply=False,
+              echo_always=False):
         handler = type(
             "Handler",
             (_StubHandler,),
             {"fake": fake, "required_token": token,
              "seen_queries": [], "fail_next": [], "accepted": [],
              "close_after_reply": close_after_reply, "redirects": {},
-             "request_lines": []},
+             "request_lines": [], "patch_bodies": [], "patch_codes": [],
+             "echo_always": echo_always},
         )
         srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
         threading.Thread(target=srv.serve_forever, daemon=True).start()
@@ -254,6 +270,41 @@ def test_http_update_merge_patch(stub_server):
     assert fake.tree["config"]["mode"] == "staging"
     assert fake.tree["config"]["new_key"] == 1
     assert fake.tree["config"]["flags"] == {"a": True, "b": False}  # merged
+
+
+def test_http_update_is_silent_and_compact(stub_server):
+    """A PATCH asks for `print=silent`, which the stub, like Firebase,
+    answers with a 204 and no body, and the connection is reused after
+    it.  Its body is compact JSON: no space after `,` or `:`."""
+    fake = FakeFirebase(TREE)
+    client, handler = stub_server(fake)
+    data = {"mode": "staging", "flags": {"a": False, "c": [1, "x y"]}}
+    client.update("/config", data)
+    client.update("/config", {"n": 1})
+    assert fake.tree["config"] == {**TREE["config"], **data, "n": 1}
+    patches = [q for q in handler.seen_queries if q.get("print")]
+    assert patches == [{"path": "/config", "print": "silent", "auth": "s3cret"}] * 2
+    assert handler.patch_codes == [204, 204]
+    assert handler.patch_bodies == [
+        b'{"mode":"staging","flags":{"a":false,"c":[1,"x y"]}}',
+        b'{"n":1}',
+    ]
+    assert json.loads(handler.patch_bodies[0]) == data
+    assert client.get("/config/n") == 1
+    assert len(handler.accepted) == 1
+
+
+def test_http_update_accepts_an_echo(stub_server):
+    """A server that ignores `print=silent` and echoes the written data
+    with a 200, as Firebase does without it, is answered alike: the
+    write lands and the echo is dropped."""
+    fake = FakeFirebase(TREE)
+    client, handler = stub_server(fake, echo_always=True)
+    assert client.update("/config", {"mode": "staging"}) is None
+    assert handler.patch_codes == [200]
+    assert fake.tree["config"]["mode"] == "staging"
+    assert client.get("/config/mode") == "staging"
+    assert len(handler.accepted) == 1
 
 
 def test_http_scalar_and_missing_paths(stub_server):

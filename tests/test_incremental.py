@@ -9,8 +9,11 @@ import re
 import threading
 from collections import Counter
 
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from test_catalog import _jobs
 from test_sinks import AWKWARD
 
 from firebase_realtime_database_backup_spark.sinks.incremental import (
@@ -26,6 +29,11 @@ from firebase_realtime_database_backup_spark.sinks.incremental import (
 from firebase_realtime_database_backup_spark.sinks.snapshot import (
     snapshot_dataset,
     write_snapshot,
+)
+from firebase_realtime_database_backup_spark.sources.firebase import (
+    FakeFirebase,
+    extract,
+    extract_table,
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
     rows_from_dict,
@@ -181,6 +189,60 @@ def test_chain_mixing_spark_and_driver_deltas(spark, tmp_path):
     assert _rows(restore_to_version(full_dir, [d_spark, d_driver])) == _rows(
         _table(v3)
     )
+
+
+def test_extracted_frame_is_diffed_with_no_job(spark, tmp_path):
+    """`extract` then `incremental_backup` of its frame runs no Spark
+    job: the diff reads the table the frame was built from.  The delta
+    is the one the table path writes, and a cached frame (the same
+    frame) is diffed the same way."""
+    full_dir = str(tmp_path / "full")
+    old = extract_table(FakeFirebase(V1), parallelism=2)
+    write_snapshot(old, full_dir)
+    d_frame, d_cached, d_table = (str(tmp_path / d) for d in ("df", "dc", "dt"))
+
+    def extract_and_diff():
+        frame = extract(spark, FakeFirebase(V2), parallelism=2)
+        return frame, incremental_backup(spark, frame, full_dir, d_frame)
+
+    (frame, counts), n = _jobs(spark, extract_and_diff)
+    assert n == 0
+    cached = frame.cache()
+    try:
+        _, n = _jobs(
+            spark, lambda: incremental_backup(spark, cached, full_dir, d_cached)
+        )
+    finally:
+        frame.unpersist()
+    assert n == 0
+    table = extract_table(FakeFirebase(V2), parallelism=2)
+    assert incremental_backup(None, table, full_dir, d_table) == counts
+    assert all(counts.values())
+    deltas = [_rows(read_delta(d)) for d in (d_frame, d_cached, d_table)]
+    assert deltas[0] == deltas[1] == deltas[2] == _rows(table_diff(old, table))
+
+
+def test_derived_frames_are_diffed_by_their_own_rows(spark, tmp_path):
+    """A frame derived from a `tree_frame` does not carry its table: a
+    filtered frame, an emptied one and the union of two tree frames are
+    each diffed by their own rows, collected with `toArrow()`."""
+    full_dir = str(tmp_path / "full")
+    write_snapshot(_table(V1), full_dir)
+    current = _table(V2)
+    frame = tree_frame(spark, current)
+    half = current.num_rows // 2
+    halves = [tree_frame(spark, t) for t in (current[:half], current[half:])]
+    derived = {
+        "filter": (frame.filter(F.col("depth") == 1),
+                   current.filter(pc.equal(current["depth"], 1))),
+        "limit0": (frame.limit(0), current[:0]),
+        "union": (halves[0].union(halves[1]), current),
+    }
+    for name, (df, rows) in derived.items():
+        out = str(tmp_path / name)
+        incremental_backup(spark, df, full_dir, out)
+        assert _rows(read_delta(out)) == _rows(table_diff(_table(V1), rows)), name
+    assert _rows(read_delta(str(tmp_path / "limit0"))) == _expected_delta(V1, {})
 
 
 def test_failed_delta_write_leaves_no_delta_dir(tmp_path, monkeypatch):

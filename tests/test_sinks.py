@@ -404,13 +404,40 @@ def test_levels_match_pylist_form():
 def test_restore_names_row_that_does_not_decode(bad):
     """A snapshot row whose value_json is not one JSON value fails the
     restore with a ValueError naming its path and key, before any PATCH
-    of its level, when the level's joined values fail to decode or
-    decode to a count other than its row count (the `1,2` row)."""
+    of its level."""
     rows = [("/", "a", "1", 1), ("/a", "b", bad, 2), ("/a", "c", '"v"', 2)]
     dst = FakeFirebase({})
     with pytest.raises(ValueError, match=r"tree row 'b' at path '/a'"):
         writeback(ds.dataset(tree_table(rows)), lambda: dst)
     assert dst.tree == {"a": 1}
+
+
+def test_restore_refuses_rows_that_cancel():
+    """Bad rows whose joined values would decode into as many values as
+    the level has rows (`1,2`, `[3` and `4]` join into `[1,2,[3,4]]`)
+    fail the restore at the first of them, instead of writing shifted
+    values under every key."""
+    rows = [
+        ("/", "a", "1", 1),
+        ("/a", "b", "1,2", 2),
+        ("/a", "c", "[3", 2),
+        ("/a", "d", "4]", 2),
+    ]
+    dst = FakeFirebase({})
+    with pytest.raises(ValueError, match=r"tree row 'b' at path '/a'"):
+        writeback(ds.dataset(tree_table(rows)), lambda: dst)
+    assert dst.tree == {"a": 1}
+
+
+def test_restore_accepts_what_json_loads_accepts():
+    """A value that `json.loads` reads, surrounding whitespace and
+    NaN included, restores to what `json.loads` gives, though it is not
+    canonical JSON."""
+    values = [' 1', '{"x": [1, 2]}\n', '\t"s" ', "NaN", "-0.0", '"\\ud800"', "null"]
+    rows = [("/", f"k{i}", v, 1) for i, v in enumerate(values)]
+    (level,) = wb._levels(tree_table(rows))
+    expected = {f"k{i}": json.loads(v) for i, v in enumerate(values)}
+    assert repr(level["/"]) == repr(expected)
 
 
 def test_archive_roundtrip(spark, tmp_path):
