@@ -18,9 +18,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Queries whose first call at a given SF materializes a one-time layout
-# (bucketed tables).  They are warmed ONCE at the bench SF so the timed
-# run measures steady-state query cost, not the amortized layout build.
+# Queries whose first call on a corpus publishes a one-time layout
+# (the bucketed fact pair, the IVF-PQ index) under .scratch/.  It is
+# built once per corpus version and read back by every later session,
+# but a fresh .scratch/ has none, so they are warmed ONCE at the bench
+# SF: the timed run measures steady-state query cost, not the build.
 LAYOUT_QUERIES = [
     "flagship_revenue_bucketed",
     "sim_ivfpq_persisted",
@@ -327,8 +329,8 @@ def main() -> None:
                 "overwrite"
             ).save()
     for name in LAYOUT_QUERIES:
-        # build the one-time bucketed layout at the bench SF outside the
-        # timed region (daily-pipeline amortization; see relational.py)
+        # publish the one-time layout at the bench SF outside the timed
+        # region (daily-pipeline amortization; see relational.py)
         queries[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import math
 import os
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,7 +48,10 @@ from firebase_realtime_database_backup_spark.operators.text import (
     quality_expr,
 )
 from firebase_realtime_database_backup_spark.registry import Registry
-from firebase_realtime_database_backup_spark.scratch import fixture_dir
+from firebase_realtime_database_backup_spark.scratch import (
+    is_published,
+    publish_table,
+)
 
 REG = Registry()
 
@@ -132,52 +137,61 @@ def flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 FLAGSHIP_BUCKETS = 16
 
 
+#: The co-located fact pair: each table and its bucket (and sort) key.
+_BUCKETED_FACTS = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
+
+
+@session_memo(valid=lambda facts: is_published(facts[0]))
 def ensure_bucketed_facts(spark: SparkSession, sf_dir: str):
-    """Idempotently materialize lineitem/orders bucketed+sorted by
-    orderkey into the session warehouse, one table pair per sf_dir.
+    """Publish lineitem/orders bucketed and sorted by orderkey ONCE per
+    corpus version (scratch.publish_table, kind ``bucketed_facts``, one
+    subdirectory per table) and register both in this session's
+    catalog.  Returns (table directory, lineitem table, orders table).
 
     This is the LAYOUT half of the bucketed-join answer to the measured
     12.6× sort-merge-join dominance at 100× facts (BASELINE.md): both
     fact tables are pre-shuffled ONCE into the same bucket scheme, and
     every subsequent orderkey join reads co-located buckets with no
     Exchange and no per-query sort — the amortization a daily 100 TB
-    pipeline lives on.  Returns (lineitem_df, orders_df) backed by the
-    bucketed tables."""
-    import os
-    import shutil
+    pipeline lives on.  The bucket spec lives in the catalog, so each
+    session registers the files, with the columns of the frame the
+    build wrote: Spark refuses a bucket spec over existing files
+    without them, and inferring them costs a listing job."""
 
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-    li_name, od_name = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
+    def build(tmp: str) -> None:
+        for table, key in _BUCKETED_FACTS:
+            name = f"{table}_bkt_build_{uuid.uuid4().hex}"
+            try:
+                (
+                    read_table(spark, sf_dir, table)
+                    .write.bucketBy(FLAGSHIP_BUCKETS, key)
+                    .sortBy(key)
+                    .option("path", os.path.join(tmp, table))
+                    .saveAsTable(name)
+                )
+            finally:  # an external table: dropping it keeps the files
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
 
-    def build(name: str, table: str, key: str) -> None:
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(wh.removeprefix("file:"), name.lower())
-        if spark.catalog.tableExists(name):
-            # the inverse orphan: catalog remembers the table but the
-            # location is gone/empty (another process rebuilding the
-            # same warehouse swept it) — drop and rebuild
-            if os.path.isdir(loc) and any(
-                f.startswith("part-") for f in os.listdir(loc)
-            ):
-                return
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # an orphaned location can linger from a previous session (the
-        # in-memory catalog forgets the table, the warehouse dir does
-        # not); bucket metadata lives in the catalog, so the directory
-        # alone is untrusted — clear it and rebuild
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
-        (
-            read_table(spark, sf_dir, table)
-            .write.bucketBy(FLAGSHIP_BUCKETS, key)
-            .sortBy(key)
-            .mode("overwrite")
-            .saveAsTable(name)
+    tables, params = ("lineitem", "orders"), (FLAGSHIP_BUCKETS, _BUCKETED_FACTS)
+    path = publish_table("bucketed_facts", sf_dir, tables, build, params)
+    corpus = os.path.basename(path).removeprefix("bucketed_facts_")
+    tag = re.sub(r"\W", "_", corpus, flags=re.ASCII)
+    names = []
+    for table, key in _BUCKETED_FACTS:
+        name = f"{table}_bkt_{tag}"
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in read_table(spark, sf_dir, table).schema
         )
-
-    build(li_name, "lineitem", "l_orderkey")
-    build(od_name, "orders", "o_orderkey")
-    return spark.table(li_name), spark.table(od_name)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+            f"INTO {FLAGSHIP_BUCKETS} BUCKETS "
+            f"LOCATION '{os.path.join(path, table)}'"
+        )
+        spark.catalog.refreshTable(name)  # the files may have been rebuilt
+        names.append(name)
+    return (path, *names)
 
 
 @REG.query(
@@ -214,8 +228,9 @@ def flagship_revenue_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decimal addition is exact and order-independent — so the result
     is layout-invariant, which a 100 TB pipeline needs anyway (rerun
     with different partitioning must not change reported revenue)."""
-    lineitem_b, orders_b = ensure_bucketed_facts(spark, sf_dir)
-    lineitem = lineitem_b.filter(
+    _, lineitem_name, orders_name = ensure_bucketed_facts(spark, sf_dir)
+    orders_b = spark.table(orders_name)
+    lineitem = spark.table(lineitem_name).filter(
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp")
     )
     customer = read_table(spark, sf_dir, "customer")
@@ -5737,34 +5752,38 @@ COMPACT_TARGET_ROWS = 256
 #: Fragmentation width of the fixture: one file per doc_id % 64 bucket.
 COMPACT_FRAG_BUCKETS = 64
 
+#: The documents columns the compaction fixture carries.
+_COMPACT_COLUMNS = ("doc_id", "lang", "source", "n_chars")
 
-@session_memo
-def _compact_fixture(spark: SparkSession, sf_dir: str):
-    """(fragmented_dir, compacted_dir) for layout_compact_small_files,
-    written once per (session, corpus); None for an empty corpus."""
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    if docs.isEmpty():
-        return None
-    root = fixture_dir("compact", sf_dir, spark.sparkContext.applicationId)
-    frag_dir = os.path.join(root, "fragmented")
-    comp_dir = os.path.join(root, "compacted")
-    frag = docs.withColumn(
-        "b", (F.col("doc_id") % COMPACT_FRAG_BUCKETS).cast("int")
-    )
-    # repartition on b THEN partitionBy(b): each bucket is wholly
-    # inside one task, so exactly one file per bucket value
-    frag.repartition(COMPACT_FRAG_BUCKETS, "b").write.mode(
-        "overwrite"
-    ).partitionBy("b").parquet(frag_dir)
 
-    n = read_parquet(spark, frag_dir).count()
-    n_out = max(1, -(-n // COMPACT_TARGET_ROWS))  # ceil
-    read_parquet(spark, frag_dir).drop("b").repartition(n_out).write.mode(
-        "overwrite"
-    ).parquet(comp_dir)
-    return frag_dir, comp_dir
+@session_memo(valid=is_published)
+def _compact_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """fragmented/ and compacted/ for layout_compact_small_files, in one
+    directory published once per corpus version (kind ``compact``);
+    an empty corpus publishes an empty directory."""
+
+    def build(tmp: str) -> None:
+        docs = read_table(spark, sf_dir, "documents").select(*_COMPACT_COLUMNS)
+        os.makedirs(tmp)
+        if docs.isEmpty():
+            return
+        frag_dir = os.path.join(tmp, "fragmented")
+        frag = docs.withColumn(
+            "b", (F.col("doc_id") % COMPACT_FRAG_BUCKETS).cast("int")
+        )
+        # repartition on b THEN partitionBy(b): each bucket is wholly
+        # inside one task, so exactly one file per bucket value
+        frag.repartition(COMPACT_FRAG_BUCKETS, "b").write.partitionBy(
+            "b"
+        ).parquet(frag_dir)
+        n = read_parquet(spark, frag_dir).count()
+        n_out = max(1, -(-n // COMPACT_TARGET_ROWS))  # ceil
+        read_parquet(spark, frag_dir).drop("b").repartition(
+            n_out
+        ).write.parquet(os.path.join(tmp, "compacted"))
+
+    params = (COMPACT_TARGET_ROWS, COMPACT_FRAG_BUCKETS, _COMPACT_COLUMNS)
+    return publish_table("compact", sf_dir, ("documents",), build, params)
 
 
 @REG.query(
@@ -5807,8 +5826,10 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty at N >> files).  Rows-per-file targets keep the arithmetic
     engine-portable; production compacts to BYTES via the scan
     statistics the same plan already collects."""
-    dirs = _compact_fixture(spark, sf_dir)
-    if dirs is None:
+    root = _compact_fixture(spark, sf_dir)
+    frag_dir = os.path.join(root, "fragmented")
+    comp_dir = os.path.join(root, "compacted")
+    if not os.path.isdir(frag_dir):
         # Empty corpus: nothing to fragment or compact.  Writing
         # would still produce max(1, ceil(0/target)) = 1 empty part
         # file (and a row-less parquet dir whose read-back can fail
@@ -5820,7 +5841,6 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_files_before bigint, n_rows bigint, "
             "n_files_after bigint, docid_sum bigint",
         )
-    frag_dir, comp_dir = dirs
     before = (
         read_parquet(spark, frag_dir)
         .select(F.col("_metadata.file_path").alias("fp"))
@@ -7961,22 +7981,33 @@ def events_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: synthetic events calendar (January 2024).
 PRUNE_PROBE_DAY = "2024-01-15"
 
+#: The events columns the day-partitioned copy carries, and the format
+#: of its `day` partition value.
+_PRUNE_COLUMNS = ("event_id", "ts", "user_id", "value")
+_PRUNE_DAY_FORMAT = "yyyy-MM-dd"
 
-@session_memo
-def _prune_fixture(spark: SparkSession, sf_dir: str):
-    """Day-partitioned copy of `events` for layout_partitioned_prune,
-    written once per (session, corpus); None for an empty corpus."""
-    ev = read_table(spark, sf_dir, "events")
-    if ev.isEmpty():
-        return None
-    out = fixture_dir("prune", sf_dir, spark.sparkContext.applicationId)
-    day = F.date_format("ts", "yyyy-MM-dd").alias("day")
-    # repartition ON day then partitionBy(day): each day's rows sit
-    # wholly in one task -> exactly one file per day directory
-    ev.select("event_id", "ts", "user_id", "value", day).repartition(
-        F.col("day")
-    ).write.mode("overwrite").partitionBy("day").parquet(out)
-    return out
+
+@session_memo(valid=is_published)
+def _prune_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """events/, the day-partitioned copy of `events` for
+    layout_partitioned_prune, in one directory published once per
+    corpus version (kind ``prune``); an empty corpus publishes an
+    empty directory."""
+
+    def build(tmp: str) -> None:
+        ev = read_table(spark, sf_dir, "events")
+        os.makedirs(tmp)
+        if ev.isEmpty():
+            return
+        day = F.date_format("ts", _PRUNE_DAY_FORMAT).alias("day")
+        # repartition ON day then partitionBy(day): each day's rows sit
+        # wholly in one task -> exactly one file per day directory
+        ev.select(*_PRUNE_COLUMNS, day).repartition(
+            F.col("day")
+        ).write.partitionBy("day").parquet(os.path.join(tmp, "events"))
+
+    params = (_PRUNE_COLUMNS, _PRUNE_DAY_FORMAT)
+    return publish_table("prune", sf_dir, ("events",), build, params)
 
 
 @REG.query(
@@ -8013,8 +8044,8 @@ def layout_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     operational query carries a day predicate; the cardinality rule
     (partitions of ~file-count 1-10k, never per-user) is what keeps the
     listing itself cheap."""
-    out = _prune_fixture(spark, sf_dir)
-    if out is None:
+    out = os.path.join(_prune_fixture(spark, sf_dir), "events")
+    if not os.path.isdir(out):
         return spark.createDataFrame(
             [(PRUNE_PROBE_DAY, 0, 0, 0, None)],
             "probe_day string, n_rows bigint, n_users bigint, "

@@ -70,15 +70,6 @@ def _plane_sql(p: str) -> str:
 _DOT = "LIST_DOT_PRODUCT(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 
-def _spark_plane(p: str) -> "F.Column":
-    """array<double> hyperplane; p is a SQL expression for the plane index."""
-    return F.expr(
-        f"transform(sequence(1, {DIM}), d -> "
-        f"((1103515245 * (CAST(({p}) AS BIGINT) * {DIM} + d) + 12345) % 2147483648)"
-        f" / 2147483648.0 - 0.5)"
-    )
-
-
 def _dot(a, b) -> "F.Column":
     """Left-to-right fold dot product in float64 (matches DuckDB's
     list_dot_product exactly)."""

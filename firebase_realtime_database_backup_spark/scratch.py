@@ -1,29 +1,15 @@
 """Content-keyed persisted scratch tables with atomic publish and GC.
 
-The engine persists a few EXPENSIVE corpus-derived artifacts under the
-repo-local ``.scratch/`` directory, one kind per publishing helper:
-
-- ``shingle_vocab`` — the ranked (shingle, sid) vocabulary
-  (operators/text.py:ensure_vocab_table);
-- ``shingle_table`` — the (doc_id, sid) shingle dictionary built from
-  it (ensure_shingle_table);
-- ``bpe_table`` — the trained BPE merge table (ensure_bpe_table);
-- ``band_index_dict`` / ``band_index_xxhash`` — the MinHash
-  (doc_id, band, band_key) index of each hash family
-  (operators/dedup.py:ensure_band_index);
-- ``ivfpq_index`` — the cell-partitioned PQ code table
-  (operators/similarity.py:ensure_ivfpq_index).
-
-Through round 7 the shingle dictionary and the BPE table were keyed by
-``(applicationId, corpus)``: safe against concurrent-session overwrite
-tears, but every NEW session re-paid the corpus-wide build (780 s at
-the 1000x decade) and orphaned the previous session's table —
-``.scratch/`` had leaked 3.8 GB of dead copies by round 7 (VERDICT r7,
-"What's wrong" #2).
-
-This module replaces the session key with a CONTENT key plus an atomic
-publish protocol, which is the shape that survives both concurrency
-and 100 TB:
+The engine persists its EXPENSIVE corpus-derived artifacts (the
+shingle vocabulary and dictionary, the BPE merge table, the MinHash
+band indexes, the IVF-PQ index, the bucketed fact pair, and the layout
+and ingest queries' generated inputs) under the repo-local
+``.scratch/`` directory, one kind per :func:`publish_table` caller;
+``_FAMILIES`` lists their prefixes.  Keyed by session, every NEW
+session re-paid the corpus-wide build (780 s at the 1000x decade) and
+orphaned the previous session's copy (3.8 GB leaked by round 7).
+This module keys them by CONTENT and publishes them atomically, the
+shape that survives both concurrency and 100 TB:
 
 - **Content key**: the table directory name embeds a fingerprint of
   the corpus files the artifact derives from (path + per-part-file
@@ -45,13 +31,12 @@ and 100 TB:
   dir, never a half-published final path.
 
 - **GC** (:func:`sweep_scratch`, invoked from the session factory):
-  removes (a) orphaned ``*.tmp-*`` dirs past a grace period, (b)
-  content-keyed dirs whose recorded corpus is gone, whose recorded
-  fingerprint no longer matches it (the corpus was rebuilt), or that a
-  newer table of the same kind over the same corpus superseded (a
-  build parameter changed), and (c) legacy marker-less session-keyed
-  dirs past a longer grace — the pre-round-8 naming that nothing can
-  read once its session dies.
+  removes, past a grace period, (a) orphaned ``*.tmp-*`` dirs and (b)
+  content-keyed dirs whose marker is missing or unreadable, whose
+  recorded corpus is gone, whose recorded fingerprint no longer
+  matches it (the corpus was rebuilt), or that a newer table of the
+  same kind over the same corpus superseded (a build parameter
+  changed).
 
 At 100 TB the same protocol holds with the repo-local directory
 swapped for a shared object-store prefix: rename becomes a conditional
@@ -89,12 +74,6 @@ SCRATCH_BUILDS: list[str] = []
 #: (builds top out around 15 min at the measured 1000x decade).
 STALE_GRACE_SEC = 60 * 60
 
-#: Grace for legacy (marker-less) session-keyed dirs.  Conservative: a
-#: long-lived bench/pytest session keeps re-reading its session-keyed
-#: fixtures (compact/prune/textlog/...) for the session's whole life,
-#: so only clearly-dead leftovers from previous days are collected.
-LEGACY_GRACE_SEC = 24 * 60 * 60
-
 #: Scratch families this module is allowed to collect.  Anything else
 #: under .scratch (a user's file, an unknown tool's dir) is never
 #: touched.
@@ -103,6 +82,7 @@ _FAMILIES = (
     "shingle_table_",
     "bpe_table_",
     "band_index_",
+    "bucketed_facts_",
     "compact_",
     "prune_",
     "ivfpq_index_",
@@ -120,19 +100,6 @@ def scratch_root() -> str:
     )
     os.makedirs(root, exist_ok=True)
     return root
-
-
-def fixture_dir(family: str, sf_dir: str, session: str = "") -> str:
-    """``<family>_<corpus>_<tag>`` for a corpus-derived fixture.  The tag
-    hashes the full corpus path (same-named corpora must not collide)
-    and, if given, the session's applicationId (one session's overwrite
-    must not tear another's memoized read-back)."""
-    full = os.path.abspath(sf_dir)
-    key = f"{session}\x00{full}" if session else full
-    tag = hashlib.sha1(key.encode()).hexdigest()[:12]
-    return os.path.join(
-        scratch_root(), f"{family}_{os.path.basename(full)}_{tag}"
-    )
 
 
 def iter_table_files(table_path: str):
@@ -293,29 +260,23 @@ def sweep_scratch(
             continue
         if not name.startswith(_FAMILIES):
             continue  # not ours — never touch
-        marker = os.path.join(path, MARKER)
-        if os.path.isfile(marker):
-            try:
-                with open(marker) as fh:
-                    meta = json.load(fh)
-                corpus = meta["sf_dir"]
-                stale = not os.path.isdir(corpus) or corpus_fingerprint(
-                    corpus,
-                    meta.get("tables", ("documents",)),
-                    meta.get("params"),
-                ) != meta.get("fingerprint")
-            except (OSError, ValueError, KeyError):
-                stale = True  # unreadable marker: treat as dead
-            if not stale:
-                live.append((path, mtime, (meta.get("kind"), corpus)))
-            elif age > STALE_GRACE_SEC and _rmtree_quiet(path):
-                removed.append(path)
-        else:
-            # Legacy session-keyed dir (pre-round-8 naming): nothing
-            # can rediscover it once its session dies — collect after
-            # the long grace.
-            if age > LEGACY_GRACE_SEC and _rmtree_quiet(path):
-                removed.append(path)
+        try:
+            with open(os.path.join(path, MARKER)) as fh:
+                meta = json.load(fh)
+            corpus = meta["sf_dir"]
+            stale = not os.path.isdir(corpus) or corpus_fingerprint(
+                corpus,
+                meta.get("tables", ("documents",)),
+                meta.get("params"),
+            ) != meta.get("fingerprint")
+        except (OSError, ValueError, KeyError):
+            # no marker (nothing publishes without one) or an
+            # unreadable one: no reader can trust the directory
+            stale = True
+        if not stale:
+            live.append((path, mtime, (meta.get("kind"), corpus)))
+        elif age > STALE_GRACE_SEC and _rmtree_quiet(path):
+            removed.append(path)
     # One corpus version has one live table per kind; an older one that
     # still matches its corpus was built with parameters the code has
     # since changed (its fingerprint checks out against its own marker).

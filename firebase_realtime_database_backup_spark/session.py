@@ -119,9 +119,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Amortized scratch GC: collect dead persisted-table dirs (orphaned
-    # tmp publishes, tables whose corpus was rebuilt, legacy
-    # session-keyed copies) on session launch — a stat walk riding on
-    # the multi-second JVM start.  Never lets cleanup break startup.
+    # tmp publishes, tables whose corpus was rebuilt or whose build
+    # parameters changed, dirs without a marker) on session launch — a
+    # stat walk riding on the multi-second JVM start.  Never lets
+    # cleanup break startup.
     try:
         from .scratch import sweep_scratch
 

@@ -164,7 +164,7 @@ def _manifest_lines(tree: pa.Table, top: pa.ChunkedArray, files: dict[str, str])
     lies in one directory, so a directory's URI list is encoded once."""
     per_path = (
         pa.table({"path": tree.column("path"), "top": top})
-        .group_by("path")
+        .group_by("path", use_threads=False)
         .aggregate([("path", "count"), ("top", "distinct")])
     )
     encoded: dict[frozenset, str] = {}
@@ -189,9 +189,14 @@ def write_snapshot(tree: pa.Table, out_dir: str) -> None:
     top-key directory, plus its path-level manifest, from the driver:
     no Spark job.
 
+    The bytes depend only on the rows, not on their order in `tree`
+    (an extract's order follows which thread finished first): the rows
+    are sorted by (path, key) once, and every grouping keeps that order.
+
     Driver memory: `tree` itself, which an extract already holds, plus
-    one `top` string and one row number per row, the rows of the top
-    key being written, and one manifest line per distinct path.
+    its sorted copy, one `top` string and one row number per row, the
+    rows of the top key being written, and one manifest line per
+    distinct path.
 
     Always overwrites — the reference's reset_backup_dir
     (src/BackupProcessor.php:55-61): the old manifest goes first, the
@@ -205,11 +210,13 @@ def write_snapshot(tree: pa.Table, out_dir: str) -> None:
     where Spark's writer would have written it."""
     fs, root, scheme = _resolve(out_dir)
     data_dir, manifest_dir = f"{root}/{DATA_DIR}", f"{root}/{MANIFEST_DIR}"
-    tree = tree.select(TREE_SCHEMA.names)
+    tree = tree.select(TREE_SCHEMA.names).sort_by(
+        [("path", "ascending"), ("key", "ascending")]
+    )
     top = _top_dirs(tree)
     rows_by_top = (
         pa.table({"top": top, "row": np.arange(tree.num_rows)})
-        .group_by("top")
+        .group_by("top", use_threads=False)
         .aggregate([("row", "list")])
     )
     files: dict[str, str] = {}

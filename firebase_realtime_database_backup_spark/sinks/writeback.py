@@ -8,8 +8,8 @@ Mapping (SURVEY.md §2.A):
       → RESTORE_CONNECTIONS driver threads, one client each
 - R4 AIMD batch sizing  halve on failure (floor 1), ×1.2 after 5
                         successes cap 1000 (src/RestoreProcessor.php:83,97-104)
-      → identical controller per write unit: a path, or one key range
-        of a wide path
+      → the extract's controller (`sources.firebase.AimdState`, floor 1)
+        per write unit: a path, or one key range of a wide path
 - R5 split-on-failure   single-key update still fails ⇒ descend one
                         level and PATCH per child (src/RestoreProcessor.php:86-94);
                         a single scalar key that fails is retried, up to
@@ -59,14 +59,13 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from firebase_realtime_database_backup_spark.sources.firebase import (
+    DEFAULT_MAX_IPP,
     GET_RETRIES,
+    AimdState,
     FirebaseTransportError,
 )
 from firebase_realtime_database_backup_spark.sources.tree import column_list
 
-MAX_BATCH = 1000          # src/RestoreProcessor.php:17
-GROWTH_FACTOR = 1.2       # src/RestoreProcessor.php:100-103
-GROWTH_AFTER = 5
 MIN_BATCH = 1             # src/RestoreProcessor.php:83 floor
 RESTORE_CONNECTIONS = 8   # driver-side restore threads, one client each
 RESTORE_CHUNK_ROWS = 100_000  # tree rows per depth-chunk read
@@ -87,24 +86,27 @@ class WritebackStats:
 
 
 def _write_path(
-    client, path: str, data: dict, stats: WritebackStats, max_batch: int = MAX_BATCH
+    client,
+    path: str,
+    data: dict,
+    stats: WritebackStats,
+    max_batch: int = DEFAULT_MAX_IPP,
 ) -> None:
     """AIMD loop for one path's key set (the reference's save_path,
     src/RestoreProcessor.php:70-106), iterative."""
     keys = sorted(data)
-    ipp = min(max_batch, max(MIN_BATCH, len(keys)))
-    successes = 0
+    state = AimdState(min(max_batch, max(MIN_BATCH, len(keys))), floor=MIN_BATCH)
     attempts = 0  # failed PATCHes of the current one-scalar batch
     i = 0
     while i < len(keys):
-        batch_keys = keys[i : i + ipp]
+        batch_keys = keys[i : i + state.ipp]
         batch = {k: data[k] for k in batch_keys}
         try:
             client.update(path, batch)
         except Exception as exc:
-            successes = 0
-            if ipp > MIN_BATCH:  # R4 backoff
-                ipp = max(MIN_BATCH, ipp // 2)
+            halve = state.ipp > state.floor
+            state.on_overload()  # R4 backoff; restarts the growth count
+            if halve:
                 stats.halvings += 1
                 continue
             # R5: single key still failing — descend one level
@@ -128,10 +130,7 @@ def _write_path(
         stats.patches += 1
         stats.keys_written += len(batch_keys)
         i += len(batch_keys)  # R6: advancing the slice IS the anti-join
-        successes += 1
-        if successes >= GROWTH_AFTER:  # R4 growth
-            ipp = min(max_batch, int(ipp * GROWTH_FACTOR) or 1)
-            successes = 0
+        state.on_success(max_batch)  # R4 growth
 
 
 def _depth_chunks(tree: ds.Dataset) -> list[tuple[int, int]]:
@@ -264,7 +263,7 @@ def writeback(
     tree: ds.Dataset,
     client_factory: Callable[[], object],
     *,
-    max_batch: int = MAX_BATCH,
+    max_batch: int = DEFAULT_MAX_IPP,
 ) -> WritebackStats:
     """Replay tree rows (path, key, value_json, depth) through
     merge-PATCH updates from RESTORE_CONNECTIONS driver threads, depth

@@ -175,15 +175,18 @@ class FirebaseClient(Protocol):
 
 @dataclass
 class AimdState:
-    """Per-unit adaptive page size (the reference's intelligent_IPP map,
-    src/BackupProcessor.php:14,151-155)."""
+    """Per-unit adaptive page or batch size (the reference's
+    intelligent_IPP map, src/BackupProcessor.php:14,151-155, and its
+    restore batch, src/RestoreProcessor.php:83,97-104): the extract's
+    pages floor at MIN_IPP, the restore's batches at one key."""
 
     ipp: int
     successes: int = 0
+    floor: int = MIN_IPP
 
     def on_overload(self) -> None:
-        # halve, floor MIN_IPP (src/BackupProcessor.php:171,160)
-        self.ipp = max(MIN_IPP, self.ipp // 2)
+        # halve, floored (src/BackupProcessor.php:171,160)
+        self.ipp = max(self.floor, self.ipp // 2)
         self.successes = 0
 
     def on_success(self, max_ipp: int) -> None:

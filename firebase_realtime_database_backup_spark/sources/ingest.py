@@ -29,7 +29,10 @@ from pyspark.sql import functions as F
 from firebase_realtime_database_backup_spark.catalog import read_table
 from firebase_realtime_database_backup_spark.memo import session_memo
 from firebase_realtime_database_backup_spark.registry import Registry
-from firebase_realtime_database_backup_spark.scratch import fixture_dir
+from firebase_realtime_database_backup_spark.scratch import (
+    is_published,
+    publish_table,
+)
 
 REG = Registry()
 
@@ -410,31 +413,30 @@ def read_jsonl_quarantine(
 #: doc_id divisible by 37 becomes a truncated (invalid) JSON line.
 _QUARANTINE_MOD = 37
 
+#: The fixture's line pieces: a good line is `{"doc_id": <id>,
+#: "n_chars": <n>}`, a corrupt one stops after `{"doc_id": <id>, "half`.
+_QUARANTINE_LINE = ('{"doc_id": ', ', "n_chars": ', "}", ', "half')
 
-@session_memo
+
+@session_memo(valid=is_published)
 def _quarantine_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """JSONL fixture for ingest_jsonl_quarantine, written once per
-    (session, corpus) — the fixture is a pure function of the corpus,
-    so plan-only consumers (schema lints, repeated bench runs) must not
-    pay the documents scan + distributed write again."""
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("n_chars")
-    )
-    line = F.when(
-        F.col("doc_id") % _QUARANTINE_MOD == 0,
-        F.concat(F.lit('{"doc_id": '), F.col("doc_id"), F.lit(', "half')),
-    ).otherwise(
-        F.concat(
-            F.lit('{"doc_id": '),
-            F.col("doc_id"),
-            F.lit(', "n_chars": '),
-            F.col("n_chars"),
-            F.lit("}"),
+    """JSONL fixture for ingest_jsonl_quarantine, published once per
+    corpus version (kind ``quarantine_jsonl``) — the fixture is a pure
+    function of the corpus, so no later query or session pays the
+    documents scan + distributed write again."""
+    head, mid, tail, cut = _QUARANTINE_LINE
+
+    def build(tmp: str) -> None:
+        docs = read_table(spark, sf_dir, "documents").select(
+            "doc_id", F.length("text").alias("n_chars")
         )
-    )
-    fixture = fixture_dir("quarantine_jsonl", sf_dir)
-    docs.select(line.alias("value")).write.mode("overwrite").text(fixture)
-    return fixture
+        rest = F.when(F.col("doc_id") % _QUARANTINE_MOD == 0, F.lit(cut))
+        rest = rest.otherwise(F.concat(F.lit(mid), "n_chars", F.lit(tail)))
+        line = F.concat(F.lit(head), "doc_id", rest)
+        docs.select(line.alias("value")).write.text(tmp)
+
+    params = (_QUARANTINE_MOD, _QUARANTINE_LINE)
+    return publish_table("quarantine_jsonl", sf_dir, ("documents",), build, params)
 
 
 @REG.query(
@@ -490,25 +492,34 @@ def ingest_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@session_memo
+#: The two generations' columns: v1 (even doc_ids) lacks n_chars, v2
+#: (odd doc_ids) carries it.
+_EVOLUTION_V1 = ("doc_id", "lang")
+_EVOLUTION_V2 = ("doc_id", "lang", "n_chars")
+
+
+@session_memo(valid=is_published)
 def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Two-generation parquet fixture (v1/, v2/) for
-    ingest_schema_evolution, written once per (session, corpus)."""
-    # Carry the table's own n_chars column (not length(text)): the
-    # oracle predicts the audit row from stored columns, and corpora
-    # where n_chars deliberately disagrees with length(text) (the
-    # edge corpus's unicode rows) must not diverge.
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars"
-    )
-    fixture = fixture_dir("schema_evolution", sf_dir)
-    docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", "lang"
-    ).write.mode("overwrite").parquet(os.path.join(fixture, "v1"))
-    docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "lang", "n_chars"
-    ).write.mode("overwrite").parquet(os.path.join(fixture, "v2"))
-    return fixture
+    ingest_schema_evolution, published once per corpus version (kind
+    ``schema_evolution``)."""
+
+    def build(tmp: str) -> None:
+        # Carry the table's own n_chars column (not length(text)): the
+        # oracle predicts the audit row from stored columns, and
+        # corpora where n_chars deliberately disagrees with
+        # length(text) (the edge corpus's unicode rows) must not
+        # diverge.
+        docs = read_table(spark, sf_dir, "documents")
+        docs.filter(F.col("doc_id") % 2 == 0).select(
+            *_EVOLUTION_V1
+        ).write.parquet(os.path.join(tmp, "v1"))
+        docs.filter(F.col("doc_id") % 2 == 1).select(
+            *_EVOLUTION_V2
+        ).write.parquet(os.path.join(tmp, "v2"))
+
+    params = (_EVOLUTION_V1, _EVOLUTION_V2)
+    return publish_table("schema_evolution", sf_dir, ("documents",), build, params)
 
 
 @REG.query(
@@ -571,6 +582,10 @@ _LOG_CORRUPT_MOD = 43
 #: (no delimiter can hide inside a field).
 _LOG_RE = r"^evt\|(-?\d+)\|u(-?\d+)\|(\w+)\|(-?\d+)$"
 
+#: The fixture's line formats: a good line, a mangled one (delimiter
+#: scheme broken), and the fixed bad line of a row with a NULL field.
+_LOG_LINES = ("evt|%d|u%d|%s|%d", "evt#%d#u%d#%s#%d", "evt#malformed")
+
 #: rows the wire format cannot carry (any NULL field, or a type with
 #: non-word characters) are corrupt BY DEFINITION — the generator
 #: writes a malformed line for them and the oracle's predicate agrees.
@@ -580,52 +595,36 @@ _LOG_UNENCODABLE_SQL = (
 )
 
 
-@session_memo
+@session_memo(valid=is_published)
 def _log_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Raw-text log fixture for ingest_text_log_parse, written once per
-    (session, corpus) under a session-keyed scratch dir."""
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+    """Raw-text log fixture for ingest_text_log_parse, published once
+    per corpus version (kind ``textlog``)."""
+    good_fmt, bad_fmt, bad_null = _LOG_LINES
+
+    def build(tmp: str) -> None:
+        fields = ("event_id", "user_id", "event_type", "cents")
+        ev = read_table(spark, sf_dir, "events").select(
+            *fields[:3], F.floor(F.col("value") * 100).cast("bigint").alias("cents")
+        )
+        unencodable = ~F.col("event_type").rlike(r"^\w+$")
+        for c in fields:
+            unencodable = unencodable | F.col(c).isNull()
+        # the payload of a corrupt line is irrelevant to the audit, but
+        # it must stay ONE physical line: a raw event_type carrying \n
+        # or \r would be split by the .text() writer into multiple lines
+        # and read-back n_bad would diverge from the oracle's count
+        one_line = F.regexp_replace(F.col("event_type"), r"[\r\n]", " ")
+        mangled = F.coalesce(
+            F.format_string(bad_fmt, "event_id", "user_id", one_line, "cents"),
+            F.lit(bad_null),  # NULL fields: a fixed bad line
+        )
+        corrupt = unencodable | (F.col("event_id") % _LOG_CORRUPT_MOD == 0)
+        line = F.when(corrupt, mangled).otherwise(F.format_string(good_fmt, *fields))
+        ev.select(line.alias("value")).write.text(tmp)
+
+    return publish_table(
+        "textlog", sf_dir, ("events",), build, (_LOG_CORRUPT_MOD, _LOG_LINES)
     )
-    good = F.format_string(
-        "evt|%d|u%d|%s|%d",
-        F.col("event_id"),
-        F.col("user_id"),
-        F.col("event_type"),
-        F.col("cents"),
-    )
-    unencodable = (
-        F.col("event_id").isNull()
-        | F.col("user_id").isNull()
-        | F.col("cents").isNull()
-        | F.col("event_type").isNull()
-        | ~F.col("event_type").rlike(r"^\w+$")
-    )
-    mangled = F.coalesce(
-        F.format_string(
-            "evt#%d#u%d#%s#%d",
-            F.col("event_id"),
-            F.col("user_id"),
-            # the payload of a corrupt line is irrelevant to the
-            # audit, but it must stay ONE physical line: a raw
-            # event_type carrying \n or \r would be split by the
-            # .text() writer into multiple lines and read-back
-            # n_bad would diverge from the oracle's per-row count
-            F.regexp_replace(F.col("event_type"), r"[\r\n]", " "),
-            F.col("cents"),
-        ),
-        F.lit("evt#malformed"),  # NULL fields: a fixed bad line
-    )
-    line = F.when(
-        unencodable | (F.col("event_id") % _LOG_CORRUPT_MOD == 0),
-        mangled,
-    ).otherwise(good)
-    fixture = fixture_dir("textlog", sf_dir, spark.sparkContext.applicationId)
-    ev.select(line.alias("value")).write.mode("overwrite").text(fixture)
-    return fixture
 
 
 @REG.query(
@@ -660,7 +659,7 @@ def ingest_text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     delimiter scheme mangled, and rows the wire format cannot carry —
     any NULL field, a non-word event_type — are corrupt BY DEFINITION,
     so generator, parser, and oracle agree on adversarial rows too),
-    written as plain .text under the session-keyed scratch dir, and
+    published as plain .text under the repo scratch dir, and
     read back through one parallel text scan + one regexp_extract per
     field; a line is good iff the FULL anchored pattern matches.  The oracle predicts the same audit
     numbers straight from the generation rule — a parse that drops,

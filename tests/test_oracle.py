@@ -188,6 +188,7 @@ def _memo_smoke_lists():
         "multimodal_phash_hamming": (multimodal.phash_hashes,),
         "events_item_cooccurrence": (relational.ensure_item_edges,),
         "graph_pagerank": (relational._ensure_sym_edges,),
+        "flagship_revenue_bucketed": (relational.ensure_bucketed_facts,),
         "layout_compact_small_files": (relational._compact_fixture,),
         "layout_partitioned_prune": (relational._prune_fixture,),
         "ingest_jsonl_quarantine": (ingest._quarantine_fixture,),

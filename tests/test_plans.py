@@ -852,7 +852,8 @@ def test_flagship_bucketed_orderkey_join_has_no_exchange(spark, queries):
         ensure_bucketed_facts,
     )
 
-    li, od = ensure_bucketed_facts(spark, SF)
+    _, li_name, od_name = ensure_bucketed_facts(spark, SF)
+    li, od = spark.table(li_name), spark.table(od_name)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = li.join(od, li["l_orderkey"] == od["o_orderkey"])

@@ -8,6 +8,7 @@ These pin VERDICT r7's top next-round item: the dictionary build must
 be paid once per CORPUS VERSION, not once per session, and dead copies
 must be collected instead of accreting (the 3.8 GB .scratch leak)."""
 
+import ast
 import json
 import os
 import shutil
@@ -27,6 +28,7 @@ from firebase_realtime_database_backup_spark.scratch import (
 )
 
 SF = "/root/testdata/sf0.01"
+SMALL = "/root/testdata/sf0.001"
 
 
 def _marker_mtime(path: str) -> float:
@@ -87,6 +89,60 @@ def test_ivfpq_index_survives_sessions(spark):
     again = similarity.ensure_ivfpq_index(spark, SF)
     assert again[0] == idx[0], "new session re-encoded instead of reusing"
     assert _marker_mtime(idx[0]) == before, "index was rewritten"
+
+
+@pytest.mark.parametrize(
+    "module, fixture",
+    [
+        ("relational", "_compact_fixture"),
+        ("relational", "_prune_fixture"),
+        ("ingest", "_quarantine_fixture"),
+        ("ingest", "_evolution_fixture"),
+        ("ingest", "_log_fixture"),
+    ],
+)
+def test_query_fixture_survives_sessions(spark, module, fixture):
+    """The generated inputs of the layout and ingest queries are
+    published like the dictionaries: a fresh session finds the table
+    and writes nothing."""
+    from firebase_realtime_database_backup_spark.operators import relational
+    from firebase_realtime_database_backup_spark.sources import ingest
+
+    build = getattr({"relational": relational, "ingest": ingest}[module], fixture)
+    path = build(spark, SMALL)
+    assert is_published(path)
+    before = _marker_mtime(path)
+    memo.clear_caches()
+    assert build(spark, SMALL) == path, "new session rebuilt instead of reusing"
+    assert _marker_mtime(path) == before, "fixture was rewritten"
+
+
+def test_bucketed_facts_survive_sessions(spark):
+    """The bucketed fact pair is published once; a session whose catalog
+    lacks the tables registers the published files again, builds
+    nothing, and joins them on orderkey with no Exchange (the bucket
+    spec came back with the registration)."""
+    from firebase_realtime_database_backup_spark.operators import relational
+
+    path, li, od = relational.ensure_bucketed_facts(spark, SMALL)
+    assert is_published(path)
+    before = _marker_mtime(path)
+    spark.sql(f"DROP TABLE {li}")
+    spark.sql(f"DROP TABLE {od}")
+    memo.clear_caches()
+    builds0 = len(scratch.SCRATCH_BUILDS)
+    assert relational.ensure_bucketed_facts(spark, SMALL) == (path, li, od)
+    assert scratch.SCRATCH_BUILDS[builds0:] == [], "new session rebuilt"
+    assert _marker_mtime(path) == before, "bucketed tables were rewritten"
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        a, b = spark.table(li), spark.table(od)
+        joined = a.join(b, a["l_orderkey"] == b["o_orderkey"])
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "Exchange" not in plan, plan
 
 
 def test_fingerprint_tracks_corpus_version(tmp_path, monkeypatch):
@@ -159,10 +215,10 @@ def test_publish_is_write_once_and_race_safe(tmp_path, monkeypatch):
 
 
 def test_sweep_grace_and_families(tmp_path, monkeypatch):
-    """The sweep collects exactly: orphaned tmp dirs past grace, stale
-    content-keyed tables past grace (corpus gone or fingerprint moved),
-    and legacy marker-less session-keyed dirs past the long grace.  It
-    never touches fresh tables, young tmp dirs, or foreign dirs."""
+    """The sweep collects exactly, past the grace: orphaned tmp dirs,
+    stale content-keyed tables (corpus gone or fingerprint moved), and
+    family dirs without a marker, which nothing publishes.  It never
+    touches fresh tables, young tmp dirs, or foreign dirs."""
     monkeypatch.setattr(scratch, "scratch_root", lambda: str(tmp_path))
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -205,12 +261,10 @@ def test_sweep_grace_and_families(tmp_path, monkeypatch):
     now = time.time()
     # Within every grace: nothing happens.
     assert sweep_scratch(now=now) == []
-    # Past the short grace: orphan tmp + stale table go; legacy stays.
+    # Past the grace: orphan tmp, stale tables and the marker-less dir
+    # go; live + foreign always stay.
     removed = set(sweep_scratch(now=now + scratch.STALE_GRACE_SEC + 5))
-    assert removed == {*stale, str(orphan_tmp)}
-    # Past the long grace: legacy goes; live + foreign always stay.
-    removed = set(sweep_scratch(now=now + scratch.LEGACY_GRACE_SEC + 5))
-    assert removed == {str(legacy)}
+    assert removed == {*stale, str(orphan_tmp), str(legacy)}
     assert all(os.path.isdir(p) for p in live) and foreign.is_dir()
 
 
@@ -331,3 +385,34 @@ def test_new_session_does_no_shingle_work(spark):
     assert rows and n_jobs <= 4, f"text_fingerprint ran {n_jobs} jobs"
     assert queries["dedup_containment"](spark, SF).collect()
     assert scratch.SCRATCH_BUILDS[builds0:] == []
+
+
+def test_every_published_kind_is_a_swept_family():
+    """Every ``publish_table(kind, ...)`` in the engine names a kind
+    under a ``scratch._FAMILIES`` prefix: the sweep touches nothing
+    else, so a kind outside them would keep every superseded version.
+    An f-string kind is checked by its literal head."""
+    import firebase_realtime_database_backup_spark as pkg
+
+    kinds = []
+    for dirpath, _, files in os.walk(os.path.dirname(pkg.__file__)):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            for node in ast.walk(ast.parse(open(path).read())):
+                if not (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "publish_table"
+                ):
+                    continue
+                kind = node.args[0]
+                if isinstance(kind, ast.Constant):
+                    head = kind.value + "_"
+                else:
+                    assert isinstance(kind, ast.JoinedStr), (path, ast.dump(kind))
+                    head = kind.values[0].value
+                kinds.append((fn, head))
+    assert len(kinds) >= 11, kinds  # the walk reaches every call
+    stray = [k for k in kinds if not k[1].startswith(scratch._FAMILIES)]
+    assert not stray, stray

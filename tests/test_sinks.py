@@ -26,6 +26,7 @@ from firebase_realtime_database_backup_spark.sources.firebase import (
     FakeFirebase,
     FirebaseTransportError,
     extract,
+    extract_table,
 )
 from firebase_realtime_database_backup_spark.sources.tree import (
     path_depth,
@@ -78,6 +79,53 @@ def test_snapshot_partition_pruning(spark, tmp_path):
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "users" in plan
     assert one.count() > 0 and one.count() < raw.count()
+
+
+class SlowPaths(FakeFirebase):
+    """FakeFirebase whose GETs of the `slow` paths take longer, so that
+    an extract's threads finish their units in an order it chooses."""
+
+    def __init__(self, tree: dict, slow: set[str], **kw) -> None:
+        super().__init__(tree, **kw)
+        self.slow = slow
+
+    def get(self, path: str, **kw):
+        time.sleep(0.05 if path in self.slow else 0.001)
+        return super().get(path, **kw)
+
+
+def _snapshot_bytes(root) -> dict[str, bytes]:
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(root.rglob("*"))
+        if p.is_file()
+    }
+
+
+def test_snapshot_bytes_do_not_depend_on_row_order(tmp_path):
+    """Two extracts of one database whose units finish in different
+    orders give tables with the same rows in different orders; their
+    snapshots must be byte-identical, part files and manifest alike.
+    The "a" children are each too large to share a page, so each is
+    its own unit, and every unit's rows land in the one `top=a` file."""
+    tree = {
+        "a": {f"c{i}": {"v": "x" * 60, "n": i} for i in range(6)},
+        "b": {f"k{i}": i for i in range(5)},
+        "m": "scalar",
+    }
+    out = tmp_path / "snap"
+    tables, written = [], []
+    for slow in ({"/a/c0", "/a/c1"}, {"/a/c4", "/a/c5", "/b"}):
+        client = SlowPaths(tree, slow, max_payload_bytes=100)
+        tables.append(extract_table(client, parallelism=4))
+        write_snapshot(tables[-1], str(out))
+        written.append(_snapshot_bytes(out))
+    assert tables[0].to_pylist() != tables[1].to_pylist(), "same order: no test"
+    assert sorted(tables[0].to_pylist(), key=str) == sorted(
+        tables[1].to_pylist(), key=str
+    )
+    assert written[0] == written[1]
+    assert any(name.startswith("tree/top=a/") for name in written[0])
 
 
 def test_export_import_identity(spark, tmp_path):
