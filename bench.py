@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from firebase_realtime_database_backup_spark.registry import module_registry  # noqa: E402
+
 # Queries whose first call on a corpus publishes a one-time layout
 # (the bucketed fact pair, the IVF-PQ index) under .scratch/.  It is
 # built once per corpus version and read back by every later session,
@@ -32,269 +34,12 @@ LAYOUT_QUERIES = [
     "text_bpe_merges",
 ]
 
-HEADLINE = [
-    # relational core
-    "flagship_revenue",
-    "flagship_revenue_bucketed",
-    "pricing_summary",
-    "join_inner_equi",
-    "join_broadcast_dim",
-    "join_left_anti",
-    "join_asof",
-    "join_asof_tolerance",
-    "agg_rollup",
-    "agg_grouping_sets",
-    "agg_percentiles",
-    "agg_median_twolevel",
-    "join_salted_skew",
-    "tpch_q3_topk_revenue",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_volume",
-    "tpch_q10_returned_topk",
-    "tpch_q18_big_orders",
-    "join_range_binned",
-    "agg_pivot",
-    "agg_unpivot",
-    "window_running_frame",
-    "window_range_frame",
-    "window_percent_dist",
-    "sort_topk",
-    "events_funnel",
-    "events_funnel_windowed",
-    "events_trending_topk",
-    "events_adoption_curve",
-    "events_activity_concentration",
-    "events_sessionize",
-    "events_cohort_retention",
-    "events_resample_gapfill",
-    "sql_correlated_subquery",
-    "tpch_q12_priority_lines",
-    "tpch_q14_promo",
-    "tpch_q6_forecast",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "tpch_q11_value_share",
-    "tpch_q13_order_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess_shippers",
-    "tpch_q21_sole_returned",
-    "tpch_q22_idle_customers",
-    "tpch_q2_min_cost_supplier",
-    "events_item_cooccurrence",
-    "graph_triangle_count",
-    "events_forecast_backtest",
-    "events_audience_overlap",
-    "events_dau_wau_stickiness",
-    "sink_merge_upsert",
-    "sink_snapshot_diff",
-    "quality_audit_constraints",
-    "scd2_validity_windows",
-    "join_scd2_pointintime",
-    "sample_deterministic",
-    "quality_winsorize",
-    "dedup_fuzzy_names",
-    "events_markov_transitions",
-    "events_rfm_segments",
-    "events_rfm_scaled",
-    "agg_histogram_equiwidth",
-    "sample_stratified_topk",
-    "quality_column_profile",
-    "quality_corpus_datasheet",
-    "window_streaks",
-    "quality_drift_chi2",
-    "events_anomaly_mad",
-    "events_moving_median",
-    "quality_skew_report",
-    "agg_countmin_sketch",
-    "agg_heavy_hitters",
-    "agg_mode_per_group",
-    "agg_regression_exact",
-    "agg_hll_union_rollup",
-    "layout_zorder",
-    "quality_benford",
-    "quality_referential_integrity",
-    "events_top_sequences",
-    "events_attribution_linear",
-    "events_sliding_distinct",
-    "join_bloom_prefilter",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_shuffle_hash_hint",
-    "agg_string_agg",
-    "ingest_schema_inference",
-    "ingest_schema_inference_sampled",
-    "dedup_containment",
-    "dedup_simhash_hamming",
-    "tree_subtree_sizes",
-    "graph_pagerank",
-    # scalar / json
-    "json_from_json_struct",
-    "scalar_string_funcs",
-    # streaming (batch mode)
-    "stream_window_tumbling",
-    "stream_window_session",
-    "stream_stateful_user_totals",
-    "stream_daily_active",
-    "stream_stream_join",
-    # LLM-data operators
-    "dedup_content_hash",
-    "text_normalize",
-    "dedup_minhash_lsh",
-    "dedup_minhash_xxhash",
-    "dedup_minhash_estimate_audit",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_scaled",
-    "sim_cosine_topk",
-    "sim_ivf_topk",
-    "sim_topk_incremental",
-    "sim_ann_multitable",
-    "sim_pq_topk",
-    "sim_ivfpq_topk",
-    "sim_ivfpq_persisted",
-    "quality_column_profile_scaled",
-    "sim_label_centroids",
-    "sim_vector_quantize",
-    "text_fingerprint",
-    "multimodal_phash_hamming",
-    "dedup_cross_corpus_cosine",
-    "dedup_cross_corpus_cosine_arrow",
-    "dedup_embedding_cosine_arrow",
-    "ingest_schema_evolution",
-    "layout_compact_small_files",
-    "join_interval_overlap",
-    "stream_watermark_audit",
-    "events_session_gap_histogram",
-    "window_open_intervals",
-    "events_seasonality_profile",
-    "events_ewma_daily",
-    "text_span_dedup",
-    "text_span_dedup_xxhash",
-    "text_span_scrub",
-    "text_bigram_collocations",
-    "text_repetition_ratio",
-    "text_pii_redact",
-    "text_top_terms",
-    "text_tfidf",
-    "pipeline_prepare_corpus",
-    "dedup_decontaminate",
-    "text_chunk_fixed",
-    "text_chunk_overlap",
-    "text_vocab_unk",
-    "text_pack_sequences",
-    "text_inverted_index",
-    "mix_weighted_sources",
-    "mix_temperature_sampled",
-    "text_gopher_rules",
-    "text_code_detect",
-    "text_repeated_passages",
-    "text_scrub_passages",
-    "dedup_semantic_kmeans",
-    "dedup_semantic_kmeans_scaled",
-    "dedup_semantic_kmeans_hier",
-    "text_lang_rebalance",
-    "dedup_cross_corpus",
-    "dedup_cross_corpus_xxhash",
-    "ingest_jsonl_quarantine",
-    "multimodal_media_features",
-    "multimodal_frame_explode",
-    "multimodal_frame_energy",
-    "multimodal_scene_cuts",
-    "multimodal_silence_trim",
-    "sim_dim_stats",
-    "text_source_blocklist",
-    "text_rarity_score",
-    "text_surprisal_score",
-    "text_adaptive_length_filter",
-    "text_bpe_merges",
-    "text_bpe_encode",
-    "mix_token_budget_select",
-    "text_char_entropy",
-    "text_bigram_surprisal",
-    "sim_norm_anomaly",
-    "sim_dim_truncation_recall",
-    "sim_centroid_drift",
-    "sim_contrastive_triplets",
-    "dedup_keep_best_quality",
-    "pipeline_prepare_corpus_scaled",
-    "multimodal_resize_pool",
-    "multimodal_phash_dedup",
-    # pandas-UDF escape hatches
-    "udf_pandas_scalar",
-    "udf_grouped_topn",
-    # round 5
-    "agg_bitmap_distinct",
-    "agg_weighted_median",
-    "agg_skew_kurtosis_exact",
-    "events_funnel_conversion_time",
-    "events_changepoint_cusum",
-    "graph_degree_distribution",
-    "quality_dup_rate_by_source",
-    "quality_label_balance",
-    "mix_epoch_repeat_plan",
-    "text_ngram_novelty",
-    "text_char_entropy_scaled",
-    "dedup_minhash_audit_sampled",
-    "multimodal_phash_cluster",
-    "quality_ks_test",
-    "events_bot_rate_gate",
-    "window_order_gaps",
-    "window_order_gaps_twolevel",
-    "quality_outlier_iqr",
-    "sim_knn_label_vote",
-    "sim_knn_label_vote_arrow",
-    "events_cohort_ltv",
-    "sql_exists_not_exists",
-    "quality_null_completeness",
-    "agg_approx_quantile_audit",
-    "stream_bot_alerts",
-    "window_max_drawdown",
-    "agg_entropy_by_group",
-    "quality_monotonic_id_audit",
-    # round 6
-    "window_interval_merge",
-    "agg_histogram_equidepth",
-    "window_rolling_regression",
-    "events_trend_slope_theilsen",
-    "quality_split_leakage_audit",
-    "agg_bitmap_distinct_merge",
-    "dedup_clusters",
-    "stream_dim_join",
-    "events_survival_table",
-    "layout_partitioned_prune",
-    "events_attribution_position",
-    "quality_chi2_independence",
-    # round 6 continuation
-    "dedup_editdist_neighborhood",
-    "dedup_editdist_sampled",
-    "dedup_entity_resolution",
-    "mix_budget_apportion",
-    # round 8: the completed entity-resolution cascade
-    "dedup_entity_resolution_sampled",
-    "dedup_entity_resolution_em",
-    "dedup_entity_clusters",
-    "dedup_entity_clusters_sampled",
-    "quality_candidate_keys",
-    "sim_gram_matrix",
-    "sim_mmr_diverse_topk",
-    "sim_pca_variance_explained",
-    "graph_connected_components",
-    "events_sample_ratio_mismatch",
-    "events_diff_in_means",
-    "quality_psi_drift",
-    "ingest_text_log_parse",
-    "dedup_cluster_size_profile",
-    # round 8: prefix-filtered exact joins + cross-source calibration
-    "dedup_jaccard_prefix",
-    "dedup_containment_prefix",
-    "quality_score_calibration",
-    "sample_weighted_reservoir",
-    "events_cuped_adjustment",
-    "text_zipf_slope",
-]
+_REG = module_registry(
+    warn=lambda msg: print(f"WARNING: {msg}", file=sys.stderr)
+)
+#: the timed queries: every registered query not marked
+#: ``headline=False``, in module-registration order
+HEADLINE = [name for name in _REG.queries if name not in _REG.off_headline]
 
 
 def main() -> None:
@@ -310,9 +55,7 @@ def main() -> None:
         app_name="frdb-spark-bench",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    import __spark_entry__ as entry
-
-    queries = entry.queries()
+    queries = _REG.queries
 
     # Warmup, not measured: file listing + footer reads at the bench SF,
     # plus one full pass of every headline query at sf0.001 so codegen

@@ -49,12 +49,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables that stay broadcast-sized at ANY scale factor (their
-#: cardinality is fixed or near-fixed in TPC-H-style scaling).  `customer`,
-#: `part`, `supplier` scale with SF and must NOT be blanket-broadcast.
-BROADCAST_SAFE = frozenset({"region", "nation"})
-
-
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

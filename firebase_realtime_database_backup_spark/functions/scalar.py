@@ -78,6 +78,7 @@ def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(o_orderdate + INTERVAL 30 DAY AS DATE) AS due_date
     FROM orders
     """,
+    headline=False,
 )
 def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time surface.  order_ym mirrors the reference's ISO-8601
@@ -113,6 +114,7 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_orderkey <= 1000
     """,
+    headline=False,
 )
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math surface over IEEE-exact ops (see module docstring).  Spark
@@ -148,6 +150,7 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                                  AS vocab_head
     FROM documents
     """,
+    headline=False,
 )
 def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array surface over tokenized document text: size, distinct,
@@ -177,6 +180,7 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE JSON_EXTRACT_STRING(props, '$.k') IS NOT NULL
     """,
+    headline=False,
 )
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON property extraction over events.props — the typed face of the
@@ -237,6 +241,7 @@ def json_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
            STRING_SPLIT(path, '/')[LEN(STRING_SPLIT(path, '/'))] AS leaf_key
     FROM paths
     """,
+    headline=False,
 )
 def tree_path_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path algebra for the tree relation (SURVEY.md §1.3): depth, parent,
@@ -275,6 +280,7 @@ def tree_path_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            STRING_SPLIT(STRING_SPLIT(url, '//')[2], '.')[1] AS project_id
     FROM urls
     """,
+    headline=False,
 )
 def url_project_id_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's project-id-from-URL parse — double explode on
@@ -307,6 +313,7 @@ def url_project_id_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
            IF(o_orderpriority = '1-URGENT', 1, 0)       AS urgent_flag
     FROM orders
     """,
+    headline=False,
 )
 def conditional_case_nullif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional surface: CASE WHEN chains, NULLIF/COALESCE, boolean
@@ -411,6 +418,7 @@ def udf_grouped_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WHERE o_orderkey % 100 = 0
     """,
+    headline=False,
 )
 def scalar_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-type surface: build a map from literals + columns, read it
@@ -451,6 +459,7 @@ def scalar_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                                     AS n_even_len
     FROM documents
     """,
+    headline=False,
 )
 def scalar_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order functions over arrays: transform / filter / exists /
@@ -493,6 +502,7 @@ def scalar_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_orderkey <= 1000
     """,
+    headline=False,
 )
 def scalar_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise surface — integer-exact in any engine (used by the LSH

@@ -98,6 +98,7 @@ MINHASH_BANDS_SQL_CTE = f"""
     FROM documents
     GROUP BY lang, source
     """,
+    headline=False,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by key: one hash aggregation picks a deterministic
@@ -332,6 +333,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bits
     GROUP BY doc_id
     """,
+    headline=False,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash fingerprint per document: each bit is the sign of
@@ -375,6 +377,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY x.doc_id, y.doc_id, sa.sz, sb.sz
     HAVING CAST(COUNT(*) AS DOUBLE) / (sa.sz + sb.sz - COUNT(*)) >= 0.3
     """,
+    headline=False,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard over all pairs sharing ≥1 shingle (bounded
@@ -592,7 +595,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
-@REG.query("dedup_minhash_ml")  # rows-only: ml hash family not SQL-reproducible
+@REG.query("dedup_minhash_ml", headline=False)  # rows-only: ml hash family not SQL-reproducible
 def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-scale MinHashLSH via pyspark.ml: HashingTF shingles
     (open vocabulary — no dictionary, no global window) →
@@ -617,115 +620,6 @@ def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("datasetA.doc_id").alias("doc_a"),
             F.col("datasetB.doc_id").alias("doc_b"),
             F.col("jaccard_dist"),
-        )
-    )
-
-
-# --- embedding-cosine near-dup -------------------------------------------
-
-# 2^planes buckets.  THE scale knob: within-bucket pair count grows as
-# (N / 2^planes)^2 * 2^planes, so planes must grow ~log2(N) to keep
-# per-bucket work constant (measured: 20x corpus at fixed 4 planes =
-# 28x runtime).  Pinned to 4 here because the DuckDB oracle bakes the
-# constant in; at real scale derive planes ≈ log2(N / target_bucket)
-# and add multi-probe for recall, or use sim_brp_lsh_ml.
-EMB_DUP_PLANES = 4
-EMB_DUP_THRESHOLD = 0.45    # tuned for the synthetic corpus (random
-                            # vectors, max pairwise cosine ~0.6); use
-                            # 0.95+ for real embedding near-dups
-
-
-def _emb_dup_oracle() -> str:
-    from firebase_realtime_database_backup_spark.operators.similarity import (
-        _DOT,
-        _plane_sql,
-    )
-
-    dot = lambda a, b: _DOT.format(a=a, b=b)  # noqa: E731
-    cos_ab = (
-        f"{dot('a.emb', 'b.emb')} / (SQRT({dot('a.emb', 'a.emb')})"
-        f" * SQRT({dot('b.emb', 'b.emb')}))"
-    )
-    return f"""
-    WITH planes AS (
-      SELECT p, {_plane_sql("p")} AS v
-      FROM (SELECT UNNEST(RANGE(0, {EMB_DUP_PLANES})) AS p)
-    ),
-    buckets AS (
-      SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS emb,
-             CAST(SUM(CASE WHEN {dot("pl.v", "e.embedding")} >= 0
-                           THEN CAST(POWER(2, pl.p) AS BIGINT) ELSE 0 END) AS BIGINT)
-               AS bucket
-      FROM embeddings e, planes pl
-      GROUP BY e.vec_id, CAST(e.embedding AS DOUBLE[])
-    )
-    SELECT vec_id, nn_id, nn_cosine,
-           nn_cosine >= {EMB_DUP_THRESHOLD} AS is_dup
-    FROM (
-      SELECT a.vec_id, b.vec_id AS nn_id, {cos_ab} AS nn_cosine,
-             ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                ORDER BY {cos_ab} DESC, b.vec_id) AS rk
-      FROM buckets a JOIN buckets b
-        ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-    ) WHERE rk = 1
-    """
-
-
-@REG.query("dedup_embedding_cosine", oracle=_emb_dup_oracle(),
-           prod_twin="dedup_embedding_cosine_scaled")
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup: each vector's nearest neighbor among
-    vectors sharing its random-hyperplane LSH bucket, flagged as a
-    duplicate when cosine clears the threshold.
-
-    Scale shape: bucket id is map-side column math (4 broadcast
-    hyperplanes), the candidate space is an equi self-join on bucket —
-    never all pairs — and the NN cut is a per-vector window.  Recall
-    grows with more plane groups (band OR-ing), the same knob as
-    dedup_minhash_lsh's bands."""
-    from pyspark.sql import Window
-
-    from firebase_realtime_database_backup_spark.operators.similarity import (
-        _dot,
-        _norm,
-        bucket_column,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    buckets = emb.select(
-        "vec_id",
-        "emb",
-        bucket_column(F.col("emb"), EMB_DUP_PLANES).alias("bucket"),
-        _norm(F.col("emb")).alias("nrm"),
-    )
-    a = buckets.select("vec_id", F.col("emb").alias("ae"), "bucket",
-                       F.col("nrm").alias("an"))
-    b = buckets.select(
-        F.col("vec_id").alias("nn_id"),
-        F.col("emb").alias("be"),
-        F.col("bucket").alias("b_bucket"),
-        F.col("nrm").alias("bn"),
-    )
-    pairs = a.join(
-        b, (F.col("bucket") == F.col("b_bucket")) & (F.col("vec_id") != F.col("nn_id"))
-    ).select(
-        "vec_id",
-        "nn_id",
-        F.try_divide(
-            _dot(F.col("ae"), F.col("be")), F.col("an") * F.col("bn")
-        ).alias("nn_cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("nn_cosine"), F.col("nn_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "vec_id",
-            "nn_id",
-            "nn_cosine",
-            (F.col("nn_cosine") >= EMB_DUP_THRESHOLD).alias("is_dup"),
         )
     )
 
@@ -1020,6 +914,11 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- embedding-cosine near-dup -------------------------------------------
+
+EMB_DUP_THRESHOLD = 0.45    # tuned for the synthetic corpus (random
+                            # vectors, max pairwise cosine ~0.6); use
+                            # 0.95+ for real embedding near-dups
 EMB_DUP_TARGET_OCCUPANCY = 32  # aim for ~32 vectors per LSH bucket
 
 
@@ -1075,15 +974,21 @@ def _emb_dup_scaled_oracle() -> str:
 @REG.query("dedup_embedding_cosine_scaled", oracle=_emb_dup_scaled_oracle(),
            prod_twin="dedup_embedding_cosine_arrow")
 def dedup_embedding_cosine_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_embedding_cosine with the plane count DERIVED FROM CORPUS
-    SIZE instead of pinned: planes = max(4, ceil(log2(N/32))), so
-    expected bucket occupancy — and with it the quadratic in-bucket
-    pair cost that made the fixed-plane variant go 28x at 20x data
-    (BASELINE.md scale table) — stays constant as N grows.  The count
-    is one cheap driver-side job before plan build (a metadata count
-    at parquet scale); the oracle derives the identical plane count
-    from COUNT(*), so the SQL twin tracks every SF.  sf0.01 resolves
-    to 4 planes (= the pinned variant), sf0.1 to 8, 20x to 12."""
+    """Embedding-cosine near-dup: each vector's nearest neighbor among
+    vectors sharing its random-hyperplane LSH bucket, flagged as a
+    duplicate when cosine clears the threshold.  The bucket id is
+    map-side column math (broadcast hyperplanes), the candidate space
+    is an equi self-join on bucket — never all pairs — and the NN cut
+    is a per-vector window.
+
+    The plane count is DERIVED FROM CORPUS SIZE: planes =
+    max(4, ceil(log2(N/32))), so expected bucket occupancy — and with
+    it the quadratic in-bucket pair cost that made a fixed 4-plane
+    form go 28x at 20x data (BASELINE.md scale table) — stays constant
+    as N grows.  The count is one cheap driver-side job before plan
+    build (a metadata count at parquet scale); the oracle derives the
+    identical plane count from COUNT(*), so the SQL twin tracks every
+    SF.  sf0.01 resolves to 4 planes, sf0.1 to 8, 20x to 12."""
     from pyspark.sql import Window
 
     from firebase_realtime_database_backup_spark.operators.similarity import (
@@ -1279,7 +1184,7 @@ def dedup_cross_corpus_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors) broadcasts into the corpus scan so the probe is map-side;
     past broadcast range it becomes a bucket-key equi shuffle.  Output
     is each batch vector's nearest STANDING-corpus neighbor among its
-    bucket-mates plus the threshold flag (dedup_embedding_cosine's
+    bucket-mates plus the threshold flag (dedup_embedding_cosine_scaled's
     report shape restricted to cross-boundary pairs); every emitted
     cosine is exact — the LSH bucket only gated candidacy.
 
@@ -3584,6 +3489,7 @@ def dedup_cluster_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sa ON sa.source = c.source_a
     JOIN sizes sb ON sb.source = c.source_b
     """,
+    headline=False,
 )
 def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-SOURCE shingle overlap: which feeds duplicate each other —

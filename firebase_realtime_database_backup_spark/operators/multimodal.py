@@ -292,7 +292,7 @@ def _fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         )
 
 
-@REG.query("multimodal_fake_decode")  # rows-only: stub decoder, no SQL twin
+@REG.query("multimodal_fake_decode", headline=False)  # rows-only: stub decoder, no SQL twin
 def multimodal_fake_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fake decode → fixed 8x8 raster + mean.  Exercises
     the array-returning UDF path (the shape a real image decoder

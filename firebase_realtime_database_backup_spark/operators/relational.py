@@ -310,6 +310,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity BETWEEN 10 AND 20
       AND l_returnflag = 'R'
     """,
+    headline=False,
 )
 def filter_pushdown_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-range + predicate filter with projection — the Spark analog of
@@ -374,6 +375,7 @@ def join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer LEFT JOIN orders ON c_custkey = o_custkey
     GROUP BY c_custkey, c_mktsegment
     """,
+    headline=False,
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving order-less customers (n_orders = 0)."""
@@ -397,6 +399,7 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
     GROUP BY c_custkey
     """,
+    headline=False,
 )
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
@@ -424,6 +427,7 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cust_per_nation c FULL OUTER JOIN supp_per_nation s
       ON c.nationkey = s.nationkey
     """,
+    headline=False,
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of two pre-aggregated sides (nations having only
@@ -453,6 +457,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 200000)
     """,
+    headline=False,
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join: customers having at least one big order.  Existence
@@ -524,6 +529,7 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND l_shipdate > o_orderdate + INTERVAL 90 DAY
     GROUP BY o_orderpriority
     """,
+    headline=False,
 )
 def join_range_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi join with a range residual predicate (shipped >90 days after
@@ -549,6 +555,7 @@ def join_range_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN part ON p_retailprice < s_acctbal
     GROUP BY s_suppkey
     """,
+    headline=False,
 )
 def join_theta_bnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure theta (non-equi) join → broadcast nested loop.  Only valid
@@ -577,6 +584,7 @@ def join_theta_bnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
+    headline=False,
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (Spark expands to a two-phase plan)."""
@@ -592,7 +600,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@REG.query("agg_approx_count_distinct")  # no oracle: HLL sketches differ across engines
+@REG.query("agg_approx_count_distinct", headline=False)  # no oracle: HLL sketches differ across engines
 def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++) — the 100 TB path for
     distinct counts: one pass, fixed memory, no distinct-expansion
@@ -639,6 +647,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
+    headline=False,
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full cube over two low-cardinality dimensions."""
@@ -669,6 +678,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM customer
     ) WHERE rn <= 10
     """,
+    headline=False,
 )
 def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank / ntile; top-10 per segment.
@@ -704,6 +714,7 @@ def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
+    headline=False,
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over each customer's order history (unique sort key:
@@ -784,6 +795,7 @@ def sort_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM supplier WHERE s_acctbal > 5000
     )
     """,
+    headline=False,
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName of two conformed projections (bag semantics)."""
@@ -809,6 +821,7 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
+    headline=False,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers appearing in both finished and open orders (set
@@ -826,6 +839,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 100000
     """,
+    headline=False,
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set difference: all customers minus big spenders."""
@@ -1582,6 +1596,7 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
+    headline=False,
 )
 def window_nth_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional window values over a running frame: first / current /
@@ -1602,7 +1617,7 @@ def window_nth_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@REG.query("agg_percentile_approx")  # rows-only: sketch internals differ per engine
+@REG.query("agg_percentile_approx", headline=False)  # rows-only: sketch internals differ per engine
 def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate percentiles via Spark's mergeable quantile sketch —
     the scale path for percentiles over 100 TB (bounded memory,
@@ -1666,6 +1681,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT ALL
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
+    headline=False,
 )
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics set difference (EXCEPT ALL): multiplicities
@@ -1690,6 +1706,7 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
       AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 200000)
     """,
+    headline=False,
 )
 def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar + IN subqueries through spark.sql: the scalar average
@@ -1709,7 +1726,7 @@ def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@REG.query("agg_hll_sketch")  # rows-only: sketch bytes are engine-specific
+@REG.query("agg_hll_sketch", headline=False)  # rows-only: sketch bytes are engine-specific
 def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog sketch aggregation (Spark 3.5+ Datasketches): build
     per-group sketches, union them, estimate.  The REUSABLE form of
@@ -1736,6 +1753,7 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION
     SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 250000
     """,
+    headline=False,
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION with set semantics (distinct): union + dropDuplicates —
@@ -3892,7 +3910,6 @@ _ITEM_EDGES_SQL = f"""
 #: PageRank iteration count — fixed (not convergence-tested) so runtime
 #: is predictable and the parity tests can replay the exact loop.
 PAGERANK_ITERS = 8
-PAGERANK_DAMPING = 0.85
 #: Fixed-point scale: ranks are bigints in units of 1e-12 — integer
 #: arithmetic is order-independent, so the DuckDB oracle's unrolled
 #: CTE chain is bit-identical to the Spark loop (float sums are not).
@@ -6690,51 +6707,19 @@ _ORDER_GAPS_ORACLE = """
     """
 
 
-@REG.query(
-    "window_order_gaps",
-    oracle=_ORDER_GAPS_ORACLE,
-    prod_twin="window_order_gaps_twolevel",
-)
-def window_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+@REG.query("window_order_gaps_twolevel", oracle=_ORDER_GAPS_ORACLE)
+def window_order_gaps_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase latency per customer: day gaps between a
     customer's consecutive orders (lag over the customer partition,
     orderkey tie-break) reduced to min/median/max — the input to
-    churn models ('customer is N× past their median gap → at risk')
-    and to events_resample_gapfill-style replenishment forecasts.
+    churn models ('customer is N× past their median gap → at risk').
 
-    Plan: one shuffle on o_custkey serves BOTH the lag window and the
-    final per-customer aggregate (same key, no second exchange); per-
-    customer state is bounded by order count, so the window grain is
-    safe at any scale.  Exactness: integer day arithmetic; MEDIAN over
-    integers interpolates one exact halving at worst (the
-    events_changepoint_cusum discipline)."""
-    orders = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = orders.select(
-        "o_custkey",
-        F.datediff(
-            F.to_date("o_orderdate"),
-            F.lag(F.to_date("o_orderdate")).over(w),
-        ).cast("bigint").alias("gap_days"),
-    ).filter(F.col("gap_days").isNotNull())
-    return gaps.groupBy("o_custkey").agg(
-        (F.count(F.lit(1)) + 1).cast("bigint").alias("n_orders"),
-        F.min("gap_days").alias("min_gap_days"),
-        F.median("gap_days").alias("median_gap_days"),
-        F.max("gap_days").alias("max_gap_days"),
-    )
-
-
-@REG.query("window_order_gaps_twolevel", oracle=_ORDER_GAPS_ORACLE)
-def window_order_gaps_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """window_order_gaps' whale-key production form — same oracle,
-    bit-identical output, with the UNBOUNDED per-customer aggregation
-    state removed: F.median buffers every gap of a key in the
-    aggregate's memory (an in-memory array that a retail-whale /
-    bot-account key grows without limit — the one term that OOMs
-    rather than degrades), so the median is read off the (customer,
-    gap_days, count) HISTOGRAM instead — the agg_median_twolevel
-    discipline.  Day gaps live in a small integer domain, and the
+    Whale-key safe: no UNBOUNDED per-customer aggregation state.
+    F.median would buffer every gap of a key in the aggregate's memory
+    (an in-memory array that a retail-whale / bot-account key grows
+    without limit — the one term that OOMs rather than degrades), so
+    the median is read off the (customer, gap_days, count) HISTOGRAM
+    instead — the agg_median_twolevel discipline.  Day gaps live in a small integer domain, and the
     histogram groupBy runs on data the lag window has ALREADY
     partitioned by customer, so the map-side partial aggregation
     collapses each task's rows to its own customers' histogram rows —
@@ -7250,7 +7235,7 @@ def agg_entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion to events_bot_rate_gate's rate signal, and the same
     feature a fraud/quality model consumes as 'action diversity'.
 
-    Exactness: the text_char_entropy discipline applied to categories —
+    Exactness: the text_char_entropy_scaled discipline applied to categories —
     per-term k·(bitlength(n div k)−1) is pure integer arithmetic (no
     libm ln anywhere), summed exactly, one final division.
 
@@ -8919,7 +8904,8 @@ def _markov_stationary_oracle() -> str:
     """
 
 
-@REG.query("events_markov_stationary", oracle=_markov_stationary_oracle())
+@REG.query("events_markov_stationary", oracle=_markov_stationary_oracle(),
+           headline=False)
 def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the user-behavior Markov chain — the
     long-run share of attention each event type absorbs, the summary
@@ -8984,7 +8970,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_K = 3
 
 
-@REG.query("graph_kcore")  # rows-only: the peeling FIXPOINT (repeatedly
+@REG.query("graph_kcore", headline=False)  # rows-only: the peeling FIXPOINT (repeatedly
 # delete degree < k, degrees recomputed after every deletion wave) is a
 # non-monotone shrinking iteration — unlike min-label propagation it has
 # no accumulate-only recursive-CTE form, so the gate is the pure-Python

@@ -206,6 +206,7 @@ def _score_against_queries(q: DataFrame, side: DataFrame) -> DataFrame:
     SELECT vec_id, CAST(SUM(bit) AS BIGINT) AS bucket
     FROM signs GROUP BY vec_id
     """,
+    headline=False,
 )
 def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector (tier 2): 8 dot-product
@@ -251,6 +252,7 @@ def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rk <= {TOP_K}
     """,
+    headline=False,
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via LSH buckets (tier 3): exact cosine evaluated only
@@ -291,7 +293,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@REG.query("sim_brp_lsh_ml")  # rows-only: ml RNG not SQL-reproducible
+@REG.query("sim_brp_lsh_ml", headline=False)  # rows-only: ml RNG not SQL-reproducible
 def sim_brp_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packaged alternative: pyspark.ml BucketedRandomProjectionLSH
     approx nearest neighbors (Euclidean buckets).  Seeded/deterministic
@@ -325,13 +327,6 @@ def sim_brp_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_CENTROIDS = 16
 N_PROBE = 2
-
-#: squared-L2 via dot products, SAME left-to-right arithmetic in both
-#: engines: (e.e - 2*e.c) + c.c
-_DIST2 = (
-    "({ee} - 2*{ec} + {cc})"
-)
-
 
 def _nearest_cells(emb_col, ee_col, cents: list) -> "F.Column":
     """Cells sorted by (d2, cid) as an array of structs — PURE column
@@ -2180,7 +2175,6 @@ def sim_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MMR_K = 5        # diverse selections to make
 MMR_PANEL = 32   # relevance shortlist the greedy runs over
-MMR_LAMBDA = 0.5 # exact in binary: score = 0.5*rel - 0.5*max_sim
 
 
 def _mmr_cos_sql(a: str, b: str) -> str:

@@ -252,6 +252,7 @@ def _sql_list(words: tuple[str, ...]) -> str:
              / LEN(STRING_SPLIT(text, ' '))                        AS type_token_ratio
     FROM documents
     """,
+    headline=False,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, regex tokens (BPE-ish atom
@@ -310,6 +311,7 @@ def _lang_scores(toks):
            END AS pred_lang
     FROM scored
     """,
+    headline=False,
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID by marker-word hits (distinct-token intersection with
@@ -388,6 +390,7 @@ def quality_expr(toks) -> "F.Column":
            {QUALITY_SQL} AS quality
     FROM feats
     """,
+    headline=False,
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score: length saturation + lexical diversity +
@@ -559,108 +562,6 @@ def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @REG.query(
-    "text_char_entropy",
-    oracle="""
-    WITH c AS (
-      SELECT doc_id,
-             STRING_SPLIT(text, '') AS ch,
-             CAST(LEN(STRING_SPLIT(text, '')) AS BIGINT) AS n
-      FROM documents
-    ),
-    counted AS (
-      SELECT doc_id, n,
-             LIST_TRANSFORM(LIST_SORT(LIST_DISTINCT(ch)),
-                            x -> LEN(LIST_FILTER(ch, y -> y = x))) AS cnts
-      FROM c
-    )
-    SELECT doc_id,
-           n AS n_chars_counted,
-           CAST(LEN(cnts) AS BIGINT) AS n_distinct_chars,
-           CAST(LIST_SUM(LIST_TRANSFORM(cnts,
-                  k -> k * (LENGTH(BIN(n // k)) - 1))) AS BIGINT)
-             AS entropy_bits_num,
-           CAST(LIST_SUM(LIST_TRANSFORM(cnts,
-                  k -> k * (LENGTH(BIN(n // k)) - 1))) AS DOUBLE) / n
-             AS entropy_bits,
-           LIST_SUM(LIST_TRANSFORM(cnts,
-                  k -> k * (LENGTH(BIN(n // k)) - 1))) <= 2 * n
-             AS is_low_entropy
-    FROM counted
-    """,
-    prod_twin="text_char_entropy_scaled",
-)
-def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-entropy gibberish / binary-content filter: per-document
-    Shannon entropy of the character distribution, quantized to WHOLE
-    bits (floor(log2(n/count)) per character via integer bit-length —
-    the text_surprisal_score discipline), so the statistic is an exact
-    integer ratio on both engines and no libm `ln` ever sits inside a
-    float fold.  Low entropy (≤2 bits/char) flags repeated-character
-    junk and template boilerplate; binary-ish content scores high with
-    a wide char set — both ends are standard pretraining filters.
-
-    Exactness: counts fold over the SORTED distinct-character list
-    (binary/codepoint order on both engines), every term is integer
-    (count × bit-length), and the single float op is one division of
-    two exact integers.  Empty documents degrade to the [''] singleton
-    both engines produce for a ''-split — 0 bits, flagged low.
-
-    Plan: map-only — the character histogram is computed per row with
-    array algebra inside whole-stage codegen (distinct chars are
-    alphabet-bounded, so the per-doc filter scan is O(|Σ|·len)); no
-    shuffle anywhere.  For very long documents the (doc, char) explode
-    + partial-agg form trades the O(|Σ|·len) rescan for one shuffle at
-    the alphabet-bounded (doc, char) grain."""
-    # spread(): the histogram is CPU-bound relative to scan bytes, so a
-    # single-file corpus must not serialize onto one input split
-    # (measured 123 s -> seconds at 20x on the one-file scale corpus).
-    docs = spread(read_table(spark, sf_dir, "documents"))
-    ch = F.split(F.col("text"), "")
-    feats = docs.select(
-        "doc_id",
-        F.size(ch).cast("bigint").alias("n"),
-        F.transform(
-            F.array_sort(F.array_distinct(ch)),
-            lambda x: F.size(F.filter(ch, lambda y: y == x)).cast("bigint"),
-        ).alias("cnts"),
-    )
-    # k * floor(log2(n // k)) per character, summed — all integer.
-    num = F.aggregate(
-        F.transform(
-            F.col("cnts"),
-            # Exact integer n // k without double division (lambda vars
-            # can't appear in F.expr, so subtract the remainder and
-            # divide in decimal — the quotient is an exact integer, so
-            # the decimal division and bigint cast are lossless).
-            lambda k: k
-            * (
-                F.length(
-                    F.bin(
-                        (
-                            (F.col("n") - F.col("n") % k).cast(
-                                "decimal(38,0)"
-                            )
-                            / k
-                        ).cast("bigint")
-                    )
-                ).cast("bigint")
-                - 1
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + t,
-    )
-    return feats.select(
-        "doc_id",
-        F.col("n").alias("n_chars_counted"),
-        F.size("cnts").cast("bigint").alias("n_distinct_chars"),
-        num.alias("entropy_bits_num"),
-        (num.cast("double") / F.col("n")).alias("entropy_bits"),
-        (num <= 2 * F.col("n")).alias("is_low_entropy"),
-    )
-
-
-@REG.query(
     "text_char_entropy_scaled",
     oracle="""
     WITH c AS (
@@ -688,29 +589,28 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_char_entropy_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text_char_entropy's LONG-DOCUMENT twin: the same whole-bit
-    Shannon statistic computed at the exploded (doc, char) grain —
-    one row per character occurrence, histogram by hash aggregation —
-    instead of the in-codegen array fold.
+    """Character-entropy gibberish / binary-content filter: per-document
+    Shannon entropy of the character distribution, quantized to WHOLE
+    bits (floor(log2(n/count)) per character via integer bit-length —
+    the text_surprisal_score discipline), so the statistic is an exact
+    integer ratio on both engines and no libm `ln` ever sits inside a
+    float fold.  Low entropy (≤2 bits/char) flags repeated-character
+    junk and template boilerplate; binary-ish content scores high with
+    a wide char set — both ends are standard pretraining filters.
+    Empty documents degrade to the [''] singleton both engines produce
+    for a ''-split — 0 bits, flagged low.
 
-    Why two forms: the teaching form's per-row fold rescans the char
-    array once per DISTINCT character (O(|Σ|·len) per doc inside
-    codegen, zero shuffle) — unbeatable on short web documents where
-    |Σ|·len fits a cache line, honest-but-linear on long ones (41 s at
-    100× in BASELINE.md, all map CPU).  This form pays two
-    alphabet-bounded exchanges — (doc, char) for the histogram, doc
-    for the fold, both map-side combinable, the second reusing the
-    first's hash partitioning modulo key projection — and touches each
-    character exactly ONCE, so books/code files with |Σ| in the
-    hundreds amortize the shuffle against the |Σ|× rescan.  Identical
-    integer arithmetic (count × whole-bit log via BIN length), so both
-    forms are oracle-exact and interchangeable row-for-row.
-
-    Measured crossover (min-of-2, 48g driver, round 5): sf0.1 teaching
-    1.0 s vs scaled 1.22 s (short docs — teaching wins); 20× 6.57 vs
-    2.11 s (3.1×); 100× 28.93 vs 4.94 s (5.9×) — the '_r'-suffixed
-    replica tokens lengthen docs AND widen |Σ|, exactly the long-doc
-    regime; hence the prod_twin marking on the teaching form.
+    Plan: computed at the exploded (doc, char) grain — one row per
+    character occurrence, histogram by hash aggregation — so each
+    character is touched exactly ONCE.  It pays two alphabet-bounded
+    exchanges — (doc, char) for the histogram, doc for the fold, both
+    map-side combinable, the second reusing the first's hash
+    partitioning modulo key projection.  An in-codegen array fold
+    (zero shuffle) rescans the char array once per DISTINCT character,
+    O(|Σ|·len) per doc: measured (min-of-2, 48g driver, round 5) it
+    was 1.0 s against 1.22 s for this form at sf0.1, but 6.57 s
+    against 2.11 s at 20× and 28.93 s against 4.94 s at 100×, where
+    the '_r'-suffixed replica tokens lengthen docs AND widen |Σ|.
 
     Column-order note: histogram THEN total via window over doc_id,
     not a second groupBy — the window and the final per-doc agg share
@@ -931,11 +831,11 @@ def pipeline_prepare_corpus_scaled(spark: SparkSession, sf_dir: str) -> DataFram
     was itself quality-filtered out (e.g. a truncated copy below the
     token floor) — content loss, not dedup.
 
-    The teaching twins (dedup_minhash_lsh, dedup_embedding_cosine) stay
-    registered as oracle-exact baselines; the registry marks them with
-    prod_twin so nothing routes production traffic through them.  The
-    removal sets anti-join against the kept corpus — hash semi-join
-    shaped exchanges on doc_id, nothing quadratic."""
+    The teaching twin dedup_minhash_lsh stays registered as an
+    oracle-exact baseline; the registry marks it with prod_twin so
+    nothing routes production traffic through it.  The removal sets
+    anti-join against the kept corpus — hash semi-join shaped exchanges
+    on doc_id, nothing quadratic."""
     from firebase_realtime_database_backup_spark.operators.dedup import (
         dedup_embedding_cosine_arrow,
         dedup_minhash_xxhash,
@@ -1620,6 +1520,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(c_acctbal, 0) AS acctbal_coarse
     FROM customer
     """,
+    headline=False,
 )
 def text_anonymize_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudonymization for training-data governance: direct
@@ -3476,6 +3377,7 @@ VOCAB_GROWTH_BUCKETS = 10
            docs_with_new
     FROM bucketed
     """,
+    headline=False,
 )
 def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-growth (Heaps'-law) curve over 3-gram types: how many

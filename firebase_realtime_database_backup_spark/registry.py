@@ -30,9 +30,11 @@ class Registry:
         #: cliff (single-partition window, fixed LSH planes, full-corpus
         #: regex); anything routing production traffic must use the twin.
         self.prod_twins: dict[str, str] = {}
+        #: queries registered with ``headline=False``: not timed by bench.py
+        self.off_headline: set[str] = set()
 
     def query(self, name: str, oracle: str | None = None,
-              prod_twin: str | None = None):
+              prod_twin: str | None = None, headline: bool = True):
         """Decorator registering a query and, optionally, its DuckDB twin.
 
         Queries with no oracle get the driver's weaker rows-only check;
@@ -45,6 +47,9 @@ class Registry:
         approx-percentile broadcast form.  `api.py query list` prints
         the marker so the non-scalable form can't be mistaken for the
         pattern to copy.
+
+        ``headline=False`` leaves the query out of ``bench.HEADLINE``,
+        the queries ``bench.py`` times.
         """
 
         def deco(fn: QueryFn) -> QueryFn:
@@ -55,6 +60,8 @@ class Registry:
                 self.oracles[name] = " ".join(oracle.split())
             if prod_twin is not None:
                 self.prod_twins[name] = prod_twin
+            if not headline:
+                self.off_headline.add(name)
             return fn
 
         return deco
@@ -67,6 +74,7 @@ class Registry:
                 self.queries[name] = fn
             self.oracles.update(other.oracles)
             self.prod_twins.update(other.prod_twins)
+            self.off_headline |= other.off_headline
         return self
 
 
@@ -122,9 +130,9 @@ QUERY_MODULES = (
 )
 
 
-def build_registry(warn=None) -> "Registry":
-    """Assemble the full engine registry from every query module, in
-    driver order over the correctness records in ``RECORDS_DIR``.
+def module_registry(warn=None) -> "Registry":
+    """Every query module's registry merged, in module-registration
+    order: ``QUERY_MODULES`` order, then each module's decoration order.
 
     ``warn`` is called with a message per module that fails to import —
     degrade to the queries that do load, but NEVER silently: a missing
@@ -138,6 +146,13 @@ def build_registry(warn=None) -> "Registry":
         except ImportError as exc:
             if warn is not None:
                 warn(f"query module {modname} failed to import: {exc}")
+    return merged
+
+
+def build_registry(warn=None) -> "Registry":
+    """The full engine registry (`module_registry`), in driver order
+    over the correctness records in ``RECORDS_DIR``."""
+    merged = module_registry(warn)
     rounds = attested_rounds(RECORDS_DIR, merged.oracles)
 
     def order_key(name):  # sorted() is stable: ties keep module order

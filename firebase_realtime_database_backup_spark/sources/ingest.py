@@ -1,13 +1,15 @@
-"""File-format ingest connectors: JSON-lines and CSV.
+"""File-format ingest: JSON-lines with quarantine, plus the ingest-side
+analytics queries.
 
 The reference's chunk files are JSON documents spilled to disk
 (src/BackupProcessor.php:202-223) and read back on restore
 (src/RestoreProcessor.php:62-67) — i.e., its interchange format IS
-line-delimited JSON on a filesystem.  These readers are the engine-side
-generalization: schema-on-read ingest that lands directly in a
-DataFrame, with the scan parallelized per file split.  The module also
-holds the ingest-side analytics queries: the tree-relation
-normalization and sizing (`tree_normalize_events`,
+line-delimited JSON on a filesystem.  `read_jsonl_quarantine` is the
+engine-side generalization: schema-on-read ingest that lands directly
+in a DataFrame, with the scan parallelized per file split, and
+malformed lines routed aside instead of dropped.  Plain JSONL, CSV and
+ORC reads are `spark.read` itself.  The module also holds the
+tree-relation normalization and sizing (`tree_normalize_events`,
 `tree_subtree_sizes`) and schema inference.
 
 Scale notes:
@@ -15,8 +17,7 @@ Scale notes:
   JSON inference is a full extra pass over the data.
 - gzip-compressed JSONL/CSV is NOT splittable — one task per file; at
   100 TB keep files ~128 MB-1 GB or use a splittable container
-  (parquet) for anything hot.  `read_*` accepts directories, globs,
-  and lists of paths like every Spark file source.
+  (parquet) for anything hot.
 """
 
 from __future__ import annotations
@@ -37,55 +38,6 @@ from firebase_realtime_database_backup_spark.scratch import (
 REG = Registry()
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Line-delimited JSON ingest.  With `schema=None`, Spark samples to
-    infer (fine for exploration; explicit schema for pipelines)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """CSV ingest.  Explicit schema skips the inference pass; `options`
-    passthrough covers delimiter/quote/escape/nullValue etc."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path, **options)
-
-
-def write_csv(
-    df: DataFrame, path: str, mode: str = "overwrite", header: bool = True
-) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC ingest — the other columnar container Spark reads natively
-    (vectorized scan, predicate pushdown, splittable stripes).  Schema
-    comes from the file footer like parquet; no inference pass."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
 # ---------------------------------------------------------------------------
 # Registry query: normalize events.props into the tree relation
 # ---------------------------------------------------------------------------
@@ -100,6 +52,7 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     FROM events, UNNEST(CAST(JSON_KEYS(props) AS VARCHAR[])) AS t(k)
     WHERE event_id <= 500
     """,
+    headline=False,
 )
 def tree_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.props JSON objects → tree rows (path, key, value_json,

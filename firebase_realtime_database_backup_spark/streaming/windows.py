@@ -234,6 +234,7 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned
     GROUP BY window_start_ms
     """,
+    headline=False,
 )
 def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 (each event lands in 2 windows;

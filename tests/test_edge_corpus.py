@@ -356,7 +356,7 @@ R5_EDGE_QUERIES = (
     "events_changepoint_cusum",
     "events_cohort_ltv",
     "events_bot_rate_gate",
-    "window_order_gaps",
+    "window_order_gaps_twolevel",
     "graph_degree_distribution",
     "quality_dup_rate_by_source",
     "quality_null_completeness",

@@ -139,7 +139,9 @@ def test_malformed_record_names_the_file(tmp_path, content):
 
 def test_prod_twins_are_registered_queries(spark):
     """Every prod-twin pointer must name a registered query (the
-    teaching→production audit trail is only useful if the twin runs)."""
+    teaching→production audit trail is only useful if the twin runs),
+    and a teaching form must not share its twin's oracle: then the twin
+    is its own anchor and the teaching form anchors nothing."""
     from firebase_realtime_database_backup_spark.registry import build_registry
 
     reg = build_registry()
@@ -148,6 +150,28 @@ def test_prod_twins_are_registered_queries(spark):
         assert twin in reg.queries, (
             f"prod_twin {teaching!r} -> {twin!r} names an unregistered query"
         )
+        assert teaching not in reg.oracles or (
+            reg.oracles[teaching] != reg.oracles.get(twin)
+        ), f"prod_twin {teaching!r} registers the same oracle as {twin!r}"
+
+
+def test_headline_is_the_unmarked_registry():
+    """bench.HEADLINE holds no hand-kept names: the queries marked
+    ``headline=False`` are exactly the registered ones outside it, it
+    names each query once, in module-registration order, and the
+    layout warm-ups and the frozen analytics workload draw from it."""
+    import bench
+    from perfbench.workloads import ANALYTICS
+
+    from firebase_realtime_database_backup_spark.registry import module_registry
+
+    reg = module_registry()
+    headline = set(bench.HEADLINE)
+    assert len(bench.HEADLINE) == len(headline)
+    assert reg.off_headline == set(reg.queries) - headline
+    assert bench.HEADLINE == [n for n in reg.queries if n in headline]
+    assert set(bench.LAYOUT_QUERIES) <= headline
+    assert set(ANALYTICS) <= headline
 
 
 def test_every_oracle_has_query(spark):
